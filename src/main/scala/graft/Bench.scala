@@ -1,37 +1,93 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing knobs, env-parameterized for cluster-scale
-      // tuning. Spark's docs recommend parallelismFirst=false (respect
-      // advisoryPartitionSizeInBytes) on busy clusters; MEASURED here
-      // at sf0.1/local[32] on identical code it LOST both ways (total
-      // 145.9 s vs 131.8 s, per-query median 1.057x) — at this scale
-      // coalescing to size serializes tiny stages that the default
-      // keeps parallel. So the local default stays Spark's default;
-      // flip via env on real clusters where 64 MB+ reduce partitions
-      // are the right unit (OPTIMIZATION_r16.md has the numbers).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Cluster knob: with a reliable checkpoint dir set, every loop
-    // lineage cut (Seams.cut) survives executor loss. Unset locally —
-    // localCheckpoint, same behavior the bench always measured.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
-    // GC/heap telemetry (stderr + bench_full artifact): the r16 driver
-    // run doubled on whole-JVM stalls in untouched queries; these
-    // counters say per query how much GC time elapsed and how much
-    // block-manager storage stayed resident (seam-leak detector).
+    val warmDir = warmDirFor(sfDir)
+    val spark = LocalSpark()
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
+    val Result(results, failed) = run(spark, SparkEntry.queries, sfDir, warmDir, reps)
+    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    // Human-readable slowest-queries digest → stderr (stdout is
+    // reserved for the one machine-readable contract line below).
+    val desc = results.sortBy(-_._2).take(40)
+    def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
+    System.err.println("[bench] total " + r3(total) + " s over " +
+      results.size + " queries; slowest: " +
+      desc.map { case (k, v) => s"$k=${r3(v)}" }.mkString(", "))
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] FAILED ${failed.size} queries: ${failed.mkString(", ")}")
+    // Persist the COMPLETE per-query artifact: commit it once per
+    // round. Default under java.io.tmpdir so an ad-hoc run never
+    // silently clobbers the committed per-round artifact — export
+    // SPARK_GRAFT_BENCH_OUT=bench_full.json (repo root) for the
+    // round-final run. Only the artifact lists the failed queries.
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      new java.io.File(sys.props("java.io.tmpdir"), "bench_full.json").getPath)
+    val artifact = line.dropRight(1) +
+      failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]}")
+    try {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(out), artifact + "\n")
+      System.err.println(s"[bench] full artifact: $out")
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] could not write $out: ${e.getMessage}")
+    }
+    // Quiet shutdown, THEN the contract line: the driver parses the
+    // bench's stdout as one JSON line of the original schema
+    // {"metric","value","unit","queries":<every query that ran>,"sf"}
+    // — it must be unprefixed (build.sbt forks with StdoutOutput, so
+    // nothing rewrites it as `[info] ...`) and be the final stdout line
+    // (Spark logs go to stderr), even when spark.stop() throws.
+    try {
+      spark.sparkContext.setLogLevel("ERROR")
+      spark.stop()
+    } finally {
+      println(line)
+      System.out.flush()
+    }
+  }
+
+  /** The `sf0.001` directory next to `sfDir`: the same tables at the
+    * smallest scale, where Bench and the probe tool warm every plan up.
+    */
+  def warmDirFor(sfDir: String): String = {
+    val dir = java.nio.file.Paths.get(sfDir).toAbsolutePath.resolveSibling("sf0.001")
+    require(java.nio.file.Files.isDirectory(dir), s"no warm-up tables at $dir")
+    dir.toString
+  }
+
+  /** One bench pass: best-of-reps seconds per query that ran, in
+    * execution order, and the names of the queries that threw. A query
+    * that throws has no timing: it is out of `timings` and the total.
+    */
+  final case class Result(timings: Seq[(String, Double)], failed: Seq[String])
+
+  /** Warm every query on `warmDir`, then time `reps` passes of each on
+    * `sfDir` (sorted by name) and keep the best. A query that throws in
+    * either phase is reported on stderr and recorded as failed.
+    */
+  def run(spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      sfDir: String, warmDir: String, reps: Int): Result = {
+    require(reps > 0, s"reps must be positive: $reps")
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def fail(name: String, e: Throwable): Unit = {
+      failed += name
+      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+      System.err.println(
+        s"[bench] FAILED $name: ${msg.linesIterator.take(4).mkString(" | ")}")
+    }
+    // GC/heap telemetry (stderr): per query, how much GC time elapsed
+    // and how much block-manager storage stayed resident (seam-leak
+    // detector).
     def gcMillis: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -49,82 +105,46 @@ object Bench {
     // data) so timings below measure steady-state, not first-call
     // compilation. Seams are released per query — warmup must not
     // carry storage into the measured window.
-    val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (_, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, warmDir).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-      Seams.release()
+      catch { case NonFatal(e) => fail(name, e) }
+      finally Seams.release()
     }
     spark.catalog.clearCache()
     System.gc()
-    // Steady-state seconds: best of `reps` measured passes per query,
-    // so a stray GC pause or scheduler hiccup in one pass doesn't
-    // masquerade as query cost.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     // Sorted execution order: Map iteration order shifts whenever the
     // key set changes, which moves queries into different GC/contention
     // neighborhoods across rounds and makes per-query timings
     // incomparable round-over-round.
     var qIdx = 0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val gc0 = gcMillis
-      val best = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() }
-        catch { case scala.util.control.NonFatal(_) => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Free this rep's seam/cut storage OUTSIDE the timed window.
-        // Each rep rebuilds and re-materializes its own seams — the
-        // same per-rep cost profile as the r15/r16 methodology (r16's
-        // per-rep localCheckpoints also re-materialized; they just
-        // never freed), so the timing comparison stays valid while
-        // storage stays bounded by one query's working set.
-        Seams.release()
-        dt
-      }.min
-      qIdx += 1
-      // Periodic full GC outside the timers: lets the ContextCleaner
-      // reap broadcast/shuffle refs from finished queries instead of
-      // deferring one giant stall into a later query's timed window.
-      if (qIdx % 16 == 0) System.gc()
-      System.err.println(
-        f"[bench] $name%-28s ${best}%8.3f s  gc+${gcMillis - gc0}%4d ms  " +
-        f"storage ${storageMB}%5d MB  heap ${heapMB}%5d MB")
-      name -> best
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    // Human-readable slowest-queries digest → stderr (stdout is
-    // reserved for the one machine-readable contract line below).
-    val desc = results.sortBy(-_._2).take(40)
-    def r3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
-    System.err.println("[bench] total " + r3(total) + " s over " +
-      results.size + " queries; slowest: " +
-      desc.map { case (k, v) => s"$k=${r3(v)}" }.mkString(", "))
-    // Persist the COMPLETE per-query artifact: commit it once per
-    // round. Default under java.io.tmpdir so an ad-hoc run never
-    // silently clobbers the committed per-round artifact — export
-    // SPARK_GRAFT_BENCH_OUT=bench_full.json (repo root) for the
-    // round-final run.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      new java.io.File(sys.props("java.io.tmpdir"), "bench_full.json").getPath)
-    try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
-      System.err.println(s"[bench] full artifact: $out")
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] could not write $out: ${e.getMessage}")
-    }
-    // Quiet shutdown, THEN the contract line: the driver parses the
-    // bench's stdout as one JSON line of the original schema
-    // {"metric","value","unit","queries":<ALL of them>,"sf"} — it must
-    // be unprefixed (build.sbt forks with StdoutOutput, so nothing
-    // rewrites it as `[info] ...`) and be the final stdout line
-    // (spark.stop() runs first; Spark logs go to stderr).
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.stop()
-    println(line)
-    System.out.flush()
+    val timings = queries.toSeq.sortBy(_._1).filterNot(q => failed(q._1))
+      .flatMap { case (name, fn) =>
+        val gc0 = gcMillis
+        // Steady-state seconds: best of `reps` measured passes, so a
+        // stray GC pause or scheduler hiccup in one pass doesn't
+        // masquerade as query cost. The first failing rep ends them.
+        val times = (1 to reps).iterator.map { _ =>
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+          catch { case NonFatal(e) => fail(name, e); None }
+          // Free this rep's seam/cut storage OUTSIDE the timed window:
+          // storage stays bounded by one query's working set.
+          finally Seams.release()
+        }.takeWhile(_.isDefined).flatten.toSeq
+        qIdx += 1
+        // Periodic full GC outside the timers: lets the ContextCleaner
+        // reap broadcast/shuffle refs from finished queries instead of
+        // deferring one giant stall into a later query's timed window.
+        if (qIdx % 16 == 0) System.gc()
+        if (failed(name)) None
+        else {
+          val best = times.min
+          System.err.println(
+            f"[bench] $name%-28s ${best}%8.3f s  gc+${gcMillis - gc0}%4d ms  " +
+            f"storage ${storageMB}%5d MB  heap ${heapMB}%5d MB")
+          Some(name -> best)
+        }
+      }
+    Result(timings, failed.toSeq)
   }
 }

@@ -21,12 +21,12 @@ import org.apache.spark.sql.Dataset
   *  - **Deterministic release.** Every seam/cut registers here and
   *    [[release]] frees it right after the consuming action (Bench
   *    after every timed rep, Verify after every query, CurationJob at
-  *    batch end, the dev tools per rep/dump) — storage is bounded by
-  *    ONE query's working set instead of accumulating for the life of
-  *    the JVM.
+  *    batch end, the Probe tool after every rep and plan dump) —
+  *    storage is bounded by ONE query's working set instead of
+  *    accumulating for the life of the JVM.
   *  - **Cluster-safe parameterization.** With a reliable checkpoint
-  *    dir configured (`SPARK_GRAFT_CHECKPOINT_DIR`, wired by the
-  *    entrypoints via `SparkContext.setCheckpointDir`), both [[seam]]
+  *    dir configured (`SPARK_GRAFT_CHECKPOINT_DIR`, wired by
+  *    [[LocalSpark]] via `SparkContext.setCheckpointDir`), both [[seam]]
   *    and [[cut]] become reliable checkpoints that survive executor
   *    loss (guide §5). Locally they stay `localCheckpoint`, the exact
   *    primitive the r15/r16 benches measured.

@@ -5,12 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.Analytics
 import graft.sources.TableCatalog
 
-/** Driver contract — see /root/repo/SURVEY.md §2 + the builder prompt.
+/** Driver contract — see SURVEY.md §2.
   *
-  * Every implemented capability from SURVEY.md §2 registers a query
-  * here; `oracleSql` carries the DuckDB-equivalent SQL the driver
-  * hash-compares against at sf0.01. Column names/aliases match on both
-  * sides (the driver sorts columns by name before hashing).
+  * Every implemented capability from SURVEY.md §2 registers one
+  * [[QuerySpec]]: the query plus the DuckDB-equivalent SQL the driver
+  * hash-compares it against at sf0.01. Column names/aliases match on
+  * both sides (the driver sorts columns by name before hashing).
   */
 object SparkEntry {
 
@@ -31,51 +31,145 @@ object SparkEntry {
 
   private def cat(s: SparkSession, dir: String) = TableCatalog(s, dir)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ graft.plans.PipelineQueries.queries ++
-      graft.operators.CdcQueries.queries ++
-      graft.functions.EncodingQueries.queries ++
-      graft.operators.LlmQueries.queries ++
-      graft.streaming.StreamQueries.queries ++
-      graft.plans.ExtendedQueries.queries
+  /** DuckDB Morton code: unrolled Σ ((x»i)&1)·2^2i + ((y»i)&1)·2^2i+1
+    * — bit-identical to [[graft.functions.BitInterleave]].
+    */
+  private val mortonSql: String = (0 until 16).map(i =>
+    s"((((__x16 >> $i) & 1) << ${2 * i}) + (((__y16 >> $i) & 1) << ${2 * i + 1}))")
+    .mkString(" + ")
 
-  private val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val baseSpecs: Seq[QuerySpec] = Seq(
     // —— group I: headline analytics ——
-    "q1_pricing" -> ((s, dir) => Analytics.pricingSummary(cat(s, dir).lineitem)),
-    "q3_shipping" -> ((s, dir) => {
+    QuerySpec("q1_pricing", (s, dir) => Analytics.pricingSummary(cat(s, dir).lineitem),
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS sum_disc_price,
+        |  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) * (CAST(1 AS DECIMAL(18,2)) + CAST(l_tax AS DECIMAL(18,2)))), 2) AS DOUBLE) AS sum_charge,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price,
+        |  COUNT(*) AS count_order
+        |FROM lineitem
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    QuerySpec("q3_shipping", (s, dir) => {
       val t = cat(s, dir)
       Analytics.shippingPriority(t.customer, t.orders, t.lineitem)
-    }),
-    "q5_volume" -> ((s, dir) => {
+    },
+      """SELECT o_orderkey, o_orderdate, o_orderpriority,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE c_mktsegment = 'BUILDING' AND l_shipdate > o_orderdate
+        |GROUP BY o_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY revenue DESC, o_orderkey
+        |LIMIT 10""".stripMargin),
+    QuerySpec("q5_volume", (s, dir) => {
       val t = cat(s, dir)
       Analytics.localVolume(t.region, t.nation, t.customer, t.supplier,
         t.orders, t.lineitem)
-    }),
-    "q6_revenue" -> ((s, dir) => Analytics.revenueForecast(cat(s, dir).lineitem)),
-    "events_funnel" -> ((s, dir) => Analytics.eventsFunnel(cat(s, dir).events)),
+    },
+      """SELECT n_name,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
+        |GROUP BY n_name
+        |ORDER BY revenue DESC, n_name""".stripMargin),
+    QuerySpec("q6_revenue", (s, dir) => Analytics.revenueForecast(cat(s, dir).lineitem),
+      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_discount BETWEEN 0.02 AND 0.09
+        |  AND l_quantity < 25""".stripMargin),
+    QuerySpec("events_funnel", (s, dir) => Analytics.eventsFunnel(cat(s, dir).events),
+      """SELECT user_id, purchases,
+        |  COALESCE(purchase_value, 0.0) AS purchase_value,
+        |  purchases > 0 AS converted
+        |FROM (
+        |  SELECT user_id,
+        |    MIN(CASE WHEN event_type = 'signup' THEN ts END) AS first_signup,
+        |    COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchases,
+        |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_value
+        |  FROM events GROUP BY user_id
+        |) WHERE first_signup IS NOT NULL
+        |ORDER BY user_id""".stripMargin),
     // —— I5b: ordered signup→view→purchase funnel ——
-    "events_funnel_ordered" -> ((s, dir) =>
-      Analytics.orderedFunnel(cat(s, dir).events)),
+    QuerySpec("events_funnel_ordered", (s, dir) =>
+      Analytics.orderedFunnel(cat(s, dir).events),
+      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
+        |            WHERE event_type = 'signup' GROUP BY 1),
+        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2
+        |       FROM events e JOIN s1 USING (user_id)
+        |       WHERE e.event_type = 'view' AND e.ts >= s1.t1 GROUP BY 1),
+        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3
+        |       FROM events e JOIN s2 USING (user_id)
+        |       WHERE e.event_type = 'purchase' AND e.ts >= s2.t2 GROUP BY 1)
+        |SELECT s1.user_id, epoch_us(t1) AS t1_us, epoch_us(t2) AS t2_us,
+        |  epoch_us(t3) AS t3_us,
+        |  CAST(1 + CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END
+        |         + CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END AS INTEGER)
+        |    AS steps
+        |FROM s1 LEFT JOIN s2 USING (user_id)
+        |        LEFT JOIN s3 USING (user_id)""".stripMargin),
     // —— I9: weekly retention cohorts ——
-    "events_retention" -> ((s, dir) =>
-      Analytics.retentionCohorts(cat(s, dir).events)),
+    QuerySpec("events_retention", (s, dir) =>
+      Analytics.retentionCohorts(cat(s, dir).events),
+      """WITH su AS (SELECT user_id, CAST(date_trunc('week', MIN(ts)) AS DATE) AS cw
+        |            FROM events WHERE event_type = 'signup' GROUP BY 1),
+        |aw AS (SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS w
+        |       FROM events)
+        |SELECT cw AS cohort_week,
+        |  CAST(datediff('day', cw, w) // 7 AS INTEGER) AS week_offset,
+        |  COUNT(*) AS n_active
+        |FROM su JOIN aw USING (user_id)
+        |WHERE w >= cw
+        |GROUP BY 1, 2""".stripMargin),
     // —— I10: daily trending event types, top-3 ——
-    "events_trending" -> ((s, dir) =>
-      Analytics.trendingTypes(cat(s, dir).events)),
-    "quantiles_sketch" -> ((s, dir) => {
+    QuerySpec("events_trending", (s, dir) =>
+      Analytics.trendingTypes(cat(s, dir).events),
+      """WITH c AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+        |             event_type, COUNT(*) AS n
+        |           FROM events GROUP BY 1, 2),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY day
+        |        ORDER BY n DESC, event_type) AS rnk FROM c)
+        |SELECT day, event_type, n, CAST(rnk AS INTEGER) AS rnk
+        |FROM r WHERE rnk <= 3""".stripMargin),
+    QuerySpec("quantiles_sketch", (s, dir) => {
       import org.apache.spark.sql.functions._
       graft.operators.Pipeline100TB.quantileSketch(
         cat(s, dir).lineitem,
         concat_ws("-", col("l_orderkey"), col("l_linenumber")), ratePct = 5,
         Seq(col("l_returnflag")), col("l_extendedprice"),
         Seq("p50_est" -> 0.5, "p95_est" -> 0.95))
-    }),
-    "layout_zorder" -> ((s, dir) =>
+    },
+      """SELECT l_returnflag, COUNT(*) AS sample_n,
+        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_est,
+        |  round(quantile_cont(l_extendedprice, 0.95), 4) AS p95_est
+        |FROM lineitem
+        |WHERE CAST('0x' || substr(md5(l_orderkey || '-' || l_linenumber), 1, 15) AS BIGINT) % 100 < 5
+        |GROUP BY 1""".stripMargin),
+    QuerySpec("layout_zorder", (s, dir) =>
       graft.operators.Pipeline100TB.zorderStats(
-        cat(s, dir).lineitem, "l_partkey", "l_suppkey")),
+        cat(s, dir).lineitem, "l_partkey", "l_suppkey"),
+      s"""WITH m AS (SELECT MAX(l_partkey) AS __xmax, MAX(l_suppkey) AS __ymax
+         |           FROM lineitem),
+         |b AS (SELECT l_partkey, l_suppkey,
+         |        (l_partkey * 65536) // (__xmax + 1) AS __x16,
+         |        (l_suppkey * 65536) // (__ymax + 1) AS __y16
+         |      FROM lineitem, m),
+         |z AS (SELECT l_partkey, l_suppkey, $mortonSql AS __z FROM b)
+         |SELECT __z >> 24 AS file_id, COUNT(*) AS n_rows,
+         |  MIN(l_partkey) AS x_min, MAX(l_partkey) AS x_max,
+         |  MIN(l_suppkey) AS y_min, MAX(l_suppkey) AS y_max
+         |FROM z GROUP BY 1""".stripMargin),
     // —— I7: as-of join (attribution: purchase ← latest prior view) ——
-    "join_asof" -> ((s, dir) => {
+    QuerySpec("join_asof", (s, dir) => {
       import org.apache.spark.sql.functions._
       val ev = cat(s, dir).events
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -89,9 +183,21 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("ts_us"), col("value"),
           unix_micros(col("v_ts")).as("v_ts_us"), col("v_id"))
-    }),
+    },
+      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
+        |           WHERE event_type = 'purchase'),
+        |v AS (SELECT user_id, ts AS v_ts, event_id AS v_id FROM events
+        |      WHERE event_type = 'view'),
+        |j AS (SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
+        |        epoch_us(v.v_ts) AS v_ts_us, v.v_id,
+        |        row_number() OVER (PARTITION BY p.event_id
+        |                           ORDER BY v.v_ts DESC, v.v_id DESC) AS rn
+        |      FROM p LEFT JOIN v
+        |        ON v.user_id = p.user_id AND v.v_ts <= p.ts)
+        |SELECT event_id, user_id, ts_us, value, v_ts_us, v_id
+        |FROM j WHERE rn = 1""".stripMargin),
     // —— I7 forward + tolerance: next view within 1 h after purchase ——
-    "join_asof_fwd" -> ((s, dir) => {
+    QuerySpec("join_asof_fwd", (s, dir) => {
       import org.apache.spark.sql.functions._
       val ev = cat(s, dir).events
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -106,9 +212,23 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("ts_us"), col("value"),
           unix_micros(col("v_ts")).as("v_ts_us"), col("v_id"))
-    }),
+    },
+      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
+        |           WHERE event_type = 'purchase'),
+        |v AS (SELECT user_id, ts AS v_ts, event_id AS v_id FROM events
+        |      WHERE event_type = 'view'),
+        |j AS (SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
+        |        epoch_us(v.v_ts) AS v_ts_us, v.v_id,
+        |        row_number() OVER (PARTITION BY p.event_id
+        |                           ORDER BY v.v_ts ASC, v.v_id ASC) AS rn
+        |      FROM p LEFT JOIN v
+        |        ON v.user_id = p.user_id AND v.v_ts >= p.ts)
+        |SELECT event_id, user_id, ts_us, value,
+        |  CASE WHEN v_ts_us <= ts_us + 3600000000 THEN v_ts_us END AS v_ts_us,
+        |  CASE WHEN v_ts_us <= ts_us + 3600000000 THEN v_id END AS v_id
+        |FROM j WHERE rn = 1""".stripMargin),
     // —— I8: interval join (purchases within 6 h after each click) ——
-    "join_range" -> ((s, dir) => {
+    QuerySpec("join_range", (s, dir) => {
       import org.apache.spark.sql.functions._
       val ev = cat(s, dir).events
       val clicks = ev.filter(col("event_type") === "click")
@@ -127,10 +247,21 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"),
           coalesce(col("__n"), lit(0L)).as("n_purch"),
           col("__v").as("purch_value"))
-    }),
+    },
+      """WITH c AS (SELECT event_id, user_id, ts FROM events
+        |           WHERE event_type = 'click'),
+        |p AS (SELECT user_id, ts AS p_ts, value AS p_value FROM events
+        |      WHERE event_type = 'purchase')
+        |SELECT c.event_id, c.user_id,
+        |  count(p.p_ts) AS n_purch,
+        |  CAST(SUM(CAST(p.p_value AS DECIMAL(18,2))) AS DOUBLE) AS purch_value
+        |FROM c LEFT JOIN p
+        |  ON p.user_id = c.user_id AND p.p_ts > c.ts
+        | AND p.p_ts <= c.ts + INTERVAL 6 HOUR
+        |GROUP BY 1, 2""".stripMargin),
     // —— I8 salted (salt = 4): pairs must be IDENTICAL to unsalted,
     //    so the oracle is join_range's SQL verbatim ——
-    "join_range_salted" -> ((s, dir) => {
+    QuerySpec("join_range_salted", (s, dir) => {
       import org.apache.spark.sql.functions._
       val ev = cat(s, dir).events
       val clicks = ev.filter(col("event_type") === "click")
@@ -148,184 +279,36 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"),
           coalesce(col("__n"), lit(0L)).as("n_purch"),
           col("__v").as("purch_value"))
-    }),
+    },
+      """WITH c AS (SELECT event_id, user_id, ts FROM events
+        |           WHERE event_type = 'click'),
+        |p AS (SELECT user_id, ts AS p_ts, value AS p_value FROM events
+        |      WHERE event_type = 'purchase')
+        |SELECT c.event_id, c.user_id,
+        |  count(p.p_ts) AS n_purch,
+        |  CAST(SUM(CAST(p.p_value AS DECIMAL(18,2))) AS DOUBLE) AS purch_value
+        |FROM c LEFT JOIN p
+        |  ON p.user_id = c.user_id AND p.p_ts > c.ts
+        | AND p.p_ts <= c.ts + INTERVAL 6 HOUR
+        |GROUP BY 1, 2""".stripMargin),
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    baseOracle ++ graft.plans.PipelineQueries.oracleSql ++
-      graft.operators.CdcQueries.oracleSql ++
-      graft.functions.EncodingQueries.oracleSql ++
-      graft.operators.LlmQueries.oracleSql ++
-      graft.streaming.StreamQueries.oracleSql ++
-      graft.plans.ExtendedQueries.oracleSql
-
-  /** DuckDB Morton code: unrolled Σ ((x»i)&1)·2^2i + ((y»i)&1)·2^2i+1
-    * — bit-identical to [[graft.functions.BitInterleave]].
+  /** Every registered query, one spec per name; a repeated name fails
+    * here, at object construction. Defined after `baseSpecs`, because
+    * object vals initialise in order.
     */
-  private val mortonSql: String = (0 until 16).map(i =>
-    s"((((__x16 >> $i) & 1) << ${2 * i}) + (((__y16 >> $i) & 1) << ${2 * i + 1}))")
-    .mkString(" + ")
+  val specs: Seq[QuerySpec] = QuerySpec.unique(
+    baseSpecs ++ graft.plans.PipelineQueries.specs ++
+      graft.operators.CdcQueries.specs ++
+      graft.functions.EncodingQueries.specs ++
+      graft.operators.LlmQueries.specs ++
+      graft.streaming.StreamQueries.specs ++
+      graft.plans.ExtendedQueries.specs)
 
-  private val baseOracle: Map[String, String] = Map(
-    "join_asof" ->
-      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
-        |           WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts AS v_ts, event_id AS v_id FROM events
-        |      WHERE event_type = 'view'),
-        |j AS (SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-        |        epoch_us(v.v_ts) AS v_ts_us, v.v_id,
-        |        row_number() OVER (PARTITION BY p.event_id
-        |                           ORDER BY v.v_ts DESC, v.v_id DESC) AS rn
-        |      FROM p LEFT JOIN v
-        |        ON v.user_id = p.user_id AND v.v_ts <= p.ts)
-        |SELECT event_id, user_id, ts_us, value, v_ts_us, v_id
-        |FROM j WHERE rn = 1""".stripMargin,
-    "join_asof_fwd" ->
-      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
-        |           WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts AS v_ts, event_id AS v_id FROM events
-        |      WHERE event_type = 'view'),
-        |j AS (SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-        |        epoch_us(v.v_ts) AS v_ts_us, v.v_id,
-        |        row_number() OVER (PARTITION BY p.event_id
-        |                           ORDER BY v.v_ts ASC, v.v_id ASC) AS rn
-        |      FROM p LEFT JOIN v
-        |        ON v.user_id = p.user_id AND v.v_ts >= p.ts)
-        |SELECT event_id, user_id, ts_us, value,
-        |  CASE WHEN v_ts_us <= ts_us + 3600000000 THEN v_ts_us END AS v_ts_us,
-        |  CASE WHEN v_ts_us <= ts_us + 3600000000 THEN v_id END AS v_id
-        |FROM j WHERE rn = 1""".stripMargin,
-    "join_range" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts AS p_ts, value AS p_value FROM events
-        |      WHERE event_type = 'purchase')
-        |SELECT c.event_id, c.user_id,
-        |  count(p.p_ts) AS n_purch,
-        |  CAST(SUM(CAST(p.p_value AS DECIMAL(18,2))) AS DOUBLE) AS purch_value
-        |FROM c LEFT JOIN p
-        |  ON p.user_id = c.user_id AND p.p_ts > c.ts
-        | AND p.p_ts <= c.ts + INTERVAL 6 HOUR
-        |GROUP BY 1, 2""".stripMargin,
-    "join_range_salted" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts AS p_ts, value AS p_value FROM events
-        |      WHERE event_type = 'purchase')
-        |SELECT c.event_id, c.user_id,
-        |  count(p.p_ts) AS n_purch,
-        |  CAST(SUM(CAST(p.p_value AS DECIMAL(18,2))) AS DOUBLE) AS purch_value
-        |FROM c LEFT JOIN p
-        |  ON p.user_id = c.user_id AND p.p_ts > c.ts
-        | AND p.p_ts <= c.ts + INTERVAL 6 HOUR
-        |GROUP BY 1, 2""".stripMargin,
-    "quantiles_sketch" ->
-      """SELECT l_returnflag, COUNT(*) AS sample_n,
-        |  round(quantile_cont(l_extendedprice, 0.5), 4) AS p50_est,
-        |  round(quantile_cont(l_extendedprice, 0.95), 4) AS p95_est
-        |FROM lineitem
-        |WHERE CAST('0x' || substr(md5(l_orderkey || '-' || l_linenumber), 1, 15) AS BIGINT) % 100 < 5
-        |GROUP BY 1""".stripMargin,
-    "layout_zorder" ->
-      s"""WITH m AS (SELECT MAX(l_partkey) AS __xmax, MAX(l_suppkey) AS __ymax
-         |           FROM lineitem),
-         |b AS (SELECT l_partkey, l_suppkey,
-         |        (l_partkey * 65536) // (__xmax + 1) AS __x16,
-         |        (l_suppkey * 65536) // (__ymax + 1) AS __y16
-         |      FROM lineitem, m),
-         |z AS (SELECT l_partkey, l_suppkey, $mortonSql AS __z FROM b)
-         |SELECT __z >> 24 AS file_id, COUNT(*) AS n_rows,
-         |  MIN(l_partkey) AS x_min, MAX(l_partkey) AS x_max,
-         |  MIN(l_suppkey) AS y_min, MAX(l_suppkey) AS y_max
-         |FROM z GROUP BY 1""".stripMargin,
-    "q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS sum_disc_price,
-        |  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) * (CAST(1 AS DECIMAL(18,2)) + CAST(l_tax AS DECIMAL(18,2)))), 2) AS DOUBLE) AS sum_charge,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping" ->
-      """SELECT o_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING' AND l_shipdate > o_orderdate
-        |GROUP BY o_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-    "q5_volume" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q6_revenue" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.02 AND 0.09
-        |  AND l_quantity < 25""".stripMargin,
-    "events_trending" ->
-      """WITH c AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-        |             event_type, COUNT(*) AS n
-        |           FROM events GROUP BY 1, 2),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY day
-        |        ORDER BY n DESC, event_type) AS rnk FROM c)
-        |SELECT day, event_type, n, CAST(rnk AS INTEGER) AS rnk
-        |FROM r WHERE rnk <= 3""".stripMargin,
-    "events_retention" ->
-      """WITH su AS (SELECT user_id, CAST(date_trunc('week', MIN(ts)) AS DATE) AS cw
-        |            FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |aw AS (SELECT DISTINCT user_id, CAST(date_trunc('week', ts) AS DATE) AS w
-        |       FROM events)
-        |SELECT cw AS cohort_week,
-        |  CAST(datediff('day', cw, w) // 7 AS INTEGER) AS week_offset,
-        |  COUNT(*) AS n_active
-        |FROM su JOIN aw USING (user_id)
-        |WHERE w >= cw
-        |GROUP BY 1, 2""".stripMargin,
-    "events_funnel_ordered" ->
-      """WITH s1 AS (SELECT user_id, MIN(ts) AS t1 FROM events
-        |            WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, MIN(e.ts) AS t2
-        |       FROM events e JOIN s1 USING (user_id)
-        |       WHERE e.event_type = 'view' AND e.ts >= s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, MIN(e.ts) AS t3
-        |       FROM events e JOIN s2 USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts >= s2.t2 GROUP BY 1)
-        |SELECT s1.user_id, epoch_us(t1) AS t1_us, epoch_us(t2) AS t2_us,
-        |  epoch_us(t3) AS t3_us,
-        |  CAST(1 + CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END
-        |         + CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END AS INTEGER)
-        |    AS steps
-        |FROM s1 LEFT JOIN s2 USING (user_id)
-        |        LEFT JOIN s3 USING (user_id)""".stripMargin,
-    "events_funnel" ->
-      """SELECT user_id, purchases,
-        |  COALESCE(purchase_value, 0.0) AS purchase_value,
-        |  purchases > 0 AS converted
-        |FROM (
-        |  SELECT user_id,
-        |    MIN(CASE WHEN event_type = 'signup' THEN ts END) AS first_signup,
-        |    COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchases,
-        |    CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_value
-        |  FROM events GROUP BY user_id
-        |) WHERE first_signup IS NOT NULL
-        |ORDER BY user_id""".stripMargin,
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.run).toMap
+
+  /** DuckDB SQL per query, runnable on the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    specs.map(q => q.name -> q.oracleSql).toMap
 }

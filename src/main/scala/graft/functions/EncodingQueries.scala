@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QuerySpec
 import graft.operators.Cdc
 import graft.sources.TableCatalog
 
@@ -37,39 +38,6 @@ object EncodingQueries {
       .as("msg"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ext_json_encode" -> ((s, dir) => envelope(oplog(s, dir))),
-    "json_encode_plain" -> ((s, dir) => {
-      val ev = TableCatalog(s, dir).events
-      val v = when(col("event_type") === "error", lit(Double.PositiveInfinity))
-        .when(col("event_type") === "view", lit(Double.NaN))
-        .when(col("event_type") === "click", lit(Double.NegativeInfinity))
-        .otherwise(col("value"))
-      ev.select(col("event_id"),
-        ExtJson.jsonFloat(v).as("vjson"),
-        ExtJson.jsonTime(col("ts")).as("tjson"))
-    }),
-    "json_decode" -> ((s, dir) => {
-      val ev = TableCatalog(s, dir).events
-      ev.select(col("event_id"),
-        get_json_object(col("props"), "$.k").cast("int").as("k"))
-    }),
-    "ext_json_roundtrip" -> ((s, dir) => {
-      val ev = TableCatalog(s, dir).events
-      import ExtJson._
-      val msg = obj(
-        field("_id", numberLong(col("user_id"))),
-        field("value", numberDouble(col("value"))))
-      val schema = StructType(Seq(
-        StructField("_id", StructType(Seq(StructField("$numberLong", StringType)))),
-        StructField("value", StructType(Seq(StructField("$numberDouble", StringType))))))
-      ev.select(col("event_id"), from_json(msg, schema).as("j"))
-        .select(col("event_id"),
-          col("j").getField("_id").getField("$numberLong").cast("long").as("rt_id"),
-          col("j").getField("value").getField("$numberDouble").cast("double").as("rt_value"))
-    }),
-  )
-
   private val metaSql =
     """'{"meta":{"_id":{"$numberLong":"' || CAST(user_id AS VARCHAR) ||
       |'"},"ts":{"$date":{"$numberLong":"' || CAST(epoch_ms(ts) AS VARCHAR) ||
@@ -77,8 +45,8 @@ object EncodingQueries {
       |CASE WHEN event_type = 'signup' THEN 'i'
       |     WHEN event_type = 'error' THEN 'd' ELSE 'u' END || '"}'""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "ext_json_encode" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ext_json_encode", (s, dir) => envelope(oplog(s, dir)),
       s"""SELECT event_id,
          |CASE WHEN event_type = 'error' THEN $metaSql || '}'
          |ELSE $metaSql ||
@@ -89,8 +57,17 @@ object EncodingQueries {
          |    '\\', '\\\\'), '"', '\\"'),
          |    chr(10), '\\n'), chr(13), '\\r'), chr(9), '\\t') || '"}}'
          |END AS msg
-         |FROM events""".stripMargin,
-    "json_encode_plain" ->
+         |FROM events""".stripMargin),
+    QuerySpec("json_encode_plain", (s, dir) => {
+      val ev = TableCatalog(s, dir).events
+      val v = when(col("event_type") === "error", lit(Double.PositiveInfinity))
+        .when(col("event_type") === "view", lit(Double.NaN))
+        .when(col("event_type") === "click", lit(Double.NegativeInfinity))
+        .otherwise(col("value"))
+      ev.select(col("event_id"),
+        ExtJson.jsonFloat(v).as("vjson"),
+        ExtJson.jsonTime(col("ts")).as("tjson"))
+    },
       """SELECT event_id,
         |  CASE WHEN isnan(v) THEN '"nan"'
         |       WHEN v = 'Infinity'::DOUBLE THEN '"+inf"'
@@ -103,12 +80,29 @@ object EncodingQueries {
         |       WHEN event_type = 'view' THEN 'NaN'::DOUBLE
         |       WHEN event_type = 'click' THEN '-Infinity'::DOUBLE
         |       ELSE value END AS v
-        |  FROM events)""".stripMargin,
-    "json_decode" ->
+        |  FROM events)""".stripMargin),
+    QuerySpec("json_decode", (s, dir) => {
+      val ev = TableCatalog(s, dir).events
+      ev.select(col("event_id"),
+        get_json_object(col("props"), "$.k").cast("int").as("k"))
+    },
       """SELECT event_id,
         |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |FROM events""".stripMargin,
-    "ext_json_roundtrip" ->
-      """SELECT event_id, user_id AS rt_id, value AS rt_value FROM events""".stripMargin,
+        |FROM events""".stripMargin),
+    QuerySpec("ext_json_roundtrip", (s, dir) => {
+      val ev = TableCatalog(s, dir).events
+      import ExtJson._
+      val msg = obj(
+        field("_id", numberLong(col("user_id"))),
+        field("value", numberDouble(col("value"))))
+      val schema = StructType(Seq(
+        StructField("_id", StructType(Seq(StructField("$numberLong", StringType)))),
+        StructField("value", StructType(Seq(StructField("$numberDouble", StringType))))))
+      ev.select(col("event_id"), from_json(msg, schema).as("j"))
+        .select(col("event_id"),
+          col("j").getField("_id").getField("$numberLong").cast("long").as("rt_id"),
+          col("j").getField("value").getField("$numberDouble").cast("double").as("rt_value"))
+    },
+      """SELECT event_id, user_id AS rt_id, value AS rt_value FROM events""".stripMargin),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QuerySpec
 import graft.sources.TableCatalog
 import graft.Seams.SeamOps
 
@@ -16,498 +17,6 @@ object LlmQueries {
 
   private def docs(s: SparkSession, dir: String) = TableCatalog(s, dir).documents
   private def emb(s: SparkSession, dir: String) = TableCatalog(s, dir).embeddings
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir), "doc_id", "text")),
-    "dedup_fingerprint" -> ((s, dir) => Dedup.fingerprint(docs(s, dir), "doc_id", "text")),
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccard(docs(s, dir), "doc_id", "text", n = 2, tau = 0.8)),
-    // —— F3b: bounded top-k near-dup neighbors — F3's at-scale contract ——
-    "dedup_ngram_topk" -> ((s, dir) =>
-      Dedup.ngramJaccardTopK(docs(s, dir), "doc_id", "text",
-        n = 2, tau = 0.8, k = 3)),
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      Dedup.minhashCandidates(docs(s, dir), "doc_id", "text", n = 2, k = 16, bands = 4)),
-    "dedup_simhash" -> ((s, dir) => Dedup.simhash(docs(s, dir), "doc_id", "text")),
-    "dedup_embed_cosine" -> ((s, dir) =>
-      Similarity.nearDupPairs(s, emb(s, dir), tau = 0.4)),
-    // —— F3∘F2: duplicate-dense guard — pairs over the fingerprint-
-    //    collapsed corpus, each side carrying its group size ——
-    "dedup_pairs_collapsed" -> ((s, dir) =>
-      Dedup.ngramJaccardCollapsed(docs(s, dir), "doc_id", "text", n = 2, tau = 0.8)),
-    // —— F6∘collapse: cosine pairs over exact-duplicate-collapsed vectors ——
-    "dedup_embed_collapsed" -> ((s, dir) =>
-      Similarity.nearDupPairsCollapsed(s, emb(s, dir), tau = 0.4)),
-    // —— F10 for the LSH generator: band candidates over the collapsed corpus ——
-    "dedup_minhash_collapsed" -> ((s, dir) => {
-      val reps = Dedup.collapseFingerprints(docs(s, dir), "doc_id", "text")
-        .drop("n_members")
-      Dedup.minhashCandidates(reps, "doc_id", "text", n = 2, k = 16, bands = 4)
-    }),
-    // —— F13: cross-corpus MinHash band join (two big sides) ——
-    "dedup_cross_corpus" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.crossCorpusCandidates(
-        d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text")
-    }),
-    // —— G16: per-source KL divergence from the corpus distribution ——
-    "mix_divergence" -> ((s, dir) =>
-      Pipeline100TB.sourceDivergence(docs(s, dir), "source", "text")),
-    // —— F14: incremental FUZZY dedup of a batch vs the standing band index ——
-    "dedup_incremental_fuzzy" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.incrementalBands(
-        d.filter(col("doc_id") % 10 === 0),
-        Dedup.bandIndex(d.filter(col("doc_id") % 10 =!= 0), "doc_id", "text"),
-        "doc_id", "text")
-    }),
-    // —— F12: incremental dedup of a batch vs the standing corpus index ——
-    "dedup_incremental" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.incrementalFingerprint(
-        d.filter(col("doc_id") % 10 === 0),
-        Dedup.fingerprintIndex(d.filter(col("doc_id") % 10 =!= 0), "text"),
-        "doc_id", "text")
-    }),
-    // —— F20b: closed-form Bloom sizing solver over the standing
-    //    index's actual cardinality ——
-    "dedup_bloom_choose" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.bloomChoose(
-        Dedup.fingerprintIndex(d.filter(col("doc_id") % 10 =!= 0), "text"))
-    }),
-    // —— F20: Bloom-filter definitely-new gate in front of the F12
-    //    standing-index anti join ——
-    "dedup_bloom_inc" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.bloomProbe(
-        d.filter(col("doc_id") % 10 === 0),
-        Dedup.fingerprintIndex(d.filter(col("doc_id") % 10 =!= 0), "text"),
-        "doc_id", "text")
-    }),
-    // —— G15: token-balanced shard assignment in the global hash order ——
-    "shard_tokens" -> ((s, dir) => {
-      import graft.functions.Hash60.tokens
-      Pipeline100TB.tokenBalancedShards(
-          docs(s, dir).select("doc_id", "source", "text"), col("doc_id"),
-          size(tokens(col("text"))).cast("long"), nShards = 8)
-        .select(col("doc_id"), col("source"), col("shard"))
-    }),
-    "sim_topk_bruteforce" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.bruteForceTopK(s, e, e.filter(col("vec_id") < 10), k = 5)
-    }),
-    "sim_topk_lsh" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.lshTopK(s, e, e.filter(col("vec_id") < 10), k = 3, planes = 8)
-    }),
-    // —— G28: 1-bit sign quantization + Hamming-distance scan ——
-    "sim_topk_hamming" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.hammingTopK(s, e, e.filter(col("vec_id") < 10), k = 5)
-    }),
-    // —— G28b: sign-scan shortlist + exact cosine re-rank ——
-    "sim_topk_hamming_rerank" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.hammingRerankTopK(s, e, e.filter(col("vec_id") < 10),
-        k = 5, kShort = 15)
-    }),
-    "sim_topk_pruned" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.exactPrunedTopK(s, e, e.filter(col("vec_id") < 10), k = 5)
-    }),
-    // —— G19: product quantization — 4 subspaces × 4-centroid
-    //    codebooks, integer-exact quantized-L2 training ——
-    "embed_pq_codes" -> ((s, dir) =>
-      Similarity.pqCodes(s, emb(s, dir), m = 4, dsub = 16, ksub = 4,
-        iters = 2)),
-    // —— G29: sparse signed random projection (Achlioptas JL) ——
-    "embed_rp" -> ((s, dir) => Similarity.randomProjection(emb(s, dir))),
-    // —— H26: Zipf-slope vocabulary diagnostic ——
-    "text_zipf" -> ((s, dir) => TextAnalysis.zipfFit(docs(s, dir), "text")),
-    // —— G30: k-center coreset by farthest-first traversal ——
-    "sample_kcenter" -> ((s, dir) => Similarity.kcenterSample(emb(s, dir))),
-    // —— G27: OPQ-lite — variance-balanced dimension permutation in
-    //    front of the same PQ train/encode machinery ——
-    "embed_opq_codes" -> ((s, dir) =>
-      Similarity.opqCodes(s, emb(s, dir), m = 4, dsub = 16, ksub = 4,
-        iters = 2)),
-    // —— G27b: LEARNED OPQ decomposition — greedy variance-balancing
-    //    allocation (sum-domain eigenvalue allocation) ∘ PQ ——
-    "embed_opq_rot" -> ((s, dir) =>
-      Similarity.opqRotCodes(s, emb(s, dir), m = 4, dsub = 16, ksub = 4,
-        iters = 2)),
-    // —— G19b: PQ ADC search — codes-only scan, integer-exact ——
-    "sim_topk_pq" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.pqTopK(s, e, e.filter(col("vec_id") < 10), k = 5)
-    }),
-    // —— G18: Matryoshka truncated-prefix coarse pass + exact rerank ——
-    "sim_topk_truncated" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.truncatedTopK(s, e, e.filter(col("vec_id") < 10),
-        dPrefix = 16, cands = 20, k = 5)
-    }),
-    "embed_norms" -> ((s, dir) => Similarity.norms(emb(s, dir))),
-    // —— G20: corpus mean-centering diagnostics ——
-    "embed_center" -> ((s, dir) => Similarity.centeredStats(s, emb(s, dir))),
-    "text_langid" -> ((s, dir) => TextAnalysis.langId(docs(s, dir), "doc_id", "text")),
-    "text_quality" -> ((s, dir) => TextAnalysis.quality(docs(s, dir), "doc_id", "text")),
-    "text_tokens" -> ((s, dir) => TextAnalysis.tokenCounts(docs(s, dir), "doc_id", "text")),
-    // the opt-in NFC+casefold tokenizer, made load-bearing by
-    // appending DECOMPOSED mixed-case tokens (e + combining acute,
-    // i + combining diaeresis) to every document: after NFC + lower
-    // they must count as the composed lowercase probe words on both
-    // engines (DuckDB side uses its native nfc_normalize)
-    "text_tokens_nfc" -> ((s, dir) => {
-      val d = docs(s, dir).withColumn("text",
-        concat(col("text"),
-          lit(" CafÉ naïve FIANCÉE")))
-      TextAnalysis.tokenCountsNormalized(d, "doc_id", "text", "NFC",
-        Seq("café", "naïve", "fiancée"))
-    }),
-    "text_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprints(docs(s, dir), "doc_id", "text")),
-    "text_vocab" -> ((s, dir) => TextAnalysis.vocabulary(docs(s, dir), "doc_id", "text")),
-    "text_tfidf" -> ((s, dir) => TextAnalysis.topTerms(docs(s, dir), "doc_id", "text")),
-    "text_repetition" -> ((s, dir) =>
-      TextAnalysis.repetition(docs(s, dir), "doc_id", "text")),
-    // —— H19: cross-document duplicated n-gram (boilerplate) fraction ——
-    "text_boilerplate" -> ((s, dir) =>
-      TextAnalysis.boilerplate(docs(s, dir), "doc_id", "text", n = 3, minDf = 2)),
-    "embed_quantize" -> ((s, dir) => {
-      import org.apache.spark.sql.functions._
-      // Serialize the int8 vector: the driver's pandas compare can't
-      // sort rows on array columns.
-      Similarity.quantizeInt8(emb(s, dir))
-        .withColumn("q", concat(lit("["), array_join(col("q"), ","), lit("]")))
-    }),
-    "mm_binary_meta" -> ((s, dir) => Multimodal.binaryMeta(docs(s, dir), "doc_id", "text")),
-    // —— H5b: real PNG/JPEG/GIF header decode; the oracle states the
-    //    generator's ground truth, the engine must re-derive it by
-    //    parsing the container bytes it built ——
-    "mm_image_dims" -> ((s, dir) => Multimodal.imageDims(docs(s, dir), "doc_id")),
-    // —— H6: real RIFF/WAV and ISO-BMFF header walks over binary payloads ——
-    "mm_audio_meta" -> ((s, dir) => Multimodal.audioMeta(docs(s, dir), "doc_id")),
-    "mm_video_meta" -> ((s, dir) => Multimodal.videoMeta(docs(s, dir), "doc_id")),
-    // —— H6d: INTERLEAVED multimodal packing — each doc costs its text
-    //    tokens PLUS an image-token budget derived from the REAL
-    //    decoded image dims (⌈w/256⌉·⌈h/256⌉ patch tiles, the
-    //    vision-encoder accounting; corrupted payloads contribute 0),
-    //    through the exact H15 packing machinery ——
-    "mm_pack" -> ((s, dir) => {
-      import graft.functions.Hash60.tokens
-      val d = docs(s, dir)
-      val dims = Multimodal.imageDims(d, "doc_id")
-        .select(col("media_id").as("doc_id"), col("width"), col("height"))
-      val imgTok = when(col("width").isNull, lit(0L))
-        .otherwise((expr("(width + 255) div 256") *
-          expr("(height + 255) div 256")).cast("long"))
-      graft.operators.Pipeline100TB.packSequencesBy(
-        d.join(dims, Seq("doc_id")), "doc_id",
-        size(tokens(col("text"))).cast("long") + imgTok,
-        shardCol = "source", cap = 512)
-    }),
-    "mm_frame_sample" -> ((s, dir) => Multimodal.frameSample(docs(s, dir), "doc_id", "text")),
-    // —— F8: benchmark decontamination (trigram overlap vs eval set) ——
-    "decon_ngram" -> ((s, dir) =>
-      Dedup.decontaminate(docs(s, dir), "doc_id", "text", n = 3,
-        benchPred = col("doc_id") % 20 === 0)),
-    // —— F8c: span-level decontamination — verbatim aligned-block
-    //    overlap with the benchmark set ——
-    "decon_spans" -> ((s, dir) =>
-      Dedup.decontaminateSpans(docs(s, dir), "doc_id", "text",
-        benchPred = col("doc_id") % 20 === 0)),
-    // —— G22: label-blocked kNN graph over collapsed distinct vectors ——
-    // —— G31: graph-walk ANN — greedy beam search over the G22 kNN
-    //    graph (the HNSW/DiskANN search pattern), multi-entry ——
-    "sim_topk_graph" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.graphTopK(s, e, e.filter(col("vec_id") < 10), k = 5,
-        beamWidth = 16, rounds = 4, graphK = 8)
-    }),
-    "sim_knn_graph" -> ((s, dir) =>
-      Similarity.knnGraph(s, emb(s, dir), k = 3)),
-    // —— G22b: PageRank centrality over the G22 kNN graph — the
-    //    graph-quality-propagation curation signal ——
-    "graph_pagerank" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val reps = e.groupBy(col("label"), col("embedding"))
-        .agg(min(col("vec_id")).as("id")).select("id")
-      val edges = Similarity.knnGraph(s, e, k = 3)
-        .select(col("vec_id").as("src"), col("nbr").as("dst"))
-      Pipeline100TB.pageRank(reps, edges)
-    }),
-    // —— G22c: triangle count + clustering coefficient over the same
-    //    kNN graph — the neighborhood-redundancy diagnostic ——
-    "graph_triangles" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val reps = e.groupBy(col("label"), col("embedding"))
-        .agg(min(col("vec_id")).as("id")).select("id")
-      val edges = Similarity.knnGraph(s, e, k = 3)
-        .select(col("vec_id").as("src"), col("nbr").as("dst"))
-      Pipeline100TB.triangleStats(reps, edges)
-    }),
-    // —— F18: precision/recall of the MinHash banding vs true Jaccard ——
-    "dedup_eval" -> ((s, dir) =>
-      Dedup.bandingEval(docs(s, dir), "doc_id", "text")),
-    // —— F18b: closed-form S-curve banding solver — the (r, b)
-    //    factorization table with the chosen knobs flagged ——
-    "dedup_band_choose" -> ((s, dir) => Dedup.bandChoose(s)),
-    // —— F9: SemDeDup pass: cosine pairs → CC → survivors ——
-    "dedup_semantic" -> ((s, dir) =>
-      Similarity.semanticDedup(s, emb(s, dir), tau = 0.4)),
-    // —— F17: INCREMENTAL semantic dedup — batch vectors vs the
-    //    standing centroid-cell index (centroids + index from the
-    //    already-accepted 90%, batch = vec_id % 10 = 0) ——
-    "dedup_semantic_inc" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val standing = e.filter(col("vec_id") % 10 =!= 0)
-      // Reuse seam: the centroid model feeds the standing-index
-      // assignment AND the batch assignment inside the gate — one
-      // centroid aggregate instead of two.
-      val cents = Similarity.labelCentroids(standing)
-        .seamed
-      Similarity.incrementalSemantic(
-        s, e.filter(col("vec_id") % 10 === 0),
-        Similarity.assignCells(s, standing, cents), cents, tau = 0.4)
-    }),
-    // —— H15: greedy sequence packing at a 512-token budget ——
-    "pack_sequences" -> ((s, dir) =>
-      graft.operators.Pipeline100TB.packSequences(
-        docs(s, dir), "doc_id", "text", shardCol = "source", cap = 512)),
-    // —— H22: BPE apply — exact subword ids under a fixed merge table ——
-    "bpe_encode" -> ((s, dir) => {
-      import org.apache.spark.sql.GraftBridge
-      val d = docs(s, dir)
-      val toks = graft.functions.Hash60.tokens(
-        regexp_replace(col("text"), "\\|", " "))
-      val ids = GraftBridge.column(graft.functions.BpeEncode(
-        GraftBridge.expression(toks), bpeMerges, bpeVocab))
-      d.select(col("doc_id"),
-        size(ids).cast("long").as("n_bpe"),
-        concat(lit("["), array_join(ids.cast("array<string>"), ","), lit("]"))
-          .as("ids_str"))
-    }),
-    // —— H15∘H22: packing with EXACT tokenizer counts, not estimates ——
-    "pack_sequences_bpe" -> ((s, dir) => {
-      import org.apache.spark.sql.GraftBridge
-      val toks = graft.functions.Hash60.tokens(
-        regexp_replace(col("text"), "\\|", " "))
-      val ids = GraftBridge.column(graft.functions.BpeEncode(
-        GraftBridge.expression(toks), bpeMerges, bpeVocab))
-      graft.operators.Pipeline100TB.packSequencesBy(
-        docs(s, dir), "doc_id", size(ids).cast("long"),
-        shardCol = "source", cap = 256)
-    }),
-    // —— H16: Gopher-style structural quality rules ——
-    "text_gopher" -> ((s, dir) => TextAnalysis.gopherRules(docs(s, dir), "doc_id", "text")),
-    // —— H20: model-based quality filter (hashed features × broadcast
-    //    weight vector → logistic score), fixed deterministic model ——
-    "text_classifier" -> ((s, dir) =>
-      TextAnalysis.classifierScore(docs(s, dir), "doc_id", "text",
-        clfWeights, biasMicro = 50000L, threshold = 0.5)),
-    // —— H20c: calibration read-out for the fixed H20 model — 10
-    //    score bins × observed positive rate, one map-side-combined
-    //    shuffle of ≤10 rows; the reliability diagram every
-    //    model-gated curation stage ships with ——
-    "classifier_calibration" -> ((s, dir) => {
-      TextAnalysis.calibrationBins(docs(s, dir), "text",
-        col("lang") === "en", clfWeights, biasMicro = 50000L)
-    }),
-    // —— H20c drift: the same reliability diagram PER SOURCE slice —
-    //    a slice whose curve departs the corpus curve is the
-    //    re-threshold/re-train signal ——
-    "classifier_drift" -> ((s, dir) => {
-      TextAnalysis.calibrationBins(docs(s, dir), "text",
-        col("lang") === "en", clfWeights, biasMicro = 50000L,
-        slices = Seq("source" -> col("source")))
-    }),
-    // —— H20b: classifier TRAINING — 2 unrolled deterministic
-    //    full-batch logistic GD steps over hashed features ——
-    "classifier_train" -> ((s, dir) =>
-      TextAnalysis.classifierTrain(docs(s, dir), "doc_id", "text",
-        positive = col("lang") === "en", dims = 64, iters = 2, lr = 5.0)),
-    // —— G12: deterministic source-mixture balancing (600-token budget) ——
-    "mix_balance" -> ((s, dir) => {
-      import graft.functions.Hash60.tokens
-      val d = docs(s, dir)
-      graft.operators.Pipeline100TB.mixBalance(d, "source",
-          keyCol = col("doc_id"),
-          tokCol = size(tokens(col("text"))).cast("long"),
-          targetToks = 600L)
-        .select(col("doc_id"), col("source"), col("__tok").as("n_tok"))
-    }),
-    // —— G12b: temperature + UniMax mixture allocation over sources ——
-    "mix_temperature" -> ((s, dir) => {
-      import graft.functions.Hash60.tokens
-      graft.operators.Pipeline100TB.mixTemperature(docs(s, dir), "source",
-        tokCol = size(tokens(col("text"))).cast("long"),
-        alpha = 0.3, budget = 100000L, capEpochs = 2L)
-    }),
-    // —— G26: bucketed corpus layout — co-located standing-index
-    //    join through the session catalog, zero exchanges ——
-    "corpus_bucketed_join" -> ((s, dir) => {
-      import graft.functions.Hash60.tokens
-      val d = docs(s, dir)
-      graft.operators.Pipeline100TB.writeBucketed(
-        d.select(col("doc_id"), col("source")), "graft_bk_corpus", "doc_id")
-      graft.operators.Pipeline100TB.writeBucketed(
-        d.select(col("doc_id"),
-          size(tokens(col("text"))).cast("long").as("n_tok")),
-        "graft_bk_stats", "doc_id")
-      graft.operators.Pipeline100TB
-        .bucketedJoin(s, "graft_bk_corpus", "graft_bk_stats", "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("toks"))
-    }),
-    // —— H25: DoReMi-style excess-loss domain reweighting (weak
-    //    unigram reference vs KN-trigram proxy, deterministic exp) ——
-    "corpus_mix_doremi" -> ((s, dir) =>
-      graft.operators.Pipeline100TB.doremiMix(docs(s, dir),
-        "doc_id", "text", "source")),
-    // —— G21: Count-Min sketch with probe-term error readout ——
-    "sketch_cms" -> ((s, dir) =>
-      graft.operators.Pipeline100TB.cmsProbe(docs(s, dir), "text",
-        probes = Seq("the", "a", "of", "is", "qzxkj"), d = 4, w = 64)),
-    // —— H17: BM25 scoring over a fixed query-term set, top-20 ——
-    "text_bm25" -> ((s, dir) =>
-      TextAnalysis.bm25(docs(s, dir), "doc_id", "text",
-        terms = Seq("spark", "query", "stream"), k = 20)),
-    // —— G24: hybrid sparse+dense retrieval — the H19 BM25 leg and a
-    //    cosine dense leg fused by reciprocal rank (RRF, c = 60),
-    //    integer micro-unit contributions, missing leg = 0 ——
-    "sim_hybrid_rrf" -> ((s, dir) =>
-      Similarity.hybridRrf(s, docs(s, dir), emb(s, dir),
-        terms = Seq("spark", "query", "stream"), queryVec = 0L)),
-    // —— H7b: BPE pair-merge statistics, top-20 adjacent pairs ——
-    "vocab_pairs" -> ((s, dir) =>
-      TextAnalysis.pairCounts(docs(s, dir), "doc_id", "text", k = 20)),
-    // —— H7d: PMI collocations, min pair count 5, top-20 ——
-    "vocab_pmi" -> ((s, dir) =>
-      TextAnalysis.pmiPairs(docs(s, dir), "doc_id", "text",
-        minCount = 5, k = 20)),
-    // —— H18: unigram LM quality score (avg token log-prob) ——
-    "text_unigram_lp" -> ((s, dir) =>
-      TextAnalysis.unigramLogProb(docs(s, dir), "doc_id", "text")),
-    // —— H18c: trigram LM, interpolated backoff over corpus
-    //    trigram/bigram/unigram tables (0.5/0.3/0.2, add-0.5) ——
-    "text_trigram_lp" -> ((s, dir) =>
-      TextAnalysis.trigramLogProb(docs(s, dir), "doc_id", "text")),
-    // —— H18d: interpolated Kneser-Ney trigram (D = 0.75,
-    //    continuation-count lower orders — the KenLM-grade smoothing) ——
-    "text_kn_lp" -> ((s, dir) =>
-      TextAnalysis.knTrigramLogProb(docs(s, dir), "doc_id", "text")),
-    // —— H18e: interpolated Kneser-Ney FIVE-gram — the production
-    //    CCNet/KenLM filter order (same recursion, two more levels) ——
-    "text_kn5_lp" -> ((s, dir) =>
-      TextAnalysis.knFivegramLogProb(docs(s, dir), "doc_id", "text")),
-    // —— H18b: bigram LM conditional log-prob, add-0.5 smoothing ——
-    "text_bigram_lp" -> ((s, dir) =>
-      TextAnalysis.bigramLogProb(docs(s, dir), "doc_id", "text")),
-    // —— H7e: unigram-LM tokenizer learning (SentencePiece family,
-    //    deterministic Viterbi hard-EM, 2 rounds) ——
-    "vocab_unigram_learn" -> ((s, dir) =>
-      TextAnalysis.unigramLearn(docs(s, dir), "doc_id", "text")),
-    // —— H22b: unigram-LM tokenizer apply — per-doc Viterbi
-    //    segmentation readout under the learned vocab ——
-    "text_unigram_tok" -> ((s, dir) =>
-      TextAnalysis.unigramApply(docs(s, dir), "doc_id", "text")),
-    // —— G13: deterministic contrastive negative sampling, k=4 ——
-    "embed_negatives" -> ((s, dir) =>
-      Similarity.negativeSamples(emb(s, dir), k = 4)),
-    // —— G6d: deterministic train/val/test split (98/1/1) ——
-    "split_assign" -> ((s, dir) =>
-      Pipeline100TB.splitAssign(
-          docs(s, dir).select("doc_id", "source"), col("doc_id"))
-        .select(col("doc_id"), col("source"), col("split"))),
-    // —— F8b: fuzzy (MinHash-band) benchmark decontamination ——
-    "decon_fuzzy" -> ((s, dir) =>
-      Dedup.decontaminateFuzzy(docs(s, dir), "doc_id", "text",
-        benchPred = col("doc_id") % 20 === 0)),
-    // —— G13b: HARD-negative mining — nearest wrong-label neighbors
-    //    per anchor, the contrastive complement of G13's random draws ——
-    "embed_hard_negatives" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.hardNegatives(s, e, e.filter(col("vec_id") < 10), k = 4)
-    }),
-    // —— F8d: EMBEDDING-space decontamination — corpus vectors
-    //    cosine-near a broadcast benchmark set in the same cell ——
-    "decon_embed" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.deconEmbed(s, e.filter(col("vec_id") % 5 =!= 0),
-        e.filter(col("vec_id") % 5 === 0), tau = 0.35)
-    }),
-    // —— G14: reproducible global shuffle order for training export ——
-    "corpus_shuffle" -> ((s, dir) =>
-      Pipeline100TB.shuffleOrder(
-          docs(s, dir).select("doc_id", "source"), col("doc_id"))
-        .select(col("doc_id"), col("source"), col("pos"))),
-    // —— F15: exact substring-span duplication profile ——
-    "dedup_substr_spans" -> ((s, dir) =>
-      Dedup.substrSpans(docs(s, dir), "doc_id", "text",
-        spanLen = 30, stride = 7)),
-    // —— H23: CCNet perplexity head/middle/tail buckets ——
-    "text_ppl_buckets_kn5" -> ((s, dir) =>
-      TextAnalysis.perplexityBucketsKn5(docs(s, dir), "doc_id", "text")),
-    "text_ppl_buckets" -> ((s, dir) =>
-      TextAnalysis.perplexityBuckets(docs(s, dir), "doc_id", "text")),
-    // —— G17: nearest-centroid assignment (cluster-assignment step) ——
-    // —— G17b: cluster-balanced sampling — deterministic hash-ranked
-    //    k per assigned cluster (the SemDeDup/DCLM "equal share per
-    //    cluster" selection step) ——
-    "sample_cluster_balanced" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val a = Similarity.centroidAssign(s, emb(s, dir))
-      a.select(col("vec_id"), col("assigned"),
-          graft.functions.Hash60.hash60(col("vec_id").cast("string")).as("__h"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("assigned")).orderBy(col("__h"), col("vec_id"))))
-        .filter(col("rk") <= 25)
-        .select(col("vec_id"), col("assigned"), col("rk").cast("int").as("rk"))
-    }),
-    "embed_centroid_assign" -> ((s, dir) =>
-      Similarity.centroidAssign(s, emb(s, dir))),
-    // —— F16: block-aligned span-trimmed corpus (F15's action) ——
-    "dedup_substr_trim" -> ((s, dir) =>
-      Dedup.substrTrim(docs(s, dir), "doc_id", "text", blockLen = 30)),
-    // —— H23 selection policy: head + 50% hash-sampled middle ——
-    "corpus_select_ccnet" -> ((s, dir) =>
-      TextAnalysis.ccnetSelect(docs(s, dir), "doc_id", "text")),
-    // —— H24: DSIR importance resampling — select docs that "read
-    //    like" the src0 target domain, Gumbel top-100 ——
-    "corpus_select_dsir" -> ((s, dir) =>
-      TextAnalysis.dsirSelect(docs(s, dir), "doc_id", "text",
-        targetPred = col("source") === "src0", dims = 64, k = 100)),
-    // —— H7c: BPE merge learning, k = 3 unrolled iterations ——
-    "vocab_bpe_learn" -> ((s, dir) =>
-      TextAnalysis.bpeLearn(docs(s, dir), "doc_id", "text", k = 3)),
-    // —— F19: OFF-GRID span trim — content-defined block boundaries
-    //    (rolling-anchor CDC), so shifted duplicate runs collapse ——
-    "dedup_substr_offgrid" -> ((s, dir) =>
-      Dedup.substrTrimCdc(docs(s, dir), "doc_id", "text",
-        window = 8, divisor = 32)),
-    // —— F21: TRUE ExactSubstr — any-offset duplicated-run profile at
-    //    the Lee et al. ≥ 50-char threshold (all-offset window
-    //    hashes ≡ the suffix-array byte set, no stride/grid/anchor) ——
-    "dedup_substr_suffix" -> ((s, dir) =>
-      Dedup.substrSuffixProfile(docs(s, dir), "doc_id", "text",
-        minLen = 50)),
-    // —— F21b: the TRIM action — every byte covered by a duplicated
-    //    >= 50-char any-offset substring removed, segments re-joined ——
-    "dedup_substr_suffix_trim" -> ((s, dir) =>
-      Dedup.substrSuffixTrim(docs(s, dir), "doc_id", "text",
-        minLen = 50)),
-    // —— F16b: incremental span trim of a batch vs the standing index ——
-    "dedup_substr_trim_inc" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.substrTrimIncremental(
-        d.filter(col("doc_id") % 10 === 0),
-        Dedup.blockIndex(d.filter(col("doc_id") % 10 =!= 0), "text"),
-        "doc_id", "text")
-    }),
-  )
 
   /** H7c's oracle: one BPE learn-iteration as CTEs — adjacent-pair
     * counts over the symbol table, the (n DESC, lhs, rhs) argmax,
@@ -1571,23 +1080,27 @@ object LlmQueries {
        |$rounds""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
-    "dedup_exact" ->
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("dedup_exact", (s, dir) => Dedup.exact(docs(s, dir), "doc_id", "text"),
       """SELECT min(doc_id) AS survivor, COUNT(*) AS n_copies
-        |FROM documents GROUP BY lower(trim(text))""".stripMargin,
-    "dedup_fingerprint" ->
+        |FROM documents GROUP BY lower(trim(text))""".stripMargin),
+    QuerySpec("dedup_fingerprint", (s, dir) => Dedup.fingerprint(docs(s, dir), "doc_id", "text"),
       s"""WITH t AS ($toksCte)
          |SELECT md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp,
          |  min(doc_id) AS survivor, COUNT(*) AS n_copies
-         |FROM t GROUP BY 1""".stripMargin,
-    "dedup_ngram_jaccard" ->
+         |FROM t GROUP BY 1""".stripMargin),
+    QuerySpec("dedup_ngram_jaccard", (s, dir) =>
+      Dedup.ngramJaccard(docs(s, dir), "doc_id", "text", n = 2, tau = 0.8),
       s"""WITH $shingleCtes,
          |$jaccardPairBody
          |SELECT a, b,
          |  round(CAST(i AS DOUBLE) / (sza + szb - i), 6) AS jaccard
          |FROM inter
-         |WHERE round(CAST(i AS DOUBLE) / (sza + szb - i), 6) >= 0.8""".stripMargin,
-    "dedup_ngram_topk" ->
+         |WHERE round(CAST(i AS DOUBLE) / (sza + szb - i), 6) >= 0.8""".stripMargin),
+    // —— F3b: bounded top-k near-dup neighbors — F3's at-scale contract ——
+    QuerySpec("dedup_ngram_topk", (s, dir) =>
+      Dedup.ngramJaccardTopK(docs(s, dir), "doc_id", "text",
+        n = 2, tau = 0.8, k = 3),
       s"""WITH t0 AS ($toksCte),
          |fpt AS (SELECT doc_id,
          |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
@@ -1613,8 +1126,30 @@ object LlmQueries {
          |FROM r
          |JOIN grp gi ON gi.rep = r.id
          |JOIN grp gn ON gn.rep = r.nbr
-         |WHERE r.rk <= 3""".stripMargin,
-    "dedup_pairs_collapsed" ->
+         |WHERE r.rk <= 3""".stripMargin),
+    QuerySpec("dedup_minhash_lsh", (s, dir) =>
+      Dedup.minhashCandidates(docs(s, dir), "doc_id", "text", n = 2, k = 16, bands = 4),
+      s"""WITH $shingleCtes,
+         |$minhashSigSql,
+         |bandkeys AS (
+         |$bandKeysSql)
+         |SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+         |FROM bandkeys x JOIN bandkeys y
+         |  ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id""".stripMargin),
+    QuerySpec("dedup_simhash", (s, dir) => Dedup.simhash(docs(s, dir), "doc_id", "text"),
+      simhashSql),
+    QuerySpec("dedup_embed_cosine", (s, dir) =>
+      Similarity.nearDupPairs(s, emb(s, dir), tau = 0.4),
+      s"""SELECT label, a, b, cos_r FROM (
+         |  SELECT a.label, a.vec_id AS a, b.vec_id AS b,
+         |    round(${cosSql.format("a.embedding", "b.embedding")}, 4) AS cos_r
+         |  FROM embeddings a JOIN embeddings b
+         |    ON a.label = b.label AND a.vec_id < b.vec_id)
+         |WHERE cos_r >= 0.4""".stripMargin),
+    // —— F3∘F2: duplicate-dense guard — pairs over the fingerprint-
+    //    collapsed corpus, each side carrying its group size ——
+    QuerySpec("dedup_pairs_collapsed", (s, dir) =>
+      Dedup.ngramJaccardCollapsed(docs(s, dir), "doc_id", "text", n = 2, tau = 0.8),
       s"""WITH t0 AS ($toksCte),
          |fpt AS (SELECT doc_id,
          |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
@@ -1631,16 +1166,83 @@ object LlmQueries {
          |FROM inter i
          |JOIN grp ga ON ga.rep = i.a
          |JOIN grp gb ON gb.rep = i.b
-         |WHERE round(CAST(i.i AS DOUBLE) / (i.sza + i.szb - i.i), 6) >= 0.8""".stripMargin,
-    "dedup_minhash_lsh" ->
-      s"""WITH $shingleCtes,
+         |WHERE round(CAST(i.i AS DOUBLE) / (i.sza + i.szb - i.i), 6) >= 0.8""".stripMargin),
+    // —— F6∘collapse: cosine pairs over exact-duplicate-collapsed vectors ——
+    QuerySpec("dedup_embed_collapsed", (s, dir) =>
+      Similarity.nearDupPairsCollapsed(s, emb(s, dir), tau = 0.4),
+      s"""WITH g AS (SELECT label, embedding, min(vec_id) AS rep,
+         |             COUNT(*) AS n_members
+         |           FROM embeddings GROUP BY 1, 2)
+         |SELECT label, a, b, cos_r, n_a, n_b FROM (
+         |  SELECT x.label, x.rep AS a, y.rep AS b,
+         |    round(${cosSql.format("x.embedding", "y.embedding")}, 4) AS cos_r,
+         |    x.n_members AS n_a, y.n_members AS n_b
+         |  FROM g x JOIN g y ON x.label = y.label AND x.rep < y.rep)
+         |WHERE cos_r >= 0.4""".stripMargin),
+    // —— F10 for the LSH generator: band candidates over the collapsed corpus ——
+    QuerySpec("dedup_minhash_collapsed", (s, dir) => {
+      val reps = Dedup.collapseFingerprints(docs(s, dir), "doc_id", "text")
+        .drop("n_members")
+      Dedup.minhashCandidates(reps, "doc_id", "text", n = 2, k = 16, bands = 4)
+    },
+      s"""WITH t0 AS ($toksCte),
+         |fpt AS (SELECT doc_id,
+         |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
+         |  FROM t0),
+         |grp AS (SELECT fp, min(doc_id) AS rep FROM fpt GROUP BY 1),
+         |t AS (SELECT t0.doc_id, t0.toks
+         |      FROM t0 JOIN grp g ON t0.doc_id = g.rep),
+         |$shingleBody,
          |$minhashSigSql,
          |bandkeys AS (
          |$bandKeysSql)
          |SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
          |FROM bandkeys x JOIN bandkeys y
-         |  ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id""".stripMargin,
-    "dedup_incremental_fuzzy" ->
+         |  ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id""".stripMargin),
+    // —— F13: cross-corpus MinHash band join (two big sides) ——
+    QuerySpec("dedup_cross_corpus", (s, dir) => {
+      val d = docs(s, dir)
+      Dedup.crossCorpusCandidates(
+        d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 === 1),
+        "doc_id", "text")
+    },
+      s"""WITH $shingleCtes,
+         |$minhashSigSql,
+         |bandkeys AS (
+         |$bandKeysSql)
+         |SELECT DISTINCT x.doc_id AS left_id, y.doc_id AS right_id
+         |FROM bandkeys x JOIN bandkeys y
+         |  ON x.band = y.band AND x.key = y.key
+         | AND x.doc_id % 2 = 0 AND y.doc_id % 2 = 1""".stripMargin),
+    // —— G16: per-source KL divergence from the corpus distribution ——
+    QuerySpec("mix_divergence", (s, dir) =>
+      Pipeline100TB.sourceDivergence(docs(s, dir), "source", "text"),
+      """WITH t AS (SELECT source,
+        |    unnest(string_split_regex(trim(lower(text)), ' +')) AS tok
+        |  FROM documents WHERE source IS NOT NULL),
+        |tf AS (SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS tf
+        |       FROM t GROUP BY 1, 2),
+        |x AS (SELECT source, tok, tf,
+        |    CAST(SUM(tf) OVER (PARTITION BY tok) AS BIGINT) AS cf,
+        |    CAST(SUM(tf) OVER (PARTITION BY source) AS BIGINT) AS ns,
+        |    CAST(SUM(tf) OVER () AS BIGINT) AS nc
+        |  FROM tf),
+        |c AS (SELECT source, tf,
+        |    CAST(round(ln((CAST(tf AS DOUBLE) * nc)
+        |           / (CAST(ns AS DOUBLE) * cf)) * 1000000.0) AS BIGINT) * tf
+        |      AS mn
+        |  FROM x)
+        |SELECT source, CAST(SUM(tf) AS BIGINT) AS n_tok,
+        |  round(CAST(SUM(mn) AS BIGINT) / 1000000.0 / SUM(tf), 6) AS kl
+        |FROM c GROUP BY 1""".stripMargin),
+    // —— F14: incremental FUZZY dedup of a batch vs the standing band index ——
+    QuerySpec("dedup_incremental_fuzzy", (s, dir) => {
+      val d = docs(s, dir)
+      Dedup.incrementalBands(
+        d.filter(col("doc_id") % 10 === 0),
+        Dedup.bandIndex(d.filter(col("doc_id") % 10 =!= 0), "doc_id", "text"),
+        "doc_id", "text")
+    },
       s"""WITH RECURSIVE $shingleCtes,
          |$minhashSigSql,
          |bandkeys AS (
@@ -1667,59 +1269,15 @@ object LlmQueries {
          |SELECT cluster AS survivor, CAST(COUNT(*) AS BIGINT) AS n_members
          |FROM (SELECT kd.doc_id, COALESCE(lab.cluster, kd.doc_id) AS cluster
          |      FROM kd LEFT JOIN lab ON lab.id = kd.doc_id)
-         |GROUP BY 1""".stripMargin,
-    "dedup_simhash" -> simhashSql,
-    "dedup_embed_cosine" ->
-      s"""SELECT label, a, b, cos_r FROM (
-         |  SELECT a.label, a.vec_id AS a, b.vec_id AS b,
-         |    round(${cosSql.format("a.embedding", "b.embedding")}, 4) AS cos_r
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.label = b.label AND a.vec_id < b.vec_id)
-         |WHERE cos_r >= 0.4""".stripMargin,
-    "dedup_cross_corpus" ->
-      s"""WITH $shingleCtes,
-         |$minhashSigSql,
-         |bandkeys AS (
-         |$bandKeysSql)
-         |SELECT DISTINCT x.doc_id AS left_id, y.doc_id AS right_id
-         |FROM bandkeys x JOIN bandkeys y
-         |  ON x.band = y.band AND x.key = y.key
-         | AND x.doc_id % 2 = 0 AND y.doc_id % 2 = 1""".stripMargin,
-    "mix_divergence" ->
-      """WITH t AS (SELECT source,
-        |    unnest(string_split_regex(trim(lower(text)), ' +')) AS tok
-        |  FROM documents WHERE source IS NOT NULL),
-        |tf AS (SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS tf
-        |       FROM t GROUP BY 1, 2),
-        |x AS (SELECT source, tok, tf,
-        |    CAST(SUM(tf) OVER (PARTITION BY tok) AS BIGINT) AS cf,
-        |    CAST(SUM(tf) OVER (PARTITION BY source) AS BIGINT) AS ns,
-        |    CAST(SUM(tf) OVER () AS BIGINT) AS nc
-        |  FROM tf),
-        |c AS (SELECT source, tf,
-        |    CAST(round(ln((CAST(tf AS DOUBLE) * nc)
-        |           / (CAST(ns AS DOUBLE) * cf)) * 1000000.0) AS BIGINT) * tf
-        |      AS mn
-        |  FROM x)
-        |SELECT source, CAST(SUM(tf) AS BIGINT) AS n_tok,
-        |  round(CAST(SUM(mn) AS BIGINT) / 1000000.0 / SUM(tf), 6) AS kl
-        |FROM c GROUP BY 1""".stripMargin,
-    "dedup_minhash_collapsed" ->
-      s"""WITH t0 AS ($toksCte),
-         |fpt AS (SELECT doc_id,
-         |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
-         |  FROM t0),
-         |grp AS (SELECT fp, min(doc_id) AS rep FROM fpt GROUP BY 1),
-         |t AS (SELECT t0.doc_id, t0.toks
-         |      FROM t0 JOIN grp g ON t0.doc_id = g.rep),
-         |$shingleBody,
-         |$minhashSigSql,
-         |bandkeys AS (
-         |$bandKeysSql)
-         |SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |FROM bandkeys x JOIN bandkeys y
-         |  ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id""".stripMargin,
-    "dedup_incremental" ->
+         |GROUP BY 1""".stripMargin),
+    // —— F12: incremental dedup of a batch vs the standing corpus index ——
+    QuerySpec("dedup_incremental", (s, dir) => {
+      val d = docs(s, dir)
+      Dedup.incrementalFingerprint(
+        d.filter(col("doc_id") % 10 === 0),
+        Dedup.fingerprintIndex(d.filter(col("doc_id") % 10 =!= 0), "text"),
+        "doc_id", "text")
+    },
       s"""WITH t AS ($toksCte),
          |fpt AS (SELECT doc_id,
          |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
@@ -1729,10 +1287,16 @@ object LlmQueries {
          |FROM b
          |WHERE NOT EXISTS (SELECT 1 FROM fpt i
          |                  WHERE i.doc_id % 10 <> 0 AND i.fp = b.fp)
-         |GROUP BY fp""".stripMargin,
-    // F20b: 54-candidate (m, j) table, deterministic-exp FPR at the
-    // index's true cardinality, smallest-qualifying chosen
-    "dedup_bloom_choose" ->
+         |GROUP BY fp""".stripMargin),
+    // —— F20b: closed-form Bloom sizing solver over the standing
+    //    index's actual cardinality ——
+    QuerySpec("dedup_bloom_choose", (s, dir) => {
+      val d = docs(s, dir)
+      Dedup.bloomChoose(
+        Dedup.fingerprintIndex(d.filter(col("doc_id") % 10 =!= 0), "text"))
+    },
+      // F20b: 54-candidate (m, j) table, deterministic-exp FPR at the
+      // index's true cardinality, smallest-qualifying chosen
       s"""WITH t AS ($toksCte),
          |fpt AS (SELECT doc_id,
          |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
@@ -1775,10 +1339,18 @@ object LlmQueries {
          |       WHERE fpr <= 0.01 AND m_bits = mm.bm)
          |SELECT f.m_bits, f.hashes, f.n_keys, round(f.fpr, 6) AS fpr_r,
          |  COALESCE(f.m_bits = mm.bm AND f.hashes = jm.bj, FALSE) AS chosen
-         |FROM f, mm, jm""".stripMargin,
-    // F20: m=32768-bit filter as 1024 OR'd 32-bit words, j=3 hash60
-    // probes of "fp#p"; batch docs read (all-bits-set, ground truth)
-    "dedup_bloom_inc" ->
+         |FROM f, mm, jm""".stripMargin),
+    // —— F20: Bloom-filter definitely-new gate in front of the F12
+    //    standing-index anti join ——
+    QuerySpec("dedup_bloom_inc", (s, dir) => {
+      val d = docs(s, dir)
+      Dedup.bloomProbe(
+        d.filter(col("doc_id") % 10 === 0),
+        Dedup.fingerprintIndex(d.filter(col("doc_id") % 10 =!= 0), "text"),
+        "doc_id", "text")
+    },
+      // F20: m=32768-bit filter as 1024 OR'd 32-bit words, j=3 hash60
+      // probes of "fp#p"; batch docs read (all-bits-set, ground truth)
       s"""WITH t AS ($toksCte),
          |fpt AS (SELECT doc_id,
          |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
@@ -1803,8 +1375,15 @@ object LlmQueries {
          |  GROUP BY 1, 2)
          |SELECT h.doc_id, (h.n_set = 3) AS bloom_maybe,
          |  EXISTS(SELECT 1 FROM idx i WHERE i.fp = h.fp) AS in_index
-         |FROM hit h""".stripMargin,
-    "shard_tokens" ->
+         |FROM hit h""".stripMargin),
+    // —— G15: token-balanced shard assignment in the global hash order ——
+    QuerySpec("shard_tokens", (s, dir) => {
+      import graft.functions.Hash60.tokens
+      Pipeline100TB.tokenBalancedShards(
+          docs(s, dir).select("doc_id", "source", "text"), col("doc_id"),
+          size(tokens(col("text"))).cast("long"), nShards = 8)
+        .select(col("doc_id"), col("source"), col("shard"))
+    },
       """WITH t AS (SELECT doc_id, source,
         |    CAST(len(string_split_regex(trim(lower(text)), ' +')) AS BIGINT)
         |      AS n_tok,
@@ -1820,70 +1399,80 @@ object LlmQueries {
         |SELECT doc_id, source,
         |  CAST(CASE WHEN tot <= 0 THEN 0
         |       ELSE LEAST((cb * 8) // tot, 7) END AS BIGINT) AS shard
-        |FROM c""".stripMargin,
-    "dedup_embed_collapsed" ->
-      s"""WITH g AS (SELECT label, embedding, min(vec_id) AS rep,
-         |             COUNT(*) AS n_members
-         |           FROM embeddings GROUP BY 1, 2)
-         |SELECT label, a, b, cos_r, n_a, n_b FROM (
-         |  SELECT x.label, x.rep AS a, y.rep AS b,
-         |    round(${cosSql.format("x.embedding", "y.embedding")}, 4) AS cos_r,
-         |    x.n_members AS n_a, y.n_members AS n_b
-         |  FROM g x JOIN g y ON x.label = y.label AND x.rep < y.rep)
-         |WHERE cos_r >= 0.4""".stripMargin,
-    "sim_topk_bruteforce" -> bruteTopKSql,
-    "embed_pq_codes" -> pqSql,
-    "embed_opq_codes" -> opqSql,
-    "embed_opq_rot" -> opqRotSql,
-    "sim_topk_pq" -> pqTopKSql,
-    // G20: exact scaled-int64 mean (float-snapped), then map-side
-    // cosine-to-mean + integer-exact centered norm
-    "embed_center" -> {
-      val dq = "list_sum([ (CAST(round(embedding[i]*1048576.0) AS BIGINT)" +
-        " - CAST(round(mvec[i]*1048576.0) AS BIGINT))" +
-        " * (CAST(round(embedding[i]*1048576.0) AS BIGINT)" +
-        " - CAST(round(mvec[i]*1048576.0) AS BIGINT))" +
-        " for i in generate_series(1, 64) ])"
-      s"""WITH m0 AS (SELECT g.d,
-         |    CAST(SUM(CAST(round(embedding[g.d]*1048576.0) AS BIGINT))
-         |         AS DOUBLE) / (COUNT(*) * 1048576.0) AS mv
-         |  FROM embeddings, generate_series(1, 64) AS g(d) GROUP BY 1),
-         |m AS (SELECT list(CAST(CAST(mv AS FLOAT) AS DOUBLE) ORDER BY d)
-         |        AS mvec FROM m0)
-         |SELECT vec_id,
-         |  round(${cosSql.format("embedding", "mvec")}, 4) + 0.0 AS cos_mean,
-         |  round(sqrt(CAST($dq AS DOUBLE)) / 1048576.0, 4) AS norm_c
-         |FROM embeddings, m""".stripMargin
+        |FROM c""".stripMargin),
+    QuerySpec("sim_topk_bruteforce", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.bruteForceTopK(s, e, e.filter(col("vec_id") < 10), k = 5)
     },
-    // G18: coarse pass on the 16-dim prefix, rerank the 20-shortlist
-    // with the full vector — slices replay as 1-based DuckDB [1:16]
-    "sim_topk_truncated" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
-         |           FROM embeddings WHERE vec_id < 10),
-         |scored AS (SELECT q.query_id, e.vec_id, e.embedding, q.q_emb,
-         |    round(${cosSql.format("q.q_emb[1:16]", "e.embedding[1:16]")}, 4)
-         |      AS cos_c
-         |  FROM q, embeddings e WHERE e.vec_id <> q.query_id),
-         |c AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos_c DESC, vec_id) AS crank FROM scored),
-         |rr AS (SELECT query_id, vec_id,
-         |    round(${cosSql.format("q_emb", "embedding")}, 4) AS cos_r
-         |  FROM c WHERE crank <= 20),
+      bruteTopKSql),
+    QuerySpec("sim_topk_lsh", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.lshTopK(s, e, e.filter(col("vec_id") < 10), k = 3, planes = 8)
+    },
+      s"""WITH dots AS (SELECT vec_id, p,
+         |    SUM(CAST(embedding[d + 1] AS DOUBLE) *
+         |        (CAST(((1 + p * 64 + d) * 2654435761) % 1000003 AS DOUBLE)
+         |           / 1000003.0 - 0.5)) AS w
+         |  FROM embeddings, generate_series(0, 7) t(p), generate_series(0, 63) u(d)
+         |  GROUP BY 1, 2),
+         |sig AS (SELECT vec_id,
+         |    SUM(CASE WHEN w > 0 THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS bucket
+         |  FROM dots GROUP BY 1),
+         |cand AS (SELECT sq.vec_id AS query_id, se.vec_id AS neighbor_id
+         |  FROM sig sq JOIN sig se
+         |    ON sq.bucket = se.bucket AND sq.vec_id < 10 AND se.vec_id <> sq.vec_id),
+         |scored AS (SELECT c.query_id, c.neighbor_id,
+         |    round(${cosSql.format("eq.embedding", "en.embedding")}, 4) AS cos_r
+         |  FROM cand c
+         |  JOIN embeddings eq ON eq.vec_id = c.query_id
+         |  JOIN embeddings en ON en.vec_id = c.neighbor_id),
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos_r DESC, vec_id) AS rank FROM rr)
-         |SELECT query_id, vec_id AS neighbor_id, cos_r,
-         |  CAST(rank AS INTEGER) AS rank
-         |FROM r WHERE rank <= 5""".stripMargin,
-    // EXACT by construction (error-bounded prefilter + exact rerank)
-    // ⇒ the oracle is the brute-force SQL verbatim.
-    "sim_topk_pruned" -> bruteTopKSql,
-    "sim_topk_hamming" -> hammingTopKSql,
-    "sim_topk_hamming_rerank" -> hammingRerankSql,
-    "sample_kcenter" -> kcenterSql(8),
-    // H26: token counts → top-64 ranks → TWO lnDet replays (x over
-    // 1/rank, y over freq/N) → exact micronat least squares; only the
-    // final divisions are float, mirrored op for op
-    "text_zipf" ->
+         |        ORDER BY cos_r DESC, neighbor_id) AS rank FROM scored)
+         |SELECT query_id, neighbor_id, cos_r, CAST(rank AS INTEGER) AS rank
+         |FROM r WHERE rank <= 3""".stripMargin),
+    // —— G28: 1-bit sign quantization + Hamming-distance scan ——
+    QuerySpec("sim_topk_hamming", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.hammingTopK(s, e, e.filter(col("vec_id") < 10), k = 5)
+    },
+      hammingTopKSql),
+    // —— G28b: sign-scan shortlist + exact cosine re-rank ——
+    QuerySpec("sim_topk_hamming_rerank", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.hammingRerankTopK(s, e, e.filter(col("vec_id") < 10),
+        k = 5, kShort = 15)
+    },
+      hammingRerankSql),
+    QuerySpec("sim_topk_pruned", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.exactPrunedTopK(s, e, e.filter(col("vec_id") < 10), k = 5)
+    },
+      // EXACT by construction (error-bounded prefilter + exact rerank)
+      // ⇒ the oracle is the brute-force SQL verbatim.
+      bruteTopKSql),
+    // —— G19: product quantization — 4 subspaces × 4-centroid
+    //    codebooks, integer-exact quantized-L2 training ——
+    QuerySpec("embed_pq_codes", (s, dir) =>
+      Similarity.pqCodes(s, emb(s, dir), m = 4, dsub = 16, ksub = 4,
+        iters = 2),
+      pqSql),
+    // —— G29: sparse signed random projection (Achlioptas JL) ——
+    QuerySpec("embed_rp", (s, dir) => Similarity.randomProjection(emb(s, dir)),
+      // G29: coefficient formula and round(v·2²⁰) quantization replayed
+      // term for term; list_sum over int64 terms is order-free
+      """SELECT vec_id, CAST(j AS INTEGER) AS rp_dim,
+        |  CAST(list_sum([
+        |    CASE (1 + j*64 + (d-1)) * 2654435761 % 1000003 % 6
+        |      WHEN 0 THEN -CAST(round(embedding[d] * 1048576.0) AS BIGINT)
+        |      WHEN 5 THEN CAST(round(embedding[d] * 1048576.0) AS BIGINT)
+        |      ELSE CAST(0 AS BIGINT) END
+        |    for d in generate_series(1, 64)]) AS BIGINT) AS y_q
+        |FROM embeddings, generate_series(0, 15) t(j)""".stripMargin),
+    // —— H26: Zipf-slope vocabulary diagnostic ——
+    QuerySpec("text_zipf", (s, dir) => TextAnalysis.zipfFit(docs(s, dir), "text"),
+      // H26: token counts → top-64 ranks → TWO lnDet replays (x over
+      // 1/rank, y over freq/N) → exact micronat least squares; only the
+      // final divisions are float, mirrored op for op
       s"""WITH t AS ($toksCte),
          |tok AS (SELECT unnest(toks) AS tok FROM t),
          |tfq AS (SELECT tok, COUNT(*) AS freq FROM tok GROUP BY 1),
@@ -1914,47 +1503,80 @@ object LlmQueries {
          |           / CAST(n*sxx - sx*sx AS DOUBLE))
          |          * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6)
          |    AS intercept_r
-         |FROM s, nt""".stripMargin,
-    // G29: coefficient formula and round(v·2²⁰) quantization replayed
-    // term for term; list_sum over int64 terms is order-free
-    "embed_rp" ->
-      """SELECT vec_id, CAST(j AS INTEGER) AS rp_dim,
-        |  CAST(list_sum([
-        |    CASE (1 + j*64 + (d-1)) * 2654435761 % 1000003 % 6
-        |      WHEN 0 THEN -CAST(round(embedding[d] * 1048576.0) AS BIGINT)
-        |      WHEN 5 THEN CAST(round(embedding[d] * 1048576.0) AS BIGINT)
-        |      ELSE CAST(0 AS BIGINT) END
-        |    for d in generate_series(1, 64)]) AS BIGINT) AS y_q
-        |FROM embeddings, generate_series(0, 15) t(j)""".stripMargin,
-    "sim_topk_lsh" ->
-      s"""WITH dots AS (SELECT vec_id, p,
-         |    SUM(CAST(embedding[d + 1] AS DOUBLE) *
-         |        (CAST(((1 + p * 64 + d) * 2654435761) % 1000003 AS DOUBLE)
-         |           / 1000003.0 - 0.5)) AS w
-         |  FROM embeddings, generate_series(0, 7) t(p), generate_series(0, 63) u(d)
-         |  GROUP BY 1, 2),
-         |sig AS (SELECT vec_id,
-         |    SUM(CASE WHEN w > 0 THEN (CAST(1 AS BIGINT) << p) ELSE 0 END) AS bucket
-         |  FROM dots GROUP BY 1),
-         |cand AS (SELECT sq.vec_id AS query_id, se.vec_id AS neighbor_id
-         |  FROM sig sq JOIN sig se
-         |    ON sq.bucket = se.bucket AND sq.vec_id < 10 AND se.vec_id <> sq.vec_id),
-         |scored AS (SELECT c.query_id, c.neighbor_id,
-         |    round(${cosSql.format("eq.embedding", "en.embedding")}, 4) AS cos_r
-         |  FROM cand c
-         |  JOIN embeddings eq ON eq.vec_id = c.query_id
-         |  JOIN embeddings en ON en.vec_id = c.neighbor_id),
+         |FROM s, nt""".stripMargin),
+    // —— G30: k-center coreset by farthest-first traversal ——
+    QuerySpec("sample_kcenter", (s, dir) => Similarity.kcenterSample(emb(s, dir)),
+      kcenterSql(8)),
+    // —— G27: OPQ-lite — variance-balanced dimension permutation in
+    //    front of the same PQ train/encode machinery ——
+    QuerySpec("embed_opq_codes", (s, dir) =>
+      Similarity.opqCodes(s, emb(s, dir), m = 4, dsub = 16, ksub = 4,
+        iters = 2),
+      opqSql),
+    // —— G27b: LEARNED OPQ decomposition — greedy variance-balancing
+    //    allocation (sum-domain eigenvalue allocation) ∘ PQ ——
+    QuerySpec("embed_opq_rot", (s, dir) =>
+      Similarity.opqRotCodes(s, emb(s, dir), m = 4, dsub = 16, ksub = 4,
+        iters = 2),
+      opqRotSql),
+    // —— G19b: PQ ADC search — codes-only scan, integer-exact ——
+    QuerySpec("sim_topk_pq", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.pqTopK(s, e, e.filter(col("vec_id") < 10), k = 5)
+    },
+      pqTopKSql),
+    // —— G18: Matryoshka truncated-prefix coarse pass + exact rerank ——
+    QuerySpec("sim_topk_truncated", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.truncatedTopK(s, e, e.filter(col("vec_id") < 10),
+        dPrefix = 16, cands = 20, k = 5)
+    },
+      // G18: coarse pass on the 16-dim prefix, rerank the 20-shortlist
+      // with the full vector — slices replay as 1-based DuckDB [1:16]
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
+         |           FROM embeddings WHERE vec_id < 10),
+         |scored AS (SELECT q.query_id, e.vec_id, e.embedding, q.q_emb,
+         |    round(${cosSql.format("q.q_emb[1:16]", "e.embedding[1:16]")}, 4)
+         |      AS cos_c
+         |  FROM q, embeddings e WHERE e.vec_id <> q.query_id),
+         |c AS (SELECT *, row_number() OVER (PARTITION BY query_id
+         |        ORDER BY cos_c DESC, vec_id) AS crank FROM scored),
+         |rr AS (SELECT query_id, vec_id,
+         |    round(${cosSql.format("q_emb", "embedding")}, 4) AS cos_r
+         |  FROM c WHERE crank <= 20),
          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos_r DESC, neighbor_id) AS rank FROM scored)
-         |SELECT query_id, neighbor_id, cos_r, CAST(rank AS INTEGER) AS rank
-         |FROM r WHERE rank <= 3""".stripMargin,
-    "embed_norms" ->
+         |        ORDER BY cos_r DESC, vec_id) AS rank FROM rr)
+         |SELECT query_id, vec_id AS neighbor_id, cos_r,
+         |  CAST(rank AS INTEGER) AS rank
+         |FROM r WHERE rank <= 5""".stripMargin),
+    QuerySpec("embed_norms", (s, dir) => Similarity.norms(emb(s, dir)),
       """SELECT vec_id, dim, round(sqrt(ss), 4) AS norm
         |FROM (SELECT e.vec_id, CAST(len(e.embedding) AS INTEGER) AS dim,
         |        SUM(CAST(e.embedding[d] AS DOUBLE) * CAST(e.embedding[d] AS DOUBLE)) AS ss
         |      FROM embeddings e, generate_series(1, 64) t(d)
-        |      GROUP BY e.vec_id, len(e.embedding))""".stripMargin,
-    "text_langid" ->
+        |      GROUP BY e.vec_id, len(e.embedding))""".stripMargin),
+    // —— G20: corpus mean-centering diagnostics ——
+    QuerySpec("embed_center", (s, dir) => Similarity.centeredStats(s, emb(s, dir)),
+      // G20: exact scaled-int64 mean (float-snapped), then map-side
+      // cosine-to-mean + integer-exact centered norm
+      {
+        val dq = "list_sum([ (CAST(round(embedding[i]*1048576.0) AS BIGINT)" +
+          " - CAST(round(mvec[i]*1048576.0) AS BIGINT))" +
+          " * (CAST(round(embedding[i]*1048576.0) AS BIGINT)" +
+          " - CAST(round(mvec[i]*1048576.0) AS BIGINT))" +
+          " for i in generate_series(1, 64) ])"
+        s"""WITH m0 AS (SELECT g.d,
+           |    CAST(SUM(CAST(round(embedding[g.d]*1048576.0) AS BIGINT))
+           |         AS DOUBLE) / (COUNT(*) * 1048576.0) AS mv
+           |  FROM embeddings, generate_series(1, 64) AS g(d) GROUP BY 1),
+           |m AS (SELECT list(CAST(CAST(mv AS FLOAT) AS DOUBLE) ORDER BY d)
+           |        AS mvec FROM m0)
+           |SELECT vec_id,
+           |  round(${cosSql.format("embedding", "mvec")}, 4) + 0.0 AS cos_mean,
+           |  round(sqrt(CAST($dq AS DOUBLE)) / 1048576.0, 4) AS norm_c
+           |FROM embeddings, m""".stripMargin
+      }),
+    QuerySpec("text_langid", (s, dir) => TextAnalysis.langId(docs(s, dir), "doc_id", "text"),
       s"""WITH t AS ($toksCte),
          |s AS (SELECT doc_id,
          |  CAST(len(list_filter(toks, $stopIn)) AS DOUBLE) / len(toks) AS en_score,
@@ -1967,8 +1589,8 @@ object LlmQueries {
          |       WHEN es_score >= fr_score AND es_score >= de_score THEN 'es'
          |       WHEN fr_score >= de_score THEN 'fr' ELSE 'de' END AS predicted,
          |  en_score, es_score
-         |FROM s""".stripMargin,
-    "text_quality" ->
+         |FROM s""".stripMargin),
+    QuerySpec("text_quality", (s, dir) => TextAnalysis.quality(docs(s, dir), "doc_id", "text"),
       s"""WITH t AS (SELECT doc_id, text,
          |    string_split_regex(trim(lower(text)), ' +') AS toks FROM documents),
          |s AS (SELECT doc_id,
@@ -1981,18 +1603,29 @@ object LlmQueries {
          |  round(alpha_raw, 6) AS alpha_ratio,
          |  round(least(nw / 100.0, 1.0) * 0.5 + stop_ratio * 0.3 + alpha_raw * 0.2, 6)
          |    AS quality
-         |FROM s""".stripMargin,
-    "text_tokens" ->
+         |FROM s""".stripMargin),
+    QuerySpec("text_tokens", (s, dir) => TextAnalysis.tokenCounts(docs(s, dir), "doc_id", "text"),
       """SELECT doc_id,
         |  CAST(len(string_split_regex(trim(lower(text)), ' +')) AS INTEGER) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-z]+')) AS INTEGER) AS re_tokens,
         |  (length(text) + 3) // 4 AS bpe_est
-        |FROM documents""".stripMargin,
-    // decomposed suffix built with chr() (769 = combining acute,
-    // 776 = combining diaeresis) and composed probes with chr(233/239)
-    // so the SQL stays ASCII-safe through the JSON dump; DuckDB's
-    // native nfc_normalize is the oracle for the engine's NFC mode
-    "text_tokens_nfc" ->
+        |FROM documents""".stripMargin),
+    // the opt-in NFC+casefold tokenizer, made load-bearing by
+    // appending DECOMPOSED mixed-case tokens (e + combining acute,
+    // i + combining diaeresis) to every document: after NFC + lower
+    // they must count as the composed lowercase probe words on both
+    // engines (DuckDB side uses its native nfc_normalize)
+    QuerySpec("text_tokens_nfc", (s, dir) => {
+      val d = docs(s, dir).withColumn("text",
+        concat(col("text"),
+          lit(" CafÉ naïve FIANCÉE")))
+      TextAnalysis.tokenCountsNormalized(d, "doc_id", "text", "NFC",
+        Seq("café", "naïve", "fiancée"))
+    },
+      // decomposed suffix built with chr() (769 = combining acute,
+      // 776 = combining diaeresis) and composed probes with chr(233/239)
+      // so the SQL stays ASCII-safe through the JSON dump; DuckDB's
+      // native nfc_normalize is the oracle for the engine's NFC mode
       """WITH t AS (SELECT doc_id, string_split_regex(trim(lower(nfc_normalize(
         |    text || ' CafE' || chr(769) || ' nai' || chr(776) ||
         |    've FIANCE' || chr(769) || 'E'))), ' +') AS toks
@@ -2001,18 +1634,19 @@ object LlmQueries {
         |  CAST(len(list_filter(toks, x -> x IN
         |    ('caf' || chr(233), 'na' || chr(239) || 've',
         |     'fianc' || chr(233) || 'e'))) AS INTEGER) AS probe_hits
-        |FROM t""".stripMargin,
-    "text_fingerprint" ->
+        |FROM t""".stripMargin),
+    QuerySpec("text_fingerprint", (s, dir) =>
+      TextAnalysis.fingerprints(docs(s, dir), "doc_id", "text"),
       s"""WITH t AS ($toksCte)
          |SELECT doc_id,
          |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
-         |FROM t""".stripMargin,
-    "text_vocab" ->
+         |FROM t""".stripMargin),
+    QuerySpec("text_vocab", (s, dir) => TextAnalysis.vocabulary(docs(s, dir), "doc_id", "text"),
       s"""WITH t AS ($toksCte),
          |tok AS (SELECT doc_id AS id, unnest(toks) AS term FROM t)
          |SELECT term, COUNT(*) AS tf, COUNT(DISTINCT id) AS df
-         |FROM tok GROUP BY term""".stripMargin,
-    "text_tfidf" ->
+         |FROM tok GROUP BY term""".stripMargin),
+    QuerySpec("text_tfidf", (s, dir) => TextAnalysis.topTerms(docs(s, dir), "doc_id", "text"),
       s"""WITH t AS ($toksCte),
          |tok AS (SELECT doc_id AS id, unnest(toks) AS term FROM t),
          |perdoc AS (SELECT id, term, COUNT(*) AS tf_d FROM tok GROUP BY 1, 2),
@@ -2026,8 +1660,9 @@ object LlmQueries {
          |ranked AS (SELECT *, row_number() OVER (PARTITION BY id
          |             ORDER BY score DESC, term) AS rk FROM scored)
          |SELECT id, term, round(score, 6) AS score, CAST(rk AS INTEGER) AS rk
-         |FROM ranked WHERE rk <= 3""".stripMargin,
-    "text_repetition" ->
+         |FROM ranked WHERE rk <= 3""".stripMargin),
+    QuerySpec("text_repetition", (s, dir) =>
+      TextAnalysis.repetition(docs(s, dir), "doc_id", "text"),
       s"""WITH t AS ($toksCte),
          |g AS (SELECT doc_id, greatest(len(toks) - 2, 0) AS total,
          |        [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -2039,8 +1674,10 @@ object LlmQueries {
          |  CASE WHEN total > 0 THEN
          |    round(1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / total, 6)
          |  END AS dup_frac
-         |FROM g""".stripMargin,
-    "text_boilerplate" ->
+         |FROM g""".stripMargin),
+    // —— H19: cross-document duplicated n-gram (boilerplate) fraction ——
+    QuerySpec("text_boilerplate", (s, dir) =>
+      TextAnalysis.boilerplate(docs(s, dir), "doc_id", "text", n = 3, minDf = 2),
       s"""WITH t AS ($toksCte),
          |sh0 AS (SELECT doc_id,
          |  list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -2054,8 +1691,14 @@ object LlmQueries {
          |    AS n_common,
          |  round(CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT)
          |        / COUNT(*), 6) AS dup_frac
-         |FROM d GROUP BY 1""".stripMargin,
-    "embed_quantize" ->
+         |FROM d GROUP BY 1""".stripMargin),
+    QuerySpec("embed_quantize", (s, dir) => {
+      import org.apache.spark.sql.functions._
+      // Serialize the int8 vector: the driver's pandas compare can't
+      // sort rows on array columns.
+      Similarity.quantizeInt8(emb(s, dir))
+        .withColumn("q", concat(lit("["), array_join(col("q"), ","), lit("]")))
+    },
       """WITH m AS (
         |  SELECT e.vec_id, MAX(abs(CAST(e.embedding[d] AS DOUBLE))) AS max_abs
         |  FROM embeddings e, generate_series(1, 64) t(d)
@@ -2064,18 +1707,21 @@ object LlmQueries {
         |  '[' || array_to_string(
         |    [CAST(round(CAST(x AS DOUBLE) * 127.0 / m.max_abs, 0) AS INTEGER)
         |     for x in e.embedding], ',') || ']' AS q
-        |FROM embeddings e JOIN m ON e.vec_id = m.vec_id""".stripMargin,
-    "mm_binary_meta" ->
+        |FROM embeddings e JOIN m ON e.vec_id = m.vec_id""".stripMargin),
+    QuerySpec("mm_binary_meta", (s, dir) => Multimodal.binaryMeta(docs(s, dir), "doc_id", "text"),
       """SELECT doc_id AS media_id, CAST(octet_length(encode(text)) AS INTEGER) AS bytes,
         |  md5(text) AS content_md5,
         |  (octet_length(encode(text)) + 255) // 256 AS n_chunks,
         |  'text/plain' AS mime
-        |FROM documents""".stripMargin,
-    // Ground truth stated directly from the payload-generator
-    // parameters (format selector, dimension formulas, corruption
-    // stride): the engine side cannot shortcut — it reconstructs these
-    // values only by byte-parsing the PNG/JPEG/GIF containers it built.
-    "mm_image_dims" ->
+        |FROM documents""".stripMargin),
+    // —— H5b: real PNG/JPEG/GIF header decode; the oracle states the
+    //    generator's ground truth, the engine must re-derive it by
+    //    parsing the container bytes it built ——
+    QuerySpec("mm_image_dims", (s, dir) => Multimodal.imageDims(docs(s, dir), "doc_id"),
+      // Ground truth stated directly from the payload-generator
+      // parameters (format selector, dimension formulas, corruption
+      // stride): the engine side cannot shortcut — it reconstructs these
+      // values only by byte-parsing the PNG/JPEG/GIF containers it built.
       """SELECT doc_id AS media_id,
         |  CASE WHEN doc_id % 13 = 0 THEN NULL
         |       WHEN doc_id % 4 = 0 THEN 'png'
@@ -2091,10 +1737,11 @@ object LlmQueries {
         |         CAST([1,2,4,8,16][CAST(doc_id % 5 AS INTEGER) + 1] AS INTEGER)
         |       WHEN doc_id % 4 = 2 THEN CAST(doc_id % 8 + 1 AS INTEGER)
         |       ELSE 8 END AS bit_depth
-        |FROM documents""".stripMargin,
-    // H6: the analytic ground truth of the WAV generator — the oracle
-    // predicts what the chunk walk must recover from the bytes
-    "mm_audio_meta" ->
+        |FROM documents""".stripMargin),
+    // —— H6: real RIFF/WAV and ISO-BMFF header walks over binary payloads ——
+    QuerySpec("mm_audio_meta", (s, dir) => Multimodal.audioMeta(docs(s, dir), "doc_id"),
+      // H6: the analytic ground truth of the WAV generator — the oracle
+      // predicts what the chunk walk must recover from the bytes
       """WITH p AS (SELECT doc_id,
         |    (doc_id % 2) * 2 + 1 AS codec,
         |    doc_id % 2 + 1 AS channels,
@@ -2121,27 +1768,9 @@ object LlmQueries {
         |  CASE WHEN doc_id % 13 = 0 THEN NULL
         |       ELSE CAST(data_bytes * 1000 // byte_rate AS BIGINT)
         |       END AS duration_ms
-        |FROM r""".stripMargin,
-    // H6d: text tokens + analytically-predicted image patch tiles,
-    // through the standard packing window
-    "mm_pack" ->
-      """WITH t AS (SELECT d.doc_id, d.source AS shard,
-        |    CAST(len(string_split_regex(trim(lower(d.text)), ' +')) AS BIGINT)
-        |    + CASE WHEN d.doc_id % 13 = 0 THEN 0
-        |           ELSE ((16 + d.doc_id % 2048 + 255) // 256)
-        |                * ((16 + (d.doc_id * 3) % 2048 + 255) // 256)
-        |      END AS n_tok
-        |  FROM documents d),
-        |c AS (SELECT doc_id, shard, n_tok,
-        |  CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |    AS cum_before
-        |  FROM t)
-        |SELECT doc_id, shard, n_tok, cum_before,
-        |  cum_before // 512 AS bin, cum_before % 512 AS off_tok
-        |FROM c""".stripMargin,
-    // H6: the analytic ground truth of the MP4 generator
-    "mm_video_meta" ->
+        |FROM r""".stripMargin),
+    QuerySpec("mm_video_meta", (s, dir) => Multimodal.videoMeta(docs(s, dir), "doc_id"),
+      // H6: the analytic ground truth of the MP4 generator
       """WITH p AS (SELECT doc_id,
         |    ['isom','mp42','qt  '][CAST(doc_id % 3 AS INTEGER) + 1] AS brand,
         |    (doc_id % 10) * 100 + 600 AS timescale,
@@ -2159,8 +1788,43 @@ object LlmQueries {
         |  CASE WHEN doc_id % 13 = 0 THEN NULL
         |       ELSE CAST(duration * 1000 // timescale AS BIGINT)
         |       END AS duration_ms
-        |FROM p""".stripMargin,
-    "mm_frame_sample" ->
+        |FROM p""".stripMargin),
+    // —— H6d: INTERLEAVED multimodal packing — each doc costs its text
+    //    tokens PLUS an image-token budget derived from the REAL
+    //    decoded image dims (⌈w/256⌉·⌈h/256⌉ patch tiles, the
+    //    vision-encoder accounting; corrupted payloads contribute 0),
+    //    through the exact H15 packing machinery ——
+    QuerySpec("mm_pack", (s, dir) => {
+      import graft.functions.Hash60.tokens
+      val d = docs(s, dir)
+      val dims = Multimodal.imageDims(d, "doc_id")
+        .select(col("media_id").as("doc_id"), col("width"), col("height"))
+      val imgTok = when(col("width").isNull, lit(0L))
+        .otherwise((expr("(width + 255) div 256") *
+          expr("(height + 255) div 256")).cast("long"))
+      graft.operators.Pipeline100TB.packSequencesBy(
+        d.join(dims, Seq("doc_id")), "doc_id",
+        size(tokens(col("text"))).cast("long") + imgTok,
+        shardCol = "source", cap = 512)
+    },
+      // H6d: text tokens + analytically-predicted image patch tiles,
+      // through the standard packing window
+      """WITH t AS (SELECT d.doc_id, d.source AS shard,
+        |    CAST(len(string_split_regex(trim(lower(d.text)), ' +')) AS BIGINT)
+        |    + CASE WHEN d.doc_id % 13 = 0 THEN 0
+        |           ELSE ((16 + d.doc_id % 2048 + 255) // 256)
+        |                * ((16 + (d.doc_id * 3) % 2048 + 255) // 256)
+        |      END AS n_tok
+        |  FROM documents d),
+        |c AS (SELECT doc_id, shard, n_tok,
+        |  CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+        |    AS cum_before
+        |  FROM t)
+        |SELECT doc_id, shard, n_tok, cum_before,
+        |  cum_before // 512 AS bin, cum_before % 512 AS off_tok
+        |FROM c""".stripMargin),
+    QuerySpec("mm_frame_sample", (s, dir) => Multimodal.frameSample(docs(s, dir), "doc_id", "text"),
       """WITH RECURSIVE s(i) AS (
         |  SELECT 0
         |  UNION ALL
@@ -2171,8 +1835,11 @@ object LlmQueries {
         |  md5(substr(text, CAST(i AS INTEGER) * 256 + 1, 256)) AS frame_md5
         |FROM documents, s
         |WHERE length(text) > 0 AND i % 4 = 0
-        |  AND i <= CAST(floor((length(text) - 1) / 256.0) AS INTEGER)""".stripMargin,
-    "decon_ngram" ->
+        |  AND i <= CAST(floor((length(text) - 1) / 256.0) AS INTEGER)""".stripMargin),
+    // —— F8: benchmark decontamination (trigram overlap vs eval set) ——
+    QuerySpec("decon_ngram", (s, dir) =>
+      Dedup.decontaminate(docs(s, dir), "doc_id", "text", n = 3,
+        benchPred = col("doc_id") % 20 === 0),
       s"""WITH t AS ($toksCte),
          |sh0 AS (SELECT doc_id,
          |  list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -2186,79 +1853,263 @@ object LlmQueries {
          |SELECT c.doc_id, c.n_shingles, COUNT(*) AS n_hit,
          |  round(COUNT(*) / c.n_shingles, 6) AS contamination
          |FROM c JOIN b USING (shingle)
-         |GROUP BY 1, 2""".stripMargin,
-    "dedup_semantic" -> {
-      val pairsSql =
-        s"""SELECT a.vec_id AS a, b.vec_id AS b
+         |GROUP BY 1, 2""".stripMargin),
+    // —— F8c: span-level decontamination — verbatim aligned-block
+    //    overlap with the benchmark set ——
+    QuerySpec("decon_spans", (s, dir) =>
+      Dedup.decontaminateSpans(docs(s, dir), "doc_id", "text",
+        benchPred = col("doc_id") % 20 === 0),
+      // F8c: aligned-grid blocks vs the bench set's distinct block set
+      """WITH idx AS (SELECT DISTINCT unnest(
+        |    [CAST('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 30)), 1, 15)
+        |          AS BIGINT)
+        |     for i in generate_series(1, len(text) - 29, 30)]) AS h
+        |  FROM documents WHERE doc_id % 20 = 0 AND len(text) >= 30),
+        |s0 AS (SELECT doc_id,
+        |    [CAST('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 30)), 1, 15)
+        |          AS BIGINT)
+        |     for i in generate_series(1, len(text) - 29, 30)] AS hs
+        |  FROM documents WHERE doc_id % 20 <> 0 AND len(text) >= 30),
+        |s AS (SELECT doc_id, unnest(hs) AS h FROM s0),
+        |per AS (SELECT s.doc_id, COUNT(*) AS n_blocks,
+        |          COUNT(CASE WHEN idx.h IS NOT NULL THEN 1 END) AS n_hit
+        |        FROM s LEFT JOIN idx USING (h) GROUP BY 1)
+        |SELECT d.doc_id,
+        |  CAST(COALESCE(per.n_blocks, 0) AS BIGINT) AS n_blocks,
+        |  CAST(COALESCE(per.n_hit, 0) AS BIGINT) AS n_hit,
+        |  CASE WHEN per.n_blocks > 0
+        |       THEN round(CAST(per.n_hit AS DOUBLE) / per.n_blocks, 6)
+        |  END AS contamination
+        |FROM documents d LEFT JOIN per USING (doc_id)
+        |WHERE d.doc_id % 20 <> 0""".stripMargin),
+    // —— G22: label-blocked kNN graph over collapsed distinct vectors ——
+    // —— G31: graph-walk ANN — greedy beam search over the G22 kNN
+    //    graph (the HNSW/DiskANN search pattern), multi-entry ——
+    QuerySpec("sim_topk_graph", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.graphTopK(s, e, e.filter(col("vec_id") < 10), k = 5,
+        beamWidth = 16, rounds = 4, graphK = 8)
+    },
+      graphTopKSql()),
+    QuerySpec("sim_knn_graph", (s, dir) =>
+      Similarity.knnGraph(s, emb(s, dir), k = 3),
+      // G22: collapse to distinct (label, embedding) reps, label-blocked
+      // pairs, top-k per rep by (cos DESC, nbr)
+      knnGraphSql),
+    // —— G22b: PageRank centrality over the G22 kNN graph — the
+    //    graph-quality-propagation curation signal ——
+    QuerySpec("graph_pagerank", (s, dir) => {
+      val e = emb(s, dir)
+      val reps = e.groupBy(col("label"), col("embedding"))
+        .agg(min(col("vec_id")).as("id")).select("id")
+      val edges = Similarity.knnGraph(s, e, k = 3)
+        .select(col("vec_id").as("src"), col("nbr").as("dst"))
+      Pipeline100TB.pageRank(reps, edges)
+    },
+      pageRankSql),
+    // —— G22c: triangle count + clustering coefficient over the same
+    //    kNN graph — the neighborhood-redundancy diagnostic ——
+    QuerySpec("graph_triangles", (s, dir) => {
+      val e = emb(s, dir)
+      val reps = e.groupBy(col("label"), col("embedding"))
+        .agg(min(col("vec_id")).as("id")).select("id")
+      val edges = Similarity.knnGraph(s, e, k = 3)
+        .select(col("vec_id").as("src"), col("nbr").as("dst"))
+      Pipeline100TB.triangleStats(reps, edges)
+    },
+      // G22c: same derived edge set, wedge-close counting, int64 div
+      s"""WITH ed AS (SELECT vec_id AS src, nbr AS dst FROM (
+         |$knnGraphSql
+         |) __k),
+         |und AS (SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
+         |        FROM ed WHERE src <> dst),
+         |g AS (SELECT label, embedding, MIN(vec_id) AS vec_id
+         |      FROM embeddings GROUP BY label, embedding),
+         |deg AS (SELECT n, COUNT(*) AS deg FROM
+         |          (SELECT u AS n FROM und UNION ALL SELECT v FROM und)
+         |        GROUP BY 1),
+         |sym AS (SELECT u AS c, v AS n FROM und
+         |        UNION ALL SELECT v, u FROM und),
+         |wed AS (SELECT a.c, a.n AS p, b.n AS q
+         |        FROM sym a JOIN sym b ON a.c = b.c AND a.n < b.n),
+         |tri AS (SELECT c, COUNT(*) AS n_tri FROM wed
+         |        WHERE EXISTS (SELECT 1 FROM und
+         |                      WHERE und.u = wed.p AND und.v = wed.q)
+         |        GROUP BY c)
+         |SELECT g.vec_id,
+         |  CAST(COALESCE(deg.deg, 0) AS BIGINT) AS deg,
+         |  CAST(COALESCE(tri.n_tri, 0) AS BIGINT) AS n_tri,
+         |  CASE WHEN COALESCE(deg.deg, 0) >= 2
+         |       THEN CAST((2 * COALESCE(tri.n_tri, 0) * 1000000)
+         |                 // (deg.deg * (deg.deg - 1)) AS BIGINT)
+         |       ELSE CAST(0 AS BIGINT) END AS coeff_micro
+         |FROM g LEFT JOIN deg ON deg.n = g.vec_id
+         |       LEFT JOIN tri ON tri.c = g.vec_id""".stripMargin),
+    // —— F18: precision/recall of the MinHash banding vs true Jaccard ——
+    QuerySpec("dedup_eval", (s, dir) =>
+      Dedup.bandingEval(docs(s, dir), "doc_id", "text"),
+      // F18: both pair pipelines over the collapsed corpus, then the
+      // precision/recall readout of the banding against true Jaccard
+      s"""WITH t0 AS ($toksCte),
+         |fpt AS (SELECT doc_id,
+         |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
+         |  FROM t0),
+         |grp AS (SELECT fp, min(doc_id) AS rep FROM fpt GROUP BY 1),
+         |t AS (SELECT t0.doc_id, t0.toks
+         |      FROM t0 JOIN grp g ON t0.doc_id = g.rep),
+         |$shingleBody,
+         |$jaccardPairBody,
+         |tp AS (SELECT i.a, i.b FROM inter i
+         |       WHERE round(CAST(i.i AS DOUBLE) / (i.sza + i.szb - i.i), 6)
+         |             >= 0.8),
+         |$minhashSigSql,
+         |bandkeys AS (
+         |$bandKeysSql),
+         |cp AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
+         |       FROM bandkeys x JOIN bandkeys y
+         |         ON x.band = y.band AND x.key = y.key
+         |        AND x.doc_id < y.doc_id),
+         |m AS (SELECT
+         |  (SELECT COUNT(*) FROM tp) AS n_true,
+         |  (SELECT COUNT(*) FROM cp) AS n_cand,
+         |  (SELECT COUNT(*) FROM tp JOIN cp
+         |     ON tp.a = cp.a AND tp.b = cp.b) AS n_hit)
+         |SELECT CAST(n_true AS BIGINT) AS n_true,
+         |  CAST(n_cand AS BIGINT) AS n_cand,
+         |  CAST(n_hit AS BIGINT) AS n_hit,
+         |  CASE WHEN n_cand > 0
+         |       THEN round(CAST(n_hit AS DOUBLE) / n_cand, 6) END AS prec,
+         |  CASE WHEN n_true > 0
+         |       THEN round(CAST(n_hit AS DOUBLE) / n_true, 6) END AS recall
+         |FROM m""".stripMargin),
+    // —— F18b: closed-form S-curve banding solver — the (r, b)
+    //    factorization table with the chosen knobs flagged ——
+    QuerySpec("dedup_band_choose", (s, dir) => Dedup.bandChoose(s),
+      // F15: the identical span grid (1-based char positions every 7,
+      // 30-char windows) and the shared md5-60bit span hash
+      // F18b: the integer S-curve solver — floor-division fixed-point
+      // powers, so the replay is bit-exact with zero libm assumptions
+      """WITH cand AS (SELECT CAST(d AS INTEGER) AS r,
+        |         CAST(16 // d AS INTEGER) AS b
+        |       FROM generate_series(1, 16) t(d) WHERE 16 % d = 0),
+        |p AS (SELECT r, b,
+        |  list_reduce(list_prepend(CAST(1000000 AS BIGINT),
+        |      [CAST(0 AS BIGINT) for i in generate_series(1, r)]),
+        |    (acc, x) -> (acc * 800000) // 1000000) AS pr,
+        |  list_reduce(list_prepend(CAST(1000000 AS BIGINT),
+        |      [CAST(0 AS BIGINT) for i in generate_series(1, r)]),
+        |    (acc, x) -> (acc * 300000) // 1000000) AS pf
+        |  FROM cand),
+        |q AS (SELECT r, b,
+        |  1000000 - list_reduce(list_prepend(CAST(1000000 AS BIGINT),
+        |      [CAST(0 AS BIGINT) for i in generate_series(1, b)]),
+        |    (acc, x) -> (acc * (1000000 - pr)) // 1000000) AS recall_m,
+        |  1000000 - list_reduce(list_prepend(CAST(1000000 AS BIGINT),
+        |      [CAST(0 AS BIGINT) for i in generate_series(1, b)]),
+        |    (acc, x) -> (acc * (1000000 - pf)) // 1000000) AS fp_m
+        |  FROM p),
+        |m AS (SELECT r, b, recall_m, fp_m, recall_m >= 850000 AS meets,
+        |        row_number() OVER (ORDER BY recall_m >= 850000 DESC,
+        |                           fp_m ASC, r DESC) AS rk
+        |      FROM q)
+        |SELECT r, b,
+        |  round(CAST(recall_m AS DOUBLE) / 1000000.0, 6) AS recall,
+        |  round(CAST(fp_m AS DOUBLE) / 1000000.0, 6) AS fp_rate,
+        |  meets, (rk = 1 AND meets) AS chosen
+        |FROM m""".stripMargin),
+    // —— F9: SemDeDup pass: cosine pairs → CC → survivors ——
+    QuerySpec("dedup_semantic", (s, dir) =>
+      Similarity.semanticDedup(s, emb(s, dir), tau = 0.4),
+      {
+        val pairsSql =
+          s"""SELECT a.vec_id AS a, b.vec_id AS b
            |FROM embeddings a JOIN embeddings b
            |  ON a.label = b.label AND a.vec_id < b.vec_id
            |WHERE round(${cosSql.format("a.embedding", "b.embedding")}, 4) >= 0.4"""
-          .stripMargin
-      s"""WITH RECURSIVE pairs AS ($pairsSql),
-         |e AS (SELECT a AS s, b AS d FROM pairs
-         |      UNION SELECT b, a FROM pairs),
-         |reach(s, d) AS (
-         |  SELECT s, d FROM e
-         |  UNION
-         |  SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s)
-         |SELECT s AS vec_id, LEAST(s, MIN(d)) AS cluster,
-         |  s = LEAST(s, MIN(d)) AS keep
-         |FROM reach GROUP BY s""".stripMargin
+            .stripMargin
+        s"""WITH RECURSIVE pairs AS ($pairsSql),
+           |e AS (SELECT a AS s, b AS d FROM pairs
+           |      UNION SELECT b, a FROM pairs),
+           |reach(s, d) AS (
+           |  SELECT s, d FROM e
+           |  UNION
+           |  SELECT r.s, e.d FROM reach r JOIN e ON r.d = e.s)
+           |SELECT s AS vec_id, LEAST(s, MIN(d)) AS cluster,
+           |  s = LEAST(s, MIN(d)) AS keep
+           |FROM reach GROUP BY s""".stripMargin
+      }),
+    // —— F17: INCREMENTAL semantic dedup — batch vectors vs the
+    //    standing centroid-cell index (centroids + index from the
+    //    already-accepted 90%, batch = vec_id % 10 = 0) ——
+    QuerySpec("dedup_semantic_inc", (s, dir) => {
+      val e = emb(s, dir)
+      val standing = e.filter(col("vec_id") % 10 =!= 0)
+      // Reuse seam: the centroid model feeds the standing-index
+      // assignment AND the batch assignment inside the gate — one
+      // centroid aggregate instead of two.
+      val cents = Similarity.labelCentroids(standing)
+        .seamed
+      Similarity.incrementalSemantic(
+        s, e.filter(col("vec_id") % 10 === 0),
+        Similarity.assignCells(s, standing, cents), cents, tau = 0.4)
     },
-    // F17: the incremental chain replayed — centroids from the
-    // standing 90% (scaled-int64 sums, float snap), every vector
-    // assigned under the (cos DESC, label) argmax, cell-blocked veto
-    // vs the index, per-cell CC over the kept batch
-    "dedup_semantic_inc" -> {
-      val bcos = cosSql.format("b.embedding", "i.embedding")
-      val pcos = cosSql.format("x.embedding", "y.embedding")
-      s"""WITH RECURSIVE u AS (SELECT label,
-         |    CAST(unnest(generate_series(1, len(embedding))) AS INTEGER) AS dim,
-         |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1048576.0) AS BIGINT)
-         |      AS sv
-         |  FROM embeddings WHERE vec_id % 10 <> 0),
-         |c AS (SELECT label, dim, SUM(sv) AS s, COUNT(*) AS n
-         |      FROM u GROUP BY 1, 2),
-         |cent AS (SELECT label AS c_label,
-         |    CAST(list(CAST(s AS DOUBLE) / 1048576.0 / n ORDER BY dim)
-         |         AS FLOAT[]) AS c_emb
-         |  FROM c GROUP BY label),
-         |sc AS (SELECT e.vec_id, e.embedding, cent.c_label,
-         |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |            CAST(c_emb AS DOUBLE[])), 4) AS cos_r
-         |  FROM embeddings e CROSS JOIN cent),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id
-         |        ORDER BY cos_r DESC, c_label) AS rn FROM sc),
-         |asg AS (SELECT vec_id, embedding, c_label AS cell
-         |        FROM r WHERE rn = 1),
-         |bb AS (SELECT * FROM asg WHERE vec_id % 10 = 0),
-         |idx AS (SELECT * FROM asg WHERE vec_id % 10 <> 0),
-         |vet AS (SELECT DISTINCT b.vec_id FROM bb b JOIN idx i
-         |        ON b.cell = i.cell AND round($bcos, 4) >= 0.4),
-         |kept AS (SELECT * FROM bb
-         |         WHERE vec_id NOT IN (SELECT vec_id FROM vet)),
-         |pairs AS (SELECT x.vec_id AS a, y.vec_id AS b FROM kept x
-         |          JOIN kept y ON x.cell = y.cell AND x.vec_id < y.vec_id
-         |          WHERE round($pcos, 4) >= 0.4),
-         |e2 AS (SELECT a AS s, b AS d FROM pairs
-         |       UNION SELECT b, a FROM pairs),
-         |reach(s, d) AS (
-         |  SELECT s, d FROM e2
-         |  UNION
-         |  SELECT r2.s, e2.d FROM reach r2 JOIN e2 ON r2.d = e2.s),
-         |cl AS (SELECT s AS vec_id, LEAST(s, MIN(d)) AS cluster
-         |       FROM reach GROUP BY s)
-         |SELECT k.vec_id, k.cell,
-         |  COALESCE(cl.cluster, k.vec_id) AS survivor,
-         |  CASE WHEN COALESCE(cl.cluster, k.vec_id) = k.vec_id
-         |       THEN 'keep' ELSE 'collapsed' END AS status
-         |FROM kept k LEFT JOIN cl ON k.vec_id = cl.vec_id
-         |UNION ALL
-         |SELECT vec_id, cell, CAST(NULL AS BIGINT) AS survivor,
-         |  'vetoed' AS status
-         |FROM bb WHERE vec_id IN (SELECT vec_id FROM vet)""".stripMargin
-    },
-    "pack_sequences" ->
+      // F17: the incremental chain replayed — centroids from the
+      // standing 90% (scaled-int64 sums, float snap), every vector
+      // assigned under the (cos DESC, label) argmax, cell-blocked veto
+      // vs the index, per-cell CC over the kept batch
+      {
+        val bcos = cosSql.format("b.embedding", "i.embedding")
+        val pcos = cosSql.format("x.embedding", "y.embedding")
+        s"""WITH RECURSIVE u AS (SELECT label,
+           |    CAST(unnest(generate_series(1, len(embedding))) AS INTEGER) AS dim,
+           |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1048576.0) AS BIGINT)
+           |      AS sv
+           |  FROM embeddings WHERE vec_id % 10 <> 0),
+           |c AS (SELECT label, dim, SUM(sv) AS s, COUNT(*) AS n
+           |      FROM u GROUP BY 1, 2),
+           |cent AS (SELECT label AS c_label,
+           |    CAST(list(CAST(s AS DOUBLE) / 1048576.0 / n ORDER BY dim)
+           |         AS FLOAT[]) AS c_emb
+           |  FROM c GROUP BY label),
+           |sc AS (SELECT e.vec_id, e.embedding, cent.c_label,
+           |    round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+           |            CAST(c_emb AS DOUBLE[])), 4) AS cos_r
+           |  FROM embeddings e CROSS JOIN cent),
+           |r AS (SELECT *, row_number() OVER (PARTITION BY vec_id
+           |        ORDER BY cos_r DESC, c_label) AS rn FROM sc),
+           |asg AS (SELECT vec_id, embedding, c_label AS cell
+           |        FROM r WHERE rn = 1),
+           |bb AS (SELECT * FROM asg WHERE vec_id % 10 = 0),
+           |idx AS (SELECT * FROM asg WHERE vec_id % 10 <> 0),
+           |vet AS (SELECT DISTINCT b.vec_id FROM bb b JOIN idx i
+           |        ON b.cell = i.cell AND round($bcos, 4) >= 0.4),
+           |kept AS (SELECT * FROM bb
+           |         WHERE vec_id NOT IN (SELECT vec_id FROM vet)),
+           |pairs AS (SELECT x.vec_id AS a, y.vec_id AS b FROM kept x
+           |          JOIN kept y ON x.cell = y.cell AND x.vec_id < y.vec_id
+           |          WHERE round($pcos, 4) >= 0.4),
+           |e2 AS (SELECT a AS s, b AS d FROM pairs
+           |       UNION SELECT b, a FROM pairs),
+           |reach(s, d) AS (
+           |  SELECT s, d FROM e2
+           |  UNION
+           |  SELECT r2.s, e2.d FROM reach r2 JOIN e2 ON r2.d = e2.s),
+           |cl AS (SELECT s AS vec_id, LEAST(s, MIN(d)) AS cluster
+           |       FROM reach GROUP BY s)
+           |SELECT k.vec_id, k.cell,
+           |  COALESCE(cl.cluster, k.vec_id) AS survivor,
+           |  CASE WHEN COALESCE(cl.cluster, k.vec_id) = k.vec_id
+           |       THEN 'keep' ELSE 'collapsed' END AS status
+           |FROM kept k LEFT JOIN cl ON k.vec_id = cl.vec_id
+           |UNION ALL
+           |SELECT vec_id, cell, CAST(NULL AS BIGINT) AS survivor,
+           |  'vetoed' AS status
+           |FROM bb WHERE vec_id IN (SELECT vec_id FROM vet)""".stripMargin
+      }),
+    // —— H15: greedy sequence packing at a 512-token budget ——
+    QuerySpec("pack_sequences", (s, dir) =>
+      graft.operators.Pipeline100TB.packSequences(
+        docs(s, dir), "doc_id", "text", shardCol = "source", cap = 512),
       s"""WITH t AS (SELECT doc_id, source AS shard,
          |  CAST(len(string_split_regex(trim(lower(text)), ' +')) AS BIGINT) AS n_tok
          |  FROM documents),
@@ -2269,13 +2120,35 @@ object LlmQueries {
          |  FROM t)
          |SELECT doc_id, shard, n_tok, cum_before,
          |  cum_before // 512 AS bin, cum_before % 512 AS off_tok
-         |FROM c""".stripMargin,
-    "bpe_encode" ->
+         |FROM c""".stripMargin),
+    // —— H22: BPE apply — exact subword ids under a fixed merge table ——
+    QuerySpec("bpe_encode", (s, dir) => {
+      import org.apache.spark.sql.GraftBridge
+      val d = docs(s, dir)
+      val toks = graft.functions.Hash60.tokens(
+        regexp_replace(col("text"), "\\|", " "))
+      val ids = GraftBridge.column(graft.functions.BpeEncode(
+        GraftBridge.expression(toks), bpeMerges, bpeVocab))
+      d.select(col("doc_id"),
+        size(ids).cast("long").as("n_bpe"),
+        concat(lit("["), array_join(ids.cast("array<string>"), ","), lit("]"))
+          .as("ids_str"))
+    },
       s"""WITH RECURSIVE $bpeCtes
          |SELECT doc_id, CAST(len(ids) AS BIGINT) AS n_bpe,
          |  '[' || array_to_string(ids, ',') || ']' AS ids_str
-         |FROM ids""".stripMargin,
-    "pack_sequences_bpe" ->
+         |FROM ids""".stripMargin),
+    // —— H15∘H22: packing with EXACT tokenizer counts, not estimates ——
+    QuerySpec("pack_sequences_bpe", (s, dir) => {
+      import org.apache.spark.sql.GraftBridge
+      val toks = graft.functions.Hash60.tokens(
+        regexp_replace(col("text"), "\\|", " "))
+      val ids = GraftBridge.column(graft.functions.BpeEncode(
+        GraftBridge.expression(toks), bpeMerges, bpeVocab))
+      graft.operators.Pipeline100TB.packSequencesBy(
+        docs(s, dir), "doc_id", size(ids).cast("long"),
+        shardCol = "source", cap = 256)
+    },
       s"""WITH RECURSIVE $bpeCtes,
          |t AS (SELECT d.doc_id, d.source AS shard,
          |    CAST(len(ids.ids) AS BIGINT) AS n_tok
@@ -2287,8 +2160,9 @@ object LlmQueries {
          |  FROM t)
          |SELECT doc_id, shard, n_tok, cum_before,
          |  cum_before // 256 AS bin, cum_before % 256 AS off_tok
-         |FROM c""".stripMargin,
-    "text_gopher" ->
+         |FROM c""".stripMargin),
+    // —— H16: Gopher-style structural quality rules ——
+    QuerySpec("text_gopher", (s, dir) => TextAnalysis.gopherRules(docs(s, dir), "doc_id", "text"),
       s"""WITH t AS ($toksCte)
          |SELECT doc_id,
          |  CAST(len(toks) AS BIGINT) AS n_words,
@@ -2300,8 +2174,12 @@ object LlmQueries {
          |   AND length(array_to_string(toks, '')) / len(toks) BETWEEN 3.0 AND 10.0
          |   AND len(list_distinct(toks)) / len(toks) >= 0.2
          |   AND len(list_filter(toks, $stopIn)) >= 2) AS pass
-         |FROM t""".stripMargin,
-    "text_classifier" ->
+         |FROM t""".stripMargin),
+    // —— H20: model-based quality filter (hashed features × broadcast
+    //    weight vector → logistic score), fixed deterministic model ——
+    QuerySpec("text_classifier", (s, dir) =>
+      TextAnalysis.classifierScore(docs(s, dir), "doc_id", "text",
+        clfWeights, biasMicro = 50000L, threshold = 0.5),
       s"""WITH t AS ($toksCte),
          |c AS (SELECT doc_id, len(toks) AS n,
          |  CAST(list_sum(list_transform(toks, tok ->
@@ -2315,53 +2193,17 @@ object LlmQueries {
          |  FROM c)
          |SELECT doc_id, CAST(n AS BIGINT) AS n_tok, clf_score,
          |  clf_score >= 0.5 AS keep
-         |FROM s""".stripMargin,
-    // H24: DSIR replay — sparse unigram+bigram postings (non-distinct
-    // bigrams, unlike the minhash shingle CTEs), add-1-smoothed bucket
-    // log-ratios in int64 micro-units, exact integer doc weights,
-    // Gumbel key from the engine-wide md5-60-bit draw
-    "corpus_select_dsir" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  string_split_regex(trim(lower(text)), ' +') AS toks
-        |  FROM documents),
-        |u1 AS (SELECT doc_id, unnest(toks) AS g FROM t),
-        |u2 AS (SELECT doc_id,
-        |         unnest([toks[i] || ' ' || toks[i+1]
-        |                 for i in generate_series(1, len(toks)-1)]) AS g
-        |       FROM t),
-        |e AS (SELECT doc_id,
-        |        CAST('0x'||substr(md5(g),1,15) AS BIGINT) % 64 AS b
-        |      FROM (SELECT * FROM u1 UNION ALL SELECT * FROM u2)),
-        |cb AS (SELECT doc_id, b, COUNT(*) AS c FROM e GROUP BY 1, 2),
-        |cb2 AS (SELECT cb.b, cb.c, (d.source = 'src0') AS is_t
-        |        FROM cb JOIN t d USING (doc_id)),
-        |tot AS (SELECT r.range AS b,
-        |          COALESCE(SUM(CASE WHEN is_t THEN c END), 0) AS tc,
-        |          COALESCE(SUM(c), 0) AS rc
-        |        FROM range(64) r LEFT JOIN cb2 ON cb2.b = r.range
-        |        GROUP BY 1),
-        |s AS (SELECT SUM(tc) AS tt, SUM(rc) AS rt FROM tot),
-        |lam AS (SELECT b,
-        |          CAST(round((ln((CAST(tc AS DOUBLE) + 1.0)
-        |                          / (CAST(tt AS DOUBLE) + 64.0))
-        |                    - ln((CAST(rc AS DOUBLE) + 1.0)
-        |                          / (CAST(rt AS DOUBLE) + 64.0)))
-        |                     * 1000000.0) AS BIGINT) AS lam
-        |        FROM tot, s),
-        |sc AS (SELECT d.doc_id,
-        |         CAST(COALESCE(SUM(cb.c * lam.lam), 0) AS BIGINT) AS lw
-        |       FROM t d LEFT JOIN cb ON cb.doc_id = d.doc_id
-        |            LEFT JOIN lam ON lam.b = cb.b
-        |       GROUP BY 1)
-        |SELECT doc_id, lw AS lw_micro,
-        |  round(CAST(lw AS DOUBLE) / 1000000.0 +
-        |    -ln(-ln((CAST('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15)
-        |              AS BIGINT) + 1.0) / 1152921504606846976.0)), 6) AS gkey
-        |FROM sc
-        |ORDER BY gkey DESC, doc_id LIMIT 100""".stripMargin,
-    // H20c: the same score chain as text_classifier, binned; COUNT
-    // (not SUM) keeps both outputs BIGINT
-    "classifier_calibration" ->
+         |FROM s""".stripMargin),
+    // —— H20c: calibration read-out for the fixed H20 model — 10
+    //    score bins × observed positive rate, one map-side-combined
+    //    shuffle of ≤10 rows; the reliability diagram every
+    //    model-gated curation stage ships with ——
+    QuerySpec("classifier_calibration", (s, dir) => {
+      TextAnalysis.calibrationBins(docs(s, dir), "text",
+        col("lang") === "en", clfWeights, biasMicro = 50000L)
+    },
+      // H20c: the same score chain as text_classifier, binned; COUNT
+      // (not SUM) keeps both outputs BIGINT
       s"""WITH t AS (SELECT doc_id, lang,
          |  string_split_regex(trim(lower(text)), ' +') AS toks
          |  FROM documents),
@@ -2380,9 +2222,16 @@ object LlmQueries {
          |  COUNT(CASE WHEN y THEN 1 END) AS n_pos,
          |  round(CAST(COUNT(CASE WHEN y THEN 1 END) AS DOUBLE)
          |        / CAST(COUNT(*) AS DOUBLE), 6) AS pos_rate
-         |FROM s GROUP BY 1""".stripMargin,
-    // H20c drift: the same chain with the source slice prepended
-    "classifier_drift" ->
+         |FROM s GROUP BY 1""".stripMargin),
+    // —— H20c drift: the same reliability diagram PER SOURCE slice —
+    //    a slice whose curve departs the corpus curve is the
+    //    re-threshold/re-train signal ——
+    QuerySpec("classifier_drift", (s, dir) => {
+      TextAnalysis.calibrationBins(docs(s, dir), "text",
+        col("lang") === "en", clfWeights, biasMicro = 50000L,
+        slices = Seq("source" -> col("source")))
+    },
+      // H20c drift: the same chain with the source slice prepended
       s"""WITH t AS (SELECT doc_id, lang, source,
          |  string_split_regex(trim(lower(text)), ' +') AS toks
          |  FROM documents),
@@ -2401,13 +2250,17 @@ object LlmQueries {
          |  COUNT(CASE WHEN y THEN 1 END) AS n_pos,
          |  round(CAST(COUNT(CASE WHEN y THEN 1 END) AS DOUBLE)
          |        / CAST(COUNT(*) AS DOUBLE), 6) AS pos_rate
-         |FROM s GROUP BY 1, 2""".stripMargin,
-    // H20b: the two GD iterations unrolled into plain CTEs (the
-    // H7c/G2b move) — sparse (doc,bucket,count) postings replay the
-    // engine's dense-array arithmetic exactly: absent buckets
-    // contribute round(0) = 0 to every gradient sum, so COALESCE(.,0)
-    // on the bucket join is the dense zero
-    "classifier_train" ->
+         |FROM s GROUP BY 1, 2""".stripMargin),
+    // —— H20b: classifier TRAINING — 2 unrolled deterministic
+    //    full-batch logistic GD steps over hashed features ——
+    QuerySpec("classifier_train", (s, dir) =>
+      TextAnalysis.classifierTrain(docs(s, dir), "doc_id", "text",
+        positive = col("lang") === "en", dims = 64, iters = 2, lr = 5.0),
+      // H20b: the two GD iterations unrolled into plain CTEs (the
+      // H7c/G2b move) — sparse (doc,bucket,count) postings replay the
+      // engine's dense-array arithmetic exactly: absent buckets
+      // contribute round(0) = 0 to every gradient sum, so COALESCE(.,0)
+      // on the bucket join is the dense zero
       """WITH t AS (SELECT doc_id,
         |  CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
         |  string_split_regex(trim(lower(text)), ' +') AS toks
@@ -2460,8 +2313,17 @@ object LlmQueries {
         |       FROM b1, gb2, nd)
         |SELECT CAST(-1 AS INTEGER) AS bucket, bias AS w_micro FROM b2
         |UNION ALL
-        |SELECT CAST(b AS INTEGER) AS bucket, w AS w_micro FROM w2""".stripMargin,
-    "mix_balance" ->
+        |SELECT CAST(b AS INTEGER) AS bucket, w AS w_micro FROM w2""".stripMargin),
+    // —— G12: deterministic source-mixture balancing (600-token budget) ——
+    QuerySpec("mix_balance", (s, dir) => {
+      import graft.functions.Hash60.tokens
+      val d = docs(s, dir)
+      graft.operators.Pipeline100TB.mixBalance(d, "source",
+          keyCol = col("doc_id"),
+          tokCol = size(tokens(col("text"))).cast("long"),
+          targetToks = 600L)
+        .select(col("doc_id"), col("source"), col("__tok").as("n_tok"))
+    },
       s"""WITH t AS (SELECT doc_id, source,
          |  CAST(len(string_split_regex(trim(lower(text)), ' +')) AS BIGINT)
          |    AS n_tok
@@ -2472,10 +2334,16 @@ object LlmQueries {
          |SELECT t.doc_id, t.source, t.n_tok
          |FROM t JOIN r ON t.source IS NOT DISTINCT FROM r.source
          |WHERE CAST('0x'||substr(md5(COALESCE(CAST(doc_id AS VARCHAR), '')),1,15) AS BIGINT)
-         |      < CAST(round(rate * 1152921504606846976.0) AS BIGINT)""".stripMargin,
-    // G12b: window replay of the UniMax closed form — the capped set
-    // is pure int64 arithmetic (bit-deterministic), λ one division
-    "mix_temperature" ->
+         |      < CAST(round(rate * 1152921504606846976.0) AS BIGINT)""".stripMargin),
+    // —— G12b: temperature + UniMax mixture allocation over sources ——
+    QuerySpec("mix_temperature", (s, dir) => {
+      import graft.functions.Hash60.tokens
+      graft.operators.Pipeline100TB.mixTemperature(docs(s, dir), "source",
+        tokCol = size(tokens(col("text"))).cast("long"),
+        alpha = 0.3, budget = 100000L, capEpochs = 2L)
+    },
+      // G12b: window replay of the UniMax closed form — the capped set
+      // is pure int64 arithmetic (bit-deterministic), λ one division
       """WITH n AS (SELECT source AS stratum,
         |  SUM(CAST(len(string_split_regex(trim(lower(text)), ' +'))
         |      AS BIGINT)) AS n_tok
@@ -2511,10 +2379,84 @@ object LlmQueries {
         |    AS p_temp,
         |  round(alloc, 4) AS alloc_tok,
         |  round(alloc / CAST(n_tok AS DOUBLE), 6) AS epochs
-        |FROM a""".stripMargin,
-    // G21: cell placement replays the md5-60-bit + affine-perm family;
-    // every value is exact int64 — zero float anywhere
-    "sketch_cms" ->
+        |FROM a""".stripMargin),
+    // —— G26: bucketed corpus layout — co-located standing-index
+    //    join through the session catalog, zero exchanges ——
+    QuerySpec("corpus_bucketed_join", (s, dir) => {
+      import graft.functions.Hash60.tokens
+      val d = docs(s, dir)
+      graft.operators.Pipeline100TB.writeBucketed(
+        d.select(col("doc_id"), col("source")), "graft_bk_corpus", "doc_id")
+      graft.operators.Pipeline100TB.writeBucketed(
+        d.select(col("doc_id"),
+          size(tokens(col("text"))).cast("long").as("n_tok")),
+        "graft_bk_stats", "doc_id")
+      graft.operators.Pipeline100TB
+        .bucketedJoin(s, "graft_bk_corpus", "graft_bk_stats", "doc_id")
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("toks"))
+    },
+      // G26: the bucketed layout changes the PLAN, never the result —
+      // the oracle is the plain join-free aggregate
+      """SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+        |  CAST(SUM(len(string_split_regex(trim(lower(text)), ' +'))) AS BIGINT)
+        |    AS toks
+        |FROM documents GROUP BY 1""".stripMargin),
+    // —— H25: DoReMi-style excess-loss domain reweighting (weak
+    //    unigram reference vs KN-trigram proxy, deterministic exp) ——
+    QuerySpec("corpus_mix_doremi", (s, dir) =>
+      graft.operators.Pipeline100TB.doremiMix(docs(s, dir),
+        "doc_id", "text", "source"),
+      // H25: DoReMi excess-loss reweighting — the two score chains are
+      // the FACTORED uni/kn CTE builders (can't drift from their
+      // standalone oracles), composed with the deterministic-exp replay
+      s"""WITH ${uniLpCtes("u")},
+         |${knLpCtes("k")},
+         |pd AS (SELECT d.source, u.n_tok,
+         |    CAST(round(k.avg_logp_kn * 10000.0) AS BIGINT)
+         |      - CAST(round(u.avg_logp * 10000.0) AS BIGINT) AS ex
+         |  FROM documents d JOIN ulp u ON u.doc_id = d.doc_id
+         |  JOIN klp k ON k.doc_id = d.doc_id),
+         |dom AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         |    CAST(SUM(n_tok) AS BIGINT) AS toks,
+         |    CAST(SUM(ex) AS BIGINT) AS sx
+         |  FROM pd GROUP BY 1),
+         |dx AS (SELECT *, CAST(round(CAST(sx AS DOUBLE) * 100.0
+         |    / CAST(n_docs AS DOUBLE)) AS BIGINT) AS excess_micro FROM dom),
+         |-- deterministic exp (the engine's withExpDet, op for op):
+         |-- k = floor(x/ln2 + 1/2), Taylor to r^12/12!, exact 2^k fold
+         |e1 AS (SELECT *,
+         |    CAST(excess_micro AS DOUBLE) / 1000000.0 * 1.0 AS xv FROM dx),
+         |e2 AS (SELECT *, CAST(floor(xv * 1.4426950408889634 + 0.5) AS INT)
+         |    AS xk FROM e1),
+         |e3 AS (SELECT *, xv - CAST(xk AS DOUBLE) * 0.6931471805599453 AS xr
+         |  FROM e2),
+         |e4 AS (SELECT *, xr AS p1, p1*xr AS p2, p2*xr AS p3, p3*xr AS p4,
+         |    p4*xr AS p5, p5*xr AS p6, p6*xr AS p7, p7*xr AS p8,
+         |    p8*xr AS p9, p9*xr AS p10, p10*xr AS p11, p11*xr AS p12
+         |  FROM e3),
+         |e5 AS (SELECT *, 1.0 + p1 + p2/2.0 + p3/6.0 + p4/24.0 + p5/120.0
+         |    + p6/720.0 + p7/5040.0 + p8/40320.0 + p9/362880.0
+         |    + p10/3628800.0 + p11/39916800.0 + p12/479001600.0 AS xs
+         |  FROM e4),
+         |e6 AS (SELECT *, list_reduce(list_concat([xs],
+         |      list_transform(range(1, abs(xk) + 1),
+         |        i -> CASE WHEN xk > 0 THEN 2.0 ELSE 0.5 END)),
+         |    (a, b) -> a * b) AS expv FROM e5),
+         |w1 AS (SELECT *, CAST(SUM(toks) OVER () AS BIGINT) AS tot FROM e6),
+         |w2 AS (SELECT *, CAST(round(CAST(toks AS DOUBLE) / CAST(tot AS DOUBLE)
+         |    * expv * 1000000000.0) AS BIGINT) AS wm FROM w1),
+         |w3 AS (SELECT *, CAST(SUM(wm) OVER () AS BIGINT) AS sw FROM w2)
+         |SELECT source, n_docs, toks, excess_micro,
+         |  CAST(round(CAST(wm AS DOUBLE) * 1000000.0 / CAST(sw AS DOUBLE))
+         |    AS BIGINT) AS weight_ppm
+         |FROM w3""".stripMargin),
+    // —— G21: Count-Min sketch with probe-term error readout ——
+    QuerySpec("sketch_cms", (s, dir) =>
+      graft.operators.Pipeline100TB.cmsProbe(docs(s, dir), "text",
+        probes = Seq("the", "a", "of", "is", "qzxkj"), d = 4, w = 64),
+      // G21: cell placement replays the md5-60-bit + affine-perm family;
+      // every value is exact int64 — zero float anywhere
       """WITH t AS (SELECT unnest(string_split_regex(trim(lower(text)), ' +'))
         |             AS tok
         |           FROM documents),
@@ -2540,12 +2482,21 @@ object LlmQueries {
         |SELECT probe, CAST(est_n AS BIGINT) AS est_n,
         |  CAST(COALESCE(tr.true_n, 0) AS BIGINT) AS true_n,
         |  CAST(est_n - COALESCE(tr.true_n, 0) AS BIGINT) AS over_n
-        |FROM est LEFT JOIN tr ON tr.tok = est.probe""".stripMargin,
-    "text_bm25" -> bm25Sql(Seq("spark", "query", "stream"), 20),
-    // G24: both legs replay their existing oracles (the BM25 chain
-    // scoped as a derived table, the brute-force cosine inline); the
-    // fusion is pure int64 — ⌊10⁹/(c+rank)⌋ via // , COALESCE 0
-    "sim_hybrid_rrf" ->
+        |FROM est LEFT JOIN tr ON tr.tok = est.probe""".stripMargin),
+    // —— H17: BM25 scoring over a fixed query-term set, top-20 ——
+    QuerySpec("text_bm25", (s, dir) =>
+      TextAnalysis.bm25(docs(s, dir), "doc_id", "text",
+        terms = Seq("spark", "query", "stream"), k = 20),
+      bm25Sql(Seq("spark", "query", "stream"), 20)),
+    // —— G24: hybrid sparse+dense retrieval — the H19 BM25 leg and a
+    //    cosine dense leg fused by reciprocal rank (RRF, c = 60),
+    //    integer micro-unit contributions, missing leg = 0 ——
+    QuerySpec("sim_hybrid_rrf", (s, dir) =>
+      Similarity.hybridRrf(s, docs(s, dir), emb(s, dir),
+        terms = Seq("spark", "query", "stream"), queryVec = 0L),
+      // G24: both legs replay their existing oracles (the BM25 chain
+      // scoped as a derived table, the brute-force cosine inline); the
+      // fusion is pure int64 — ⌊10⁹/(c+rank)⌋ via // , COALESCE 0
       s"""WITH bm AS (SELECT id AS doc_id,
          |    CAST(row_number() OVER (ORDER BY score DESC, id) AS INTEGER)
          |      AS bm25_rank
@@ -2574,8 +2525,10 @@ object LlmQueries {
          |         (ORDER BY rrf_micro DESC, doc_id) AS rank FROM r)
          |SELECT doc_id, bm25_rank, dense_rank, rrf_micro,
          |  CAST(rank AS INTEGER) AS rank
-         |FROM rk WHERE rank <= 10""".stripMargin,
-    "vocab_pairs" ->
+         |FROM rk WHERE rank <= 10""".stripMargin),
+    // —— H7b: BPE pair-merge statistics, top-20 adjacent pairs ——
+    QuerySpec("vocab_pairs", (s, dir) =>
+      TextAnalysis.pairCounts(docs(s, dir), "doc_id", "text", k = 20),
       s"""WITH t AS ($toksCte),
          |p0 AS (SELECT [toks[i] || ' ' || toks[i+1]
          |               for i in generate_series(1, len(toks)-1)] AS pairs
@@ -2583,9 +2536,12 @@ object LlmQueries {
          |p AS (SELECT unnest(pairs) AS pair FROM p0)
          |SELECT pair, COUNT(*) AS n
          |FROM p GROUP BY 1
-         |ORDER BY n DESC, pair LIMIT 20""".stripMargin,
-    // H7d: identical PMI formula, identical operation order
-    "vocab_pmi" ->
+         |ORDER BY n DESC, pair LIMIT 20""".stripMargin),
+    // —— H7d: PMI collocations, min pair count 5, top-20 ——
+    QuerySpec("vocab_pmi", (s, dir) =>
+      TextAnalysis.pmiPairs(docs(s, dir), "doc_id", "text",
+        minCount = 5, k = 20),
+      // H7d: identical PMI formula, identical operation order
       """WITH t AS (SELECT doc_id,
         |  string_split_regex(trim(lower(text)), ' +') AS toks
         |  FROM documents),
@@ -2608,67 +2564,19 @@ object LlmQueries {
         |JOIN u ua ON ua.tok = split_part(b.bg, ' ', 1)
         |JOIN u ub ON ub.tok = split_part(b.bg, ' ', 2),
         |nt, nb
-        |ORDER BY pmi DESC, bg LIMIT 20""".stripMargin,
-    // G26: the bucketed layout changes the PLAN, never the result —
-    // the oracle is the plain join-free aggregate
-    "corpus_bucketed_join" ->
-      """SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(len(string_split_regex(trim(lower(text)), ' +'))) AS BIGINT)
-        |    AS toks
-        |FROM documents GROUP BY 1""".stripMargin,
-    // H7e: the 2-round unigram-LM hard-EM replay; the learned vocab
-    // is cost2 (piece, last E-step count, smoothed micronat cost)
-    "vocab_unigram_learn" ->
-      s"""WITH ${unigramCtes(2)}
-         |SELECT piece, cnt, cost AS cost_mnat FROM cost2""".stripMargin,
-    // H22b: one more Viterbi pass (seg3) under the final cost2 vocab,
-    // joined back to per-doc word counts
-    "text_unigram_tok" ->
-      s"""WITH ${unigramCtes(3)},
-         |aw AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS wc FROM (
-         |    SELECT doc_id,
-         |      unnest(string_split_regex(trim(lower(text)), ' +')) AS w
-         |    FROM documents)
-         |  WHERE length(w) > 0 GROUP BY doc_id, w),
-         |ws AS (SELECT w, CAST(len(segs) AS INT) AS np, best[n + 1] AS wcost
-         |  FROM seg3)
-         |SELECT doc_id, CAST(SUM(wc) AS BIGINT) AS n_words,
-         |  CAST(SUM(wc * np) AS BIGINT) AS n_pieces,
-         |  CAST(SUM(wc * wcost) AS BIGINT) AS cost_mnat
-         |FROM aw JOIN ws USING (w) GROUP BY doc_id""".stripMargin,
-    // H18b: sparse replay of the bigram LM — non-distinct bigram
-    // comprehension (every occurrence), add-0.5 smoothing, micronat
-    // fixed-point pre-sum
-    "text_bigram_lp" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(lower(text)), ' +') AS toks
-        |  FROM documents),
-        |b0 AS (SELECT doc_id,
-        |         unnest([toks[i] || ' ' || toks[i+1]
-        |                 for i in generate_series(1, len(toks)-1)]) AS bg
-        |       FROM t WHERE len(toks) >= 2),
-        |dbf AS (SELECT doc_id, bg, COUNT(*) AS tf FROM b0 GROUP BY 1, 2),
-        |cf AS (SELECT bg, CAST(SUM(tf) AS BIGINT) AS cf,
-        |         split_part(bg, ' ', 1) AS a
-        |       FROM dbf GROUP BY 1),
-        |ctx AS (SELECT a, CAST(SUM(cf) AS BIGINT) AS ctx FROM cf GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT tok) AS v
-        |      FROM (SELECT unnest(string_split(bg, ' ')) AS tok FROM cf)),
-        |c AS (SELECT dbf.doc_id, dbf.tf,
-        |        CAST(round(CAST(dbf.tf AS DOUBLE)
-        |          * ln((CAST(cf.cf AS DOUBLE) + 0.5)
-        |               / (CAST(ctx.ctx AS DOUBLE)
-        |                  + 0.5 * CAST(v.v AS DOUBLE)))
-        |          * 1000000.0) AS BIGINT) AS micronats
-        |      FROM dbf JOIN cf USING (bg) JOIN ctx ON ctx.a = cf.a, v)
-        |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_big,
-        |  round(CAST(SUM(micronats) AS BIGINT) / 1000000.0
-        |        / CAST(SUM(tf) AS DOUBLE), 4) AS avg_logp2
-        |FROM c GROUP BY 1""".stripMargin,
-    // H18c: interpolated-backoff trigram replay — the three corpus
-    // tables as CTEs, one smooth formula shared operation for
-    // operation with the engine, micronat fixed-point pre-sum
-    "text_trigram_lp" ->
+        |ORDER BY pmi DESC, bg LIMIT 20""".stripMargin),
+    // —— H18: unigram LM quality score (avg token log-prob) ——
+    QuerySpec("text_unigram_lp", (s, dir) =>
+      TextAnalysis.unigramLogProb(docs(s, dir), "doc_id", "text"),
+      s"""WITH ${uniLpCtes("u")}
+         |SELECT doc_id, n_tok, avg_logp FROM ulp""".stripMargin),
+    // —— H18c: trigram LM, interpolated backoff over corpus
+    //    trigram/bigram/unigram tables (0.5/0.3/0.2, add-0.5) ——
+    QuerySpec("text_trigram_lp", (s, dir) =>
+      TextAnalysis.trigramLogProb(docs(s, dir), "doc_id", "text"),
+      // H18c: interpolated-backoff trigram replay — the three corpus
+      // tables as CTEs, one smooth formula shared operation for
+      // operation with the engine, micronat fixed-point pre-sum
       s"""WITH t AS (SELECT doc_id,
         |  string_split_regex(trim(lower(text)), ' +') AS toks
         |  FROM documents),
@@ -2720,68 +2628,85 @@ object LlmQueries {
         |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tri,
         |  round(CAST(SUM(micronats) AS DOUBLE)
         |        / (CAST(SUM(tf) AS DOUBLE) * 100.0)) / 10000.0 AS avg_logp3
-        |FROM c GROUP BY 1""".stripMargin,
-    // H18d: interpolated Kneser-Ney replay — context totals and the
-    // three continuation-count tables all derive from the distinct
-    // trigram-TYPE table cf3; one fixed-order IEEE formula, shared
-    // lnDet CTEs, micronat fixed-point pre-sum
-    "text_kn_lp" ->
+        |FROM c GROUP BY 1""".stripMargin),
+    // —— H18d: interpolated Kneser-Ney trigram (D = 0.75,
+    //    continuation-count lower orders — the KenLM-grade smoothing) ——
+    QuerySpec("text_kn_lp", (s, dir) =>
+      TextAnalysis.knTrigramLogProb(docs(s, dir), "doc_id", "text"),
+      // H18d: interpolated Kneser-Ney replay — context totals and the
+      // three continuation-count tables all derive from the distinct
+      // trigram-TYPE table cf3; one fixed-order IEEE formula, shared
+      // lnDet CTEs, micronat fixed-point pre-sum
       s"""WITH ${knLpCtes("n")}
-         |SELECT doc_id, n_tri, avg_logp_kn FROM nlp""".stripMargin,
-    // H18e: the same interpolated-KN replay at order 5 — all four
-    // continuation tables from the distinct 5-gram-type suffix chain
-    "text_kn5_lp" ->
+         |SELECT doc_id, n_tri, avg_logp_kn FROM nlp""".stripMargin),
+    // —— H18e: interpolated Kneser-Ney FIVE-gram — the production
+    //    CCNet/KenLM filter order (same recursion, two more levels) ——
+    QuerySpec("text_kn5_lp", (s, dir) =>
+      TextAnalysis.knFivegramLogProb(docs(s, dir), "doc_id", "text"),
+      // H18e: the same interpolated-KN replay at order 5 — all four
+      // continuation tables from the distinct 5-gram-type suffix chain
       s"""WITH ${kn5LpCtes("f")}
-         |SELECT doc_id, n_5g, avg_logp_kn5 FROM flp""".stripMargin,
-    "text_unigram_lp" ->
-      s"""WITH ${uniLpCtes("u")}
-         |SELECT doc_id, n_tok, avg_logp FROM ulp""".stripMargin,
-    // H25: DoReMi excess-loss reweighting — the two score chains are
-    // the FACTORED uni/kn CTE builders (can't drift from their
-    // standalone oracles), composed with the deterministic-exp replay
-    "corpus_mix_doremi" ->
-      s"""WITH ${uniLpCtes("u")},
-         |${knLpCtes("k")},
-         |pd AS (SELECT d.source, u.n_tok,
-         |    CAST(round(k.avg_logp_kn * 10000.0) AS BIGINT)
-         |      - CAST(round(u.avg_logp * 10000.0) AS BIGINT) AS ex
-         |  FROM documents d JOIN ulp u ON u.doc_id = d.doc_id
-         |  JOIN klp k ON k.doc_id = d.doc_id),
-         |dom AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |    CAST(SUM(n_tok) AS BIGINT) AS toks,
-         |    CAST(SUM(ex) AS BIGINT) AS sx
-         |  FROM pd GROUP BY 1),
-         |dx AS (SELECT *, CAST(round(CAST(sx AS DOUBLE) * 100.0
-         |    / CAST(n_docs AS DOUBLE)) AS BIGINT) AS excess_micro FROM dom),
-         |-- deterministic exp (the engine's withExpDet, op for op):
-         |-- k = floor(x/ln2 + 1/2), Taylor to r^12/12!, exact 2^k fold
-         |e1 AS (SELECT *,
-         |    CAST(excess_micro AS DOUBLE) / 1000000.0 * 1.0 AS xv FROM dx),
-         |e2 AS (SELECT *, CAST(floor(xv * 1.4426950408889634 + 0.5) AS INT)
-         |    AS xk FROM e1),
-         |e3 AS (SELECT *, xv - CAST(xk AS DOUBLE) * 0.6931471805599453 AS xr
-         |  FROM e2),
-         |e4 AS (SELECT *, xr AS p1, p1*xr AS p2, p2*xr AS p3, p3*xr AS p4,
-         |    p4*xr AS p5, p5*xr AS p6, p6*xr AS p7, p7*xr AS p8,
-         |    p8*xr AS p9, p9*xr AS p10, p10*xr AS p11, p11*xr AS p12
-         |  FROM e3),
-         |e5 AS (SELECT *, 1.0 + p1 + p2/2.0 + p3/6.0 + p4/24.0 + p5/120.0
-         |    + p6/720.0 + p7/5040.0 + p8/40320.0 + p9/362880.0
-         |    + p10/3628800.0 + p11/39916800.0 + p12/479001600.0 AS xs
-         |  FROM e4),
-         |e6 AS (SELECT *, list_reduce(list_concat([xs],
-         |      list_transform(range(1, abs(xk) + 1),
-         |        i -> CASE WHEN xk > 0 THEN 2.0 ELSE 0.5 END)),
-         |    (a, b) -> a * b) AS expv FROM e5),
-         |w1 AS (SELECT *, CAST(SUM(toks) OVER () AS BIGINT) AS tot FROM e6),
-         |w2 AS (SELECT *, CAST(round(CAST(toks AS DOUBLE) / CAST(tot AS DOUBLE)
-         |    * expv * 1000000000.0) AS BIGINT) AS wm FROM w1),
-         |w3 AS (SELECT *, CAST(SUM(wm) OVER () AS BIGINT) AS sw FROM w2)
-         |SELECT source, n_docs, toks, excess_micro,
-         |  CAST(round(CAST(wm AS DOUBLE) * 1000000.0 / CAST(sw AS DOUBLE))
-         |    AS BIGINT) AS weight_ppm
-         |FROM w3""".stripMargin,
-    "embed_negatives" ->
+         |SELECT doc_id, n_5g, avg_logp_kn5 FROM flp""".stripMargin),
+    // —— H18b: bigram LM conditional log-prob, add-0.5 smoothing ——
+    QuerySpec("text_bigram_lp", (s, dir) =>
+      TextAnalysis.bigramLogProb(docs(s, dir), "doc_id", "text"),
+      // H18b: sparse replay of the bigram LM — non-distinct bigram
+      // comprehension (every occurrence), add-0.5 smoothing, micronat
+      // fixed-point pre-sum
+      """WITH t AS (SELECT doc_id,
+        |  string_split_regex(trim(lower(text)), ' +') AS toks
+        |  FROM documents),
+        |b0 AS (SELECT doc_id,
+        |         unnest([toks[i] || ' ' || toks[i+1]
+        |                 for i in generate_series(1, len(toks)-1)]) AS bg
+        |       FROM t WHERE len(toks) >= 2),
+        |dbf AS (SELECT doc_id, bg, COUNT(*) AS tf FROM b0 GROUP BY 1, 2),
+        |cf AS (SELECT bg, CAST(SUM(tf) AS BIGINT) AS cf,
+        |         split_part(bg, ' ', 1) AS a
+        |       FROM dbf GROUP BY 1),
+        |ctx AS (SELECT a, CAST(SUM(cf) AS BIGINT) AS ctx FROM cf GROUP BY 1),
+        |v AS (SELECT COUNT(DISTINCT tok) AS v
+        |      FROM (SELECT unnest(string_split(bg, ' ')) AS tok FROM cf)),
+        |c AS (SELECT dbf.doc_id, dbf.tf,
+        |        CAST(round(CAST(dbf.tf AS DOUBLE)
+        |          * ln((CAST(cf.cf AS DOUBLE) + 0.5)
+        |               / (CAST(ctx.ctx AS DOUBLE)
+        |                  + 0.5 * CAST(v.v AS DOUBLE)))
+        |          * 1000000.0) AS BIGINT) AS micronats
+        |      FROM dbf JOIN cf USING (bg) JOIN ctx ON ctx.a = cf.a, v)
+        |SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_big,
+        |  round(CAST(SUM(micronats) AS BIGINT) / 1000000.0
+        |        / CAST(SUM(tf) AS DOUBLE), 4) AS avg_logp2
+        |FROM c GROUP BY 1""".stripMargin),
+    // —— H7e: unigram-LM tokenizer learning (SentencePiece family,
+    //    deterministic Viterbi hard-EM, 2 rounds) ——
+    QuerySpec("vocab_unigram_learn", (s, dir) =>
+      TextAnalysis.unigramLearn(docs(s, dir), "doc_id", "text"),
+      // H7e: the 2-round unigram-LM hard-EM replay; the learned vocab
+      // is cost2 (piece, last E-step count, smoothed micronat cost)
+      s"""WITH ${unigramCtes(2)}
+         |SELECT piece, cnt, cost AS cost_mnat FROM cost2""".stripMargin),
+    // —— H22b: unigram-LM tokenizer apply — per-doc Viterbi
+    //    segmentation readout under the learned vocab ——
+    QuerySpec("text_unigram_tok", (s, dir) =>
+      TextAnalysis.unigramApply(docs(s, dir), "doc_id", "text"),
+      // H22b: one more Viterbi pass (seg3) under the final cost2 vocab,
+      // joined back to per-doc word counts
+      s"""WITH ${unigramCtes(3)},
+         |aw AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS wc FROM (
+         |    SELECT doc_id,
+         |      unnest(string_split_regex(trim(lower(text)), ' +')) AS w
+         |    FROM documents)
+         |  WHERE length(w) > 0 GROUP BY doc_id, w),
+         |ws AS (SELECT w, CAST(len(segs) AS INT) AS np, best[n + 1] AS wcost
+         |  FROM seg3)
+         |SELECT doc_id, CAST(SUM(wc) AS BIGINT) AS n_words,
+         |  CAST(SUM(wc * np) AS BIGINT) AS n_pieces,
+         |  CAST(SUM(wc * wcost) AS BIGINT) AS cost_mnat
+         |FROM aw JOIN ws USING (w) GROUP BY doc_id""".stripMargin),
+    // —— G13: deterministic contrastive negative sampling, k=4 ——
+    QuerySpec("embed_negatives", (s, dir) =>
+      Similarity.negativeSamples(emb(s, dir), k = 4),
       """WITH n AS (SELECT MAX(vec_id) + 1 AS nv FROM embeddings),
         |j AS (SELECT e.vec_id AS anchor, e.label AS a_label,
         |        CAST(s.j AS INTEGER) AS draw,
@@ -2790,18 +2715,40 @@ object LlmQueries {
         |      FROM embeddings e, generate_series(1, 4) s(j), n)
         |SELECT j.anchor, j.draw, b.vec_id AS negative, b.label AS neg_label
         |FROM j JOIN embeddings b ON b.vec_id = j.partner
-        |WHERE b.vec_id <> j.anchor AND b.label <> j.a_label""".stripMargin,
-    "split_assign" ->
+        |WHERE b.vec_id <> j.anchor AND b.label <> j.a_label""".stripMargin),
+    // —— G6d: deterministic train/val/test split (98/1/1) ——
+    QuerySpec("split_assign", (s, dir) =>
+      Pipeline100TB.splitAssign(
+          docs(s, dir).select("doc_id", "source"), col("doc_id"))
+        .select(col("doc_id"), col("source"), col("split")),
       """SELECT doc_id, source,
         |  CASE WHEN CAST('0x'||substr(md5(COALESCE(CAST(doc_id AS VARCHAR), '')),1,15)
         |            AS BIGINT) % 1000 < 980 THEN 'train'
         |       WHEN CAST('0x'||substr(md5(COALESCE(CAST(doc_id AS VARCHAR), '')),1,15)
         |            AS BIGINT) % 1000 < 990 THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-    // G13b: anchors × wrong-label corpus, round-4 cosine, per-anchor
-    // (cos_r DESC, vec_id) rank window truncated at k
-    "embed_hard_negatives" ->
+        |FROM documents""".stripMargin),
+    // —— F8b: fuzzy (MinHash-band) benchmark decontamination ——
+    QuerySpec("decon_fuzzy", (s, dir) =>
+      Dedup.decontaminateFuzzy(docs(s, dir), "doc_id", "text",
+        benchPred = col("doc_id") % 20 === 0),
+      s"""WITH $shingleCtes,
+         |$minhashSigSql,
+         |bandkeys AS (
+         |$bandKeysSql),
+         |b AS (SELECT DISTINCT band, key FROM bandkeys WHERE doc_id % 20 = 0),
+         |c AS (SELECT * FROM bandkeys WHERE doc_id % 20 <> 0)
+         |SELECT c.doc_id, COUNT(*) AS n_bands_hit
+         |FROM c JOIN b USING (band, key)
+         |GROUP BY 1""".stripMargin),
+    // —— G13b: HARD-negative mining — nearest wrong-label neighbors
+    //    per anchor, the contrastive complement of G13's random draws ——
+    QuerySpec("embed_hard_negatives", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.hardNegatives(s, e, e.filter(col("vec_id") < 10), k = 4)
+    },
+      // G13b: anchors × wrong-label corpus, round-4 cosine, per-anchor
+      // (cos_r DESC, vec_id) rank window truncated at k
       s"""WITH a AS (SELECT vec_id AS anchor, label AS a_label,
          |           embedding AS a_emb FROM embeddings WHERE vec_id < 10),
          |p AS (SELECT a.anchor, e.vec_id, e.label,
@@ -2812,10 +2759,16 @@ object LlmQueries {
          |        ORDER BY cos_r DESC, vec_id) AS rank FROM p)
          |SELECT anchor, vec_id AS negative, label AS neg_label, cos_r,
          |  CAST(rank AS INTEGER) AS rank
-         |FROM r WHERE rank <= 4""".stripMargin,
-    // F8d: label-blocked corpus×benchmark cosine, threshold at the
-    // proven round-4 boundary, per-corpus-vector rollup
-    "decon_embed" ->
+         |FROM r WHERE rank <= 4""".stripMargin),
+    // —— F8d: EMBEDDING-space decontamination — corpus vectors
+    //    cosine-near a broadcast benchmark set in the same cell ——
+    QuerySpec("decon_embed", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.deconEmbed(s, e.filter(col("vec_id") % 5 =!= 0),
+        e.filter(col("vec_id") % 5 === 0), tau = 0.35)
+    },
+      // F8d: label-blocked corpus×benchmark cosine, threshold at the
+      // proven round-4 boundary, per-corpus-vector rollup
       s"""WITH b AS (SELECT label, vec_id, embedding FROM embeddings
          |           WHERE vec_id % 5 = 0),
          |c AS (SELECT label, vec_id, embedding FROM embeddings
@@ -2825,151 +2778,22 @@ object LlmQueries {
          |  FROM c JOIN b USING (label) WHERE c.vec_id <> b.vec_id)
          |SELECT vec_id, CAST(COUNT(*) AS BIGINT) AS n_hits,
          |  MAX(cos_r) AS max_cos
-         |FROM p WHERE cos_r >= 0.35 GROUP BY 1""".stripMargin,
-    "decon_fuzzy" ->
-      s"""WITH $shingleCtes,
-         |$minhashSigSql,
-         |bandkeys AS (
-         |$bandKeysSql),
-         |b AS (SELECT DISTINCT band, key FROM bandkeys WHERE doc_id % 20 = 0),
-         |c AS (SELECT * FROM bandkeys WHERE doc_id % 20 <> 0)
-         |SELECT c.doc_id, COUNT(*) AS n_bands_hit
-         |FROM c JOIN b USING (band, key)
-         |GROUP BY 1""".stripMargin,
-    "corpus_shuffle" ->
+         |FROM p WHERE cos_r >= 0.35 GROUP BY 1""".stripMargin),
+    // —— G14: reproducible global shuffle order for training export ——
+    QuerySpec("corpus_shuffle", (s, dir) =>
+      Pipeline100TB.shuffleOrder(
+          docs(s, dir).select("doc_id", "source"), col("doc_id"))
+        .select(col("doc_id"), col("source"), col("pos")),
       """SELECT doc_id, source,
         |  CAST(row_number() OVER (
         |    ORDER BY CAST('0x'||substr(md5(COALESCE(CAST(doc_id AS VARCHAR), '')),1,15)
         |               AS BIGINT),
         |             doc_id) - 1 AS BIGINT) AS pos
-        |FROM documents""".stripMargin,
-    // F15: the identical span grid (1-based char positions every 7,
-    // 30-char windows) and the shared md5-60bit span hash
-    // F18b: the integer S-curve solver — floor-division fixed-point
-    // powers, so the replay is bit-exact with zero libm assumptions
-    "dedup_band_choose" ->
-      """WITH cand AS (SELECT CAST(d AS INTEGER) AS r,
-        |         CAST(16 // d AS INTEGER) AS b
-        |       FROM generate_series(1, 16) t(d) WHERE 16 % d = 0),
-        |p AS (SELECT r, b,
-        |  list_reduce(list_prepend(CAST(1000000 AS BIGINT),
-        |      [CAST(0 AS BIGINT) for i in generate_series(1, r)]),
-        |    (acc, x) -> (acc * 800000) // 1000000) AS pr,
-        |  list_reduce(list_prepend(CAST(1000000 AS BIGINT),
-        |      [CAST(0 AS BIGINT) for i in generate_series(1, r)]),
-        |    (acc, x) -> (acc * 300000) // 1000000) AS pf
-        |  FROM cand),
-        |q AS (SELECT r, b,
-        |  1000000 - list_reduce(list_prepend(CAST(1000000 AS BIGINT),
-        |      [CAST(0 AS BIGINT) for i in generate_series(1, b)]),
-        |    (acc, x) -> (acc * (1000000 - pr)) // 1000000) AS recall_m,
-        |  1000000 - list_reduce(list_prepend(CAST(1000000 AS BIGINT),
-        |      [CAST(0 AS BIGINT) for i in generate_series(1, b)]),
-        |    (acc, x) -> (acc * (1000000 - pf)) // 1000000) AS fp_m
-        |  FROM p),
-        |m AS (SELECT r, b, recall_m, fp_m, recall_m >= 850000 AS meets,
-        |        row_number() OVER (ORDER BY recall_m >= 850000 DESC,
-        |                           fp_m ASC, r DESC) AS rk
-        |      FROM q)
-        |SELECT r, b,
-        |  round(CAST(recall_m AS DOUBLE) / 1000000.0, 6) AS recall,
-        |  round(CAST(fp_m AS DOUBLE) / 1000000.0, 6) AS fp_rate,
-        |  meets, (rk = 1 AND meets) AS chosen
-        |FROM m""".stripMargin,
-    // F18: both pair pipelines over the collapsed corpus, then the
-    // precision/recall readout of the banding against true Jaccard
-    "dedup_eval" ->
-      s"""WITH t0 AS ($toksCte),
-         |fpt AS (SELECT doc_id,
-         |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
-         |  FROM t0),
-         |grp AS (SELECT fp, min(doc_id) AS rep FROM fpt GROUP BY 1),
-         |t AS (SELECT t0.doc_id, t0.toks
-         |      FROM t0 JOIN grp g ON t0.doc_id = g.rep),
-         |$shingleBody,
-         |$jaccardPairBody,
-         |tp AS (SELECT i.a, i.b FROM inter i
-         |       WHERE round(CAST(i.i AS DOUBLE) / (i.sza + i.szb - i.i), 6)
-         |             >= 0.8),
-         |$minhashSigSql,
-         |bandkeys AS (
-         |$bandKeysSql),
-         |cp AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |       FROM bandkeys x JOIN bandkeys y
-         |         ON x.band = y.band AND x.key = y.key
-         |        AND x.doc_id < y.doc_id),
-         |m AS (SELECT
-         |  (SELECT COUNT(*) FROM tp) AS n_true,
-         |  (SELECT COUNT(*) FROM cp) AS n_cand,
-         |  (SELECT COUNT(*) FROM tp JOIN cp
-         |     ON tp.a = cp.a AND tp.b = cp.b) AS n_hit)
-         |SELECT CAST(n_true AS BIGINT) AS n_true,
-         |  CAST(n_cand AS BIGINT) AS n_cand,
-         |  CAST(n_hit AS BIGINT) AS n_hit,
-         |  CASE WHEN n_cand > 0
-         |       THEN round(CAST(n_hit AS DOUBLE) / n_cand, 6) END AS prec,
-         |  CASE WHEN n_true > 0
-         |       THEN round(CAST(n_hit AS DOUBLE) / n_true, 6) END AS recall
-         |FROM m""".stripMargin,
-    // F8c: aligned-grid blocks vs the bench set's distinct block set
-    "decon_spans" ->
-      """WITH idx AS (SELECT DISTINCT unnest(
-        |    [CAST('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 30)), 1, 15)
-        |          AS BIGINT)
-        |     for i in generate_series(1, len(text) - 29, 30)]) AS h
-        |  FROM documents WHERE doc_id % 20 = 0 AND len(text) >= 30),
-        |s0 AS (SELECT doc_id,
-        |    [CAST('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 30)), 1, 15)
-        |          AS BIGINT)
-        |     for i in generate_series(1, len(text) - 29, 30)] AS hs
-        |  FROM documents WHERE doc_id % 20 <> 0 AND len(text) >= 30),
-        |s AS (SELECT doc_id, unnest(hs) AS h FROM s0),
-        |per AS (SELECT s.doc_id, COUNT(*) AS n_blocks,
-        |          COUNT(CASE WHEN idx.h IS NOT NULL THEN 1 END) AS n_hit
-        |        FROM s LEFT JOIN idx USING (h) GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(COALESCE(per.n_blocks, 0) AS BIGINT) AS n_blocks,
-        |  CAST(COALESCE(per.n_hit, 0) AS BIGINT) AS n_hit,
-        |  CASE WHEN per.n_blocks > 0
-        |       THEN round(CAST(per.n_hit AS DOUBLE) / per.n_blocks, 6)
-        |  END AS contamination
-        |FROM documents d LEFT JOIN per USING (doc_id)
-        |WHERE d.doc_id % 20 <> 0""".stripMargin,
-    // G22: collapse to distinct (label, embedding) reps, label-blocked
-    // pairs, top-k per rep by (cos DESC, nbr)
-    "sim_knn_graph" -> knnGraphSql,
-    "sim_topk_graph" -> graphTopKSql(),
-    "graph_pagerank" -> pageRankSql,
-    // G22c: same derived edge set, wedge-close counting, int64 div
-    "graph_triangles" ->
-      s"""WITH ed AS (SELECT vec_id AS src, nbr AS dst FROM (
-         |$knnGraphSql
-         |) __k),
-         |und AS (SELECT DISTINCT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-         |        FROM ed WHERE src <> dst),
-         |g AS (SELECT label, embedding, MIN(vec_id) AS vec_id
-         |      FROM embeddings GROUP BY label, embedding),
-         |deg AS (SELECT n, COUNT(*) AS deg FROM
-         |          (SELECT u AS n FROM und UNION ALL SELECT v FROM und)
-         |        GROUP BY 1),
-         |sym AS (SELECT u AS c, v AS n FROM und
-         |        UNION ALL SELECT v, u FROM und),
-         |wed AS (SELECT a.c, a.n AS p, b.n AS q
-         |        FROM sym a JOIN sym b ON a.c = b.c AND a.n < b.n),
-         |tri AS (SELECT c, COUNT(*) AS n_tri FROM wed
-         |        WHERE EXISTS (SELECT 1 FROM und
-         |                      WHERE und.u = wed.p AND und.v = wed.q)
-         |        GROUP BY c)
-         |SELECT g.vec_id,
-         |  CAST(COALESCE(deg.deg, 0) AS BIGINT) AS deg,
-         |  CAST(COALESCE(tri.n_tri, 0) AS BIGINT) AS n_tri,
-         |  CASE WHEN COALESCE(deg.deg, 0) >= 2
-         |       THEN CAST((2 * COALESCE(tri.n_tri, 0) * 1000000)
-         |                 // (deg.deg * (deg.deg - 1)) AS BIGINT)
-         |       ELSE CAST(0 AS BIGINT) END AS coeff_micro
-         |FROM g LEFT JOIN deg ON deg.n = g.vec_id
-         |       LEFT JOIN tri ON tri.c = g.vec_id""".stripMargin,
-    "dedup_substr_spans" ->
+        |FROM documents""".stripMargin),
+    // —— F15: exact substring-span duplication profile ——
+    QuerySpec("dedup_substr_spans", (s, dir) =>
+      Dedup.substrSpans(docs(s, dir), "doc_id", "text",
+        spanLen = 30, stride = 7),
       """WITH s0 AS (
         |  SELECT doc_id,
         |    [CAST('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 30)), 1, 15)
@@ -2987,11 +2811,246 @@ object LlmQueries {
         |  CAST(COALESCE(per.n_dup, 0) AS BIGINT) AS n_dup,
         |  CASE WHEN per.n_spans > 0
         |       THEN round(CAST(per.n_dup AS DOUBLE) / per.n_spans, 4) END AS dup_frac
-        |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin,
-    // F21: the all-offset window-hash replay — identical md5-60bit
-    // window hashes, global count ≥ 2, then the identical lag/sum
-    // island merge (runs touch when next start ≤ prev + 50)
-    "dedup_substr_suffix" ->
+        |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin),
+    // —— H23: CCNet perplexity head/middle/tail buckets ——
+    QuerySpec("text_ppl_buckets_kn5", (s, dir) =>
+      TextAnalysis.perplexityBucketsKn5(docs(s, dir), "doc_id", "text"),
+      // H23: text_unigram_lp's CTE verbatim, then the rank-closed-form
+      // tercile cut ⌊3·(rn−1)/n⌋ over (avg_logp DESC, doc_id)
+      // H23b: the kn5 chain + the identical rank-closed-form tercile cut
+      s"""WITH ${kn5LpCtes("f")},
+         |r AS (SELECT doc_id, avg_logp_kn5 AS avg_logp,
+         |        row_number() OVER (ORDER BY avg_logp_kn5 DESC, doc_id) AS rn,
+         |        COUNT(*) OVER () AS n
+         |      FROM flp)
+         |SELECT doc_id, avg_logp,
+         |  CASE (3 * (rn - 1)) // n WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
+         |       ELSE 'tail' END AS bucket
+         |FROM r""".stripMargin),
+    QuerySpec("text_ppl_buckets", (s, dir) =>
+      TextAnalysis.perplexityBuckets(docs(s, dir), "doc_id", "text"),
+      """WITH t AS (
+        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), ' +')) AS tok
+        |  FROM documents),
+        |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM t GROUP BY 1, 2),
+        |cf AS (SELECT doc_id, tok, tf,
+        |         SUM(tf) OVER (PARTITION BY tok) AS cf
+        |       FROM tf),
+        |nt AS (SELECT CAST(SUM(tf) AS DOUBLE) AS nt FROM tf),
+        |c AS (SELECT doc_id, tf,
+        |        CAST(round(CAST(tf AS DOUBLE)
+        |               * ln(CAST(cf AS DOUBLE) / nt) * 1000000.0) AS BIGINT)
+        |          AS micronats
+        |      FROM cf, nt),
+        |u AS (SELECT doc_id,
+        |        round(CAST(SUM(micronats) AS BIGINT) / 1000000.0 / SUM(tf), 4)
+        |          AS avg_logp
+        |      FROM c GROUP BY doc_id),
+        |r AS (SELECT doc_id, avg_logp,
+        |        row_number() OVER (ORDER BY avg_logp DESC, doc_id) AS rn,
+        |        COUNT(*) OVER () AS n
+        |      FROM u)
+        |SELECT doc_id, avg_logp,
+        |  CASE (3 * (rn - 1)) // n WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
+        |       ELSE 'tail' END AS bucket
+        |FROM r""".stripMargin),
+    // —— G17: nearest-centroid assignment (cluster-assignment step) ——
+    // —— G17b: cluster-balanced sampling — deterministic hash-ranked
+    //    k per assigned cluster (the SemDeDup/DCLM "equal share per
+    //    cluster" selection step) ——
+    QuerySpec("sample_cluster_balanced", (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val a = Similarity.centroidAssign(s, emb(s, dir))
+      a.select(col("vec_id"), col("assigned"),
+          graft.functions.Hash60.hash60(col("vec_id").cast("string")).as("__h"))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy(col("assigned")).orderBy(col("__h"), col("vec_id"))))
+        .filter(col("rk") <= 25)
+        .select(col("vec_id"), col("assigned"), col("rk").cast("int").as("rk"))
+    },
+      // G17b: the same assignment chain, then a deterministic
+      // hash-ranked k per cluster
+      s"""WITH $centroidAssignCtes,
+         |asg AS (SELECT vec_id, c_label AS assigned FROM r WHERE rn = 1),
+         |hk AS (SELECT vec_id, assigned,
+         |         CAST('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)
+         |              AS BIGINT) AS h
+         |       FROM asg),
+         |rk AS (SELECT *, row_number() OVER (PARTITION BY assigned
+         |         ORDER BY h, vec_id) AS rk FROM hk)
+         |SELECT vec_id, assigned, CAST(rk AS INTEGER) AS rk
+         |FROM rk WHERE rk <= 25""".stripMargin),
+    QuerySpec("embed_centroid_assign", (s, dir) =>
+      Similarity.centroidAssign(s, emb(s, dir)),
+      // G17: scaled-int64 centroid sums (2^20), float32-snapped means,
+      // double cosine — every arithmetic step mirrored engine-side
+      s"""WITH $centroidAssignCtes
+         |SELECT vec_id, label, c_label AS assigned, cos_r, label = c_label AS correct
+         |FROM r WHERE rn = 1""".stripMargin),
+    // —— F16: block-aligned span-trimmed corpus (F15's action) ——
+    QuerySpec("dedup_substr_trim", (s, dir) =>
+      Dedup.substrTrim(docs(s, dir), "doc_id", "text", blockLen = 30),
+      // F16: the identical non-overlapping block grid; duplicated
+      // blocks dropped, survivors + the verbatim tail reassembled in
+      // position order
+      """WITH b0 AS (
+        |  SELECT doc_id, text,
+        |    [{'p': CAST(i AS INTEGER),
+        |      'b': substr(text, CAST(i AS INTEGER), 30)}
+        |     for i in generate_series(1, len(text) - 29, 30)] AS bs
+        |  FROM documents WHERE len(text) >= 30),
+        |b AS (SELECT doc_id, unnest(bs, recursive := false) AS s FROM b0),
+        |bb AS (SELECT doc_id, s.p AS p, s.b AS blk,
+        |         CAST('0x' || substr(md5(s.b), 1, 15) AS BIGINT) AS h
+        |       FROM b),
+        |nd AS (SELECT h, COUNT(DISTINCT doc_id) AS ndocs FROM bb GROUP BY h),
+        |kept AS (SELECT bb.doc_id,
+        |           COUNT(*) AS n_blocks,
+        |           CAST(SUM(CASE WHEN nd.ndocs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |             AS n_removed,
+        |           COALESCE(string_agg(CASE WHEN nd.ndocs < 2 THEN bb.blk END, ''
+        |                               ORDER BY bb.p), '') AS body
+        |         FROM bb JOIN nd USING (h) GROUP BY bb.doc_id)
+        |SELECT d.doc_id,
+        |  COALESCE(k.body, '') ||
+        |    substr(d.text, (len(d.text) // 30) * 30 + 1) AS clean_text,
+        |  CAST(COALESCE(k.n_blocks, 0) AS BIGINT) AS n_blocks,
+        |  CAST(COALESCE(k.n_removed, 0) AS BIGINT) AS n_removed
+        |FROM documents d LEFT JOIN kept k USING (doc_id)""".stripMargin),
+    // —— H23 selection policy: head + 50% hash-sampled middle ——
+    QuerySpec("corpus_select_ccnet", (s, dir) =>
+      TextAnalysis.ccnetSelect(docs(s, dir), "doc_id", "text"),
+      // H23 selection: the ppl-bucket closed form + the shared
+      // md5-60bit hash draw on doc_id for the middle tercile
+      """WITH t AS (
+        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), ' +')) AS tok
+        |  FROM documents),
+        |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM t GROUP BY 1, 2),
+        |cf AS (SELECT doc_id, tok, tf,
+        |         SUM(tf) OVER (PARTITION BY tok) AS cf
+        |       FROM tf),
+        |nt AS (SELECT CAST(SUM(tf) AS DOUBLE) AS nt FROM tf),
+        |c AS (SELECT doc_id, tf,
+        |        CAST(round(CAST(tf AS DOUBLE)
+        |               * ln(CAST(cf AS DOUBLE) / nt) * 1000000.0) AS BIGINT)
+        |          AS micronats
+        |      FROM cf, nt),
+        |u AS (SELECT doc_id,
+        |        round(CAST(SUM(micronats) AS BIGINT) / 1000000.0 / SUM(tf), 4)
+        |          AS avg_logp
+        |      FROM c GROUP BY doc_id),
+        |r AS (SELECT doc_id, avg_logp,
+        |        row_number() OVER (ORDER BY avg_logp DESC, doc_id) AS rn,
+        |        COUNT(*) OVER () AS n
+        |      FROM u),
+        |bk AS (SELECT doc_id, avg_logp,
+        |         CASE (3 * (rn - 1)) // n WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
+        |              ELSE 'tail' END AS bucket
+        |       FROM r)
+        |SELECT doc_id, avg_logp, bucket FROM bk
+        |WHERE bucket = 'head'
+        |   OR (bucket = 'middle' AND
+        |       CAST('0x'||substr(md5(COALESCE(CAST(doc_id AS VARCHAR), '')),1,15)
+        |            AS BIGINT) % 100 < 50)""".stripMargin),
+    // —— H24: DSIR importance resampling — select docs that "read
+    //    like" the src0 target domain, Gumbel top-100 ——
+    QuerySpec("corpus_select_dsir", (s, dir) =>
+      TextAnalysis.dsirSelect(docs(s, dir), "doc_id", "text",
+        targetPred = col("source") === "src0", dims = 64, k = 100),
+      // H24: DSIR replay — sparse unigram+bigram postings (non-distinct
+      // bigrams, unlike the minhash shingle CTEs), add-1-smoothed bucket
+      // log-ratios in int64 micro-units, exact integer doc weights,
+      // Gumbel key from the engine-wide md5-60-bit draw
+      """WITH t AS (SELECT doc_id, source,
+        |  string_split_regex(trim(lower(text)), ' +') AS toks
+        |  FROM documents),
+        |u1 AS (SELECT doc_id, unnest(toks) AS g FROM t),
+        |u2 AS (SELECT doc_id,
+        |         unnest([toks[i] || ' ' || toks[i+1]
+        |                 for i in generate_series(1, len(toks)-1)]) AS g
+        |       FROM t),
+        |e AS (SELECT doc_id,
+        |        CAST('0x'||substr(md5(g),1,15) AS BIGINT) % 64 AS b
+        |      FROM (SELECT * FROM u1 UNION ALL SELECT * FROM u2)),
+        |cb AS (SELECT doc_id, b, COUNT(*) AS c FROM e GROUP BY 1, 2),
+        |cb2 AS (SELECT cb.b, cb.c, (d.source = 'src0') AS is_t
+        |        FROM cb JOIN t d USING (doc_id)),
+        |tot AS (SELECT r.range AS b,
+        |          COALESCE(SUM(CASE WHEN is_t THEN c END), 0) AS tc,
+        |          COALESCE(SUM(c), 0) AS rc
+        |        FROM range(64) r LEFT JOIN cb2 ON cb2.b = r.range
+        |        GROUP BY 1),
+        |s AS (SELECT SUM(tc) AS tt, SUM(rc) AS rt FROM tot),
+        |lam AS (SELECT b,
+        |          CAST(round((ln((CAST(tc AS DOUBLE) + 1.0)
+        |                          / (CAST(tt AS DOUBLE) + 64.0))
+        |                    - ln((CAST(rc AS DOUBLE) + 1.0)
+        |                          / (CAST(rt AS DOUBLE) + 64.0)))
+        |                     * 1000000.0) AS BIGINT) AS lam
+        |        FROM tot, s),
+        |sc AS (SELECT d.doc_id,
+        |         CAST(COALESCE(SUM(cb.c * lam.lam), 0) AS BIGINT) AS lw
+        |       FROM t d LEFT JOIN cb ON cb.doc_id = d.doc_id
+        |            LEFT JOIN lam ON lam.b = cb.b
+        |       GROUP BY 1)
+        |SELECT doc_id, lw AS lw_micro,
+        |  round(CAST(lw AS DOUBLE) / 1000000.0 +
+        |    -ln(-ln((CAST('0x'||substr(md5(CAST(doc_id AS VARCHAR)),1,15)
+        |              AS BIGINT) + 1.0) / 1152921504606846976.0)), 6) AS gkey
+        |FROM sc
+        |ORDER BY gkey DESC, doc_id LIMIT 100""".stripMargin),
+    // —— H7c: BPE merge learning, k = 3 unrolled iterations ——
+    QuerySpec("vocab_bpe_learn", (s, dir) =>
+      TextAnalysis.bpeLearn(docs(s, dir), "doc_id", "text", k = 3),
+      // H7c: the unrolled 3-iteration learn — see bpeLearnSql
+      bpeLearnSql),
+    // —— F19: OFF-GRID span trim — content-defined block boundaries
+    //    (rolling-anchor CDC), so shifted duplicate runs collapse ——
+    QuerySpec("dedup_substr_offgrid", (s, dir) =>
+      Dedup.substrTrimCdc(docs(s, dir), "doc_id", "text",
+        window = 8, divisor = 32),
+      // F19: content-defined (rolling-anchor) block boundaries — a
+      // position starts a block when hash60 of its 8-char window ≡ 0
+      // mod 32; then the same df ≥ 2 removal and reassembly as F16
+      """WITH st AS (
+        |  SELECT doc_id, text, len(text) AS n,
+        |    list_prepend(1, CASE WHEN len(text) >= 9 THEN
+        |      [p for p in generate_series(2, len(text) - 7)
+        |       if CAST('0x'||substr(md5(substr(text, p, 8)),1,15) AS BIGINT)
+        |          % 32 = 0]
+        |    ELSE [] END) AS starts
+        |  FROM documents),
+        |b0 AS (SELECT doc_id,
+        |  [{'p': CAST(starts[i] AS INTEGER),
+        |    'b': substr(text, starts[i],
+        |                COALESCE(starts[i+1], n+1) - starts[i])}
+        |   for i in generate_series(1, len(starts))] AS bs
+        |  FROM st),
+        |b AS (SELECT doc_id, unnest(bs, recursive := false) AS s FROM b0),
+        |bb AS (SELECT doc_id, s.p AS p, s.b AS blk,
+        |         CAST('0x' || substr(md5(s.b), 1, 15) AS BIGINT) AS h
+        |       FROM b),
+        |nd AS (SELECT h, COUNT(DISTINCT doc_id) AS ndocs FROM bb GROUP BY h),
+        |kept AS (SELECT bb.doc_id,
+        |           COUNT(*) AS n_blocks,
+        |           CAST(SUM(CASE WHEN nd.ndocs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
+        |             AS n_removed,
+        |           COALESCE(string_agg(CASE WHEN nd.ndocs < 2 THEN bb.blk END, ''
+        |                               ORDER BY bb.p), '') AS body
+        |         FROM bb JOIN nd USING (h) GROUP BY bb.doc_id)
+        |SELECT d.doc_id, COALESCE(k.body, '') AS clean_text,
+        |  CAST(COALESCE(k.n_blocks, 0) AS BIGINT) AS n_blocks,
+        |  CAST(COALESCE(k.n_removed, 0) AS BIGINT) AS n_removed
+        |FROM documents d LEFT JOIN kept k USING (doc_id)""".stripMargin),
+    // —— F21: TRUE ExactSubstr — any-offset duplicated-run profile at
+    //    the Lee et al. ≥ 50-char threshold (all-offset window
+    //    hashes ≡ the suffix-array byte set, no stride/grid/anchor) ——
+    QuerySpec("dedup_substr_suffix", (s, dir) =>
+      Dedup.substrSuffixProfile(docs(s, dir), "doc_id", "text",
+        minLen = 50),
+      // F21: the all-offset window-hash replay — identical md5-60bit
+      // window hashes, global count ≥ 2, then the identical lag/sum
+      // island merge (runs touch when next start ≤ prev + 50)
       """WITH w0 AS (
         |  SELECT doc_id,
         |    [CAST('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 50)), 1, 15)
@@ -3020,10 +3079,14 @@ object LlmQueries {
         |  CAST(COALESCE(per.dup_chars, 0) AS BIGINT) AS dup_chars,
         |  CAST(COALESCE(per.n_runs, 0) AS BIGINT) AS n_runs,
         |  CAST(COALESCE(per.longest_run, 0) AS BIGINT) AS longest_run
-        |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin,
-    // F21b: same island CTEs, then the keep segments (run complement
-    // via lag + a closing tail segment) string_agg'd in position order
-    "dedup_substr_suffix_trim" ->
+        |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin),
+    // —— F21b: the TRIM action — every byte covered by a duplicated
+    //    >= 50-char any-offset substring removed, segments re-joined ——
+    QuerySpec("dedup_substr_suffix_trim", (s, dir) =>
+      Dedup.substrSuffixTrim(docs(s, dir), "doc_id", "text",
+        minLen = 50),
+      // F21b: same island CTEs, then the keep segments (run complement
+      // via lag + a closing tail segment) string_agg'd in position order
       """WITH w0 AS (
         |  SELECT doc_id,
         |    [CAST('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 50)), 1, 15)
@@ -3070,145 +3133,16 @@ object LlmQueries {
         |  CAST(COALESCE(tl.n_runs, 0) AS BIGINT) AS n_runs
         |FROM documents d
         |LEFT JOIN tl USING (doc_id)
-        |LEFT JOIN built USING (doc_id)""".stripMargin,
-    // H23: text_unigram_lp's CTE verbatim, then the rank-closed-form
-    // tercile cut ⌊3·(rn−1)/n⌋ over (avg_logp DESC, doc_id)
-    // H23b: the kn5 chain + the identical rank-closed-form tercile cut
-    "text_ppl_buckets_kn5" ->
-      s"""WITH ${kn5LpCtes("f")},
-         |r AS (SELECT doc_id, avg_logp_kn5 AS avg_logp,
-         |        row_number() OVER (ORDER BY avg_logp_kn5 DESC, doc_id) AS rn,
-         |        COUNT(*) OVER () AS n
-         |      FROM flp)
-         |SELECT doc_id, avg_logp,
-         |  CASE (3 * (rn - 1)) // n WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
-         |       ELSE 'tail' END AS bucket
-         |FROM r""".stripMargin,
-    "text_ppl_buckets" ->
-      """WITH t AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), ' +')) AS tok
-        |  FROM documents),
-        |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM t GROUP BY 1, 2),
-        |cf AS (SELECT doc_id, tok, tf,
-        |         SUM(tf) OVER (PARTITION BY tok) AS cf
-        |       FROM tf),
-        |nt AS (SELECT CAST(SUM(tf) AS DOUBLE) AS nt FROM tf),
-        |c AS (SELECT doc_id, tf,
-        |        CAST(round(CAST(tf AS DOUBLE)
-        |               * ln(CAST(cf AS DOUBLE) / nt) * 1000000.0) AS BIGINT)
-        |          AS micronats
-        |      FROM cf, nt),
-        |u AS (SELECT doc_id,
-        |        round(CAST(SUM(micronats) AS BIGINT) / 1000000.0 / SUM(tf), 4)
-        |          AS avg_logp
-        |      FROM c GROUP BY doc_id),
-        |r AS (SELECT doc_id, avg_logp,
-        |        row_number() OVER (ORDER BY avg_logp DESC, doc_id) AS rn,
-        |        COUNT(*) OVER () AS n
-        |      FROM u)
-        |SELECT doc_id, avg_logp,
-        |  CASE (3 * (rn - 1)) // n WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
-        |       ELSE 'tail' END AS bucket
-        |FROM r""".stripMargin,
-    // F16: the identical non-overlapping block grid; duplicated
-    // blocks dropped, survivors + the verbatim tail reassembled in
-    // position order
-    "dedup_substr_trim" ->
-      """WITH b0 AS (
-        |  SELECT doc_id, text,
-        |    [{'p': CAST(i AS INTEGER),
-        |      'b': substr(text, CAST(i AS INTEGER), 30)}
-        |     for i in generate_series(1, len(text) - 29, 30)] AS bs
-        |  FROM documents WHERE len(text) >= 30),
-        |b AS (SELECT doc_id, unnest(bs, recursive := false) AS s FROM b0),
-        |bb AS (SELECT doc_id, s.p AS p, s.b AS blk,
-        |         CAST('0x' || substr(md5(s.b), 1, 15) AS BIGINT) AS h
-        |       FROM b),
-        |nd AS (SELECT h, COUNT(DISTINCT doc_id) AS ndocs FROM bb GROUP BY h),
-        |kept AS (SELECT bb.doc_id,
-        |           COUNT(*) AS n_blocks,
-        |           CAST(SUM(CASE WHEN nd.ndocs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |             AS n_removed,
-        |           COALESCE(string_agg(CASE WHEN nd.ndocs < 2 THEN bb.blk END, ''
-        |                               ORDER BY bb.p), '') AS body
-        |         FROM bb JOIN nd USING (h) GROUP BY bb.doc_id)
-        |SELECT d.doc_id,
-        |  COALESCE(k.body, '') ||
-        |    substr(d.text, (len(d.text) // 30) * 30 + 1) AS clean_text,
-        |  CAST(COALESCE(k.n_blocks, 0) AS BIGINT) AS n_blocks,
-        |  CAST(COALESCE(k.n_removed, 0) AS BIGINT) AS n_removed
-        |FROM documents d LEFT JOIN kept k USING (doc_id)""".stripMargin,
-    // F19: content-defined (rolling-anchor) block boundaries — a
-    // position starts a block when hash60 of its 8-char window ≡ 0
-    // mod 32; then the same df ≥ 2 removal and reassembly as F16
-    "dedup_substr_offgrid" ->
-      """WITH st AS (
-        |  SELECT doc_id, text, len(text) AS n,
-        |    list_prepend(1, CASE WHEN len(text) >= 9 THEN
-        |      [p for p in generate_series(2, len(text) - 7)
-        |       if CAST('0x'||substr(md5(substr(text, p, 8)),1,15) AS BIGINT)
-        |          % 32 = 0]
-        |    ELSE [] END) AS starts
-        |  FROM documents),
-        |b0 AS (SELECT doc_id,
-        |  [{'p': CAST(starts[i] AS INTEGER),
-        |    'b': substr(text, starts[i],
-        |                COALESCE(starts[i+1], n+1) - starts[i])}
-        |   for i in generate_series(1, len(starts))] AS bs
-        |  FROM st),
-        |b AS (SELECT doc_id, unnest(bs, recursive := false) AS s FROM b0),
-        |bb AS (SELECT doc_id, s.p AS p, s.b AS blk,
-        |         CAST('0x' || substr(md5(s.b), 1, 15) AS BIGINT) AS h
-        |       FROM b),
-        |nd AS (SELECT h, COUNT(DISTINCT doc_id) AS ndocs FROM bb GROUP BY h),
-        |kept AS (SELECT bb.doc_id,
-        |           COUNT(*) AS n_blocks,
-        |           CAST(SUM(CASE WHEN nd.ndocs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |             AS n_removed,
-        |           COALESCE(string_agg(CASE WHEN nd.ndocs < 2 THEN bb.blk END, ''
-        |                               ORDER BY bb.p), '') AS body
-        |         FROM bb JOIN nd USING (h) GROUP BY bb.doc_id)
-        |SELECT d.doc_id, COALESCE(k.body, '') AS clean_text,
-        |  CAST(COALESCE(k.n_blocks, 0) AS BIGINT) AS n_blocks,
-        |  CAST(COALESCE(k.n_removed, 0) AS BIGINT) AS n_removed
-        |FROM documents d LEFT JOIN kept k USING (doc_id)""".stripMargin,
-    // H23 selection: the ppl-bucket closed form + the shared
-    // md5-60bit hash draw on doc_id for the middle tercile
-    "corpus_select_ccnet" ->
-      """WITH t AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), ' +')) AS tok
-        |  FROM documents),
-        |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM t GROUP BY 1, 2),
-        |cf AS (SELECT doc_id, tok, tf,
-        |         SUM(tf) OVER (PARTITION BY tok) AS cf
-        |       FROM tf),
-        |nt AS (SELECT CAST(SUM(tf) AS DOUBLE) AS nt FROM tf),
-        |c AS (SELECT doc_id, tf,
-        |        CAST(round(CAST(tf AS DOUBLE)
-        |               * ln(CAST(cf AS DOUBLE) / nt) * 1000000.0) AS BIGINT)
-        |          AS micronats
-        |      FROM cf, nt),
-        |u AS (SELECT doc_id,
-        |        round(CAST(SUM(micronats) AS BIGINT) / 1000000.0 / SUM(tf), 4)
-        |          AS avg_logp
-        |      FROM c GROUP BY doc_id),
-        |r AS (SELECT doc_id, avg_logp,
-        |        row_number() OVER (ORDER BY avg_logp DESC, doc_id) AS rn,
-        |        COUNT(*) OVER () AS n
-        |      FROM u),
-        |bk AS (SELECT doc_id, avg_logp,
-        |         CASE (3 * (rn - 1)) // n WHEN 0 THEN 'head' WHEN 1 THEN 'middle'
-        |              ELSE 'tail' END AS bucket
-        |       FROM r)
-        |SELECT doc_id, avg_logp, bucket FROM bk
-        |WHERE bucket = 'head'
-        |   OR (bucket = 'middle' AND
-        |       CAST('0x'||substr(md5(COALESCE(CAST(doc_id AS VARCHAR), '')),1,15)
-        |            AS BIGINT) % 100 < 50)""".stripMargin,
-    // H7c: the unrolled 3-iteration learn — see bpeLearnSql
-    "vocab_bpe_learn" -> bpeLearnSql,
-    // F16b: batch blocks against the standing corpus block set
-    "dedup_substr_trim_inc" ->
+        |LEFT JOIN built USING (doc_id)""".stripMargin),
+    // —— F16b: incremental span trim of a batch vs the standing index ——
+    QuerySpec("dedup_substr_trim_inc", (s, dir) => {
+      val d = docs(s, dir)
+      Dedup.substrTrimIncremental(
+        d.filter(col("doc_id") % 10 === 0),
+        Dedup.blockIndex(d.filter(col("doc_id") % 10 =!= 0), "text"),
+        "doc_id", "text")
+    },
+      // F16b: batch blocks against the standing corpus block set
       """WITH idx AS (
         |  SELECT DISTINCT
         |    CAST('0x' || substr(md5(substr(text, CAST(i AS INTEGER), 30)), 1, 15)
@@ -3241,26 +3175,7 @@ object LlmQueries {
         |  CAST(COALESCE(k.n_blocks, 0) AS BIGINT) AS n_blocks,
         |  CAST(COALESCE(k.n_removed, 0) AS BIGINT) AS n_removed
         |FROM documents d LEFT JOIN kept k USING (doc_id)
-        |WHERE d.doc_id % 10 = 0""".stripMargin,
-    // G17: scaled-int64 centroid sums (2^20), float32-snapped means,
-    // double cosine — every arithmetic step mirrored engine-side
-    "embed_centroid_assign" ->
-      s"""WITH $centroidAssignCtes
-         |SELECT vec_id, label, c_label AS assigned, cos_r, label = c_label AS correct
-         |FROM r WHERE rn = 1""".stripMargin,
-    // G17b: the same assignment chain, then a deterministic
-    // hash-ranked k per cluster
-    "sample_cluster_balanced" ->
-      s"""WITH $centroidAssignCtes,
-         |asg AS (SELECT vec_id, c_label AS assigned FROM r WHERE rn = 1),
-         |hk AS (SELECT vec_id, assigned,
-         |         CAST('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)
-         |              AS BIGINT) AS h
-         |       FROM asg),
-         |rk AS (SELECT *, row_number() OVER (PARTITION BY assigned
-         |         ORDER BY h, vec_id) AS rk FROM hk)
-         |SELECT vec_id, assigned, CAST(rk AS INTEGER) AS rk
-         |FROM rk WHERE rk <= 25""".stripMargin,
+        |WHERE d.doc_id % 10 = 0""".stripMargin),
   )
 
   /** G17's assignment chain as a shared CTE block, so the

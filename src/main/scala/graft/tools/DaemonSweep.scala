@@ -2,9 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.operators.{Dedup, LlmQueries, Similarity}
 import graft.streaming.CurationJob
 import graft.streaming.CurationJob.{ClassifierGate, SemanticGate}
@@ -57,14 +58,7 @@ object DaemonSweep {
     val workDir = args(1)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(10)
     require(nBatches > 1, s"nBatches must exceed 1: $nBatches")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark()
     val t0 = System.nanoTime()
 
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")

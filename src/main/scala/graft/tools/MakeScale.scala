@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.LocalSpark
 
 /** Dev harness (not part of the driver contract): build a larger
   * scale factor by key-offset replication of an existing one, for
@@ -33,14 +34,7 @@ object MakeScale {
     val Array(srcDir, dstDir, copiesStr) = args
     val copies = copiesStr.toInt
     require(copies >= 1, "copies must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark()
     // events.ts is TIMESTAMP(NANOS): read it as a plain long and write
     // it back as int64 — TableCatalog.events handles both encodings
     // (`ts div 1000` is typed the same over long and nanos-as-long)

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.operators.TemporalJoin
 import graft.sources.TableCatalog
 
@@ -26,14 +26,7 @@ object RangeJoinSkew {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, repsStr) = args
     val reps = repsStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark()
     // the salt's regime is a big-x-big shuffle join: at 100 TB neither
     // side broadcasts. At test SFs Spark would broadcast the purchase
     // side and dissolve the key stripes entirely (a broadcast join

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.operators.{Pipeline100TB, TextAnalysis}
 
 /** Dev harness (not part of the driver contract): measure
@@ -29,14 +29,7 @@ object SkewStress {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, repsStr) = args
     val reps = repsStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val base = "/tmp/graft_skew_base"
     val hot = "/tmp/graft_skew_hot"

@@ -18,4 +18,11 @@ object GraftBridge {
     */
   def interpretedOrdering(dt: org.apache.spark.sql.types.DataType): Ordering[Any] =
     org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+
+  /** Blocks until every event posted so far has reached its listeners
+    * (`SparkContext.listenerBus` is private[spark]), so counters a
+    * listener keeps are complete when read.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

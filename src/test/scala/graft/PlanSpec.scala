@@ -84,7 +84,7 @@ class PlanSpec extends SparkTestBase {
 
   test("correlated $lookup extracts the equi-key: hash join, never nested-loop") {
     val plan = executed(
-      graft.plans.ExtendedQueries.queries("pipe_lookup_let")(spark, sfDir))
+      SparkEntry.queries("pipe_lookup_let")(spark, sfDir))
       .replaceAll("#\\d+L?", "")
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"),
@@ -97,7 +97,7 @@ class PlanSpec extends SparkTestBase {
 
   test("$merge plans one keyed full-outer join, filters pushed to the source scan") {
     val plan = executed(
-      graft.plans.ExtendedQueries.queries("pipe_merge")(spark, sfDir))
+      SparkEntry.queries("pipe_merge")(spark, sfDir))
     assert(plan.contains("FullOuter"), plan)
     assert(plan.contains("PushedFilters: [IsNotNull(c_custkey), LessThanOrEqual(c_custkey,50)"),
       plan)
@@ -105,14 +105,14 @@ class PlanSpec extends SparkTestBase {
 
   test("$setWindowFields compiles to window passes partitioned by the key (no global sort)") {
     val plan = executed(
-      graft.plans.ExtendedQueries.queries("pipe_window_fields")(spark, sfDir))
+      SparkEntry.queries("pipe_window_fields")(spark, sfDir))
     assert(plan.contains("Window"), plan)
     assert(plan.contains("hashpartitioning(o_custkey"), plan)
   }
 
   test("$sample is a top-n (TakeOrdered), never a full sort") {
     val plan = executed(
-      graft.plans.ExtendedQueries.queries("pipe_sample")(spark, sfDir))
+      SparkEntry.queries("pipe_sample")(spark, sfDir))
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(!plan.contains("Exchange rangepartitioning"),
       s"global sort crept into \\$$sample:\n$plan")
@@ -166,28 +166,28 @@ class PlanSpec extends SparkTestBase {
 
   test("hash sampling is a pure map-side filter: zero shuffles") {
     val plan = executed(
-      graft.plans.ExtendedQueries.queries("sample_hash")(spark, sfDir))
+      SparkEntry.queries("sample_hash")(spark, sfDir))
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
   }
 
   test("chunking and scrubbing plan zero shuffles") {
     for (name <- Seq("doc_chunks", "text_scrub")) {
       val plan = executed(
-        graft.plans.ExtendedQueries.queries(name)(spark, sfDir))
+        SparkEntry.queries(name)(spark, sfDir))
       assert(!plan.contains("Exchange"), s"$name shuffled:\n$plan")
     }
   }
 
   test("media-header decodes (image/audio/video) plan zero shuffles") {
     for (q <- Seq("mm_image_dims", "mm_audio_meta", "mm_video_meta")) {
-      val plan = executed(graft.operators.LlmQueries.queries(q)(spark, sfDir))
+      val plan = executed(SparkEntry.queries(q)(spark, sfDir))
       assert(!plan.contains("Exchange"), s"$q shuffled:\n$plan")
     }
   }
 
   test("$densify grid generation aggregates before exploding (no driver loop)") {
     val plan = executed(
-      graft.plans.ExtendedQueries.queries("pipe_densify_fill")(spark, sfDir))
+      SparkEntry.queries("pipe_densify_fill")(spark, sfDir))
     assert(plan.contains("Generate explode"), plan)
     assert(plan.contains("Window"), plan)
   }
@@ -352,7 +352,7 @@ class PlanSpec extends SparkTestBase {
     for (name <- Seq("pipe_lookup_array", "pipe_lookup_array_fk",
       "pipe_lookup_array_whole")) {
       val plan = executed(
-        graft.plans.PipelineQueries.queries(name)(spark, sfDir))
+        SparkEntry.queries(name)(spark, sfDir))
       // any-element matching must stay an exploded equi-join (an
       // array_contains theta-join would plan BroadcastNestedLoopJoin);
       // the per-key re-aggregation must key on the local VALUE, never
@@ -364,8 +364,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("full curation stack: single pass — one scan, both gates fused as filters, one exchange") {
-    val df = graft.plans.ExtendedQueries
-      .queries("corpus_curate_full")(spark, sfDir)
+    val df = SparkEntry.queries("corpus_curate_full")(spark, sfDir)
     val plan = executed(df)
     // extraction runs once and the corpus tokenizes once: the gates
     // are WHERE clauses on the shared token array (no semi-joins), and

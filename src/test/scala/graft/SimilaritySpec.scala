@@ -102,8 +102,7 @@ class SimilaritySpec extends SparkTestBase {
   test("cluster-balanced sampling: at most k per cluster, lowest-hash members, deterministic") {
     import org.apache.spark.sql.expressions.Window
     // contract run: the declared query, through the registry
-    val out = graft.operators.LlmQueries
-      .queries("sample_cluster_balanced")(spark, sfDir).collect()
+    val out = SparkEntry.queries("sample_cluster_balanced")(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
     val perCluster = out.groupBy(_._2)
     assert(perCluster.values.forall(_.length <= 25))
@@ -868,7 +867,7 @@ class SimilaritySpec extends SparkTestBase {
   test("mm_pack: image docs cost text + patch tiles; corrupted payloads cost text alone") {
     import graft.functions.Hash60.tokens
     val d = graft.sources.TableCatalog(spark, sfDir).documents
-    val out = graft.operators.LlmQueries.queries("mm_pack")(spark, sfDir)
+    val out = SparkEntry.queries("mm_pack")(spark, sfDir)
       .select(col("doc_id"), col("n_tok")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val textTok = d.select(col("doc_id"), size(tokens(col("text"))).cast("long"))

@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test run. */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSpark(cpus = 4)
 
   val sfDir = "/root/testdata/sf0.001"
 }
@@ -20,7 +13,6 @@ object SparkTestBase {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkTestBase.spark
-    s.sparkContext.setLogLevel("WARN")
     // Keep the suite log signal-bearing (the r13 hygiene note):
     //  - WindowExec's single-partition warning fires on the BOUNDED
     //    post-aggregation windows (≤ 64 rows by construction); the
