@@ -80,7 +80,14 @@ object Seams {
   /** Free every registered seam/cut. Call after the consuming action;
     * never inside a query. BLOCKING removal: the callers sit outside
     * the timed windows, and an async removal would otherwise steal
-    * block-manager time from the NEXT query's measured rep.
+    * block-manager time from the NEXT query's measured rep. In the
+    * reliable mode the checkpoint files go too, so a long-running
+    * daemon's checkpoint dir stays bounded.
+    *
+    * A seam that fails to release is reported on stderr and the rest
+    * are still released. Nothing is rethrown: callers release in
+    * `finally` blocks, where a throw would hide the query's own
+    * exception.
     */
   def release(): Unit = {
     var c = checkpointed.poll()
@@ -92,9 +99,18 @@ object Seams {
         c.queryExecution.analyzed.foreach {
           case l: org.apache.spark.sql.execution.LogicalRDD =>
             l.rdd.unpersist(blocking = true)
+            l.rdd.getCheckpointFile.foreach { f =>
+              val p = new org.apache.hadoop.fs.Path(f)
+              p.getFileSystem(l.rdd.sparkContext.hadoopConfiguration)
+                .delete(p, true)
+            }
           case _ => ()
         }
-      } catch { case scala.util.control.NonFatal(_) => () }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(
+            s"[seams] release failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
       c = checkpointed.poll()
     }
   }

@@ -51,12 +51,9 @@ object Cdc {
     * row_number sort. Keys whose final op is a delete vanish.
     */
   def latestState(oplog: DataFrame): DataFrame =
-    oplog
-      .groupBy(col("id"))
-      .agg(max_by(struct(col("op"), col("data")),
-        struct(col("ts"), col("event_id"))).as("last"))
-      .filter(col("last.op") =!= "d")
-      .select(col("last.data.*"))
+    latestWithDeletes(oplog)
+      .filter(col("op") =!= "d")
+      .select(col("data.*"))
 
   /** Like latestState but keeps delete markers — the shape applyTo
     * needs to know which base keys to drop.

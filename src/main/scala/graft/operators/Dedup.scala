@@ -150,34 +150,24 @@ object Dedup {
   def bloomProbe(batch: DataFrame, index: DataFrame, idCol: String,
                  textCol: String, mBits: Int = 1 << 15,
                  hashes: Int = 3): DataFrame =
-    bloomMaybe(
-      batch.select(col(idCol), fingerprintOf(col(textCol)).as("fp")),
-      bloomWords(index, mBits, hashes), idCol, mBits, hashes)
+    batch.select(col(idCol), fingerprintOf(col(textCol)).as("fp"))
+      .withColumn("p", explode(sequence(lit(0), lit(hashes - 1))))
+      .withColumn("bit", bloomBit(col("fp"), col("p"), mBits))
+      .withColumn("word", expr("cast(bit div 32 as int)"))
+      .withColumn("mask", expr("shiftleft(cast(1 as bigint), cast(bit % 32 as int))"))
+      // the words frame is explicitly broadcast: the whole point is a
+      // map-side membership test
+      .join(broadcast(bloomWords(index, mBits, hashes)), Seq("word"), "left")
+      .groupBy(col(idCol), col("fp"))
+      .agg(count(when(coalesce(col("bits"), lit(0L))
+        .bitwiseAND(col("mask")) =!= 0L, 1)).as("__n_set"))
+      .select(col(idCol), col("fp"),
+        (col("__n_set") === hashes).as("bloom_maybe"))
       // ground-truth readout (NOT part of the production fast path —
       // that's the point of the filter); plain keyed join, AQE sizes it
       .join(index.select(col("fp"), lit(true).as("__in")), Seq("fp"), "left")
       .select(col(idCol), col("bloom_maybe"),
         coalesce(col("__in"), lit(false)).as("in_index"))
-
-  /** Probe verdicts for a (key, fp) frame against a words filter:
-    * (key, fp, bloom_maybe) — the shared core of [[bloomProbe]] and
-    * the curation daemon's bloom-gated novelty fast path (E22). The
-    * words frame is explicitly broadcast: the whole point is a
-    * map-side membership test.
-    */
-  def bloomMaybe(keyed: DataFrame, words: DataFrame, keyCol: String,
-                 mBits: Int = 1 << 15, hashes: Int = 3): DataFrame =
-    keyed
-      .withColumn("p", explode(sequence(lit(0), lit(hashes - 1))))
-      .withColumn("bit", bloomBit(col("fp"), col("p"), mBits))
-      .withColumn("word", expr("cast(bit div 32 as int)"))
-      .withColumn("mask", expr("shiftleft(cast(1 as bigint), cast(bit % 32 as int))"))
-      .join(broadcast(words), Seq("word"), "left")
-      .groupBy(col(keyCol), col("fp"))
-      .agg(count(when(coalesce(col("bits"), lit(0L))
-        .bitwiseAND(col("mask")) =!= 0L, 1)).as("__n_set"))
-      .select(col(keyCol), col("fp"),
-        (col("__n_set") === hashes).as("bloom_maybe"))
 
   /** F20b: closed-form Bloom sizing solver — the F18b move applied to
     * F20: for every (m, j) candidate (m = 2¹²..2²⁰ bits, j = 1..6

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -33,33 +34,45 @@ import graft.operators.{Dedup, Pipeline100TB, TextAnalysis}
   * batch-mode curation of the whole input (spec-checked).
   *
   * Scale: per micro-batch the work is batch-sized hashing + one anti
-  * join against the index (persist it bucketed on `fp` —
-  * [[graft.operators.Dedup.persistIndexBucketed]] — and the index
-  * side never re-shuffles).
+  * join against the standing fingerprint index. The index is plain
+  * per-batch parquet shards plus compacted generations, listed and
+  * read by [[readIndexExcept]]. It is not the bucketed table of
+  * [[graft.operators.Dedup.persistIndexBucketed]], so the index side
+  * of the join is exchanged (or broadcast by AQE) every batch;
+  * compaction keeps its listing at compactEvery+1 entries.
+  *
+  * Standing state: every enabled gate registers one `(subdir, rows)`
+  * shard per batch — `index` (exact fps, always), `bands` (fuzzy),
+  * `blocks` (spanTrim), `sstats` (searchStats), `semidx` (semantic)
+  * and `knn` (knnK > 0). One loop writes each to
+  * `<corpusDir>/<subdir>/b<batchId>` and compaction folds the same
+  * list, so every index that is written is also compacted.
   *
   * Exactly-once: each batch OVERWRITES its own `b<batchId>`
-  * subdirectory of both the corpus and the index (the E9 capstone's
-  * generation-swap move, sharded by batch), and the index read
+  * subdirectory of the corpus and of every index (the E9 capstone's
+  * generation-swap move, sharded by batch), and every index read
   * EXCLUDES the current batch's own shard — otherwise a retry after
   * a half-committed attempt would see its own fps in the index and
   * silently drop the whole batch. Re-delivery of a batchId is
   * therefore a no-op rewrite of identical content (spec-checked).
   *
-  * Index compaction: without it every micro-batch lists and reads
-  * ALL prior `b*` shards — O(N) small files per batch, O(N²)
+  * Compaction: without it every micro-batch lists and reads ALL
+  * prior `b*` shards — O(N) small files per batch, O(N²)
   * cumulative, the classic small-files death of a long-running
   * daemon. Once the shard count reaches `compactEvery`, the batch
-  * folds every shard EXCEPT its own into one generation dir
-  * `g<batchId>` (write `.tmp` → atomic rename → delete sources, the
-  * E9 swap), so the index directory never holds more than
-  * compactEvery+1 entries. Exactly-once survives compaction because
-  * (a) the current batch's own shard is never folded while its
-  * batchId can still be re-delivered, (b) sources are deleted only
-  * after the generation is live, and a retry that finds the
-  * generation already present just finishes the deletes (the
-  * sources' fps are a subset of the generation by construction),
-  * and (c) duplicate fps transiently visible during a half-finished
-  * swap are harmless to the anti-join.
+  * folds every index entry EXCEPT its own shard into one generation
+  * `g<batchId>`, so an index directory never holds more than
+  * compactEvery+1 entries; corpus shards fold tiered into write-once
+  * `h<batchId>` generations ([[compactData]]). Both go through one
+  * crash-safe swap ([[swapFold]]: write `.tmp` → atomic rename →
+  * delete sources). Exactly-once survives compaction because (a)
+  * the current batch's own shard is never folded while its batchId
+  * can still be re-delivered, (b) sources are deleted only after the
+  * generation is live, and a retry that finds the generation already
+  * present just finishes the deletes (the sources' rows are a subset
+  * of the generation by construction), and (c) duplicate rows
+  * transiently visible during a half-finished swap are harmless to
+  * the set-semantic reads.
   */
 object CurationJob {
 
@@ -95,8 +108,8 @@ object CurationJob {
                                  vocab: Seq[String])
 
   /** Start the loop over a streaming `incoming` frame. The corpus
-    * lives under `corpusDir/data/b*`, the standing index under
-    * `corpusDir/index/{b*,g*}` (read both with
+    * lives under `corpusDir/data/{b*,h*}`, each standing index under
+    * `corpusDir/<subdir>/{b*,g*}` (read both with
     * `recursiveFileLookup`).
     */
   def run(incoming: DataFrame, corpusDir: String, checkpoint: String,
@@ -107,7 +120,6 @@ object CurationJob {
           bpe: Option[BpeAccounting] = None,
           spanTrim: Boolean = false,
           semantic: Option[SemanticGate] = None,
-          bloom: Boolean = false,
           knnK: Int = 0,
           searchStats: Boolean = false): StreamingQuery =
     incoming.writeStream
@@ -115,18 +127,18 @@ object CurationJob {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(batch, corpusDir, idCol, textCol, batchId, compactEvery,
-          fuzzy, markup, classifier, bpe, spanTrim, semantic, bloom, knnK,
+          fuzzy, markup, classifier, bpe, spanTrim, semantic, knnK,
           searchStats)
       }
       .start()
 
   /** One micro-batch of the loop — pure batch logic, testable alone:
     * gate → dedupe vs the index-so-far → overwrite this batch's
-    * corpus + index shards → maybe compact the index. `gated` and
-    * `novel` are persisted for the duration of the two shard writes
-    * (both actions consume them) and unpersisted after — without
-    * this every micro-batch runs the Gopher gate and the anti-join
-    * twice.
+    * corpus shard and one shard per standing index → maybe compact.
+    * `gated`, `novel` and `accepted` are persisted for the duration
+    * of the shard writes (several actions consume them) and
+    * unpersisted after — without this every micro-batch runs the
+    * Gopher gate and the anti-join once per write.
     */
   def applyBatch(batch: DataFrame, corpusDir: String,
                  idCol: String, textCol: String, batchId: Long,
@@ -136,12 +148,12 @@ object CurationJob {
                  bpe: Option[BpeAccounting] = None,
                  spanTrim: Boolean = false,
                  semantic: Option[SemanticGate] = None,
-                 bloom: Boolean = false,
                  knnK: Int = 0,
                  searchStats: Boolean = false): Unit = {
     require(knnK == 0 || semantic.isDefined,
       "knnK needs the semantic gate: the kNN graph blocks on its cells")
     val spark = batch.sparkSession
+    val ownShard = s"b$batchId"
     // H21 first: everything downstream — gates, fingerprints, the
     // stored corpus — sees extracted prose, never raw markup
     val extracted =
@@ -153,12 +165,12 @@ object CurationJob {
     // boilerplate vanishes BEFORE any gate or fingerprint sees it,
     // so gates judge the novel remainder and two docs differing
     // only in known boilerplate dedupe. Same own-shard-excluding
-    // read as the other two indexes (retry-safe).
+    // read as the other indexes (retry-safe).
     val prepared =
       if (!spanTrim) extracted
       else {
         val blkIdx = readIndexExcept(spark, s"$corpusDir/blocks",
-          s"b$batchId", blockSchema)
+          ownShard, blockSchema)
         extracted.drop(textCol).join(
           Dedup.substrTrimIncremental(extracted, blkIdx, idCol, textCol)
             .select(col("doc_id").as(idCol), col("clean_text").as(textCol)),
@@ -176,73 +188,23 @@ object CurationJob {
           .filter(col("keep")).select(col(idCol)),
         Seq(idCol))
     }
+    // Every standing index this batch advances, as (subdir, rows): one
+    // loop writes each to `<corpusDir>/<subdir>/b<batchId>` and the
+    // compaction below folds exactly these subdirs, so no gate can
+    // write a shard that is never compacted.
+    val shards = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
     val gated = prepared.join(qualityPass, Seq(idCol)).persist()
     // the try opens IMMEDIATELY after the first persist: an exception
-    // anywhere in the fuzzy-gate plan construction or the shard
-    // writes must still unpersist, or a long-running daemon leaks
-    // cache across streaming retries.
+    // anywhere in the gate plan construction or the shard writes must
+    // still unpersist, or a long-running daemon leaks cache across
+    // streaming retries.
     var novel: DataFrame = null
     var accepted: DataFrame = null
-    var probed: DataFrame = null
+    var newCells: DataFrame = null
     try {
-      novel = (if (!bloom)
-        Dedup.incrementalFingerprint(gated,
-          readIndexExcept(spark, s"$corpusDir/index", s"b$batchId", fpSchema),
-          idCol, textCol)
-      else {
-        // E22 (opt-in): the F20 Bloom filter as the FIFTH standing
-        // state — a KB-scale OR-merged word table read in front of
-        // the exact-fp anti join. A batch row whose probes are not
-        // all set is novel WITHOUT consulting the index (the filter's
-        // no-false-negative guarantee; the bloom shards advance from
-        // the SAME novel.fp rows as the index shards, in the same
-        // retried foreachBatch transaction, so the filter can never
-        // miss an indexed fp); only the maybe-fraction pays the anti
-        // join, and an all-novel batch skips the index read entirely.
-        // Toggle guard: enabling bloom on a corpus whose standing fp
-        // index PREDATES the bloom shards would otherwise read an
-        // empty word table, mark every batch fp definitely-new, skip
-        // the anti join, and silently admit duplicates of indexed
-        // content. Backfill the filter from the standing index once
-        // (crash-safe tmp+rename, like compactIndex) so the
-        // no-false-negative invariant holds regardless of when the
-        // flag was turned on.
-        val bloomDir = s"$corpusDir/bloom"
-        val standingWords = readIndexExcept(spark, bloomDir,
-          s"b$batchId", bloomSchema)
-        val standingFps = readIndexExcept(spark, s"$corpusDir/index",
-          s"b$batchId", fpSchema)
-        val wordShards =
-          if (standingWords.isEmpty && !standingFps.isEmpty) {
-            val p = new org.apache.hadoop.fs.Path(bloomDir)
-            val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-            val tmp = new org.apache.hadoop.fs.Path(p, "_backfill.tmp")
-            val dst = new org.apache.hadoop.fs.Path(p, "backfill")
-            if (fs.exists(tmp)) fs.delete(tmp, true)
-            Dedup.bloomWords(standingFps.select(col("fp")))
-              .write.mode("overwrite").parquet(tmp.toString)
-            if (!fs.rename(tmp, dst))
-              sys.error(s"bloom backfill rename failed: $tmp -> $dst")
-            readIndexExcept(spark, bloomDir, s"b$batchId", bloomSchema)
-          } else standingWords
-        val words = wordShards
-          .groupBy(col("word")).agg(expr("bit_or(bits)").as("bits"))
-        probed = Dedup.bloomMaybe(
-          gated.select(col(idCol),
-            Dedup.fingerprintOf(col(textCol)).as("fp")),
-          words, idCol).persist()
-        val maybes = probed.filter(col("bloom_maybe"))
-          .select(col(idCol), col("fp"))
-        val definite = probed.filter(!col("bloom_maybe"))
-          .select(col(idCol), col("fp"))
-        val survivors =
-          if (maybes.isEmpty) definite
-          else definite.unionByName(
-            maybes.join(readIndexExcept(spark, s"$corpusDir/index",
-              s"b$batchId", fpSchema), Seq("fp"), "left_anti"))
-        survivors.groupBy(col("fp"))
-          .agg(min(col(idCol)).as("survivor"), count(lit(1)).as("n_copies"))
-      }).persist()
+      novel = Dedup.incrementalFingerprint(gated,
+        readIndexExcept(spark, s"$corpusDir/index", ownShard, fpSchema),
+        idCol, textCol).persist()
       val novelRows = gated
         .join(novel.select(col("survivor").as(idCol)), Seq(idCol))
       // the OPTIONAL second gate (F14): exact-fp novelty alone admits
@@ -254,7 +216,7 @@ object CurationJob {
       val admitted = (if (!fuzzy) novelRows
       else {
         val bandIdx = readIndexExcept(spark, s"$corpusDir/bands",
-          s"b$batchId", bandSchema)
+          ownShard, bandSchema)
         val fuzzSurvivors = Dedup
           .incrementalBands(novelRows, bandIdx, idCol, textCol)
           .select(col("survivor").as(idCol))
@@ -275,7 +237,7 @@ object CurationJob {
         case Some(g) =>
           import spark.implicits._
           val semIdx = readIndexExcept(spark, s"$corpusDir/semidx",
-            s"b$batchId", semSchema(idCol, g.embCol))
+            ownShard, semSchema(idCol, g.embCol))
           val cents = g.centroids.toDF("c_label", "c_emb")
           val keepIds = graft.operators.Similarity
             .incrementalSemantic(spark,
@@ -303,31 +265,17 @@ object CurationJob {
       // accepted rows enter the corpus; the emitted fps advance the
       // exact index so the NEXT batch sees them — INCLUDING the fps
       // of fuzzy-vetoed docs (exact copies of a rejected near-dup
-      // must stay rejected); the band index advances by ACCEPTED
-      // docs' bands only (it indexes corpus content)
-      accepted.write.mode("overwrite").parquet(s"$corpusDir/data/b$batchId")
-      novel.select("fp")
-        .write.mode("overwrite").parquet(s"$corpusDir/index/b$batchId")
-      // the bloom words advance from the SAME rows as the fp index —
-      // the only consistency the definite-new fast path rests on
-      if (bloom)
-        Dedup.bloomWords(novel.select(col("fp")))
-          .write.mode("overwrite").parquet(s"$corpusDir/bloom/b$batchId")
-      if (fuzzy)
-        Dedup.bandIndex(accepted, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$corpusDir/bands/b$batchId")
-      // the block index advances by ACCEPTED (stored) content only —
-      // it indexes what the corpus holds, like the band index
-      if (spanTrim)
-        Dedup.blockIndex(accepted, textCol)
-          .write.mode("overwrite").parquet(s"$corpusDir/blocks/b$batchId")
-      // E24: the search-stats ledger advances by ACCEPTED (stored)
-      // content — per distinct term its batch df, plus one sentinel
-      // row carrying the batch's (docs, Σdl). Rows are SUM-semantic,
-      // so each carries its source batch id: that makes every row a
-      // unique key, which is what lets the SET-semantic compactIndex
-      // fold (full-row distinct) and the reader's window-dedup
-      // distinct() both preserve the sums exactly.
+      // must stay rejected); every other index advances by ACCEPTED
+      // (stored) content only — it indexes what the corpus holds
+      shards += "index" -> novel.select("fp")
+      if (fuzzy) shards += "bands" -> Dedup.bandIndex(accepted, idCol, textCol)
+      if (spanTrim) shards += "blocks" -> Dedup.blockIndex(accepted, textCol)
+      // E24: the search-stats ledger — per distinct term its batch df,
+      // plus one sentinel row carrying the batch's (docs, Σdl). Rows
+      // are SUM-semantic, so each carries its source batch id: that
+      // makes every row a unique key, which is what lets the
+      // SET-semantic compactIndex fold (full-row distinct) and the
+      // reader's window-dedup distinct() both preserve the sums exactly.
       if (searchStats) {
         val toks = graft.functions.Hash60.tokens(col(textCol))
         val termRows = accepted
@@ -341,8 +289,7 @@ object CurationJob {
           .select(lit("").as("term"), lit(0L).as("df"), col("docs"),
             coalesce(col("sumdl"), lit(0L)).as("sumdl"),
             lit(batchId).as("src"))
-        termRows.unionByName(totals)
-          .write.mode("overwrite").parquet(s"$corpusDir/sstats/b$batchId")
+        shards += "sstats" -> termRows.unionByName(totals)
       }
       // the semantic index advances by accepted rows' (id, cell,
       // embedding) under the SAME fixed centroids
@@ -350,7 +297,7 @@ object CurationJob {
         import spark.implicits._
         import graft.operators.Similarity
         val cents = g.centroids.toDF("c_label", "c_emb")
-        val newCells = Similarity.assignCells(spark,
+        newCells = Similarity.assignCells(spark,
           accepted.filter(col(g.embCol).isNotNull), cents, idCol, g.embCol)
         if (knnK > 0) {
           // E23: the standing kNN graph advances by this batch's
@@ -360,24 +307,27 @@ object CurationJob {
           // per-shard top-k (an edge outranked at write time is
           // outranked forever — scores never change). The union of
           // shards therefore reproduces the batch graph exactly; the
-          // reader ranks it per vertex (knnGraph below).
+          // reader ranks it per vertex (knnGraph below). newCells
+          // feeds both this shard and the semidx one, so it stays
+          // persisted until both are written.
           newCells.persist()
           val standing = readIndexExcept(spark, s"$corpusDir/semidx",
-            s"b$batchId", semSchema(idCol, g.embCol))
-          Similarity.cellKnnEdges(spark, newCells,
+            ownShard, semSchema(idCol, g.embCol))
+          shards += "knn" -> Similarity.cellKnnEdges(spark, newCells,
               standing.unionByName(newCells), idCol, g.embCol, knnK)
             .unionByName(Similarity.cellKnnEdges(spark, standing, newCells,
               idCol, g.embCol, knnK))
-            .write.mode("overwrite").parquet(s"$corpusDir/knn/b$batchId")
         }
-        newCells.write.mode("overwrite")
-          .parquet(s"$corpusDir/semidx/b$batchId")
-        if (knnK > 0) newCells.unpersist()
+        shards += "semidx" -> newCells
+      }
+      accepted.write.mode("overwrite").parquet(s"$corpusDir/data/$ownShard")
+      shards.foreach { case (subdir, rows) =>
+        rows.write.mode("overwrite").parquet(s"$corpusDir/$subdir/$ownShard")
       }
     } finally {
+      if (newCells != null) newCells.unpersist()
       if (accepted != null) accepted.unpersist()
       if (novel != null) novel.unpersist()
-      if (probed != null) probed.unpersist()
       gated.unpersist()
       // Free the reuse seams the gates created inside this batch
       // (incrementalBands/incrementalSemantic register theirs in
@@ -386,33 +336,10 @@ object CurationJob {
       graft.Seams.release()
     }
     if (compactEvery > 0) {
-      compactIndex(spark, s"$corpusDir/index", s"b$batchId", batchId,
-        compactEvery)
-      // bloom shards fold through the generic set-semantic path: a
-      // compacted generation may hold several (word, bits) rows per
-      // word — the reader's bit_or merge makes that equivalent
-      if (bloom)
-        compactIndex(spark, s"$corpusDir/bloom", s"b$batchId", batchId,
-          compactEvery)
-      if (fuzzy)
-        compactIndex(spark, s"$corpusDir/bands", s"b$batchId", batchId,
-          compactEvery)
-      if (spanTrim)
-        compactIndex(spark, s"$corpusDir/blocks", s"b$batchId", batchId,
-          compactEvery)
-      if (semantic.isDefined)
-        compactIndex(spark, s"$corpusDir/semidx", s"b$batchId", batchId,
-          compactEvery)
-      if (knnK > 0)
-        compactIndex(spark, s"$corpusDir/knn", s"b$batchId", batchId,
-          compactEvery)
-      // sstats rows are unique keys (src column), so the set-semantic
-      // fold preserves the ledger's sums exactly
-      if (searchStats)
-        compactIndex(spark, s"$corpusDir/sstats", s"b$batchId", batchId,
-          compactEvery)
-      compactData(spark, s"$corpusDir/data", s"b$batchId", batchId,
-        compactEvery)
+      shards.foreach { case (subdir, _) =>
+        compactIndex(spark, s"$corpusDir/$subdir", batchId, compactEvery)
+      }
+      compactData(spark, s"$corpusDir/data", batchId, compactEvery)
     }
   }
 
@@ -427,7 +354,7 @@ object CurationJob {
     * Edge shards are deduplicated before ranking: during [[compactIndex]]'s
     * documented visible window (generation rename done, source shards not
     * yet deleted — or after a crash until the next batch retries the
-    * deletes) every folded edge row appears TWICE. The fp/band/bloom
+    * deletes) every folded edge row appears TWICE. The fp/band/block
     * readers are set-semantic so that window is harmless there, but
     * BoundedTopK would count a duplicate edge toward top-k and displace a
     * genuine neighbor. Duplicates are exact row copies, so `distinct()`
@@ -509,9 +436,6 @@ object CurationJob {
     StructField("cos_r", org.apache.spark.sql.types.DoubleType)))
 
   private val fpSchema = StructType(Seq(StructField("fp", StringType)))
-  private val bloomSchema = StructType(Seq(
-    StructField("word", org.apache.spark.sql.types.IntegerType),
-    StructField("bits", org.apache.spark.sql.types.LongType)))
   private def semSchema(idCol: String, embCol: String) = StructType(Seq(
     StructField(idCol, org.apache.spark.sql.types.LongType),
     StructField("cell", org.apache.spark.sql.types.IntegerType),
@@ -531,7 +455,7 @@ object CurationJob {
   private def readIndexExcept(spark: SparkSession, path: String,
                               ownShard: String,
                               schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     if (!fs.exists(p)) empty
@@ -543,95 +467,96 @@ object CurationJob {
     }
   }
 
-  /** Fold all index shards except the current batch's own into one
-    * generation `g<batchId>` once `compactEvery` sources have
-    * accumulated. Crash-safe at every boundary: a stale `.tmp` is
-    * overwritten on retry; sources are deleted only AFTER the
-    * atomic rename makes the generation live; a retry that finds
-    * the generation already present only finishes the deletes
-    * (every remaining source was an input to that generation, so
-    * its fps are already covered).
-    */
   /** DATA-side small-file compaction — TIERED, not chained like the
     * index: every `compactEvery` per-batch data shards fold ONCE
     * into a write-once generation `h<batchId>` and prior `h*`
     * generations are never rewritten, so total write amplification
     * is a flat 2× (each corpus byte: its b-shard, then one fold).
-    * The index refolds its generations instead (bounded K+1-entry
-    * directory) because fingerprints are tiny next to corpus bytes;
-    * refolding the DATA that way would rewrite the whole corpus
-    * every K batches — O(N²/K) bytes over the daemon's life. Data
-    * directory entries grow O(N/K), but each is a well-sized
-    * parquet dir instead of N tiny per-batch shards.
+    * The indexes refold their generations instead (bounded
+    * K+1-entry directories) because index rows are tiny next to
+    * corpus bytes; refolding the DATA that way would rewrite the
+    * whole corpus every K batches — O(N²/K) bytes over the daemon's
+    * life. Data directory entries grow O(N/K), but each is a
+    * well-sized parquet dir instead of N tiny per-batch shards.
     *
     * Exactly-once: only shards of COMMITTED batches fold (every
     * b<id> with id < the current batch — streaming applies batches
     * in order, so only the current one can be re-delivered, and its
-    * own shard is excluded); sources are deleted only after the
-    * atomic rename, and a retry that finds `h<batchId>` live just
-    * finishes the deletes (batch shards are disjoint novel-row
-    * sets, so the fold is an exact union — no dedupe on read).
+    * own shard is excluded); batch shards are disjoint novel-row
+    * sets, so the fold is an exact union — no dedupe on read.
     */
   private def compactData(spark: SparkSession, path: String,
-                          ownShard: String, batchId: Long,
-                          compactEvery: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return
-    val gen = new org.apache.hadoop.fs.Path(p, s"h$batchId")
-    val sources = fs.listStatus(p).map(_.getPath)
-      .filter(s => s.getName != ownShard && s.getName.startsWith("b"))
-    if (fs.exists(gen)) { // finish a half-committed fold from a retry
-      sources.foreach(fs.delete(_, true))
-      return
+                          batchId: Long, compactEvery: Int): Unit =
+    swapFold(spark, path, batchId, "h", compactEvery,
+      _.startsWith("b")) { (fs, sources) =>
+      val nonEmpty = sources.filter(s =>
+        fs.listStatus(s).exists(_.getPath.getName.endsWith(".parquet")))
+      // an all-empty tier folds to a marker dir
+      if (nonEmpty.isEmpty) None
+      else Some(spark.read.parquet(nonEmpty.map(_.toString): _*))
     }
-    if (sources.length < compactEvery) return
-    val nonEmpty = sources.filter(s =>
-      fs.listStatus(s).exists(_.getPath.getName.endsWith(".parquet")))
-    // leading '_' so parquet/Hadoop readers (which auto-hide '_'/'.'
-    // paths) never see the half-written fold — corpus consumers read
-    // data/ with recursiveFileLookup and have no reader-side filter.
-    // Remaining visible window: between the rename and the source
-    // deletes (or after a crash, until the batch retry) readers see
-    // each folded row twice — consumers needing exact-once reads
-    // must exclude b* shards whose ids are covered by a live h* gen.
-    val tmp = new org.apache.hadoop.fs.Path(p, s"_h$batchId.tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (nonEmpty.nonEmpty) {
-      spark.read.parquet(nonEmpty.map(_.toString).toIndexedSeq: _*)
-        .write.mode("overwrite").parquet(tmp.toString)
-      if (!fs.rename(tmp, gen))
-        sys.error(s"data compaction rename failed: $tmp -> $gen")
-    } else fs.mkdirs(gen) // all-empty tier: a marker dir keeps retries idempotent
-    sources.foreach(fs.delete(_, true))
-  }
 
+  /** Index compaction: fold every shard and generation except the
+    * current batch's own into one generation `g<batchId>`. The fold
+    * is schema-agnostic — distinct full rows — because every index is
+    * set-semantic (the sstats ledger through its unique `src` keys).
+    */
   private def compactIndex(spark: SparkSession, path: String,
-                           ownShard: String, batchId: Long,
-                           compactEvery: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
+                           batchId: Long, compactEvery: Int): Unit =
+    swapFold(spark, path, batchId, "g", compactEvery,
+      !_.endsWith(".tmp")) { (_, sources) =>
+      Some(spark.read.parquet(sources.map(_.toString): _*).distinct())
+    }
+
+  /** The crash-safe generation swap both compactions share (the E9
+    * move), folding into `gen` = `<genPrefix><batchId>`. Sources are
+    * the entries of `path` that pass `isSource`, minus the current
+    * batch's own shard `b<batchId>` and `gen` itself.
+    *
+    *  1. If `gen` is already live, a previous attempt of this batch
+    *     renamed it but did not finish: delete the remaining sources
+    *     (each was an input to `gen`) and stop.
+    *  2. Below `compactEvery` sources, do nothing.
+    *  3. Write the fold to `_<gen>.tmp`, overwriting a stale one. The
+    *     leading '_' hides it from parquet/Hadoop readers (corpus
+    *     consumers read data/ with recursiveFileLookup and have no
+    *     reader-side filter); [[readIndexExcept]] also skips `.tmp`.
+    *     A `fold` of None (no rows) makes `gen` an empty marker dir,
+    *     which keeps retries idempotent.
+    *  4. Rename it to `gen`, then delete the sources. Between the two
+    *     (or after a crash, until the batch retry) readers see each
+    *     folded row twice: harmless to the set-semantic index reads,
+    *     which is why the kNN and sstats readers `distinct()` and
+    *     exact-once corpus consumers must exclude b* shards covered
+    *     by a live h* generation.
+    */
+  private def swapFold(spark: SparkSession, path: String, batchId: Long,
+                       genPrefix: String, compactEvery: Int,
+                       isSource: String => Boolean)
+                      (fold: (FileSystem, Seq[Path]) => Option[DataFrame]): Unit = {
+    val (ownShard, gen) = (s"b$batchId", s"$genPrefix$batchId")
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) return
-    val gen = new org.apache.hadoop.fs.Path(p, s"g$batchId")
-    val sources = fs.listStatus(p).map(_.getPath)
-      .filter(s => s.getName != ownShard && s.getName != gen.getName &&
-        !s.getName.endsWith(".tmp"))
-    if (fs.exists(gen)) { // finish a half-committed fold from a retry
+    val genPath = new Path(p, gen)
+    val sources = fs.listStatus(p).map(_.getPath).toSeq.filter { s =>
+      val n = s.getName
+      n != ownShard && n != gen && isSource(n)
+    }
+    if (fs.exists(genPath)) { // finish a half-committed fold from a retry
       sources.foreach(fs.delete(_, true))
       return
     }
     if (sources.length < compactEvery) return
-    // '_' prefix as in compactData: belt (reader-side .tmp filter in
-    // readIndexExcept) and suspenders (Hadoop hidden-path convention)
-    val tmp = new org.apache.hadoop.fs.Path(p, s"_g$batchId.tmp")
+    val tmp = new Path(p, s"_$gen.tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    // schema-agnostic fold (exact-fp shards AND band shards): distinct
-    // full rows — index entries are set-semantic either way
-    spark.read.parquet(sources.map(_.toString).toIndexedSeq: _*)
-      .distinct()
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(tmp, gen))
-      sys.error(s"index compaction rename failed: $tmp -> $gen")
+    fold(fs, sources) match {
+      case Some(rows) =>
+        rows.write.mode("overwrite").parquet(tmp.toString)
+        if (!fs.rename(tmp, genPath))
+          sys.error(s"compaction rename failed: $tmp -> $genPath")
+      case None => fs.mkdirs(genPath)
+    }
     sources.foreach(fs.delete(_, true))
   }
 }

@@ -12,7 +12,7 @@ import graft.streaming.CurationJob.{ClassifierGate, SemanticGate}
 
 /** Scaled-decade evidence for the curation DAEMON loop (dev harness,
   * like [[MakeScale]]): every batch operator is sf10-proven through
-  * the oracle sweep, but CurationJob's exactly-once loop (four
+  * the oracle sweep, but CurationJob's exactly-once loop (six
   * standing indexes + compaction) only had spec-scale evidence. This
   * main streams the whole scaled `documents` table through the full
   * gate stack as N ascending-id micro-batches and asserts the
@@ -35,11 +35,7 @@ import graft.streaming.CurationJob.{ClassifierGate, SemanticGate}
   *   3. exactly-once at the decade — re-delivering the LAST batchId
   *      (own-shard-excluding reads + overwrite) leaves every corpus
   *      and index artifact bit-identically sized and id-identical.
-  *   4. bloom fast path invisible (E22) — the equality config re-run
-  *      with bloom=true yields a byte-identical corpus, and the
-  *      OR-merged standing words equal the filter of the standing fp
-  *      index (the consistency the definite-new verdict rests on).
-  *   5. search-stats ledger exact (E24) — index-backed
+  *   4. search-stats ledger exact (E24) — index-backed
   *      [[CurationJob.searchCorpus]] scores bit-identically to a
   *      fresh two-scan BM25 over the same standing corpus.
   *
@@ -94,7 +90,6 @@ object DaemonSweep {
     // ——— 1. streamed ≡ batch under the equality config ———
     val eqDir = s"$workDir/eq"
     val eq1Dir = s"$workDir/eq1"
-    val eqbDir = s"$workDir/eqb"
     for (i <- 0 until nBatches)
       CurationJob.applyBatch(batchOf(i).select("doc_id", "text"), eqDir,
         "doc_id", "text", batchId = i.toLong, compactEvery = 4,
@@ -102,12 +97,6 @@ object DaemonSweep {
     CurationJob.applyBatch(docs.select("doc_id", "text"), eq1Dir,
       "doc_id", "text", batchId = 0L, compactEvery = 0,
       markup = true, classifier = clf)
-    // E22 at the decade: the bloom fast path must be acceptance-
-    // invisible — same config with bloom=true, byte-identical corpus
-    for (i <- 0 until nBatches)
-      CurationJob.applyBatch(batchOf(i).select("doc_id", "text"), eqbDir,
-        "doc_id", "text", batchId = i.toLong, compactEvery = 4,
-        markup = true, classifier = clf, bloom = true)
     // setEq is set-based (duplicate-blind), so the equality invariant also
     // checks multiset cardinality: streamed and batch corpora must have the
     // SAME row count AND distinct doc_ids — a daemon bug that leaves both a
@@ -120,22 +109,8 @@ object DaemonSweep {
     val eqStreamEqualsBatch = eqRows == eq1Rows && eqIdsDistinct && setEq(
       corpusDF(eqDir).select("doc_id", "text"),
       corpusDF(eq1Dir).select("doc_id", "text"))
-    val eqbRows = corpusDF(eqbDir).count()
-    val bloomEqualsPlain = eqbRows == eqRows && setEq(
-      corpusDF(eqbDir).select("doc_id", "text"),
-      corpusDF(eqDir).select("doc_id", "text"))
-    // the definite-new verdict's consistency invariant, at the decade:
-    // OR-merged standing words ≡ the filter of the standing fp index
-    def bloomMap(df: DataFrame): Map[Int, Long] = df
-      .groupBy(col("word")).agg(expr("bit_or(bits)").as("bits"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val bloomWordsConsistent =
-      bloomMap(indexDF(eqbDir, "bloom")) ==
-        bloomMap(Dedup.bloomWords(indexDF(eqbDir, "index").distinct()))
     println(s"[daemon-sweep] eq: $eqRows corpus rows (batch: $eq1Rows, " +
-      s"ids-distinct: $eqIdsDistinct), streamed==batch: $eqStreamEqualsBatch, " +
-      s"bloom==plain: $bloomEqualsPlain, bloom-words-consistent: " +
-      s"$bloomWordsConsistent")
+      s"ids-distinct: $eqIdsDistinct), streamed==batch: $eqStreamEqualsBatch")
 
     // ——— 2. full stack + index ≡ corpus ———
     val fDir = s"$workDir/full"
@@ -224,8 +199,6 @@ object DaemonSweep {
          | "eq_corpus_rows": $eqRows, "eq_batch_rows": $eq1Rows,
          | "eq_ids_distinct": $eqIdsDistinct,
          | "eq_streamed_equals_batch": $eqStreamEqualsBatch,
-         | "eq_bloom_equals_plain": $bloomEqualsPlain,
-         | "bloom_words_consistent": $bloomWordsConsistent,
          | "full_corpus_rows": $fullRows, "ids_distinct": $idsDistinct,
          | "fp_index_covers_corpus": $fpCovers,
          | "band_index_equals_corpus": $bandsEqual,
@@ -238,8 +211,7 @@ object DaemonSweep {
          | "secs": ${math.round(secs)}}""".stripMargin.replace("\n", "")
     println(json)
     Files.writeString(Paths.get(s"$workDir/daemon_sweep.json"), json)
-    val allOk = eqStreamEqualsBatch && bloomEqualsPlain &&
-      bloomWordsConsistent && idsDistinct && fpCovers &&
+    val allOk = eqStreamEqualsBatch && idsDistinct && fpCovers &&
       bandsEqual && blocksEqual && semidxEqual && knnEqual &&
       ledgerSearchEqual && redeliveryNoop
     spark.stop()

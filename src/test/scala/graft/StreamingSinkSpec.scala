@@ -208,8 +208,8 @@ class StreamingSinkSpec extends SparkTestBase {
     }.mkString(" ")
     val dir = java.nio.file.Files.createTempDirectory("graft-curation-compact").toString
     val K = 3
-    def entries(sub: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
+    def entries(sub: String, root: String = dir) = {
+      val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       fs.listStatus(p).map(_.getPath.getName).toSeq.sorted
     }
@@ -259,6 +259,19 @@ class StreamingSinkSpec extends SparkTestBase {
     // proved the folds lost nothing.
     assert(entries("data") == Seq("b10", "b11", "b9", "h3", "h6", "h9"),
       entries("data").toString)
+    // the same 12 batches with every text gate on: each gate's standing
+    // dir is compacted along with the fp index, never left to grow
+    val dir2 = java.nio.file.Files.createTempDirectory("graft-curation-compact2").toString
+    (0 until 12).foreach { b =>
+      CurationJob.applyBatch(rows(b).toDF("doc_id", "text"), dir2,
+        "doc_id", "text", batchId = b.toLong, compactEvery = K,
+        fuzzy = true, spanTrim = true, searchStats = true)
+    }
+    Seq("index", "bands", "blocks", "sstats").foreach { sub =>
+      assert(entries(sub, dir2).size <= K + 1, s"$sub: ${entries(sub, dir2)}")
+    }
+    assert(entries("data", dir2) == Seq("b10", "b11", "b9", "h3", "h6", "h9"),
+      entries("data", dir2).toString)
   }
 
   test("curation daemon fuzzy gate: paraphrases of accepted content are vetoed across batches") {
@@ -403,61 +416,6 @@ class StreamingSinkSpec extends SparkTestBase {
     assert(corpusIds(dir2) == Set(1L, 2L, 12L, 13L), corpusIds(dir2).toString)
   }
 
-  test("curation daemon bloom gate (E22): acceptance identical to the plain loop; standing words equal the index's filter; re-delivery no-op") {
-    import spark.implicits._
-    import graft.streaming.CurationJob
-    import graft.operators.Dedup
-    val pool = Vector("quick", "brown", "foxes", "jumped", "fences",
-      "little", "garden", "stones", "rivers", "bright", "clouds",
-      "forest", "meadow", "silver", "golden", "branch")
-    def doc(seed: Int): String = (0 until 60).map { i =>
-      if (i % 7 == 3) "the" else if (i % 11 == 5) "of"
-      else if (i % 17 == 2) s"word$seed"
-      else pool((seed * 13 + i * 5) % pool.size)
-    }.mkString(" ")
-    // each batch: one fresh doc + (from batch 2) one duplicate of a
-    // doc accepted two batches earlier — the duplicate exercises the
-    // maybe path (its fp IS in the filter), the fresh doc the
-    // definite-new path; batch 0/1 are all-fresh (index read skipped)
-    def rows(b: Int): Seq[(Long, String)] = {
-      val fresh = (100L + b, doc(b))
-      if (b >= 2) Seq(fresh, (900L + b, doc(b - 2))) else Seq(fresh)
-    }
-    val dirB = java.nio.file.Files.createTempDirectory("graft-curation-bloom").toString
-    val dirP = java.nio.file.Files.createTempDirectory("graft-curation-plain").toString
-    (0 until 8).foreach { b =>
-      CurationJob.applyBatch(rows(b).toDF("doc_id", "text"), dirB,
-        "doc_id", "text", batchId = b.toLong, compactEvery = 3, bloom = true)
-      CurationJob.applyBatch(rows(b).toDF("doc_id", "text"), dirP,
-        "doc_id", "text", batchId = b.toLong, compactEvery = 3)
-    }
-    def corpus(dir: String) = spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$dir/data")
-      .select("doc_id", "text").collect().map(_.toString).toSet
-    // the filter is a pure fast path: byte-identical acceptance
-    assert(corpus(dirB) == corpus(dirP))
-    assert(corpus(dirB).size == 8, corpus(dirB).toString)
-    // invariant the definite-new verdict rests on: the OR-merged
-    // standing words ARE the filter of the standing fp index
-    def words(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy(col("word")).agg(expr("bit_or(bits)").as("bits"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val standing = words(spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$dirB/bloom"))
-    val fromIndex = words(Dedup.bloomWords(spark.read
-      .option("recursiveFileLookup", "true").parquet(s"$dirB/index")
-      .distinct()))
-    assert(standing == fromIndex)
-    // re-delivery of the last batch is a no-op (own bloom + index
-    // shards excluded on read, both rewritten identically)
-    val before = corpus(dirB)
-    CurationJob.applyBatch(rows(7).toDF("doc_id", "text"), dirB,
-      "doc_id", "text", batchId = 7L, compactEvery = 3, bloom = true)
-    assert(corpus(dirB) == before)
-    assert(words(spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dirB/bloom")) == standing)
-  }
-
   test("incremental kNN graph (E23): streamed edge shards ≡ batch graph across batches, compaction, re-delivery") {
     import spark.implicits._
     import graft.streaming.CurationJob
@@ -595,52 +553,6 @@ class StreamingSinkSpec extends SparkTestBase {
       intercept[IllegalArgumentException] {
         CurationJob.searchCorpus(spark, dir, "doc_id", "text", Seq(virtual))
       }
-  }
-
-  test("bloom toggled ON mid-corpus: backfill from the standing index keeps duplicates out") {
-    import spark.implicits._
-    import graft.streaming.CurationJob
-    import graft.operators.Dedup
-    val pool = Vector("quick", "brown", "foxes", "jumped", "fences",
-      "little", "garden", "stones", "rivers", "bright", "clouds",
-      "forest", "meadow", "silver", "golden", "branch")
-    def doc(seed: Int): String = (0 until 60).map { i =>
-      if (i % 7 == 3) "the" else if (i % 11 == 5) "of"
-      else if (i % 17 == 2) s"word$seed"
-      else pool((seed * 13 + i * 5) % pool.size)
-    }.mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-curation-bftog").toString
-    // batches 0-2 run WITHOUT bloom → standing fp index, no bloom dir
-    (0 until 3).foreach { b =>
-      CurationJob.applyBatch(Seq((100L + b, doc(b))).toDF("doc_id", "text"),
-        dir, "doc_id", "text", batchId = b.toLong, compactEvery = 10)
-    }
-    def corpusIds = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$dir/data").select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(corpusIds == Set(100L, 101L, 102L))
-    // batch 3 runs WITH bloom and carries a duplicate of accepted doc
-    // 0 plus a fresh doc: without the backfill the empty filter would
-    // read the duplicate as definitely-new and admit it
-    CurationJob.applyBatch(
-      Seq((900L, doc(0)), (103L, doc(3))).toDF("doc_id", "text"),
-      dir, "doc_id", "text", batchId = 3L, compactEvery = 10, bloom = true)
-    assert(corpusIds == Set(100L, 101L, 102L, 103L),
-      s"pre-bloom duplicate admitted: $corpusIds")
-    // the backfilled filter covers the WHOLE standing index (pre- and
-    // post-toggle fps): OR-merged words ≡ the index's own filter
-    def words(df: org.apache.spark.sql.DataFrame) = df
-      .groupBy(col("word")).agg(expr("bit_or(bits)").as("bits"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(words(spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$dir/bloom")) ==
-      words(Dedup.bloomWords(spark.read
-        .option("recursiveFileLookup", "true").parquet(s"$dir/index")
-        .distinct())))
-    // later bloom batches keep excluding pre-toggle content
-    CurationJob.applyBatch(
-      Seq((901L, doc(1)), (104L, doc(4))).toDF("doc_id", "text"),
-      dir, "doc_id", "text", batchId = 4L, compactEvery = 10, bloom = true)
-    assert(corpusIds == Set(100L, 101L, 102L, 103L, 104L))
   }
 
   test("curation loop survives an all-rejected batch: empty shards don't poison later reads") {
