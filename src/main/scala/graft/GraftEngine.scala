@@ -9,6 +9,7 @@ import graft.functions.ExtJson
 import graft.operators.Router
 import graft.plans.MongoPipeline
 import graft.sources.TableCatalog
+import graft.streaming.Envelope
 
 /** Facade tying [[EngineConfig]] to jobs — the switch-over surface for
   * a reference user: the same config sections (direct-read
@@ -47,17 +48,10 @@ object GraftEngine {
     val piped = cfg.pipelineFor(ns, stream = false)
       .map(MongoPipeline(base, _, cat.table)).getOrElse(base)
     val idCol = piped.columns.head
-    val meta = ExtJson.obj(
-      ExtJson.field("_id", ExtJson.numberLong(col(idCol))),
-      ExtJson.field("ns", ExtJson.str(lit(ns))),
-      ExtJson.field("op", ExtJson.str(lit(""))))
     piped.select(
-      Router.topic(lit(ns), cfg.producerMaps.map(m =>
-        Router.ProducerMap(m.mongoNamespace, m.kafkaTopic)), cfg.topicPrefix)
-        .as("topic"),
+      Router.topic(lit(ns), cfg.producerMaps, cfg.topicPrefix).as("topic"),
       col(idCol).cast("string").as("key"),
-      concat(lit("{\"meta\":"), meta, lit(",\"data\":"),
-        encodeDocument(piped.schema), lit("}")).as("value"))
+      Envelope.direct(col(idCol), ns, encodeDocument(piped.schema)).as("value"))
   }
 
   /** All configured direct reads, unioned — `exit-after-direct-reads`

@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import graft.operators.Router.ProducerMap
+
 /** Engine configuration mirroring the reference's TOML surface
   * (/root/reference/route81.go:120-147): namespaces, producer maps,
   * per-namespace pipelines, consumers, resume metadata. JSON here
@@ -21,15 +23,13 @@ final case class ConsumerConf(
     documentRootPath: String = "",
     deleteIdPath: String = "")
 
-final case class ProducerMapConf(mongoNamespace: String, kafkaTopic: String)
-
 final case class EngineConfig(
     changeStreamNamespaces: Seq[String] = Seq(""),
     directReadNamespaces: Seq[String] = Nil,
     topicPrefix: String = "",
     metadataDb: String = "route81",
     resumeName: String = "default",
-    producerMaps: Seq[ProducerMapConf] = Nil,
+    producerMaps: Seq[ProducerMap] = Nil,
     pipelines: Seq[PipelineConf] = Nil,
     consumers: Seq[ConsumerConf] = Nil) {
 
@@ -86,7 +86,7 @@ object EngineConfig {
       metadataDb = opt(root, "metadata-db").map(_.asText()).getOrElse("route81"),
       resumeName = opt(root, "resume-name").map(_.asText()).getOrElse("default"),
       producerMaps = opt(root, "producer-map").toSeq.flatMap(_.elements().asScala).map(p =>
-        ProducerMapConf(
+        ProducerMap(
           opt(p, "mongo-namespace").map(_.asText()).getOrElse(""),
           opt(p, "kafka-topic").map(_.asText()).getOrElse(""))),
       pipelines = opt(root, "pipeline").toSeq.flatMap(_.elements().asScala).map(p =>

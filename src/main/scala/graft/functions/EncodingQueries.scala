@@ -7,36 +7,13 @@ import org.apache.spark.sql.types._
 import graft.QuerySpec
 import graft.operators.Cdc
 import graft.sources.TableCatalog
+import graft.streaming.Envelope
 
 /** SURVEY.md §2 group B: encoding/decoding queries + DuckDB oracles. */
 object EncodingQueries {
 
   private def oplog(s: SparkSession, dir: String): DataFrame =
     Cdc.eventsAsOpLog(TableCatalog(s, dir).events)
-
-  /** The full producer message for the events op log, byte-identical
-    * on both engines: meta always present, data omitted for deletes
-    * (reference README §remove-operation). Public: the
-    * consumer-round-trip query feeds on it.
-    */
-  def envelope(log: DataFrame): DataFrame = {
-    import ExtJson._
-    val meta = obj(
-      field("_id", numberLong(col("id"))),
-      field("ts", date(col("ts"))),
-      field("ns", str(col("ns"))),
-      field("op", str(col("op"))))
-    val data = obj(
-      field("user_id", numberLong(col("data.user_id"))),
-      field("value", numberDouble(col("data.value"))),
-      field("props", str(col("data.props"))))
-    log.select(col("event_id"),
-      when(col("op") === "d",
-        concat(lit("{\"meta\":"), meta, lit("}")))
-      .otherwise(
-        concat(lit("{\"meta\":"), meta, lit(",\"data\":"), data, lit("}")))
-      .as("msg"))
-  }
 
   private val metaSql =
     """'{"meta":{"_id":{"$numberLong":"' || CAST(user_id AS VARCHAR) ||
@@ -46,7 +23,10 @@ object EncodingQueries {
       |     WHEN event_type = 'error' THEN 'd' ELSE 'u' END || '"}'""".stripMargin
 
   val specs: Seq[QuerySpec] = Seq(
-    QuerySpec("ext_json_encode", (s, dir) => envelope(oplog(s, dir)),
+    // the full producer message: meta always present, data omitted for
+    // deletes (reference README §remove-operation)
+    QuerySpec("ext_json_encode", (s, dir) =>
+      oplog(s, dir).select(col("event_id"), Envelope.encode.as("msg")),
       s"""SELECT event_id,
          |CASE WHEN event_type = 'error' THEN $metaSql || '}'
          |ELSE $metaSql ||

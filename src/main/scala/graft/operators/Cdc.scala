@@ -51,32 +51,36 @@ object Cdc {
     * row_number sort. Keys whose final op is a delete vanish.
     */
   def latestState(oplog: DataFrame): DataFrame =
-    latestWithDeletes(oplog)
-      .filter(col("op") =!= "d")
-      .select(col("data.*"))
+    upserts(latestWithDeletes(oplog))
 
-  /** Like latestState but keeps delete markers — the shape applyTo
-    * needs to know which base keys to drop.
+  /** Fold an op log to the last op per key, delete markers kept: the
+    * `(id, deleted, doc)` frame [[applyTo]] applies (the message fold
+    * [[graft.streaming.MessageConsumer.latest]] yields the same shape).
     */
-  private def latestWithDeletes(oplog: DataFrame): DataFrame =
+  def latestWithDeletes(oplog: DataFrame): DataFrame =
     oplog
       .groupBy(col("id"))
       .agg(max_by(struct(col("op"), col("data")),
         struct(col("ts"), col("event_id"))).as("last"))
-      .select(col("id"), col("last.op").as("op"), col("last.data").as("data"))
+      .select(col("id"), (col("last.op") === "d").as("deleted"),
+        col("last.data").as("doc"))
+
+  /** The documents of a folded frame's upserted (not deleted) keys. */
+  def upserts(latest: DataFrame): DataFrame =
+    latest.filter(!col("deleted")).select(col("doc.*"))
 
   /** D3: consumer bulk-apply — ReplaceOne-upsert + DeleteOne semantics
-    * (route81.go:1088-1117) against an existing materialized state.
-    * Both sides hash-partition on the key: one shuffle each for the
-    * anti-join and the union, and AQE broadcasts `latest` when the
-    * op batch is small relative to the base (the common CDC case).
+    * (route81.go:1088-1117) of a folded `(id, deleted, doc)` frame
+    * against an existing materialized state. Both sides hash-partition
+    * on the key: one shuffle each for the anti-join and the union, and
+    * AQE broadcasts `latest` when the op batch is small relative to the
+    * base (the common CDC case). Applying the same frame twice leaves
+    * the state of the first application.
     */
-  def applyTo(base: DataFrame, oplog: DataFrame, keyCol: String): DataFrame = {
-    val latest = latestWithDeletes(oplog)
+  def applyTo(base: DataFrame, latest: DataFrame, keyCol: String): DataFrame = {
     val untouched = base.join(latest.select(col("id")),
       base(keyCol).cast("string") === col("id"), "left_anti")
-    val upserts = latest.filter(col("op") =!= "d").select(col("data.*"))
-    untouched.unionByName(upserts)
+    untouched.unionByName(upserts(latest))
   }
 
   /** D1: upsert-vs-delete classification (route81.go:1019-1030): a

@@ -98,7 +98,8 @@ object CdcQueries {
     QuerySpec("consumer_apply", (s, dir) => {
       val log = oplog(s, dir)
       val base = Cdc.latestState(log.filter(col("event_id") % 2 === 0))
-      Cdc.applyTo(base, log.filter(col("event_id") % 2 === 1), "user_id")
+      Cdc.applyTo(base,
+        Cdc.latestWithDeletes(log.filter(col("event_id") % 2 === 1)), "user_id")
     },
       """WITH ranked AS (
         |  SELECT *, row_number() OVER (PARTITION BY user_id, event_id % 2

@@ -2869,7 +2869,7 @@ object MongoPipeline {
     require(stages.size == 1 && stages.head.get("$match") != null &&
       stages.head.get("$match").get("$expr") != null,
       "correlated $lookup pipeline support: exactly one {$match: {$expr: ...}} stage")
-    val exprNode = rewriteFieldRefs(stages.head.get("$match").get("$expr"))
+    val exprNode = rewriteFieldRefs(stages.head.get("$match").get("$expr"), "__f.")
     val binds: Map[String, Column] =
       Option(spec.get("let")).map(_.properties().asScala.toSeq.map { e =>
         val v = e.getValue
@@ -2895,23 +2895,24 @@ object MongoPipeline {
       .drop("__rid")
   }
 
-  /** Deep-rewrite "$field" refs to "$__f.field" (foreign-side
-    * resolution) leaving "$$var" lambda/let refs untouched — the
-    * pre-pass that lets one compiled expression mix both sides of a
-    * correlated lookup.
+  /** Deep-rewrite "$field" refs to "$<prefix>field" leaving "$$var"
+    * lambda/let refs untouched — the pre-pass that lets one compiled
+    * expression mix two sides of a join: the foreign side of a
+    * correlated lookup (`__f.`), the target side of a `$merge` update
+    * pipeline (`t_`).
     */
-  private def rewriteFieldRefs(n: JsonNode): JsonNode = n match {
+  private[plans] def rewriteFieldRefs(n: JsonNode, prefix: String): JsonNode = n match {
     case t if t.isTextual &&
         t.asText().startsWith("$") && !t.asText().startsWith("$$") =>
-      mapper.getNodeFactory.textNode("$__f." + t.asText().drop(1))
+      mapper.getNodeFactory.textNode("$" + prefix + t.asText().drop(1))
     case o if o.isObject =>
       val out = mapper.createObjectNode()
       o.properties().asScala.toSeq.foreach(e =>
-        out.set[JsonNode](e.getKey, rewriteFieldRefs(e.getValue)))
+        out.set[JsonNode](e.getKey, rewriteFieldRefs(e.getValue, prefix)))
       out
     case arr if arr.isArray =>
       val out = mapper.createArrayNode()
-      arr.elements().asScala.foreach(e => out.add(rewriteFieldRefs(e)): Unit)
+      arr.elements().asScala.foreach(e => out.add(rewriteFieldRefs(e, prefix)): Unit)
       out
     case other => other
   }

@@ -25,9 +25,6 @@ object PipelineSinks {
 
   private val mapper = new ObjectMapper()
 
-  /** `$out`: the result replaces the target wholesale. */
-  def out(result: DataFrame): DataFrame = result
-
   /** `$merge`-style keyed merge of `source` into `target`.
     *
     * @param on            join key column (Mongo default `_id`)
@@ -36,10 +33,64 @@ object PipelineSinks {
     */
   def merge(target: DataFrame, source: DataFrame, on: String,
             whenMatched: String = "replace",
-            whenNotMatched: String = "insert"): DataFrame = {
-    require(target.columns.sameElements(source.columns) ||
-      target.columns.toSet == source.columns.toSet,
+            whenNotMatched: String = "insert"): DataFrame =
+    mergeCore(target, source, on, whenNotMatched) { c =>
+      whenMatched match {
+        case "replace"      => col(s"s_$c")
+        case "keepExisting" => col(s"t_$c")
+        case "merge"        => coalesce(col(s"s_$c"), col(s"t_$c"))
+        case "fail" => raise_error(concat(
+          lit(s"$$merge whenMatched: fail — key exists: "), col(s"t_$on").cast("string")))
+        case other =>
+          throw new IllegalArgumentException(s"unsupported whenMatched: $other")
+      }
+    }
+
+  /** `$merge` with a whenMatched UPDATE PIPELINE (Mongo's custom-merge
+    * form): an array of `{$set: {...}}` stages where plain `$field`
+    * reads the EXISTING target row and `$$new.field` reads the
+    * incoming source row. Compiles to per-column when-chains over the
+    * same single full-outer join as the scalar modes.
+    */
+  def mergeWithPipeline(target: DataFrame, source: DataFrame, on: String,
+                        whenMatchedPipeline: String,
+                        whenNotMatched: String = "insert"): DataFrame = {
+    val stages = mapper.readTree(whenMatchedPipeline)
+    require(stages.isArray, "whenMatched pipeline must be an array")
+    val cols = target.columns.toSeq
+    // $$new resolves to the source row; bare $field to the target row
+    val newStruct = struct(cols.map(c => col(s"s_$c").as(c)): _*)
+    var updated: Map[String, Column] =
+      cols.map(c => c -> col(s"t_$c")).toMap
+    stages.elements().asScala.foreach { stage =>
+      val set = stage.get("$set")
+      require(set != null, "whenMatched pipeline supports $set stages")
+      set.properties().asScala.foreach { e =>
+        updated += e.getKey -> MongoPipeline.expression(
+          MongoPipeline.rewriteFieldRefs(e.getValue, "t_"), Map("new" -> newStruct))
+      }
+    }
+    mergeCore(target, source, on, whenNotMatched)(updated)
+  }
+
+  /** The one full-outer join both `$merge` forms compile to: target
+    * and source columns aliased `t_`/`s_`, `matchedVal(c)` picks column
+    * `c` for a key on both sides, a target-only row stays, and a
+    * source-only row is inserted, dropped or raised on per
+    * `whenNotMatched`.
+    */
+  private def mergeCore(target: DataFrame, source: DataFrame, on: String,
+                        whenNotMatched: String)
+                       (matchedVal: String => Column): DataFrame = {
+    require(target.columns.toSet == source.columns.toSet,
       "merge requires same-schema source and target")
+    val unmatchedKeep = whenNotMatched match {
+      case "insert"  => true
+      case "discard" => false
+      case "fail"    => true // the pick below raises instead of keeping
+      case other =>
+        throw new IllegalArgumentException(s"unsupported whenNotMatched: $other")
+    }
     val cols = target.columns.toSeq
     val t = target.select(cols.map(c => col(c).as(s"t_$c")): _*)
     val s = source.select(cols.map(c => col(c).as(s"s_$c")): _*)
@@ -47,23 +98,6 @@ object PipelineSinks {
     val matched = col(s"t_$on").isNotNull && col(s"s_$on").isNotNull
     val onlyTarget = col(s"s_$on").isNull
     val onlySource = col(s"t_$on").isNull
-
-    def matchedVal(c: String) = whenMatched match {
-      case "replace"      => col(s"s_$c")
-      case "keepExisting" => col(s"t_$c")
-      case "merge"        => coalesce(col(s"s_$c"), col(s"t_$c"))
-      case "fail" => raise_error(concat(
-        lit(s"$$merge whenMatched: fail — key exists: "), col(s"t_$on").cast("string")))
-      case other =>
-        throw new IllegalArgumentException(s"unsupported whenMatched: $other")
-    }
-    def unmatchedKeep = whenNotMatched match {
-      case "insert"  => true
-      case "discard" => false
-      case "fail"    => true // filter below raises instead of keeping
-      case other =>
-        throw new IllegalArgumentException(s"unsupported whenNotMatched: $other")
-    }
     val picked = cols.map { c =>
       when(matched, matchedVal(c))
         .when(onlyTarget, col(s"t_$c"))
@@ -78,94 +112,37 @@ object PipelineSinks {
     kept.select(picked: _*)
   }
 
-  /** `$merge` with a whenMatched UPDATE PIPELINE (Mongo's custom-merge
-    * form): an array of `{$set: {...}}` stages where plain `$field`
-    * reads the EXISTING target row and `$$new.field` reads the
-    * incoming source row. Compiles to per-column when-chains over the
-    * same single full-outer join as the scalar modes.
-    */
-  def mergeWithPipeline(target: DataFrame, source: DataFrame, on: String,
-                        whenMatchedPipeline: String,
-                        whenNotMatched: String = "insert"): DataFrame = {
-    val stages = mapper.readTree(whenMatchedPipeline)
-    require(stages.isArray, "whenMatched pipeline must be an array")
-    val cols = target.columns.toSeq
-    val t = target.select(cols.map(c => col(c).as(s"t_$c")): _*)
-    val s = source.select(cols.map(c => col(c).as(s"s_$c")): _*)
-    val joined = t.join(s, col(s"t_$on") <=> col(s"s_$on"), "full_outer")
-    val matched = col(s"t_$on").isNotNull && col(s"s_$on").isNotNull
-    val onlyTarget = col(s"s_$on").isNull
-    // $$new resolves to the source row; bare $field to the target row
-    val newStruct = struct(cols.map(c => col(s"s_$c").as(c)): _*)
-    var updated: Map[String, Column] =
-      cols.map(c => c -> col(s"t_$c")).toMap
-    scala.jdk.CollectionConverters.IteratorHasAsScala(stages.elements())
-      .asScala.foreach { stage =>
-        val set = stage.get("$set")
-        require(set != null, "whenMatched pipeline supports $set stages")
-        scala.jdk.CollectionConverters.IteratorHasAsScala(set.properties().iterator())
-          .asScala.foreach { e =>
-            val rewritten = rewriteTargetRefs(e.getValue)
-            updated += e.getKey -> MongoPipeline.expression(
-              rewritten, Map("new" -> newStruct))
-          }
-      }
-    val picked = cols.map { c =>
-      when(matched, updated(c))
-        .when(onlyTarget, col(s"t_$c"))
-        .otherwise(col(s"s_$c")).as(c)
-    }
-    val kept =
-      if (whenNotMatched == "discard") joined.filter(col(s"t_$on").isNotNull)
-      else joined
-    kept.select(picked: _*)
-  }
-
-  /** Rewrite bare "$field" refs to "$t_field" (the aliased target
-    * columns) leaving "$$new..." for the binds map.
-    */
-  private def rewriteTargetRefs(n: com.fasterxml.jackson.databind.JsonNode)
-      : com.fasterxml.jackson.databind.JsonNode = n match {
-    case t if t.isTextual && t.asText().startsWith("$") &&
-        !t.asText().startsWith("$$") =>
-      mapper.getNodeFactory.textNode("$t_" + t.asText().drop(1))
-    case o if o.isObject =>
-      val out = mapper.createObjectNode()
-      o.properties().asScala.toSeq.foreach(e =>
-        out.set[com.fasterxml.jackson.databind.JsonNode](
-          e.getKey, rewriteTargetRefs(e.getValue)))
-      out
-    case arr if arr.isArray =>
-      val out = mapper.createArrayNode()
-      arr.elements().asScala.foreach(e => out.add(rewriteTargetRefs(e)): Unit)
-      out
-    case other => other
-  }
-
   /** Persist a merge END-TO-END against a live parquet table: read
     * the current target from `targetDir`, merge `source` into it, and
-    * atomically swap the result in. `$merge` reads the very table it
-    * overwrites, so the new generation is fully materialized in a side
-    * directory BEFORE the live one is touched — a half-written target
-    * can never be observed, and a failed merge leaves the old
-    * generation in place (the idempotent-rewrite discipline a 100 TB
-    * target needs; a lakehouse table format would do the same swap via
-    * its commit log).
+    * atomically swap the result in through [[rewriteParquet]].
     */
   def mergeIntoParquet(spark: org.apache.spark.sql.SparkSession,
                        source: DataFrame, targetDir: String, on: String,
                        whenMatched: String = "replace",
-                       whenNotMatched: String = "insert"): Unit = {
-    recoverGeneration(spark, targetDir)
-    val path = new org.apache.hadoop.fs.Path(targetDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+                       whenNotMatched: String = "insert"): Unit =
     // Mongo's $merge creates a missing target collection: a first
     // merge bootstraps from an empty same-schema table (every source
     // row is "not matched").
-    val target =
-      if (fs.exists(path)) spark.read.parquet(targetDir) else source.limit(0)
-    val merged = merge(target, source, on, whenMatched, whenNotMatched)
-    swapInto(spark, merged, targetDir)
+    rewriteParquet(spark, targetDir)(current =>
+      merge(current.getOrElse(source.limit(0)), source, on, whenMatched, whenNotMatched))
+
+  /** Rewrite a live parquet table from itself: repair a half-done swap
+    * ([[recoverGeneration]]), hand `next` the current generation (None
+    * when the table does not exist yet), and swap its result in. A
+    * rewrite reads the very table it overwrites, so the new generation
+    * is fully materialized in a side directory BEFORE the live one is
+    * touched — a half-written target can never be observed, and a
+    * failed rewrite leaves the old generation in place (the
+    * idempotent-rewrite discipline a 100 TB target needs; a lakehouse
+    * table format would do the same swap via its commit log).
+    */
+  def rewriteParquet(spark: org.apache.spark.sql.SparkSession, dir: String)
+                    (next: Option[DataFrame] => DataFrame): Unit = {
+    recoverGeneration(spark, dir)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val current = if (fs.exists(path)) Some(spark.read.parquet(dir)) else None
+    swapInto(spark, next(current), dir)
   }
 
   /** `$out` persisted: wholesale replace of the parquet target, same

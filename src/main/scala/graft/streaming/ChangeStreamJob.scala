@@ -2,21 +2,18 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.Row
 
-import graft.functions.ExtJson
 import graft.operators.{Cdc, Router}
-import graft.plans.MongoPipeline
+import graft.plans.{MongoPipeline, PipelineSinks}
 
 /** Structured-Streaming assembly of the reference's producer/consumer
   * loops (SURVEY.md §2 E4): change stream in → optional aggregation
   * pipeline → Extended-JSON envelope + topic routing out; and the
-  * consumer direction as a foreachBatch bulk upsert, the micro-batch
-  * twin of route81's bulk writer (route81.go:1071-1131). Checkpoint
-  * location IS the resume feature (route81.go:199-224): restart with
-  * the same checkpoint dir and the stream continues after the last
-  * committed batch.
+  * consumer direction as a foreachBatch bulk upsert/delete into a
+  * parquet target, the micro-batch twin of route81's bulk writer
+  * (route81.go:1071-1131). Checkpoint location IS the resume feature
+  * (route81.go:199-224): restart with the same checkpoint dir and the
+  * stream continues after the last committed batch.
   */
 object ChangeStreamJob {
 
@@ -29,52 +26,29 @@ object ChangeStreamJob {
               maps: Seq[Router.ProducerMap] = Nil,
               topicPrefix: String = ""): DataFrame = {
     val piped = pipelineJson.map(MongoPipeline(oplog, _)).getOrElse(oplog)
-    val meta = ExtJson.obj(
-      ExtJson.field("_id", ExtJson.numberLong(col("id"))),
-      ExtJson.field("ts", ExtJson.date(col("ts"))),
-      ExtJson.field("ns", ExtJson.str(col("ns"))),
-      ExtJson.field("op", ExtJson.str(col("op"))))
-    val data = ExtJson.obj(
-      ExtJson.field("user_id", ExtJson.numberLong(col("data.user_id"))),
-      ExtJson.field("value", ExtJson.numberDouble(col("data.value"))),
-      ExtJson.field("props", ExtJson.str(col("data.props"))))
     piped.select(
       Router.topic(col("ns"), maps, topicPrefix).as("topic"),
       col("id").as("key"),
-      when(col("op") === "d", concat(lit("{\"meta\":"), meta, lit("}")))
-        .otherwise(concat(lit("{\"meta\":"), meta, lit(",\"data\":"), data, lit("}")))
-        .as("value"),
+      Envelope.encode.as("value"),
       col("op"), col("ts"), col("event_id").as("seq"))
   }
 
-  /** Consumer sink: applies each micro-batch to a keyed state table
-    * via [[Cdc.applyTo]] — upsert/delete bulk semantics with
-    * `bulk-size` ≈ micro-batch. State lives in a *global* temp view
-    * (`global_temp.<stateView>`): foreachBatch runs in a cloned
-    * session, and only the global catalog is shared across clones.
-    * Each batch is cached before the view swap so reads hit
-    * materialized data; a production deployment would swap in a real
-    * keyed table (the view is the test/demo sink).
+  /** Consumer sink: a foreachBatch body applying a micro-batch of
+    * produced messages to the parquet table at `targetDir`, upsert and
+    * delete per key with `bulk-size` ≈ micro-batch. The batch folds to
+    * its last action per key in `orderCol` order
+    * ([[MessageConsumer.latest]]), [[Cdc.applyTo]] applies that to the
+    * live target (a missing target starts as the batch's upserts), and
+    * [[PipelineSinks.rewriteParquet]] swaps the result in as one
+    * generation. Re-delivering a batch id after its swap — a retry
+    * before the stream committed it — applies the same last actions
+    * again and leaves the target's rows as they were.
     */
-  def consumerSink(spark: SparkSession, oplogBatchToState: DataFrame => DataFrame,
-                   stateView: String)(batch: DataFrame, batchId: Long): Unit = {
-    val qualified = s"global_temp.$stateView"
-    val existing =
-      if (spark.catalog.tableExists(qualified)) Some(spark.table(qualified))
-      else None
-    val current = existing.getOrElse(oplogBatchToState(batch.limit(0)))
-    val updated = Cdc.applyTo(current, batch, "user_id")
-    updated.cache().count() // materialize before replacing the view
-    updated.createOrReplaceGlobalTempView(stateView)
-    // drop the previous batch's cached state or storage grows with
-    // every micro-batch
-    existing.foreach(_.unpersist())
+  def consumerSink(spark: SparkSession, targetDir: String, orderCol: String)
+                  (batch: DataFrame, batchId: Long): Unit = {
+    val latest = MessageConsumer.latest(batch, orderCol)
+    // user_id is the document field meta._id is drawn from
+    PipelineSinks.rewriteParquet(spark, targetDir)(
+      _.fold(Cdc.upserts(latest))(Cdc.applyTo(_, latest, "user_id")))
   }
-
-  /** Wire a produce stream to a sink with checkpointing (resume). */
-  def writer(messages: DataFrame, checkpoint: String): DataStreamWriter[Row] =
-    messages.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+
+import graft.operators.Cdc
 
 /** The consumer direction on real encoded messages (SURVEY.md §2 D1):
   * decode ext-JSON values, pull the upsert document from
@@ -13,21 +14,6 @@ import org.apache.spark.sql.types._
   * fold is the same single max_by shuffle as [[graft.operators.Cdc]].
   */
 object MessageConsumer {
-
-  /** Envelope schema for the events-domain messages this engine
-    * produces (ext-JSON type tags as nested structs).
-    */
-  val envelopeSchema: StructType = StructType(Seq(
-    StructField("meta", StructType(Seq(
-      StructField("_id", StructType(Seq(StructField("$numberLong", StringType)))),
-      StructField("ts", StructType(Seq(
-        StructField("$date", StructType(Seq(StructField("$numberLong", StringType))))))),
-      StructField("ns", StringType),
-      StructField("op", StringType)))),
-    StructField("data", StructType(Seq(
-      StructField("user_id", StructType(Seq(StructField("$numberLong", StringType)))),
-      StructField("value", StructType(Seq(StructField("$numberDouble", StringType)))),
-      StructField("props", StringType))))))
 
   /** Resolve a gval-style dotted path against a struct column. */
   def path(root: Column, dotted: String): Column =
@@ -40,7 +26,7 @@ object MessageConsumer {
   def classify(messages: DataFrame, valueCol: String = "value",
                documentRootPath: String = "data",
                deleteIdPath: String = "meta._id.$numberLong"): DataFrame = {
-    val j = from_json(col(valueCol), envelopeSchema)
+    val j = from_json(col(valueCol), Envelope.schema)
     messages
       .withColumn("__j", j)
       .withColumn("__root", path(col("__j"), documentRootPath))
@@ -49,20 +35,22 @@ object MessageConsumer {
       .withColumn("target_id", path(col("__j"), deleteIdPath))
   }
 
-  /** Fold a batch of messages (with an arrival-order column, the
-    * Kafka-offset analog) into final upsert state: last writer per id
-    * wins, trailing deletes drop the key.
+  /** Fold messages (with an arrival-order column, the Kafka-offset
+    * analog) to the last action per key, delete markers kept: the
+    * `(id, deleted, doc)` frame [[Cdc.applyTo]] applies.
     */
-  def fold(messages: DataFrame, offsetCol: String): DataFrame = {
-    val classified = classify(messages)
-    classified
+  def latest(messages: DataFrame, offsetCol: String): DataFrame =
+    classify(messages)
       .groupBy(col("target_id"))
       .agg(max_by(struct(col("action"), col("__root").as("root")),
         col(offsetCol)).as("last"))
-      .filter(col("last.action") === "upsert")
-      .select(
-        col("last.root.user_id.$numberLong").cast("long").as("user_id"),
-        col("last.root.value.$numberDouble").cast("double").as("value"),
-        col("last.root.props").as("props"))
-  }
+      .select(col("target_id").as("id"),
+        (col("last.action") === "delete").as("deleted"),
+        struct(Envelope.document(col("last.root")): _*).as("doc"))
+
+  /** Final upsert state of a batch of messages: last writer per id
+    * wins, trailing deletes drop the key.
+    */
+  def fold(messages: DataFrame, offsetCol: String): DataFrame =
+    Cdc.upserts(latest(messages, offsetCol))
 }

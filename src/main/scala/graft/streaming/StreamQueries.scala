@@ -53,9 +53,8 @@ object StreamQueries {
     // equal folding the op log directly (same oracle as
     // cdc_latest_state).
     QuerySpec("consumer_from_messages", (s, dir) => {
-      val log = Cdc.eventsAsOpLog(TableCatalog(s, dir).events)
-      val messages = graft.functions.EncodingQueries.envelope(log)
-        .withColumnRenamed("msg", "value")
+      val messages = Cdc.eventsAsOpLog(TableCatalog(s, dir).events)
+        .select(col("event_id"), Envelope.encode.as("value"))
       MessageConsumer.fold(messages, "event_id")
     },
       """SELECT user_id, value, props FROM (

@@ -159,8 +159,8 @@ object DaemonSweep {
         corpus, "doc_id", "text", searchTerms, 20))
     corpus.unpersist()
     println(s"[daemon-sweep] full: $fullRows corpus rows, ids-distinct: " +
-      s"$idsDistinct, fp⊆idx: $fpCovers, bands≡: $bandsEqual, " +
-      s"blocks≡: $blocksEqual, semidx≡: $semidxEqual, knn≡: $knnEqual")
+      s"$idsDistinct, fp<=idx: $fpCovers, bands==: $bandsEqual, " +
+      s"blocks==: $blocksEqual, semidx==: $semidxEqual, knn==: $knnEqual")
 
     // ——— 3. exactly-once: re-deliver the last batch ———
     def stateSig(): Seq[Long] = Seq(

@@ -50,7 +50,8 @@ class CdcSpec extends SparkTestBase {
     // folding the full log — the consumer path is exactly resumable.
     val n = log.agg(max("event_id")).head.getLong(0) / 2
     val base = Cdc.latestState(log.filter(col("event_id") <= n))
-    val applied = Cdc.applyTo(base, log.filter(col("event_id") > n), "user_id")
+    val applied = Cdc.applyTo(base,
+      Cdc.latestWithDeletes(log.filter(col("event_id") > n)), "user_id")
     val full = Cdc.latestState(log)
     assert(applied.exceptAll(full).isEmpty && full.exceptAll(applied).isEmpty)
   }

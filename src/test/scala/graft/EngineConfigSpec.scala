@@ -1,7 +1,8 @@
 package graft
 
-import graft.config.{ConsumerConf, EngineConfig, ProducerMapConf}
+import graft.config.{ConsumerConf, EngineConfig}
 import graft.functions.AvroCodec
+import graft.operators.Router.ProducerMap
 import graft.sources.TableCatalog
 
 class EngineConfigSpec extends SparkTestBase {
@@ -108,8 +109,8 @@ class EngineConfigSpec extends SparkTestBase {
     assert(cfg.topicPrefix == "r81")
     assert(cfg.changeStreamNamespaces == Seq("test.test", "anotherdb.mycol"))
     assert(cfg.directReadNamespaces == Seq("mydb.customers", "mydb.nations"))
-    assert(cfg.producerMaps == Seq(ProducerMapConf("mydb", "my-topic"),
-      ProducerMapConf("", "my-catchall-topic")))
+    assert(cfg.producerMaps == Seq(ProducerMap("mydb", "my-topic"),
+      ProducerMap("", "my-catchall-topic")))
     assert(cfg.pipelines.map(_.namespace) == Seq("test.test"))
     assert(!cfg.pipelines.head.direct)
     assert(cfg.pipelines.head.stages.trim ==

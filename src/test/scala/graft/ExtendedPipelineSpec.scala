@@ -226,6 +226,25 @@ class ExtendedPipelineSpec extends SparkTestBase {
     assert(out == Map(1L -> 10.0, 2L -> 25.0, 3L -> 30.0))
   }
 
+  test("$merge update pipeline: whenNotMatched fail raises on a new key, unknown modes are rejected") {
+    import spark.implicits._
+    val target = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v")
+    def stage(wnm: String) =
+      s"""{"into": "t", "on": "k",
+          "whenMatched": [{"$$set": {"v": {"$$add": ["$$v", "$$$$new.v"]}}}],
+          "whenNotMatched": "$wnm"}"""
+    def run(source: org.apache.spark.sql.DataFrame, wnm: String) =
+      PipelineSinks.applyMergeStage(source, stage(wnm), _ => target)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    // only matched keys: nothing to fail on
+    assert(run(Seq((2L, 5.0)).toDF("k", "v"), "fail") == Map(1L -> 10.0, 2L -> 25.0))
+    val err = intercept[Exception](run(Seq((2L, 5.0), (3L, 30.0)).toDF("k", "v"), "fail"))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("new key: 3")), err.toString)
+    intercept[IllegalArgumentException](run(Seq((3L, 30.0)).toDF("k", "v"), "upsert"))
+    intercept[IllegalArgumentException](run(Seq((3L, 30.0, 1)).toDF("k", "v", "x"), "insert"))
+  }
+
   test("$setWindowFields stdDev and covariance window operators") {
     import spark.implicits._
     val df = Seq((1L, 1.0, 2.0), (1L, 2.0, 4.0), (1L, 3.0, 6.0))

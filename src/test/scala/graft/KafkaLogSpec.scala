@@ -166,7 +166,6 @@ class KafkaLogSpec extends SparkTestBase {
   }
 
   test("capstone: full daemon loop — envelope → broker log → streaming consume → merge into a LIVE parquet target ≡ direct fold") {
-    import graft.plans.PipelineSinks
     val logDir = Files.createTempDirectory("graft-capstone-log").toString
     val ckpt = Files.createTempDirectory("graft-capstone-ckpt").toString
     val target = Files.createTempDirectory("graft-capstone-tgt").toString + "/state"
@@ -182,38 +181,16 @@ class KafkaLogSpec extends SparkTestBase {
       messages.filter(col("seq") <= mid), numPartitions = 4, seqCol = "seq")
 
     // consumer side: each micro-batch folds to per-key last action and
-    // applies upserts (keyed merge) + deletes (anti-join) to the live
-    // parquet target — route81's bulk writer against a real table,
-    // batch boundaries respecting per-partition offset order
+    // applies upserts + deletes to the live parquet target — route81's
+    // bulk writer against a real table, batch boundaries respecting
+    // per-partition offset order
     def consumeApply(): Unit = {
-      val classified = MessageConsumer.classify(
-        KafkaLog.subscribe(spark, logDir).filter(col("topic") === "g.events-topic"))
-      val q = classified.writeStream
+      val q = KafkaLog.subscribe(spark, logDir).filter(col("topic") === "g.events-topic")
+        .writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          val last = batch.groupBy(col("target_id"))
-            .agg(max_by(struct(col("action"), col("__root").as("root")),
-              col("offset")).as("l"))
-          val ups = last.filter(col("l.action") === "upsert").select(
-            col("l.root.user_id.$numberLong").cast("long").as("user_id"),
-            col("l.root.value.$numberDouble").cast("double").as("value"),
-            col("l.root.props").as("props"))
-          val dels = last.filter(col("l.action") === "delete")
-            .select(col("target_id").cast("long").as("user_id"))
-          val fs = new org.apache.hadoop.fs.Path(target)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          val current =
-            if (fs.exists(new org.apache.hadoop.fs.Path(target)))
-              spark.read.parquet(target)
-            else ups.limit(0)
-          val merged = PipelineSinks
-            .merge(current, ups, "user_id")
-            .join(dels, Seq("user_id"), "left_anti")
-          PipelineSinks.outToParquet(spark, merged, target)
-          ()
-        }
+        .foreachBatch(ChangeStreamJob.consumerSink(spark, target, "offset") _)
         .start()
       q.awaitTermination()
     }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import scala.collection.mutable.ListBuffer
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -22,15 +23,20 @@ class StreamingSpec extends SparkTestBase {
   final case class Op(event_id: Long, ts: Timestamp, id: String, ns: String,
                       op: String, user_id: Long, value: Double, props: String)
 
-  private def toOplogDf(ms: MemoryStream[Op]) = {
-    ms.toDF().select(col("event_id"), col("ts"), col("id"), col("ns"), col("op"),
+  private def oplogOf(ops: DataFrame) =
+    ops.select(col("event_id"), col("ts"), col("id"), col("ns"), col("op"),
       when(col("op") =!= "d",
         struct(col("user_id"), col("value"), col("props"))).as("data"))
-  }
+
+  private def toOplogDf(ms: MemoryStream[Op]) = oplogOf(ms.toDF())
 
   private def op(i: Long, o: String, uid: Long = 1, v: Double = 1.5): Op =
     Op(i, new Timestamp(1700000000000L + i * 60000), uid.toString,
       "test.events", o, uid, v, s"""{"k": $i}""")
+
+  private def docs(df: DataFrame): Seq[(Long, Double, String)] =
+    df.select("user_id", "value", "props").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq.sorted
 
   test("E4: stream produce emits routed, ext-json-encoded messages") {
     implicit val sq = spark.sqlContext
@@ -86,20 +92,57 @@ class StreamingSpec extends SparkTestBase {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val ms = MemoryStream[Op]
-    val view = "consumer_state"
-    spark.catalog.dropGlobalTempView(view)
-    val q = toOplogDf(ms).writeStream
-      .foreachBatch(ChangeStreamJob.consumerSink(spark, Cdc.latestState, view) _)
+    val target = Files.createTempDirectory("graft-consumer").toString + "/state"
+    val q = ChangeStreamJob.produce(toOplogDf(ms)).writeStream
+      .foreachBatch(ChangeStreamJob.consumerSink(spark, target, "seq") _)
       .outputMode("append").start()
     try {
       ms.addData(op(1, "i", uid = 1, v = 1.0), op(2, "i", uid = 2, v = 2.0))
       q.processAllAvailable()
       ms.addData(op(3, "u", uid = 1, v = 9.0), op(4, "d", uid = 2))
       q.processAllAvailable()
-      val state = spark.table(s"global_temp.$view").collect()
+      val state = spark.read.parquet(target).collect()
         .map(r => r.getAs[Long]("user_id") -> r.getAs[Double]("value")).toMap
       assert(state == Map(1L -> 9.0), s"got $state")
     } finally q.stop()
+  }
+
+  test("consumer sink: re-delivering a committed batch id leaves the target's rows and no swap debris") {
+    val dir = Files.createTempDirectory("graft-consumer-retry").toString
+    val target = s"$dir/state"
+    val sink = ChangeStreamJob.consumerSink(spark, target, "seq") _
+    def batch(ops: Op*) = ChangeStreamJob.produce(oplogOf(spark.createDataFrame(ops)))
+    sink(batch(op(1, "i", uid = 1, v = 1.0), op(2, "i", uid = 2, v = 2.0),
+      op(3, "i", uid = 3, v = 3.0)), 0L)
+    val second = batch(op(4, "u", uid = 1, v = 9.0), op(5, "d", uid = 2),
+      op(6, "i", uid = 4, v = 4.0))
+    sink(second, 1L)
+    val committed = docs(spark.read.parquet(target))
+    assert(committed.map(_._1) == Seq(1L, 3L, 4L), s"got $committed")
+    sink(second, 1L) // the retry of a batch whose swap already landed
+    assert(docs(spark.read.parquet(target)) == committed)
+    assert(new java.io.File(dir).list().toSeq == Seq("state"))
+  }
+
+  test("consumer sink: upsert-then-delete and delete-then-reinsert in one batch land as latestState") {
+    val target = Files.createTempDirectory("graft-consumer-fold").toString + "/state"
+    val sink = ChangeStreamJob.consumerSink(spark, target, "seq") _
+    val batches = Seq(
+      Seq(op(1, "i", uid = 1, v = 1.0), op(2, "i", uid = 2, v = 2.0)),
+      // key 1 upserted then deleted; key 3 new, upserted then deleted
+      Seq(op(3, "u", uid = 1, v = 5.0), op(4, "d", uid = 1),
+        op(5, "i", uid = 3, v = 3.0), op(6, "d", uid = 3)),
+      // key 2 deleted then re-inserted; key 1 re-inserted after its delete
+      Seq(op(7, "d", uid = 2), op(8, "i", uid = 2, v = 8.0),
+        op(9, "i", uid = 1, v = 9.0)))
+    batches.zipWithIndex.foreach { case (ops, id) =>
+      sink(ChangeStreamJob.produce(oplogOf(spark.createDataFrame(ops))), id.toLong)
+      val expected = Cdc.latestState(
+        oplogOf(spark.createDataFrame(batches.take(id + 1).flatten)))
+      assert(docs(spark.read.parquet(target)) == docs(expected), s"after batch $id")
+    }
+    assert(docs(spark.read.parquet(target)).map(r => (r._1, r._2)) ==
+      Seq((1L, 9.0), (2L, 8.0)))
   }
 
   test("E4: checkpoint resume processes only new data after restart") {
