@@ -128,7 +128,10 @@ object PipelineSinks {
 
   /** Rewrite a live parquet table from itself: repair a half-done swap
     * ([[recoverGeneration]]), hand `next` the current generation (None
-    * when the table does not exist yet), and swap its result in. A
+    * when the table does not exist yet), and swap its result in. The
+    * current generation is read with its own schema, taken from a
+    * part file's footer on the driver ([[liveSchema]]), so the read
+    * launches no schema-inference job. A
     * rewrite reads the very table it overwrites, so the new generation
     * is fully materialized in a side directory BEFORE the live one is
     * touched — a half-written target can never be observed, and a
@@ -141,8 +144,34 @@ object PipelineSinks {
     recoverGeneration(spark, dir)
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val current = if (fs.exists(path)) Some(spark.read.parquet(dir)) else None
+    val current =
+      if (fs.exists(path)) Some(liveSchema(spark, fs, path)
+        .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir)))
+      else None
     swapInto(spark, next(current), dir)
+  }
+
+  /** The schema of a live generation, read from one part file's footer
+    * on the driver: one footer, as Spark's own inference reads with
+    * schema merging off, without the one-task job it launches for it.
+    * Every part file of a generation comes from one [[swapInto]]
+    * write, so any one carries the table's schema. None when the dir
+    * holds no part file.
+    */
+  private def liveSchema(spark: org.apache.spark.sql.SparkSession,
+                         fs: org.apache.hadoop.fs.FileSystem,
+                         dir: org.apache.hadoop.fs.Path)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    fs.listStatus(dir).find(_.getPath.getName.endsWith(".parquet")).map { part =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(part, fs.getConf))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(part.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
   }
 
   /** `$out` persisted: wholesale replace of the parquet target, same

@@ -135,10 +135,14 @@ object CurationJob {
   /** One micro-batch of the loop — pure batch logic, testable alone:
     * gate → dedupe vs the index-so-far → overwrite this batch's
     * corpus shard and one shard per standing index → maybe compact.
-    * `gated`, `novel` and `accepted` are persisted for the duration
-    * of the shard writes (several actions consume them) and
-    * unpersisted after — without this every micro-batch runs the
-    * Gopher gate and the anti-join once per write.
+    * A frame is persisted only while it is read more than once, and
+    * unpersisted after: `novel` always (the corpus write joins it, the
+    * fp index writes it), `gated` under the fuzzy or semantic gate
+    * (whose plans join back to the gated rows several times),
+    * `accepted` when an optional gate's shard is derived from it,
+    * `newCells` under kNN. Every standing
+    * read passes its known schema, so a batch launches no
+    * schema-inference job.
     */
   def applyBatch(batch: DataFrame, corpusDir: String,
                  idCol: String, textCol: String, batchId: Long,
@@ -176,32 +180,26 @@ object CurationJob {
             .select(col("doc_id").as(idCol), col("clean_text").as(textCol)),
           Seq(idCol))
       }
-    val structPass = TextAnalysis.gopherRules(prepared, idCol, textCol)
-      .filter(col("pass")).select(col(idCol))
-    // H20 second: both gates are map-side projections over the batch,
-    // so the composed filter is still one scan + two semi-joins
-    val qualityPass = classifier match {
-      case None => structPass
-      case Some(c) => structPass.join(
-        TextAnalysis.classifierScore(prepared, idCol, textCol,
-          c.microWeights, c.biasMicro, c.threshold)
-          .filter(col("keep")).select(col(idCol)),
-        Seq(idCol))
-    }
+    val gated = qualityGate(prepared, idCol, textCol, classifier)
     // Every standing index this batch advances, as (subdir, rows): one
     // loop writes each to `<corpusDir>/<subdir>/b<batchId>` and the
     // compaction below folds exactly these subdirs, so no gate can
     // write a shard that is never compacted.
     val shards = scala.collection.mutable.ListBuffer.empty[(String, DataFrame)]
-    val gated = prepared.join(qualityPass, Seq(idCol)).persist()
-    // the try opens IMMEDIATELY after the first persist: an exception
-    // anywhere in the gate plan construction or the shard writes must
-    // still unpersist, or a long-running daemon leaks cache across
-    // streaming retries.
+    // the fuzzy gate reads `novelRows` three times (incrementalBands,
+    // bandKeys, the final join) and the semantic gate `admitted` three
+    // more: uncached, each read re-runs markup, the span trim and the
+    // quality gate
+    val rereadsGated = fuzzy || semantic.isDefined
+    // the try opens BEFORE the first persist: an exception anywhere in
+    // the gate plan construction or the shard writes must still
+    // unpersist, or a long-running daemon leaks cache across streaming
+    // retries.
     var novel: DataFrame = null
     var accepted: DataFrame = null
     var newCells: DataFrame = null
     try {
+      if (rereadsGated) gated.persist()
       novel = Dedup.incrementalFingerprint(gated,
         readIndexExcept(spark, s"$corpusDir/index", ownShard, fpSchema),
         idCol, textCol).persist()
@@ -261,7 +259,11 @@ object CurationJob {
                 regexp_replace(col(textCol), "\\|", " "))),
             m.merges, m.vocab))
           semAdmitted.withColumn("n_tok", size(ids).cast("long"))
-      }).persist()
+      })
+      // the corpus write reads `accepted`, and so does the shard of
+      // every optional gate below (the fp index shard reads `novel`)
+      if (fuzzy || spanTrim || searchStats || semantic.isDefined)
+        accepted.persist()
       // accepted rows enter the corpus; the emitted fps advance the
       // exact index so the NEXT batch sees them — INCLUDING the fps
       // of fuzzy-vetoed docs (exact copies of a rejected near-dup
@@ -328,7 +330,7 @@ object CurationJob {
       if (newCells != null) newCells.unpersist()
       if (accepted != null) accepted.unpersist()
       if (novel != null) novel.unpersist()
-      gated.unpersist()
+      if (rereadsGated) gated.unpersist()
       // Free the reuse seams the gates created inside this batch
       // (incrementalBands/incrementalSemantic register theirs in
       // graft.Seams): without this a long-running daemon's seam
@@ -336,11 +338,39 @@ object CurationJob {
       graft.Seams.release()
     }
     if (compactEvery > 0) {
-      shards.foreach { case (subdir, _) =>
-        compactIndex(spark, s"$corpusDir/$subdir", batchId, compactEvery)
+      shards.foreach { case (subdir, rows) =>
+        compactIndex(spark, s"$corpusDir/$subdir", batchId, compactEvery,
+          rows.schema)
       }
-      compactData(spark, s"$corpusDir/data", batchId, compactEvery)
+      compactData(spark, s"$corpusDir/data", batchId, compactEvery,
+        accepted.schema)
     }
+  }
+
+  /** The quality gates as ONE row predicate over the prepared batch:
+    * the Gopher structural rules (H16) and, when set, the classifier
+    * (H20) read one shared token array, so the batch is scanned once
+    * and no gate joins back to it. The tokens are projected behind
+    * [[graft.functions.Opaque]] — `FilterExec` does no subexpression
+    * elimination across conjuncts, and without the barrier every
+    * conjunct would re-tokenize the row. Null-id rows are dropped: a
+    * null id can never be stored as a novelty survivor, so its
+    * fingerprint must not advance the index either.
+    */
+  private[graft] def qualityGate(prepared: DataFrame, idCol: String,
+                                 textCol: String,
+                                 classifier: Option[ClassifierGate]): DataFrame = {
+    val toks = col("__gate_toks")
+    val keep = classifier.foldLeft(
+        col(idCol).isNotNull && TextAnalysis.gopherPassOf(toks)) { (k, c) =>
+      k && TextAnalysis.classifierScoreOf(toks, c.microWeights, c.biasMicro) >=
+        c.threshold
+    }
+    prepared
+      .withColumn("__gate_toks",
+        graft.functions.Opaque(graft.functions.Hash60.tokens(col(textCol))))
+      .filter(keep)
+      .drop("__gate_toks")
   }
 
   /** E23 reader: the LIVE kNN graph — rank the standing candidate-edge
@@ -448,9 +478,10 @@ object CurationJob {
     StructField("key", StringType)))
 
   /** The standing index minus the named batch shard (empty before
-    * the first batch). Listing is one metadata call over per-batch
-    * shards and compacted generations; in-flight `.tmp` fold
-    * targets are invisible until their atomic rename.
+    * the first batch), read with the index's known `schema` — no
+    * footer-reading inference job. Listing is one metadata call over
+    * per-batch shards and compacted generations; in-flight `.tmp`
+    * fold targets are invisible until their atomic rename.
     */
   private def readIndexExcept(spark: SparkSession, path: String,
                               ownShard: String,
@@ -463,7 +494,8 @@ object CurationJob {
       val shards = fs.listStatus(p).map(_.getPath)
         .filter(s => s.getName != ownShard && !s.getName.endsWith(".tmp"))
         .map(_.toString)
-      if (shards.isEmpty) empty else spark.read.parquet(shards.toIndexedSeq: _*)
+      if (shards.isEmpty) empty
+      else spark.read.schema(schema).parquet(shards.toIndexedSeq: _*)
     }
   }
 
@@ -483,29 +515,35 @@ object CurationJob {
     * b<id> with id < the current batch — streaming applies batches
     * in order, so only the current one can be re-delivered, and its
     * own shard is excluded); batch shards are disjoint novel-row
-    * sets, so the fold is an exact union — no dedupe on read.
+    * sets, so the fold is an exact union — no dedupe on read. The
+    * shards are read with `schema`, the schema of the frame that
+    * wrote them.
     */
   private def compactData(spark: SparkSession, path: String,
-                          batchId: Long, compactEvery: Int): Unit =
+                          batchId: Long, compactEvery: Int,
+                          schema: StructType): Unit =
     swapFold(spark, path, batchId, "h", compactEvery,
       _.startsWith("b")) { (fs, sources) =>
       val nonEmpty = sources.filter(s =>
         fs.listStatus(s).exists(_.getPath.getName.endsWith(".parquet")))
       // an all-empty tier folds to a marker dir
       if (nonEmpty.isEmpty) None
-      else Some(spark.read.parquet(nonEmpty.map(_.toString): _*))
+      else Some(spark.read.schema(schema).parquet(nonEmpty.map(_.toString): _*))
     }
 
   /** Index compaction: fold every shard and generation except the
-    * current batch's own into one generation `g<batchId>`. The fold
-    * is schema-agnostic — distinct full rows — because every index is
-    * set-semantic (the sstats ledger through its unique `src` keys).
+    * current batch's own into one generation `g<batchId>`, read with
+    * `schema`, the schema of the frame that wrote the shard. The fold
+    * is distinct full rows because every index is set-semantic (the
+    * sstats ledger through its unique `src` keys).
     */
   private def compactIndex(spark: SparkSession, path: String,
-                           batchId: Long, compactEvery: Int): Unit =
+                           batchId: Long, compactEvery: Int,
+                           schema: StructType): Unit =
     swapFold(spark, path, batchId, "g", compactEvery,
       !_.endsWith(".tmp")) { (_, sources) =>
-      Some(spark.read.parquet(sources.map(_.toString): _*).distinct())
+      Some(spark.read.schema(schema).parquet(sources.map(_.toString): _*)
+        .distinct())
     }
 
   /** The crash-safe generation swap both compactions share (the E9

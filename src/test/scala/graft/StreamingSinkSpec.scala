@@ -21,6 +21,49 @@ class StreamingSinkSpec extends SparkTestBase {
 
   private def t(ms: Long) = new Timestamp(1700000000000L + ms)
 
+  /** A 60-word doc that passes every Gopher rule; a seed-unique token
+    * gives each seed its own fingerprint.
+    */
+  private def gopherDoc(seed: Int): String = {
+    val pool = Vector("quick", "brown", "foxes", "jumped", "fences",
+      "little", "garden", "stones", "rivers", "bright", "clouds",
+      "forest", "meadow", "silver", "golden", "branch")
+    (0 until 60).map { i =>
+      if (i % 7 == 3) "the" else if (i % 11 == 5) "of"
+      else if (i % 17 == 2) s"word$seed"
+      else pool((seed * 13 + i * 5) % pool.size)
+    }.mkString(" ")
+  }
+
+  /** Runs `body` and returns (jobs it launched, ids of those that ran
+    * outside any SQL execution — a schema-inference footer read is
+    * one). Jobs are told apart from other threads' by a local property.
+    */
+  private def jobsOutsideSql(body: => Unit): (Int, Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"graft-spec-${System.nanoTime()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val outside = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("graft.spec") == tag) {
+          seen.incrementAndGet()
+          if (j.properties.getProperty("spark.sql.execution.id") == null)
+            outside.add(j.jobId)
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.spec", null)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    (seen.get, outside.asScala.toSeq)
+  }
+
   test("E6: stream-stream interval join matches clicks to views within the window") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -118,6 +161,38 @@ class StreamingSinkSpec extends SparkTestBase {
     val got = spark.read.parquet(dir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     assert(got == Map(1L -> "a", 2L -> "b"))
+  }
+
+  test("C27 persisted: a merge into a live target launches no schema-inference job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-noinfer")
+      .toString + "/state"
+    PipelineSinks.mergeIntoParquet(spark,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir, "k")
+    // generation 2 reads generation 1 with the schema of its footer
+    val (all, outside) = jobsOutsideSql(PipelineSinks.mergeIntoParquet(spark,
+      Seq((2L, "B"), (3L, "C")).toDF("k", "v"), dir, "k"))
+    assert(all > 0)
+    assert(outside.isEmpty, s"jobs outside a SQL execution: $outside of $all")
+    val got = spark.read.parquet(dir).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toMap
+    assert(got == Map(1L -> "a", 2L -> "B", 3L -> "C"))
+  }
+
+  test("C27 persisted: a merge whose source lacks a target column, or adds one, raises and leaves the target unchanged") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-schema")
+      .toString + "/state"
+    PipelineSinks.outToParquet(spark,
+      Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "v", "w"), dir)
+    def live() = spark.read.parquet(dir)
+    intercept[IllegalArgumentException](PipelineSinks.mergeIntoParquet(spark,
+      Seq((2L, "B"), (3L, "C")).toDF("k", "v"), dir, "k"))
+    intercept[IllegalArgumentException](PipelineSinks.mergeIntoParquet(spark,
+      Seq((2L, "B", 1L, "x")).toDF("k", "v", "w", "extra"), dir, "k"))
+    assert(live().columns.toSeq == Seq("k", "v", "w"))
+    assert(live().collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .toSet == Set((1L, "a", 10L), (2L, "b", 20L)))
   }
 
   test("D4: bulk-size chunking — no flush exceeds bulk-size, nothing is dropped") {
@@ -571,6 +646,62 @@ class StreamingSinkSpec extends SparkTestBase {
     val ids = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$dir/data").select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(2L), ids.toString)
+  }
+
+  test("curation batch launches no schema-inference job: every job of a compacting batch runs under a SQL execution") {
+    import spark.implicits._
+    import graft.streaming.CurationJob
+    val dir = java.nio.file.Files.createTempDirectory("graft-curation-noinfer").toString
+    def apply(b: Long, rows: (Long, String)*): Unit =
+      CurationJob.applyBatch(rows.toDF("doc_id", "text"), dir, "doc_id",
+        "text", batchId = b, compactEvery = 2, markup = true)
+    apply(0L, (1L, gopherDoc(1)), (2L, gopherDoc(2)))
+    apply(1L, (3L, gopherDoc(3)), (4L, gopherDoc(1)))
+    // batch 2 reads a two-shard index and folds both the index and the
+    // data shards b0, b1 (compactEvery = 2)
+    val (all, outside) = jobsOutsideSql(
+      apply(2L, (5L, gopherDoc(5)), (6L, gopherDoc(2))))
+    assert(all > 0)
+    assert(outside.isEmpty, s"jobs outside a SQL execution: $outside of $all")
+    def entries(sub: String) = new java.io.File(s"$dir/$sub").list().toSet
+    assert(entries("index").contains("g2") && entries("data").contains("h2"),
+      s"${entries("index")} / ${entries("data")}")
+    val ids = spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$dir/data").select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(ids == Set(1L, 2L, 3L, 5L), ids.toString)
+  }
+
+  test("curation quality gate is one row predicate: null ids accept nothing, one batch scan, no join before novelty") {
+    import spark.implicits._
+    import graft.operators.Pipeline100TB
+    import graft.streaming.CurationJob
+    val dir = java.nio.file.Files.createTempDirectory("graft-curation-gate").toString
+    // a null-id doc alone in its fingerprint group must neither enter
+    // the corpus nor advance the fp index
+    CurationJob.applyBatch(
+      Seq((None: Option[Long], gopherDoc(1)), (Some(2L), gopherDoc(2)))
+        .toDF("doc_id", "text"),
+      dir, "doc_id", "text", batchId = 0L)
+    def standing(sub: String) = spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$dir/$sub")
+    assert(standing("data").select("doc_id").collect().map(_.getLong(0)).toSeq ==
+      Seq(2L))
+    assert(standing("index").count() == 1)
+    // plan shape: markup, Gopher and the classifier over one scan of the
+    // batch, with no join
+    val batchDir = s"$dir/incoming"
+    Seq((1L, gopherDoc(1)), (2L, "too short")).toDF("doc_id", "text")
+      .write.parquet(batchDir)
+    val gate = CurationJob.ClassifierGate(Seq.fill(64)(3000000L), 0L, 0.5)
+    val batch = spark.read.parquet(batchDir)
+    val gated = CurationJob.qualityGate(
+      batch.withColumn("text", Pipeline100TB.extractMarkup(col("text"))),
+      "doc_id", "text", Some(gate))
+    val plan = gated.queryExecution.executedPlan.toString
+    assert("Scan parquet".r.findAllIn(plan).size == 1, plan)
+    assert(!plan.contains("Join") && !plan.contains("Exchange"), plan)
+    assert(gated.columns.toSeq == batch.columns.toSeq)
+    assert(gated.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   test("curation daemon full gate stack: markup extraction + classifier + dedup, streamed ≡ batch, re-delivery no-op") {
