@@ -16,10 +16,12 @@ import org.apache.spark.sql.functions._
   * Keeping them pure keeps the merge plan testable and lets the same
   * logic back both the batch path and the streaming micro-batch sink.
   *
-  * Scale shape: one shuffle on the merge key (sort-merge full-outer);
-  * when the incoming batch is small relative to the target — the CDC
-  * steady state — AQE broadcasts the source side, so the target is
-  * never re-shuffled.
+  * Scale shape: one sort-merge full-outer join on the merge key.
+  * Spark has no broadcast full-outer join, so both sides shuffle on
+  * the key — the target too, however small the incoming batch (the
+  * AQE final plan of a CDC merge is `SortMergeJoin FullOuter` over
+  * two shuffle exchanges). The merge's cost therefore grows with the
+  * target, not with the batch.
   */
 object PipelineSinks {
 
@@ -130,8 +132,8 @@ object PipelineSinks {
     * ([[recoverGeneration]]), hand `next` the current generation (None
     * when the table does not exist yet), and swap its result in. The
     * current generation is read with its own schema, taken from a
-    * part file's footer on the driver ([[liveSchema]]), so the read
-    * launches no schema-inference job. A
+    * part file's footer on the driver ([[graft.sources.ParquetFooter]]),
+    * so the read launches no schema-inference job. A
     * rewrite reads the very table it overwrites, so the new generation
     * is fully materialized in a side directory BEFORE the live one is
     * touched — a half-written target can never be observed, and a
@@ -142,36 +144,9 @@ object PipelineSinks {
   def rewriteParquet(spark: org.apache.spark.sql.SparkSession, dir: String)
                     (next: Option[DataFrame] => DataFrame): Unit = {
     recoverGeneration(spark, dir)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val current =
-      if (fs.exists(path)) Some(liveSchema(spark, fs, path)
-        .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir)))
-      else None
+    val current = graft.sources.ParquetFooter.schema(spark, dir)
+      .map(spark.read.schema(_).parquet(dir))
     swapInto(spark, next(current), dir)
-  }
-
-  /** The schema of a live generation, read from one part file's footer
-    * on the driver: one footer, as Spark's own inference reads with
-    * schema merging off, without the one-task job it launches for it.
-    * Every part file of a generation comes from one [[swapInto]]
-    * write, so any one carries the table's schema. None when the dir
-    * holds no part file.
-    */
-  private def liveSchema(spark: org.apache.spark.sql.SparkSession,
-                         fs: org.apache.hadoop.fs.FileSystem,
-                         dir: org.apache.hadoop.fs.Path)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-    fs.listStatus(dir).find(_.getPath.getName.endsWith(".parquet")).map { part =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(part, fs.getConf))
-      val footer = try reader.getFooter finally reader.close()
-      ParquetFileFormat.readSchemaFromFooter(new Footer(part.getPath, footer),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    }
   }
 
   /** `$out` persisted: wholesale replace of the parquet target, same

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Named access to the engine's input tables (one parquet file per
   * table under a scale-factor directory).
@@ -12,6 +12,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * (/root/reference/route81.go:446 `direct-read-namespace`): here a
   * namespace is `<dir>/<name>.parquet` and scans stay lazy so
   * Catalyst can push filters/projections into the parquet reader.
+  * Building a table's frame launches no Spark job: its schema comes
+  * from the parquet footer, read on the driver.
   */
 final class TableCatalog(spark: SparkSession, dir: String) {
 
@@ -19,8 +21,16 @@ final class TableCatalog(spark: SparkSession, dir: String) {
   def table(name: String): DataFrame =
     if (name == "events") events else raw(name)
 
-  private def raw(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table read with its footer schema ([[ParquetFooter]]), so
+    * building it launches no schema-inference job. An absent table
+    * reads with an empty schema, which leaves Spark's own path check
+    * to fail it.
+    */
+  private def raw(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(ParquetFooter.schema(spark, path).getOrElse(new StructType))
+      .parquet(path)
+  }
 
   def region: DataFrame = table("region")
   def nation: DataFrame = table("nation")

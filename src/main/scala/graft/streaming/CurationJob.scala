@@ -443,8 +443,11 @@ object CurationJob {
         sum(when(col("term") === t, col("df")).otherwise(0L)).as(s"df$i")
       }
     val stats = led.agg(aggs.head, aggs.tail: _*)
+    // an absent corpus reads with an empty schema and fails Spark's path check
+    val data = s"$corpusDir/data"
     val corpus = spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$corpusDir/data")
+      .schema(graft.sources.ParquetFooter.schema(spark, data).getOrElse(new StructType))
+      .parquet(data)
     graft.operators.TextAnalysis
       .bm25WithProvidedStats(corpus, textCol, terms, stats, "score")
       .select(col(idCol).as("id"), col("score"))

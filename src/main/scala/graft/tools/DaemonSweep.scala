@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.LocalSpark
 import graft.operators.{Dedup, LlmQueries, Similarity}
+import graft.sources.TableCatalog
 import graft.streaming.CurationJob
 import graft.streaming.CurationJob.{ClassifierGate, SemanticGate}
 
@@ -57,9 +58,9 @@ object DaemonSweep {
     val spark = LocalSpark()
     val t0 = System.nanoTime()
 
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val embT = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val tables = TableCatalog(spark, sfDir)
+    val docs0 = tables.documents.select(col("doc_id"), col("text"))
+    val embT = tables.embeddings
     val nEmb = embT.agg(max(col("vec_id"))).head.getLong(0) + 1
     val docs = docs0
       .join(embT.select(col("vec_id").as("__v"), col("embedding")),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.LocalSpark
 import graft.operators.{Pipeline100TB, TextAnalysis}
+import graft.sources.TableCatalog
 
 /** Dev harness (not part of the driver contract): measure
   * skew-immunity of the df/cf statistics family — `text_tfidf`,
@@ -30,7 +31,7 @@ object SkewStress {
     val Array(sfDir, repsStr) = args
     val reps = repsStr.toInt
     val spark = LocalSpark()
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = TableCatalog(spark, sfDir).documents
     val base = "/tmp/graft_skew_base"
     val hot = "/tmp/graft_skew_hot"
     docs.write.mode("overwrite").parquet(base)

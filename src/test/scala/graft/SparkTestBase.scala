@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,4 +34,33 @@ abstract class SparkTestBase extends AnyFunSuite {
     s
   }
   def sfDir: String = SparkTestBase.sfDir
+
+  /** Runs `body` and returns (jobs it launched, ids of those that ran
+    * outside any SQL execution — a schema-inference footer read is
+    * one). Jobs are told apart from other threads' by a local property.
+    */
+  protected def jobsOutsideSql(body: => Unit): (Int, Seq[Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"graft-spec-${System.nanoTime()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val outside = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("graft.spec") == tag) {
+          seen.incrementAndGet()
+          if (j.properties.getProperty("spark.sql.execution.id") == null)
+            outside.add(j.jobId)
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.spec", null)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    (seen.get, outside.asScala.toSeq)
+  }
 }
