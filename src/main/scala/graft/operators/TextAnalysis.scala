@@ -1070,48 +1070,60 @@ object TextAnalysis {
           .as("intercept_r"))
   }
 
+  /** H17 BM25 top-k (k1=1.2, b=0.75): `(id, round(bm25, 6))` of the
+    * matching documents, best first, ties by id. The scoring core is
+    * the 1-clause case of [[searchScoresFused]], which the `$search`
+    * stage (C39) also calls, so the two can never drift. Every literal
+    * and the operation order mirror the DuckDB oracle exactly. The
+    * remaining parity assumption is ln itself: JVM Math.log and
+    * DuckDB's libm agree on this data, but a 1-ulp libm difference
+    * near a round(,6) boundary could flip a rounded score on another
+    * platform — the round is a mitigation, not a proof.
+    *
+    * `ledgerStats` (E24) provides the corpus-stats row from a standing
+    * ledger instead of aggregating it from `docs`: one row with LONG
+    * columns `(n, sumdl, df0..dfK)`, df per term in order. It is cast
+    * exactly as the in-frame aggregate would be (count→double,
+    * long→double), so ledger-backed and scan-backed scores are
+    * bit-identical when the ledger states the true stats.
+    */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
-           terms: Seq[String], k: Int = 20): DataFrame =
-    bm25WithScore(docs, textCol, terms, "score")
+           terms: Seq[String], k: Int = 20,
+           ledgerStats: Option[DataFrame] = None): DataFrame = {
+    require(terms.nonEmpty, "bm25 needs at least one term")
+    val stats = ledgerStats.map(_.select(
+      col("n").cast("double").as("__n") +:
+        col("sumdl").cast("double").as("__sumdl0") +:
+        terms.indices.map(i =>
+          col(s"df$i").cast("double").as(s"__df_0_$i")): _*))
+    searchScoresFused(docs, Seq((textCol, terms.map(tfTerm))), Seq("score"),
+      stats)
       .select(col(idCol).as("id"), col("score"))
       .filter(col("score") > 0)
       .orderBy(col("score").desc, col("id"))
       .limit(k)
-
-  /** The H17 scoring core with ALL input columns preserved — shared
-    * by [[bm25]] and the `$search` pipeline stage (C39) so the two
-    * can never drift: attaches `round(bm25, 6)` as `out`. Every
-    * literal and the operation order mirror the DuckDB oracle
-    * exactly. The remaining parity assumption is ln itself: JVM
-    * Math.log and DuckDB's libm agree on this data, but a 1-ulp libm
-    * difference near a round(,6) boundary could flip a rounded score
-    * on another platform — the round is a mitigation, not a proof.
-    *
-    * Since round 15 this is the 1-clause case of
-    * [[searchScoresFused]] — the compound fusion and the standalone
-    * ranking share one arithmetic by construction.
-    */
-  private[graft] def bm25WithScore(docs: DataFrame, textCol: String,
-                                   terms: Seq[String],
-                                   out: String): DataFrame = {
-    require(terms.nonEmpty, "bm25 needs at least one term")
-    searchScoresFused(docs, Seq((textCol, terms.map(tfTerm))), Seq(out))
   }
 
   /** `$search` virtual-term tf recipes (round 15): each scored clause
     * kind compiles to (path, per-virtual-term tf over that path's
-    * token array). A plain text term counts exact occurrences; a
-    * phrase counts non-overlapping exact-adjacent occurrences of the
-    * term sequence (the documented " a a a " deviation from Lucene's
-    * position counting — see [[phraseWithScore]]); autocomplete
-    * counts tokens with the query prefix; wildcard counts tokens
-    * matching the LIKE-translated glob. All recipes are pure Column
-    * algebra over the SHARED token array, so an N-clause fused pass
-    * computes every tf on one corpus scan.
+    * token array), and [[searchScoresFused]] pushes every virtual
+    * term through the same BM25 formula and broadcast stats row. A
+    * plain text term counts exact occurrences. All recipes are pure
+    * Column algebra over the SHARED token array, so an N-clause fused
+    * pass computes every tf on one corpus scan, with no shuffle.
     */
   private[graft] def tfTerm(term: String): Column => Column =
     toks => stopCount(toks, Seq(term)).cast("double")
 
+  /** C39c phrase: the whole phrase acts as ONE virtual term (Lucene's
+    * phrase-as-a-term scoring model) whose tf counts exact ADJACENT
+    * occurrences of the term sequence. Occurrences count
+    * NON-OVERLAPPING (the substring-replace count over the space-
+    * joined normalized stream — " a a a " holds ONE " a a "), a
+    * documented deviation from Lucene's position counting that keeps
+    * the count a single codegen'd expression both engines replay
+    * identically.
+    */
   private[graft] def tfPhrase(terms: Seq[String]): Column => Column = { toks =>
     val needle = " " + terms.mkString(" ") + " "
     val stream = concat(lit(" "), concat_ws(" ", toks), lit(" "))
@@ -1119,9 +1131,18 @@ object TextAnalysis {
       lit(needle.length)).cast("double")
   }
 
+  /** C39d autocomplete: tf counts the tokens whose PREFIX is the
+    * query (Lucene serves this from an edge-n-gram index;
+    * declaratively the prefix test runs on the token stream directly).
+    */
   private[graft] def tfPrefix(prefix: String): Column => Column =
     toks => size(filter(toks, t => t.startsWith(lit(prefix)))).cast("double")
 
+  /** C39d wildcard: tf counts the tokens matching the LIKE-translated
+    * glob (Lucene's wildcard term query; the LIKE translation keeps
+    * *, ? semantics identical on any engine — deliberately not a
+    * regex dialect).
+    */
   private[graft] def tfLike(likePat: String): Column => Column =
     toks => size(filter(toks, t => t.like(likePat))).cast("double")
 
@@ -1134,11 +1155,6 @@ object TextAnalysis {
   private[graft] def tfRegex(pattern: String): Column => Column =
     toks => size(filter(toks, t => t.rlike("^(?:" + pattern + ")$")))
       .cast("double")
-
-  private[graft] def regexWithScore(docs: DataFrame, textCol: String,
-                                    pattern: String,
-                                    out: String): DataFrame =
-    searchScoresFused(docs, Seq((textCol, Seq(tfRegex(pattern)))), Seq(out))
 
   /** `$search` FUZZY virtual term (round 16) — Atlas' `text.fuzzy`
     * option: tf counts the tokens within `maxEdits` PLAIN Levenshtein
@@ -1234,20 +1250,6 @@ object TextAnalysis {
   private[graft] def tfGroup(group: Seq[String]): Column => Column =
     toks => group.map(t => tfTerm(t)(toks)).reduce(_ + _)
 
-  private[graft] def fuzzyWithScore(docs: DataFrame, textCol: String,
-                                    terms: Seq[String], maxEdits: Int,
-                                    prefixLength: Int,
-                                    out: String): DataFrame =
-    searchScoresFused(docs,
-      Seq((textCol, terms.map(tfFuzzy(_, maxEdits, prefixLength)))), Seq(out))
-
-  private[graft] def slopWithScore(docs: DataFrame, textCol: String,
-                                   terms: Seq[String], slop: Int,
-                                   out: String): DataFrame = {
-    require(terms.size >= 2, "a phrase needs at least two terms")
-    searchScoresFused(docs, Seq((textCol, Seq(tfSlop(terms, slop)))), Seq(out))
-  }
-
   /** The `lucene.standard`-modeled analyzer (round 16): lowercase,
     * then split on non-alphanumeric runs (`[^a-z0-9]+`), empties
     * dropped — so `"3-MEDIUM"` tokenizes to `[3, medium]` where the
@@ -1260,29 +1262,6 @@ object TextAnalysis {
     */
   private[graft] def tokensStandard(text: Column): Column =
     filter(split(lower(text), "[^a-z0-9]+"), t => t =!= lit(""))
-
-  /** E24: BM25 scoring with the corpus-stats row PROVIDED from a
-    * standing ledger instead of aggregated from the frame — the same
-    * expression tree as [[bm25WithScore]] (via [[searchScoresFused]]),
-    * so ledger-backed and scan-backed scores are bit-identical when
-    * the ledger states the true stats. `stats` is one row with LONG
-    * columns `(n, sumdl, df0..dfK)`; the adapter applies exactly the
-    * casts the in-frame aggregate would (count→double, long→double),
-    * so no value can differ by representation.
-    */
-  private[graft] def bm25WithProvidedStats(docs: DataFrame, textCol: String,
-                                           terms: Seq[String],
-                                           stats: DataFrame,
-                                           out: String): DataFrame = {
-    require(terms.nonEmpty, "bm25 needs at least one term")
-    val adapted = stats.select(
-      col("n").cast("double").as("__n") +:
-        col("sumdl").cast("double").as("__sumdl0") +:
-        terms.indices.map(i =>
-          col(s"df$i").cast("double").as(s"__df_0_$i")): _*)
-    searchScoresFused(docs, Seq((textCol, terms.map(tfTerm))), Seq(out),
-      Some(adapted))
-  }
 
   /** `$search.moreLikeThis` term selection (round 15) — Lucene MLT's
     * move re-expressed deterministically: tokenize the like document,
@@ -1344,9 +1323,11 @@ object TextAnalysis {
     * (path-independent), Σdl per path, and df per virtual term; each
     * clause's score is its terms' k1=1.2/b=0.75 BM25 components
     * summed and rounded to 6 — the IDENTICAL expression tree the
-    * per-clause scorers built, so fusing is hash-invariant (verified:
-    * pipe_search_compound and all compound consumers stayed
-    * hash-green across the switch).
+    * round-14 one-scan-per-clause scorers built, so fusing was
+    * hash-invariant (pipe_search_compound and all compound consumers
+    * stayed hash-green across the switch). [[bm25]] and every
+    * `$search` BM25 clause score here; a lone `$search` clause is the
+    * 1-clause case.
     *
     * Scale: one corpus scan for tfs (codegen'd recipes), one for the
     * broadcast stats row — constant in the clause count; no shuffle
@@ -1395,7 +1376,7 @@ object TextAnalysis {
     val stats = broadcast(
       providedStats.getOrElse(withTf.agg(aggs.head, aggs.tail: _*)))
     // BM25 with k1=1.2, b=0.75 — the formula is character-identical
-    // to the pre-fusion per-clause scorers
+    // to the round-14 per-clause scorers
     def comp(tf: Column, df: Column, dl: Column, sumdl: Column): Column =
       log(lit(1.0) + (col("__n") - df + 0.5) / (df + 0.5)) *
         tf * lit(2.2) / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * dl /
@@ -1415,48 +1396,6 @@ object TextAnalysis {
         flat.flatMap { case (ci, ti) =>
           Seq(s"__tf_${ci}_$ti", s"__df_${ci}_$ti") }: _*)
   }
-
-  /** C39c: PHRASE scoring — the `$search` `phrase` operator's core:
-    * the whole phrase acts as ONE virtual term whose tf is the count
-    * of exact ADJACENT occurrences of the term sequence in the
-    * document's token stream (Lucene's phrase-as-a-term scoring
-    * model), pushed through the same k1=1.2/b=0.75 BM25 formula and
-    * broadcast corpus-stats row as [[bm25WithScore]]. Occurrences
-    * count NON-OVERLAPPING (the substring-replace count over the
-    * space-joined normalized stream — " a a a " holds ONE " a a ",
-    * a documented deviation from Lucene's position counting that
-    * keeps the count a single codegen'd expression both engines
-    * replay identically). One corpus scan, no shuffle.
-    */
-  private[graft] def phraseWithScore(docs: DataFrame, textCol: String,
-                                     terms: Seq[String],
-                                     out: String): DataFrame = {
-    require(terms.size >= 2, "a phrase needs at least two terms")
-    searchScoresFused(docs, Seq((textCol, Seq(tfPhrase(terms)))), Seq(out))
-  }
-
-  /** C39d: AUTOCOMPLETE scoring — the `$search` `autocomplete`
-    * operator's core: tf counts the tokens whose PREFIX is the query
-    * (Lucene serves this from an edge-n-gram index; declaratively the
-    * prefix test runs on the token stream directly), pushed through
-    * the same virtual-term BM25 as [[phraseWithScore]]. One corpus
-    * scan, no shuffle.
-    */
-  private[graft] def autocompleteWithScore(docs: DataFrame, textCol: String,
-                                           prefix: String,
-                                           out: String): DataFrame =
-    searchScoresFused(docs, Seq((textCol, Seq(tfPrefix(prefix)))), Seq(out))
-
-  /** C39d: WILDCARD scoring — tf counts tokens matching the
-    * LIKE-translated glob (Lucene's wildcard term query; the LIKE
-    * translation keeps *, ? semantics identical on any engine —
-    * deliberately not a regex dialect), through the shared
-    * virtual-term BM25. One corpus scan, no shuffle.
-    */
-  private[graft] def wildcardWithScore(docs: DataFrame, textCol: String,
-                                       likePat: String,
-                                       out: String): DataFrame =
-    searchScoresFused(docs, Seq((textCol, Seq(tfLike(likePat)))), Seq(out))
 
   /** H20: model-based quality filter — fasttext/CCNet-style linear
     * classifier inference over hashed token features: each token

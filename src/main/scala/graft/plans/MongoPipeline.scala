@@ -517,7 +517,8 @@ object MongoPipeline {
   /** `$search` (SURVEY.md §2 C39) — Atlas full-text search as a
     * pipeline stage, its `text` operator composed onto the H17 BM25
     * machinery (the scoring core is the SHARED
-    * [[graft.operators.TextAnalysis.bm25WithScore]], so stage and
+    * [[graft.operators.TextAnalysis.searchScoresFused]], which
+    * [[graft.operators.TextAnalysis.bm25]] also calls, so stage and
     * standalone ranking can never drift): the query string tokenizes
     * on whitespace (lowercased — the engine-wide tokenizer), each
     * term contributes its k1=1.2/b=0.75 BM25 component, matching docs
@@ -525,16 +526,18 @@ object MongoPipeline {
     * score reads only via `{$meta: "searchScore"}` (Atlas' meta name);
     * with no Lucene index to consult, corpus stats (N, Σdl, per-term
     * df) fold into one broadcast 1-row aggregate — the same
-    * missing-index move as `$geoNear`'s `key`.
+    * missing-index move as `$geoNear`'s `key`. Every search is a
+    * compound: a lone clause compiles as `{must: [clause]}`, so one
+    * matching and scoring algebra serves both forms.
     *
-    * Scale: one corpus scan for tf (codegen'd InSetCount), one for
-    * the stats row (broadcast), ranking via orderBy (+$limit ⇒
-    * TakeOrdered); no shuffle of the corpus.
+    * Scale: one corpus scan for tf (codegen'd `tf*` recipes over the
+    * token array), one for the stats row (broadcast), ranking via
+    * orderBy (+$limit ⇒ TakeOrdered); no shuffle of the corpus.
     */
   /** `$search` clause kinds (C39/C39c/C39d): scored text/phrase/
     * autocomplete clauses and the constant-scored attribute clauses
-    * range/equals/in (Lucene's constant-score filter queries — score
-    * 1 on match, 0 otherwise, which is exactly what the compound
+    * range/equals/in/exists (Lucene's constant-score filter queries —
+    * score 1 on match, 0 otherwise, which is exactly what the compound
     * algebra's score > 0 ⇔ matches contract needs).
     */
   private sealed trait SearchClause
@@ -734,11 +737,49 @@ object MongoPipeline {
     out
   }
 
+  /** The `$search` attribute clauses, constant-score filters on one
+    * path. */
+  private val AttrKinds = Seq("range", "equals", "in", "exists")
+
+  /** Compile an attribute clause to the `$match` operators it means
+    * (range's gte/gt/lte/lt → `$gte/$gt/$lte/$lt`, equals → `$eq`,
+    * in → `$in`, exists → `$exists: true`) through [[fieldPredicate]],
+    * so `$search` and `$match` share one predicate compiler. The
+    * result applies to `col(path)` for a top-level clause and to
+    * `x.getField(path)` for an embeddedDocument child (`child`, which
+    * only selects the error wording).
+    */
+  private def attributePredicate(kind: String, body: JsonNode,
+                                 child: Boolean): Column => Column = {
+    val where = if (child) s"$$search.embeddedDocument $kind" else s"$$search.$kind"
+    val ops = mapper.createObjectNode()
+    kind match {
+      case "range" =>
+        Seq("gte", "gt", "lte", "lt").foreach { k =>
+          Option(body.get(k)).foreach(v => ops.set[JsonNode]("$" + k, v))
+        }
+        require(!ops.isEmpty,
+          if (child) s"$where needs gte/gt/lte/lt"
+          else s"$where needs at least one of gte/gt/lte/lt")
+      case "equals" =>
+        require(body.get("value") != null, s"$where.value is required")
+        ops.set[JsonNode]("$eq", body.get("value"))
+      case "in" =>
+        val vs = Option(body.get("value")).filter(_.isArray)
+          .getOrElse(throw new IllegalArgumentException(
+            s"$where.value must be an array"))
+        ops.set[JsonNode]("$in", vs)
+      case "exists" =>
+        ops.put("$exists", true)
+    }
+    c => fieldPredicate(c, ops)
+  }
+
   private def search(df: DataFrame, spec: JsonNode,
                      tables: String => DataFrame): DataFrame = {
     val clauseKinds = Seq("text", "phrase", "autocomplete", "wildcard",
-      "regex", "moreLikeThis", "near", "range", "equals", "in", "exists",
-      "geoWithin", "embeddedDocument")
+      "regex", "moreLikeThis", "near") ++ AttrKinds ++
+      Seq("geoWithin", "embeddedDocument")
     val unknown = spec.properties().asScala.map(_.getKey)
       .filterNot(k => k == "compound" || k == "queryString" || k == "sort" ||
         k == "highlight" || k == "count" || k == "analyzer" ||
@@ -1039,8 +1080,8 @@ object MongoPipeline {
           require(maxT > 0,
             s"$$search.moreLikeThis.maxQueryTerms must be positive: $maxT")
           MltC(e.getKey, e.getValue.asText(), maxT)
-        case "exists" =>
-          AttrC(col(path).isNotNull)
+        case kind @ ("range" | "equals" | "in" | "exists") =>
+          AttrC(attributePredicate(kind, body, child = false)(col(path)))
         case "embeddedDocument" =>
           val op = body.get("operator")
           require(op != null && op.isObject,
@@ -1059,8 +1100,7 @@ object MongoPipeline {
                 "implying Lucene score parity)")
             a
           }.getOrElse("sum")
-          val innerKinds = Seq("range", "equals", "in", "exists")
-            .filter(op.get(_) != null)
+          val innerKinds = AttrKinds.filter(op.get(_) != null)
           require(innerKinds.size == 1 &&
             op.properties().asScala.size == 1,
             "$search.embeddedDocument.operator supports exactly one " +
@@ -1071,33 +1111,8 @@ object MongoPipeline {
             s"$$search.embeddedDocument.operator.${innerKinds.head}.path " +
               "is required")
           val ipath = ib.get("path").asText()
-          val pred: Column => Column = innerKinds.head match {
-            case "range" =>
-              val bounds = Seq(
-                "gte" -> ((c: Column, v: JsonNode) => c >= literal(v)),
-                "gt" -> ((c: Column, v: JsonNode) => c > literal(v)),
-                "lte" -> ((c: Column, v: JsonNode) => c <= literal(v)),
-                "lt" -> ((c: Column, v: JsonNode) => c < literal(v)))
-                .flatMap { case (k, f) =>
-                  Option(ib.get(k)).map(v => (x: Column) =>
-                    f(x.getField(ipath), v)) }
-              require(bounds.nonEmpty,
-                "$search.embeddedDocument range needs gte/gt/lte/lt")
-              x => bounds.map(_(x)).reduce(_ && _)
-            case "equals" =>
-              require(ib.get("value") != null,
-                "$search.embeddedDocument equals.value is required")
-              x => x.getField(ipath) === literal(ib.get("value"))
-            case "in" =>
-              val vs = Option(ib.get("value")).filter(_.isArray)
-                .getOrElse(throw new IllegalArgumentException(
-                  "$search.embeddedDocument in.value must be an array"))
-              x => x.getField(ipath).isin(
-                vs.elements().asScala.toSeq.map(literalValue): _*)
-            case "exists" =>
-              x => x.getField(ipath).isNotNull
-          }
-          EmbC(path, pred, aggKind)
+          val pred = attributePredicate(innerKinds.head, ib, child = true)
+          EmbC(path, x => pred(x.getField(ipath)), aggKind)
         case "geoWithin" =>
           // constant-score geo filter (Lucene's filter-query class)
           // over the PLANAR legacy-pair model $geoNear already uses —
@@ -1149,25 +1164,6 @@ object MongoPipeline {
           val pivot = body.get("pivot").asDouble()
           require(pivot > 0, s"$$search.near.pivot must be positive: $pivot")
           NearC(path, origin, pivot)
-        case "range" =>
-          val bounds = Seq("gte" -> ((c: Column, v: JsonNode) => c >= literal(v)),
-            "gt" -> ((c: Column, v: JsonNode) => c > literal(v)),
-            "lte" -> ((c: Column, v: JsonNode) => c <= literal(v)),
-            "lt" -> ((c: Column, v: JsonNode) => c < literal(v)))
-            .flatMap { case (k, f) =>
-              Option(body.get(k)).map(v => f(col(path), v)) }
-          require(bounds.nonEmpty,
-            "$search.range needs at least one of gte/gt/lte/lt")
-          AttrC(bounds.reduce(_ && _))
-        case "equals" =>
-          require(body.get("value") != null, "$search.equals.value is required")
-          AttrC(col(path) === literal(body.get("value")))
-        case "in" =>
-          val vs = Option(body.get("value")).filter(_.isArray)
-            .getOrElse(throw new IllegalArgumentException(
-              "$search.in.value must be an array"))
-          AttrC(col(path).isin(
-            vs.elements().asScala.toSeq.map(literalValue): _*))
       }
       // embeddedDocument's score option is its own {embedded: ...}
       // aggregate form, parsed inside the case — not a score modifier
@@ -1211,16 +1207,10 @@ object MongoPipeline {
           d.withColumn(out, when(col(out) > 0,
             coalesce(col(f).cast("double"), lit(undef))).otherwise(lit(0.0)))
       }
+    // the per-row scorers of the clause kinds without a recipe; every
+    // BM25 clause scores in the fused pass instead
     def scoreClause(d: DataFrame, c: SearchClause, out: String): DataFrame =
-      recipe(c) match {
-        // every stats-consuming clause scores through the SAME 1-clause
-        // fused pass its compound form uses (bm25WithScore et al. ARE
-        // that call — unified here so the analyzer option threads into
-        // both branches through one seam)
-        case Some(r) =>
-          graft.operators.TextAnalysis.searchScoresFused(
-            d, Seq(r), Seq(out), tokenize = tokenize)
-        case None => c match {
+      c match {
         case NearC(path, origin, pivot) =>
           // matches everything (score > 0 always) — Lucene's near is a
           // pure scorer; nulls score 0 (no value = no proximity)
@@ -1240,8 +1230,7 @@ object MongoPipeline {
             case "maximum" => when(nm > 0, 1.0).otherwise(0.0)
           })
         case other => throw new IllegalStateException(
-          s"scored clause without a recipe: $other") // unreachable
-        }
+          s"BM25 clause outside the fused pass: $other") // unreachable
       }
     val tie = df.columns.map(col).toSeq
     // shared tail: highlight projection, then (opt-in) the count
@@ -1266,131 +1255,113 @@ object MongoPipeline {
           count(lit(1)).cast("long").as(SearchMetaCountCol))))
       withCount.orderBy(sortCols ++ tie: _*)
     }
-    if (spec.get("compound") == null) {
-      val (c, mod) = textClause(spec)
-      // matchCriteria-all: the clause's score is GATED by the hidden
-      // all-terms indicator (least-tf virtual term, same fused pass),
-      // so every downstream matching decision — the score > 0 filter
-      // here, must/should/mustNot algebra in compound — stays the one
-      // rounded-score sign convention
-      val rawScored = c match {
-        case AllC(p, ts) =>
-          import graft.operators.{TextAnalysis => TA}
-          TA.searchScoresFused(df,
-            Seq((p, ts.map(TA.tfTerm)), (p, Seq(TA.tfAll(ts)))),
-            Seq(SearchScoreCol, "__ind"), tokenize = tokenize)
-            .withColumn(SearchScoreCol, when(col("__ind") > 0,
-              col(SearchScoreCol)).otherwise(lit(0.0)))
-            .drop("__ind")
-        case _ => scoreClause(df, c, SearchScoreCol)
-      }
-      // match on the RAW score, then re-score (a function-path score
-      // may map a matching doc to any value incl. 0)
-      finish(applyMod(rawScored
-        .filter(col(SearchScoreCol) > 0), SearchScoreCol, mod), Seq(c))
-    } else {
-      // compound: must clauses all match AND contribute score; should
-      // clauses contribute score (should-only searches need at least
-      // one should match); mustNot clauses exclude on any match —
-      // Lucene's boolean-query contract over the shared BM25 core.
-      // BM25 scores are ≥ 0 with "matches" ⇔ score > 0, so exclusion
-      // is an exact score = 0 test.
-      val comp = spec.get("compound")
-      val badKinds = comp.properties().asScala.map(_.getKey)
-        .filterNot(k => Seq("must", "should", "mustNot",
-          "minimumShouldMatch").contains(k))
-      require(badKinds.isEmpty,
-        s"unsupported $$search.compound clauses: $badKinds")
-      def clauses(kind: String): Seq[(SearchClause, Option[ScoreMod])] =
-        Option(comp.get(kind)).toSeq.flatMap { arr =>
-          require(arr.isArray, s"$$search.compound.$kind must be an array")
-          arr.elements().asScala.toSeq.map(textClause)
-        }
-      val (must, should, mustNot) =
-        (clauses("must"), clauses("should"), clauses("mustNot"))
-      require(must.nonEmpty || should.nonEmpty,
-        "$search.compound needs at least one must or should clause")
-      // minimumShouldMatch (round 16) — Lucene's boolean knob: at
-      // least m of the should clauses must match (raw score > 0, the
-      // same sign test every other matching decision rides). m = 0 is
-      // the default pure-score-contribution behavior; m > |should| can
-      // never match and is refused loudly rather than returning an
-      // always-empty search.
-      val msm = Option(comp.get("minimumShouldMatch")).map { mn =>
-        require(mn.isNumber,
-          s"$$search.compound.minimumShouldMatch must be a number: $mn")
-        mn.asInt()
-      }.getOrElse(0)
-      require(msm >= 0,
-        s"$$search.compound.minimumShouldMatch must be >= 0 (got $msm)")
-      require(msm <= should.size,
-        s"$$search.compound.minimumShouldMatch ($msm) exceeds the " +
-          s"number of should clauses (${should.size}) — no document " +
-          "could ever match")
-      val all = (must ++ should ++ mustNot).zipWithIndex
-      // FUSED stats pass (round 15): every BM25-scored clause computes
-      // off ONE corpus scan + ONE broadcast stats row via
-      // searchScoresFused — a K-clause compound reads the corpus 2×,
-      // not K+1× (the r14 shape). Non-stats clauses (near/attribute)
-      // attach per-row columns on the same frame, costing no extra scan.
-      // recipes computed ONCE per clause (an mlt recipe runs a small
-      // driver-side term-selection aggregate — never re-run it)
-      val recipes = all.map { case ((c, _), i) => i -> recipe(c) }.toMap
-      val fusedPart = all.flatMap { case ((_, _), i) =>
-        recipes(i).map(r => (r, i)) }
-      // matchCriteria-all clauses ride ONE extra indicator entry each
-      // in the SAME fused pass (least-tf virtual term), then their
-      // score column is gated to 0 unless all terms occur — after
-      // which the unchanged must/should/mustNot/msm algebra applies
-      val indPart = all.collect { case ((AllC(p, ts), _), i) =>
-        ((p, Seq(graft.operators.TextAnalysis.tfAll(ts))), i) }
-      val fusedAll =
-        fusedPart.map { case (r, i) => (r, s"__sc$i") } ++
-          indPart.map { case (r, i) => (r, s"__ind$i") }
-      val base =
-        if (fusedAll.isEmpty) df
-        else graft.operators.TextAnalysis.searchScoresFused(
-          df, fusedAll.map(_._1), fusedAll.map(_._2),
-          tokenize = tokenize)
-      val scoredUngated = all.foldLeft(base) { case (d, ((c, _), i)) =>
-        if (recipes(i).isDefined) d else scoreClause(d, c, s"__sc$i")
-      }
-      val scoredRaw = indPart.foldLeft(scoredUngated) { case (d, (_, i)) =>
-        d.withColumn(s"__sc$i", when(col(s"__ind$i") > 0,
-          col(s"__sc$i")).otherwise(lit(0.0))).drop(s"__ind$i")
-      }
-      val nm = must.size
-      val ns = should.size
-      // `scoring` is late-bound: inside `matched` (materialized on the
-      // PRE-modifier frame) it reads RAW clause scores; in the final
-      // sum (on the post-modifier frame) it reads MODIFIED ones.
-      // Matching is decided on the raw scores, BEFORE score modifiers
-      // apply (Atlas: the query decides what matches, the score option
-      // only re-scores it). For boost/constant (both require > 0)
-      // raw-vs-modified matching is provably identical; for a
-      // path-valued function score it is not, which is why the
-      // __matched column is computed first.
-      val scoring = (0 until nm + ns).map(i => col(s"__sc$i"))
-      val matched = (
-        (0 until nm).map(i => col(s"__sc$i") > 0) ++
-          (if (nm == 0) Seq(scoring.reduce(_ + _) > 0) else Nil) ++
-          (if (msm == 0) Nil
-           else Seq((nm until nm + ns)
-             .map(i => when(col(s"__sc$i") > 0, lit(1)).otherwise(lit(0)))
-             .reduce(_ + _) >= lit(msm))) ++
-          (nm + ns until nm + ns + mustNot.size)
-            .map(i => col(s"__sc$i") === 0.0))
-        .reduce(_ && _)
-      val withMatch = scoredRaw.withColumn("__matched", matched)
-      val scored = all.foldLeft(withMatch) { case (d, ((_, m), i)) =>
-        applyMod(d, s"__sc$i", m)
-      }
-      finish(scored
-        .withColumn(SearchScoreCol, scoring.reduce(_ + _))
-        .filter(col("__matched"))
-        .drop("__matched" +: all.indices.map(i => s"__sc$i"): _*),
-        all.map(_._1._1))
+    // compound: must clauses all match AND contribute score; should
+    // clauses contribute score (should-only searches need at least
+    // one should match); mustNot clauses exclude on any match —
+    // Lucene's boolean-query contract over the shared BM25 core.
+    // BM25 scores are ≥ 0 with "matches" ⇔ score > 0, so exclusion
+    // is an exact score = 0 test. A lone clause is the one-clause
+    // compound {must: [clause]}: its score is that clause's score and
+    // it matches on that score > 0, so it needs no algebra of its own.
+    val comp = Option(spec.get("compound")).getOrElse {
+      val lone = mapper.createObjectNode()
+      lone.putArray("must").add(spec)
+      lone
     }
+    val badKinds = comp.properties().asScala.map(_.getKey)
+      .filterNot(k => Seq("must", "should", "mustNot",
+        "minimumShouldMatch").contains(k))
+    require(badKinds.isEmpty,
+      s"unsupported $$search.compound clauses: $badKinds")
+    def clauses(kind: String): Seq[(SearchClause, Option[ScoreMod])] =
+      Option(comp.get(kind)).toSeq.flatMap { arr =>
+        require(arr.isArray, s"$$search.compound.$kind must be an array")
+        arr.elements().asScala.toSeq.map(textClause)
+      }
+    val (must, should, mustNot) =
+      (clauses("must"), clauses("should"), clauses("mustNot"))
+    require(must.nonEmpty || should.nonEmpty,
+      "$search.compound needs at least one must or should clause")
+    // minimumShouldMatch (round 16) — Lucene's boolean knob: at
+    // least m of the should clauses must match (raw score > 0, the
+    // same sign test every other matching decision rides). m = 0 is
+    // the default pure-score-contribution behavior; m > |should| can
+    // never match and is refused loudly rather than returning an
+    // always-empty search.
+    val msm = Option(comp.get("minimumShouldMatch")).map { mn =>
+      require(mn.isNumber,
+        s"$$search.compound.minimumShouldMatch must be a number: $mn")
+      mn.asInt()
+    }.getOrElse(0)
+    require(msm >= 0,
+      s"$$search.compound.minimumShouldMatch must be >= 0 (got $msm)")
+    require(msm <= should.size,
+      s"$$search.compound.minimumShouldMatch ($msm) exceeds the " +
+        s"number of should clauses (${should.size}) — no document " +
+        "could ever match")
+    val all = (must ++ should ++ mustNot).zipWithIndex
+    // FUSED stats pass (round 15): every BM25-scored clause computes
+    // off ONE corpus scan + ONE broadcast stats row via
+    // searchScoresFused — a K-clause compound reads the corpus 2×,
+    // not K+1× (the r14 shape). Non-stats clauses (near/attribute)
+    // attach per-row columns on the same frame, costing no extra scan.
+    // recipes computed ONCE per clause (an mlt recipe runs a small
+    // driver-side term-selection aggregate — never re-run it)
+    val recipes = all.map { case ((c, _), i) => i -> recipe(c) }.toMap
+    val fusedPart = all.flatMap { case ((_, _), i) =>
+      recipes(i).map(r => (r, i)) }
+    // matchCriteria-all clauses ride ONE extra indicator entry each
+    // in the SAME fused pass (least-tf virtual term), then their
+    // score column is gated to 0 unless all terms occur — after
+    // which the unchanged must/should/mustNot/msm algebra applies
+    val indPart = all.collect { case ((AllC(p, ts), _), i) =>
+      ((p, Seq(graft.operators.TextAnalysis.tfAll(ts))), i) }
+    val fusedAll =
+      fusedPart.map { case (r, i) => (r, s"__sc$i") } ++
+        indPart.map { case (r, i) => (r, s"__ind$i") }
+    val base =
+      if (fusedAll.isEmpty) df
+      else graft.operators.TextAnalysis.searchScoresFused(
+        df, fusedAll.map(_._1), fusedAll.map(_._2),
+        tokenize = tokenize)
+    val scoredUngated = all.foldLeft(base) { case (d, ((c, _), i)) =>
+      if (recipes(i).isDefined) d else scoreClause(d, c, s"__sc$i")
+    }
+    val scoredRaw = indPart.foldLeft(scoredUngated) { case (d, (_, i)) =>
+      d.withColumn(s"__sc$i", when(col(s"__ind$i") > 0,
+        col(s"__sc$i")).otherwise(lit(0.0))).drop(s"__ind$i")
+    }
+    val nm = must.size
+    val ns = should.size
+    // `scoring` is late-bound: inside `matched` (materialized on the
+    // PRE-modifier frame) it reads RAW clause scores; in the final
+    // sum (on the post-modifier frame) it reads MODIFIED ones.
+    // Matching is decided on the raw scores, BEFORE score modifiers
+    // apply (Atlas: the query decides what matches, the score option
+    // only re-scores it). For boost/constant (both require > 0)
+    // raw-vs-modified matching is provably identical; for a
+    // path-valued function score it is not, which is why the
+    // __matched column is computed first.
+    val scoring = (0 until nm + ns).map(i => col(s"__sc$i"))
+    val matched = (
+      (0 until nm).map(i => col(s"__sc$i") > 0) ++
+        (if (nm == 0) Seq(scoring.reduce(_ + _) > 0) else Nil) ++
+        (if (msm == 0) Nil
+         else Seq((nm until nm + ns)
+           .map(i => when(col(s"__sc$i") > 0, lit(1)).otherwise(lit(0)))
+           .reduce(_ + _) >= lit(msm))) ++
+        (nm + ns until nm + ns + mustNot.size)
+          .map(i => col(s"__sc$i") === 0.0))
+      .reduce(_ && _)
+    val withMatch = scoredRaw.withColumn("__matched", matched)
+    val scored = all.foldLeft(withMatch) { case (d, ((_, m), i)) =>
+      applyMod(d, s"__sc$i", m)
+    }
+    finish(scored
+      .withColumn(SearchScoreCol, scoring.reduce(_ + _))
+      .filter(col("__matched"))
+      .drop("__matched" +: all.indices.map(i => s"__sc$i"): _*),
+      all.map(_._1._1))
   }
 
   /** `$searchMeta` (SURVEY.md §2 C40) — Atlas search METADATA as a

@@ -402,11 +402,12 @@ object CurationJob {
     * must — scores need per-doc tf), but the stats fold into one
     * vocab-sized aggregate over the ledger (the ledger is term-keyed,
     * ~|vocab| rows, not corpus-sized) broadcast as the usual 1-row
-    * stats frame. Scores are BIT-IDENTICAL to the batch
-    * [[graft.operators.TextAnalysis.bm25]] over the same corpus: the
+    * stats frame. It IS [[graft.operators.TextAnalysis.bm25]] with
+    * that frame as `ledgerStats`, so scores and the top-k order are
+    * BIT-IDENTICAL to the batch `bm25` over the same corpus: the
     * ledger sums state exactly the values the in-frame aggregate
     * would compute (exact integer arithmetic end to end), and the
-    * scoring tail is the SHARED searchScoresFused expression tree.
+    * scoring and top-k tail are the same code.
     * The reader `distinct()`s the ledger first — rows are unique keys
     * by construction (src batch column), so the only duplicates are
     * compactIndex's visible-window full-row copies, and dropping them
@@ -448,12 +449,8 @@ object CurationJob {
     val corpus = spark.read.option("recursiveFileLookup", "true")
       .schema(graft.sources.ParquetFooter.schema(spark, data).getOrElse(new StructType))
       .parquet(data)
-    graft.operators.TextAnalysis
-      .bm25WithProvidedStats(corpus, textCol, terms, stats, "score")
-      .select(col(idCol).as("id"), col("score"))
-      .filter(col("score") > 0)
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
+    TextAnalysis.bm25(corpus, idCol, textCol, terms, k,
+      ledgerStats = Some(stats))
   }
 
   private val sstatsSchema = StructType(Seq(

@@ -76,15 +76,26 @@ object Streams {
       .flatMapGroupsWithState[(Long, Long), SessionAssign](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (user: Long, it: Iterator[SessionEvent], state: GroupState[(Long, Long)]) =>
-          var (seq, last) = state.getOption.getOrElse((0L, Long.MinValue))
-          val out = it.toSeq.sortBy(e => (e.ts_us, e.event_id)).map { e =>
-            if (last == Long.MinValue || e.ts_us - last > gapUs) seq += 1
-            last = e.ts_us
-            SessionAssign(user, e.event_id, seq)
-          }
-          state.update((seq, last))
+          val (out, next) = numberSessions(user, it, gapUs, state.getOption)
+          state.update(next)
           out.iterator
       }
+  }
+
+  /** Number one key's new events into sessions, in (ts, event id)
+    * order, from the carried (session, last event time) state (None
+    * for an unseen key); returns the assignments and the next state.
+    */
+  private def numberSessions(user: Long, events: Iterator[SessionEvent],
+                             gapUs: Long, state: Option[(Long, Long)])
+      : (Seq[SessionAssign], (Long, Long)) = {
+    var (seq, last) = state.getOrElse((0L, Long.MinValue))
+    val out = events.toSeq.sortBy(e => (e.ts_us, e.event_id)).map { e =>
+      if (last == Long.MinValue || e.ts_us - last > gapUs) seq += 1
+      last = e.ts_us
+      SessionAssign(user, e.event_id, seq)
+    }
+    (out, (seq, last))
   }
 
   /** E2 on the Spark 4 `transformWithState` API: the same session
@@ -106,14 +117,9 @@ object Streams {
 
     override def handleInputRows(key: Long, rows: Iterator[SessionEvent],
                                  timerValues: TimerValues): Iterator[SessionAssign] = {
-      var (seq, last) =
-        if (session.exists()) session.get() else (0L, Long.MinValue)
-      val out = rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).map { e =>
-        if (last == Long.MinValue || e.ts_us - last > gapUs) seq += 1
-        last = e.ts_us
-        SessionAssign(key, e.event_id, seq)
-      }
-      session.update((seq, last))
+      val (out, next) = numberSessions(key, rows, gapUs,
+        if (session.exists()) Some(session.get()) else None)
+      session.update(next)
       out.iterator
     }
   }

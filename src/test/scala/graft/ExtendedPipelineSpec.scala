@@ -2042,7 +2042,8 @@ class ExtendedPipelineSpec extends SparkTestBase {
           {"$project": {"doc_id": 1, "score": {"$meta": "searchScore"}}}]""")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     def leg(terms: Seq[String]): Map[Long, Double] =
-      TextAnalysis.bm25WithScore(docs, "text", terms, "s")
+      TextAnalysis.searchScoresFused(docs,
+        Seq(("text", terms.map(TextAnalysis.tfTerm))), Seq("s"))
         .select("doc_id", "s").collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val (must, should, not) = (leg(Seq("spark")), leg(Seq("stream")), leg(Seq("the")))
@@ -2592,5 +2593,129 @@ class ExtendedPipelineSpec extends SparkTestBase {
     // beta (both df 0 → 'no shared vocabulary' error); space-only
     // parity keeps it one term that matches doc 1's token
     assert(out == Set(1L), out.toString)
+  }
+
+  /** A small corpus every `$search` clause kind has something to match
+    * in: text, a nullable number, a nullable score field, a planar
+    * point and an array of child documents (null for doc 4).
+    */
+  private def searchCorpus = {
+    import spark.implicits._
+    Seq(
+      (1L, "spark stream fast engine", Some(10L), Some(1.5), Seq(0.0, 0.0),
+        Seq((Some(10), "a"), (Some(35), "b"))),
+      (2L, "spark spark batch quick", Some(20L), None, Seq(3.0, 4.0),
+        Seq((Some(40), "d"))),
+      (3L, "stream processing engine fast", None, Some(2.0), Seq(10.0, 10.0),
+        Seq.empty[(Option[Int], String)]),
+      (4L, "the quick brown fox", Some(30L), Some(0.5), Seq(6.0, 1.0),
+        Seq((Some(1), "z"))),
+      (5L, "sparkling streams of data", Some(40L), Some(3.0), Seq(-2.0, 1.0),
+        Seq((Some(45), "c"), (None, "a"), (Some(30), "a"))),
+      (6L, "fast fast spark engine stream", Some(50L), None, Seq(1.0, 1.0),
+        Seq((Some(5), "e"), (None, "x"))),
+      (7L, "batch engine of the spark", Some(60L), Some(4.0), Seq(2.0, 2.0),
+        Seq((Some(31), "f"))),
+      (8L, "spork strem fst engine", Some(70L), Some(1.0), Seq(20.0, 20.0),
+        Seq((Some(50), "g"))))
+      .toDF("doc_id", "text", "qty", "pop", "loc", "raw")
+      .select(col("doc_id"), col("text"), col("qty"), col("pop"), col("loc"),
+        when(col("doc_id") === 4L, lit(null)).otherwise(transform(col("raw"),
+          x => struct(x.getField("_1").as("qty"), x.getField("_2").as("tag"))))
+          .as("items"))
+  }
+
+  test("$search: a lone clause returns the rows and searchScore of its one-clause compound, every kind and score modifier") {
+    import spark.implicits._
+    val docs = searchCorpus
+    val syns = Seq(("equivalent", Seq("fast", "quick")))
+      .toDF("mappingType", "synonyms")
+    def resolve(n: String) =
+      if (n == "syns") syns
+      else throw new IllegalArgumentException(s"no table $n")
+    def run(search: String): Seq[(Long, Double)] =
+      MongoPipeline(docs,
+        s"""[{"$$search": $search},
+            {"$$project": {"doc_id": 1, "score": {"$$meta": "searchScore"}}}]""",
+        resolve)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    // (kind, body fields): one entry per clause kind and option
+    val clauses = Seq(
+      "text" -> """"query": "spark stream", "path": "text"""",
+      "text" -> """"query": "spark", "path": "text", "fuzzy": {"maxEdits": 1}""",
+      "text" -> """"query": "spark engine", "path": "text", "matchCriteria": "all"""",
+      "text" -> """"query": "fast", "path": "text", "synonyms": "syns"""",
+      "phrase" -> """"query": "spark engine", "path": "text"""",
+      "phrase" -> """"query": "spark engine", "path": "text", "slop": 2""",
+      "autocomplete" -> """"query": "spa", "path": "text"""",
+      "autocomplete" -> """"query": "spo", "path": "text", "fuzzy": {"maxEdits": 1}""",
+      "wildcard" -> """"query": "str*m", "path": "text"""",
+      "regex" -> """"query": "st.*", "path": "text"""",
+      "moreLikeThis" -> """"like": {"text": "spark stream engine"}""",
+      "near" -> """"path": "qty", "origin": 30, "pivot": 10""",
+      "range" -> """"path": "qty", "gte": 20, "lt": 50""",
+      "equals" -> """"path": "qty", "value": 30""",
+      "in" -> """"path": "qty", "value": [10, 40, 70]""",
+      "exists" -> """"path": "pop"""",
+      "geoWithin" -> """"path": "loc", "box": {"bottomLeft": [0, 0], "topRight": [5, 5]}""",
+      "geoWithin" -> """"path": "loc", "circle": {"center": [0, 0], "radius": 5}""")
+    val mods = Seq("",
+      """, "score": {"boost": {"value": 2.5}}""",
+      """, "score": {"constant": {"value": 3}}""",
+      """, "score": {"function": {"path": {"value": "pop", "undefined": 0.25}}}""")
+    // embeddedDocument's score option is its child aggregate, not a modifier
+    val embedded = Seq("sum", "maximum").map { agg =>
+      "embeddedDocument" ->
+        ("""{"path": "items", "operator": {"range": {"path": "qty", "gte": 30, "lte": 50}},""" +
+          s""" "score": {"embedded": {"aggregate": "$agg"}}}""")
+    }
+    val cases = (for ((kind, body) <- clauses; mod <- mods)
+      yield kind -> s"{$body$mod}") ++ embedded
+    for ((kind, clause) <- cases) {
+      val lone = run(s"""{"$kind": $clause}""")
+      val compound = run(s"""{"compound": {"must": [{"$kind": $clause}]}}""")
+      assert(lone.nonEmpty, s"$kind $clause matches nothing")
+      assert(lone == compound, s"$kind $clause: lone $lone vs compound $compound")
+    }
+  }
+
+  test("$search attribute clauses match as $match does on the path, and count children as filter over the array") {
+    val docs = searchCorpus
+    def ids(json: String): Set[Long] =
+      MongoPipeline(docs, json).collect().map(_.getLong(0)).toSet
+    def childCounts(json: String): Map[Long, Double] =
+      MongoPipeline(docs, json)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // (search clause body without path, $match operators, child predicate)
+    val q = (x: org.apache.spark.sql.Column) => x.getField("qty")
+    val cases = Seq[(String, String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      ("range", """"gte": 20, "lt": 50""", x => q(x) >= 20 && q(x) < 50),
+      ("equals", """"value": 30""", x => q(x) === 30),
+      ("in", """"value": [10, 40, 70]""", x => q(x).isin(10, 40, 70)),
+      ("exists", "", x => q(x).isNotNull))
+    val ops = Map(
+      "range" -> """{"$gte": 20, "$lt": 50}""",
+      "equals" -> """{"$eq": 30}""",
+      "in" -> """{"$in": [10, 40, 70]}""",
+      "exists" -> """{"$exists": true}""")
+    for ((kind, fields, childPred) <- cases) {
+      val body = if (fields.isEmpty) """"path": "qty"""" else s""""path": "qty", $fields"""
+      val searched = ids(
+        s"""[{"$$search": {"$kind": {$body}}}, {"$$project": {"doc_id": 1}}]""")
+      val matched = ids(
+        s"""[{"$$match": {"qty": ${ops(kind)}}}, {"$$project": {"doc_id": 1}}]""")
+      assert(searched.nonEmpty && searched == matched,
+        s"$kind: $$search $searched vs $$match $matched")
+      val counts = childCounts(
+        s"""[{"$$search": {"embeddedDocument": {"path": "items",
+              "operator": {"$kind": {$body}}}}},
+            {"$$project": {"doc_id": 1, "score": {"$$meta": "searchScore"}}}]""")
+      val expected = docs
+        .select(col("doc_id"), size(filter(col("items"), childPred)).as("n"))
+        .where(col("n") > 0) // a null array has no size
+        .collect().map(r => r.getLong(0) -> r.getInt(1).toDouble).toMap
+      assert(counts.nonEmpty && counts == expected,
+        s"embedded $kind: $$search $counts vs size(filter) $expected")
+    }
   }
 }
