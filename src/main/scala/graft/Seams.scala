@@ -48,10 +48,16 @@ object Seams {
     new java.util.concurrent.ConcurrentLinkedQueue[Dataset[_]]()
 
   /** Multi-consumer reuse seam: compute the shared subtree once.
-    * Lazy — nothing materializes until the first consuming action
-    * (which, in every registered use, is a job that needs the whole
-    * table anyway). Equivalent to [[cut]]`(ds, eager = false)`; the
-    * two names document intent at the call sites.
+    * Equivalent to [[cut]]`(ds, eager = false)`; the two names
+    * document intent at the call sites.
+    *
+    * Not lazy under AQE (on in [[LocalSpark]]): `checkpoint(eager =
+    * false)` still calls `SparkPlan.execute()` to get the RDD it
+    * wraps, and an adaptive plan executes every shuffle-map stage
+    * below it to do so. Building a seam over a shuffle therefore
+    * launches those stages' jobs at once, before any action — so a
+    * frame with a seam costs jobs while it is built (`SeamsSpec` pins
+    * this). Only the final stage waits for the consuming action.
     */
   def seam[T](ds: Dataset[T]): Dataset[T] = cut(ds, eager = false)
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -719,30 +719,57 @@ object Dedup {
   def substrTrim(docs: DataFrame, idCol: String, textCol: String,
                  blockLen: Int = 30): DataFrame = {
     require(blockLen > 0, s"substrTrim blockLen must be positive: $blockLen")
-    val blocks = docs
-      .filter(length(col(textCol)) >= blockLen)
-      .select(col(idCol).as("doc_id"),
-        explode(sequence(lit(1), length(col(textCol)) - (blockLen - 1),
-          lit(blockLen))).as("__p"),
-        col(textCol).as("__t"))
-      .select(col("doc_id"), col("__p"),
-        substring(col("__t"), col("__p"), lit(blockLen)).as("__b"))
+    val blocks = alignedBlocks(docs, textCol, blockLen, Some(idCol))
       .withColumn("h", hash60(col("__b")))
     val nd = blocks.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("__ndocs"))
-    val kept = blocks.join(nd, Seq("h"))
+    reassemble(docs, idCol, textCol, blockLen, blocks.join(nd, Seq("h")),
+      col("__ndocs") >= 2)
+  }
+
+  /** The aligned-block grid of the span family: one row per full
+    * `blockLen`-char block of every document at least one block
+    * long, with its 1-based start `__p` and its text `__b`, keyed by
+    * `doc_id` when `idCol` is given. Every span operator cuts text
+    * through this one grid, so the daemon's standing [[blockIndex]]
+    * and the [[substrTrimIncremental]] probe of each batch agree on
+    * block boundaries by construction.
+    */
+  private def alignedBlocks(docs: DataFrame, textCol: String, blockLen: Int,
+                            idCol: Option[String]): DataFrame = {
+    val id = idCol.map(c => col(c).as("doc_id")).toSeq
+    docs
+      .filter(length(col(textCol)) >= blockLen)
+      .select(id ++ Seq(
+        explode(sequence(lit(1), length(col(textCol)) - (blockLen - 1),
+          lit(blockLen))).as("__p"),
+        col(textCol).as("__t")): _*)
+      .select(id.map(_ => col("doc_id")) ++ Seq(col("__p"),
+        substring(col("__t"), col("__p"), lit(blockLen)).as("__b")): _*)
+  }
+
+  /** The per-document reassembly of the span trims: `judged` holds
+    * [[alignedBlocks]] rows, and a block is dropped where `removed`
+    * is true (null keeps it). The document reassembles from its kept
+    * blocks in position order plus the partial tail after the last
+    * full block, verbatim; documents shorter than one block pass
+    * through. Emits doc_id, clean_text, n_blocks, n_removed.
+    */
+  private def reassemble(docs: DataFrame, idCol: String, textCol: String,
+                         blockLen: Int, judged: DataFrame,
+                         removed: Column): DataFrame = {
+    val kept = judged
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_blocks"),
-        sum(when(col("__ndocs") >= 2, 1L).otherwise(0L)).as("n_removed"),
+        sum(when(removed, 1L).otherwise(0L)).as("n_removed"),
         array_join(transform(
-          array_sort(collect_list(when(col("__ndocs") < 2,
+          array_sort(collect_list(when(!coalesce(removed, lit(false)),
             struct(col("__p"), col("__b"))))),
           x => x.getField("__b")), "").as("__body"))
     docs.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
       .join(kept, Seq("doc_id"), "left")
       .select(col("doc_id"),
         concat(coalesce(col("__body"), lit("")),
-          // the partial tail after the last full block, verbatim
           expr(s"substring(__t, CAST((length(__t) div $blockLen) * $blockLen" +
             " + 1 AS INT))")).as("clean_text"),
         coalesce(col("n_blocks"), lit(0L)).as("n_blocks"),
@@ -862,14 +889,8 @@ object Dedup {
     val idx = blockIndex(docs.filter(isBench), textCol, blockLen)
       .withColumn("__hit", lit(true))
     val corpus = docs.filter(!isBench)
-    val blocks = corpus
-      .filter(length(col(textCol)) >= blockLen)
-      .select(col(idCol).as("doc_id"),
-        explode(sequence(lit(1), length(col(textCol)) - (blockLen - 1),
-          lit(blockLen))).as("__p"),
-        col(textCol).as("__t"))
-      .select(col("doc_id"),
-        hash60(substring(col("__t"), col("__p"), lit(blockLen))).as("h"))
+    val blocks = alignedBlocks(corpus, textCol, blockLen, Some(idCol))
+      .select(col("doc_id"), hash60(col("__b")).as("h"))
     val per = blocks.join(broadcast(idx), Seq("h"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_blocks"),
@@ -890,12 +911,8 @@ object Dedup {
     */
   def blockIndex(docs: DataFrame, textCol: String,
                  blockLen: Int = 30): DataFrame =
-    docs
-      .filter(length(col(textCol)) >= blockLen)
-      .select(explode(sequence(lit(1),
-        length(col(textCol)) - (blockLen - 1), lit(blockLen))).as("__p"),
-        col(textCol).as("__t"))
-      .select(hash60(substring(col("__t"), col("__p"), lit(blockLen))).as("h"))
+    alignedBlocks(docs, textCol, blockLen, None)
+      .select(hash60(col("__b")).as("h"))
       .distinct()
 
   /** F16b: INCREMENTAL span trim — [[substrTrim]]'s cross-batch
@@ -914,32 +931,11 @@ object Dedup {
                             idCol: String, textCol: String,
                             blockLen: Int = 30): DataFrame = {
     require(blockLen > 0, s"blockLen must be positive: $blockLen")
-    val blocks = batch
-      .filter(length(col(textCol)) >= blockLen)
-      .select(col(idCol).as("doc_id"),
-        explode(sequence(lit(1), length(col(textCol)) - (blockLen - 1),
-          lit(blockLen))).as("__p"),
-        col(textCol).as("__t"))
-      .select(col("doc_id"), col("__p"),
-        substring(col("__t"), col("__p"), lit(blockLen)).as("__b"))
+    val blocks = alignedBlocks(batch, textCol, blockLen, Some(idCol))
       .withColumn("h", hash60(col("__b")))
-    val kept = blocks
-      .join(index.select(col("h"), lit(true).as("__hit")), Seq("h"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_blocks"),
-        sum(when(col("__hit"), 1L).otherwise(0L)).as("n_removed"),
-        array_join(transform(
-          array_sort(collect_list(when(!coalesce(col("__hit"), lit(false)),
-            struct(col("__p"), col("__b"))))),
-          x => x.getField("__b")), "").as("__body"))
-    batch.select(col(idCol).as("doc_id"), col(textCol).as("__t"))
-      .join(kept, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        concat(coalesce(col("__body"), lit("")),
-          expr(s"substring(__t, CAST((length(__t) div $blockLen) * $blockLen" +
-            " + 1 AS INT))")).as("clean_text"),
-        coalesce(col("n_blocks"), lit(0L)).as("n_blocks"),
-        coalesce(col("n_removed"), lit(0L)).as("n_removed"))
+    reassemble(batch, idCol, textCol, blockLen,
+      blocks.join(index.select(col("h"), lit(true).as("__hit")), Seq("h"), "left"),
+      col("__hit"))
   }
 
   /** F19: OFF-GRID exact-substring trim — closes [[substrTrim]]'s

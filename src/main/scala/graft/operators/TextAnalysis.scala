@@ -338,6 +338,48 @@ object TextAnalysis {
         round(col("__lp") / lit(1e6) / col("n_tok"), 4).as("avg_logp"))
   }
 
+  /** Every word n-gram position of `textCol`'s tokens, one array per
+    * row, via the codegen non-distinct [[graft.functions.WordShinglesAll]].
+    */
+  private def wordGrams(textCol: String, n: Int): Column = {
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(graft.functions.WordShinglesAll(
+      GraftBridge.expression(tokens(col(textCol))), n))
+  }
+
+  /** The n-gram count table every n-gram LM scorer starts from: one
+    * `(doc_id, gram, tf)` row per distinct n-gram of a document. The
+    * corpus explodes once; every corpus table is a partial-agg
+    * groupBy over these already-aggregated rows.
+    */
+  private def docGrams(docs: DataFrame, idCol: String, textCol: String,
+                       n: Int): DataFrame =
+    docs.select(col(idCol).as("doc_id"), explode(wordGrams(textCol, n)).as("gram"))
+      .groupBy(col("doc_id"), col("gram")).agg(count(lit(1)).as("tf"))
+
+  /** The per-document tail of the deterministic LM scores: each
+    * `(doc_id, tf, __ln)` row fix-points to int64 micronats scaled by
+    * tf BEFORE the per-doc sum (exact, order-free), and the mean per
+    * position comes out as `scoreCol`, with the positions in `countCol`.
+    */
+  private def micronatMean(scored: DataFrame, countCol: String,
+                           scoreCol: String): DataFrame =
+    scored
+      .withColumn("__c", round(col("tf").cast("double") * col("__ln") *
+        lit(1000000.0)).cast("long"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("tf")).as(countCol), sum(col("__c")).as("__lp"))
+      // final 4-decimal rounding at INTEGER scale: one IEEE division
+      // to deci-milli-nats, round to a whole number (scale-0 rounding
+      // of the SAME double is engine-identical — fractional-scale
+      // round(x, 4) scales by 10⁴ internally in DuckDB and disagreed
+      // with exact-decimal HALF_UP on a boundary double at the 100×
+      // decade), then an exact /10⁴ back to the display value
+      .select(col("doc_id"), col(countCol),
+        (round(col("__lp").cast("double") /
+          (col(countCol).cast("double") * lit(100.0))) / lit(10000.0))
+          .as(scoreCol))
+
   /** H18b: bigram-LM quality score — the next n up from
     * [[unigramLogProb]], one step toward CCNet's KenLM-style n-gram
     * perplexity filter: per-document average conditional log-prob
@@ -360,20 +402,15 @@ object TextAnalysis {
     */
   def bigramLogProb(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val bigrams = GraftBridge.column(graft.functions.WordShinglesAll(
-      GraftBridge.expression(tokens(col(textCol))), 2))
-    val docBf = docs.select(col(idCol).as("doc_id"),
-        explode(bigrams).as("bg"))
-      .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("tf"))
-    val cf = docBf.groupBy(col("bg")).agg(sum(col("tf")).as("cf"))
-      .withColumn("a", split(col("bg"), " ").getItem(0))
+    val docBf = docGrams(docs, idCol, textCol, 2)
+    val cf = docBf.groupBy(col("gram")).agg(sum(col("tf")).as("cf"))
+      .withColumn("a", split(col("gram"), " ").getItem(0))
     val ctx = cf.groupBy(col("a")).agg(sum(col("cf")).as("ctx"))
     val vocab = broadcast(cf
-      .select(explode(split(col("bg"), " ")).as("tok"))
+      .select(explode(split(col("gram"), " ")).as("tok"))
       .agg(countDistinct(col("tok")).as("v")))
     docBf
-      .join(cf.select(col("bg"), col("cf"), col("a")), "bg")
+      .join(cf.select(col("gram"), col("cf"), col("a")), "gram")
       .join(ctx, "a")
       .crossJoin(vocab)
       .withColumn("__c", round(col("tf").cast("double") *
@@ -387,39 +424,6 @@ object TextAnalysis {
           col("n_big").cast("double"), 4).as("avg_logp2"))
   }
 
-  /** H18c: trigram-LM quality score with interpolated backoff — the
-    * next honest step from [[bigramLogProb]] toward CCNet's KenLM
-    * 5-gram filter: per-document average log-prob over trigram
-    * positions of ln P̂(c|a,b) under the fixed-weight interpolation
-    *   P̂ = 0.5·P3 + 0.3·P2 + 0.2·P1,
-    * each level add-α smoothed (α = 0.5) against its own
-    * corpus-derived context:
-    *   P3 = (c(abc)+α)/(c(ab·)+αV)   c(ab·) = Σ_c c(abc)
-    *   P2 = (c(bc)+α)/(c(b·)+αV)     from the corpus bigram table
-    *   P1 = (c(c)+α)/(N+αV)          from the corpus unigram table
-    * with V = distinct token types observed in any trigram (the
-    * H18b vocabulary rule, one level up). Interpolation (vs strict
-    * Katz backoff) keeps the score a single smooth formula both
-    * engines replay operation for operation.
-    *
-    * Shape (the unigram/bigram discipline): ONE doc-keyed explode
-    * builds per-(doc, trigram) counts via the codegen non-distinct
-    * [[graft.functions.WordShinglesAll]]; every corpus table — cf3,
-    * its ab-context, the bigram cf2/b-context, unigram cf1 — is a
-    * partial-agg groupBy to VOCAB-sized rows (never a token-keyed
-    * window; Zipf-hot n-grams stay splittable, the joins
-    * AQE-skew-split), and every lower-level lookup key (bc, b, c) of
-    * a trigram necessarily occurs in its own corpus table, so all
-    * joins are inner and lossless. V, N fold in as broadcast 1-row
-    * aggregates. Per-position contributions fix-point to int64
-    * micronats scaled by tf BEFORE the per-doc sum — exact,
-    * order-free — and, unlike H18/H18b, the logarithm itself is the
-    * DETERMINISTIC shared-algorithm [[withLnDet]], so this query
-    * carries ZERO libm parity assumptions (a JVM-vs-DuckDB 1-ulp
-    * `ln` disagreement flipped one doc's micronat rounding at the
-    * 100× decade before this). Docs with fewer than 3 tokens have
-    * no trigram position and are excluded.
-    */
   /** Deterministic natural log for probabilities in (0, 1] — BOTH
     * engines evaluate the SAME sequence of IEEE-754 +,−,×,÷ ops, so
     * the result is bit-identical by construction (unlike
@@ -505,38 +509,63 @@ object TextAnalysis {
         (1 to 12).map(j => s"__xp$j").toList: _*)
   }
 
+  /** H18c: trigram-LM quality score with interpolated backoff — the
+    * next honest step from [[bigramLogProb]] toward CCNet's KenLM
+    * 5-gram filter: per-document average log-prob over trigram
+    * positions of ln P̂(c|a,b) under the fixed-weight interpolation
+    *   P̂ = 0.5·P3 + 0.3·P2 + 0.2·P1,
+    * each level add-α smoothed (α = 0.5) against its own
+    * corpus-derived context:
+    *   P3 = (c(abc)+α)/(c(ab·)+αV)   c(ab·) = Σ_c c(abc)
+    *   P2 = (c(bc)+α)/(c(b·)+αV)     from the corpus bigram table
+    *   P1 = (c(c)+α)/(N+αV)          from the corpus unigram table
+    * with V = distinct token types observed in any trigram (the
+    * H18b vocabulary rule, one level up). Interpolation (vs strict
+    * Katz backoff) keeps the score a single smooth formula both
+    * engines replay operation for operation.
+    *
+    * Shape (the unigram/bigram discipline): ONE doc-keyed explode
+    * builds per-(doc, trigram) counts via the codegen non-distinct
+    * [[graft.functions.WordShinglesAll]]; every corpus table — cf3,
+    * its ab-context, the bigram cf2/b-context, unigram cf1 — is a
+    * partial-agg groupBy to VOCAB-sized rows (never a token-keyed
+    * window; Zipf-hot n-grams stay splittable, the joins
+    * AQE-skew-split), and every lower-level lookup key (bc, b, c) of
+    * a trigram necessarily occurs in its own corpus table, so all
+    * joins are inner and lossless. V, N fold in as broadcast 1-row
+    * aggregates. Per-position contributions fix-point to int64
+    * micronats scaled by tf BEFORE the per-doc sum — exact,
+    * order-free — and, unlike H18/H18b, the logarithm itself is the
+    * DETERMINISTIC shared-algorithm [[withLnDet]], so this query
+    * carries ZERO libm parity assumptions (a JVM-vs-DuckDB 1-ulp
+    * `ln` disagreement flipped one doc's micronat rounding at the
+    * 100× decade before this). Docs with fewer than 3 tokens have
+    * no trigram position and are excluded.
+    */
   def trigramLogProb(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    def grams(n: Int) = GraftBridge.column(graft.functions.WordShinglesAll(
-      GraftBridge.expression(tokens(col(textCol))), n))
     val alpha = lit(0.5)
-    val docTf = docs.select(col(idCol).as("doc_id"), explode(grams(3)).as("tg"))
-      .groupBy(col("doc_id"), col("tg")).agg(count(lit(1)).as("tf"))
-    val cf3 = docTf.groupBy(col("tg")).agg(sum(col("tf")).as("cf3"))
-      .withColumn("__p", split(col("tg"), " "))
-      .select(col("tg"), col("cf3"),
+    val docTf = docGrams(docs, idCol, textCol, 3)
+    val cf3 = docTf.groupBy(col("gram")).agg(sum(col("tf")).as("cf3"))
+      .withColumn("__p", split(col("gram"), " "))
+      .select(col("gram"), col("cf3"),
         concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)).as("ab"),
         concat_ws(" ", col("__p").getItem(1), col("__p").getItem(2)).as("bc"),
         col("__p").getItem(1).as("b"), col("__p").getItem(2).as("c"))
-    // NO reuse seam here: materializing the type table (the kn5 move)
-    // taxes this shallow chain more than the re-derived branches cost —
-    // measured r14: the seam regressed text_trigram_lp 1.34×. The seam
-    // is depth-gated: 5-gram chains keep it, order-3 chains don't.
     val ctx3 = cf3.groupBy(col("ab")).agg(sum(col("cf3")).as("ctx3"))
-    val bi = docs.select(explode(grams(2)).as("bg"))
+    val bi = docs.select(explode(wordGrams(textCol, 2)).as("bg"))
       .groupBy(col("bg")).agg(count(lit(1)).as("cf2"))
       .withColumn("b", split(col("bg"), " ").getItem(0))
     val ctx2 = bi.groupBy(col("b")).agg(sum(col("cf2")).as("ctx2"))
     val uni = docs.select(explode(tokens(col(textCol))).as("c"))
       .groupBy(col("c")).agg(count(lit(1)).as("cf1"))
     val vocab = broadcast(cf3
-      .select(explode(split(col("tg"), " ")).as("tok"))
+      .select(explode(split(col("gram"), " ")).as("tok"))
       .agg(countDistinct(col("tok")).as("v")))
     val nTot = broadcast(uni.agg(sum(col("cf1")).as("nt")))
     val vd = col("v").cast("double")
     val scored = docTf
-      .join(cf3, "tg")
+      .join(cf3, "gram")
       .join(ctx3, "ab")
       .join(bi.select(col("bg").as("bc"), col("cf2")), "bc")
       .join(ctx2, "b")
@@ -549,259 +578,121 @@ object TextAnalysis {
           (col("ctx2").cast("double") + alpha * vd)) +
         lit(0.2) * ((col("cf1").cast("double") + alpha) /
           (col("nt").cast("double") + alpha * vd)))
-    withLnDet(scored, col("__p"), "__ln")
-      .withColumn("__c", round(col("tf").cast("double") * col("__ln") *
-        lit(1000000.0)).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("n_tri"), sum(col("__c")).as("__lp"))
-      // final 4-decimal rounding at INTEGER scale: one IEEE division
-      // to deci-milli-nats, round to a whole number (scale-0 rounding
-      // of the SAME double is engine-identical — fractional-scale
-      // round(x, 4) scales by 10⁴ internally in DuckDB and disagreed
-      // with exact-decimal HALF_UP on a boundary double at the 100×
-      // decade), then an exact /10⁴ back to the display value
-      .select(col("doc_id"), col("n_tri"),
-        (round(col("__lp").cast("double") /
-          (col("n_tri").cast("double") * lit(100.0))) / lit(10000.0))
-          .as("avg_logp3"))
+    micronatMean(withLnDet(scored, col("__p"), "__ln"), "n_tri", "avg_logp3")
   }
 
-  /** H18d: interpolated Kneser-Ney trigram score — the smoothing the
-    * production CCNet/KenLM filter actually uses, one grade above
-    * [[trigramLogProb]]'s add-α interpolation. Absolute-discount D
-    * at the top level with CONTINUATION-count lower orders (Chen &
-    * Goodman's interpolated KN): per trigram position,
-    *   P(c|ab) = (c(abc)−D)/c(ab·) + D·N₁₊(ab·)/c(ab·) · P(c|b)
-    *   P(c|b)  = (N₁₊(·bc)−D)/N₁₊(·b·) + D·N₁₊(b·)/N₁₊(·b·) · P(c)
-    *   P(c)    = N₁₊(·c)/N₁₊(··)
-    * where c(ab·) is the trigram context total, N₁₊(ab·) the distinct
-    * continuations after ab, N₁₊(·bc) the distinct LEFT contexts of
-    * bc (the "novel-continuation" reweighting that makes KN beat
-    * plain backoff: "francisco" is frequent but only ever follows
-    * "san"), N₁₊(·b·)=Σ_c N₁₊(·bc), N₁₊(b·) the distinct continuation
-    * types after b, and N₁₊(··) the distinct trigram-suffix bigram
-    * types. All max(x−D,0) guards drop because every lookup key
-    * OCCURS (counts ≥ 1 > D = 0.75) — the corpus is its own model,
-    * the H18c discipline — so every join is inner and lossless, and
-    * P > 0 always (the unigram continuation level never vanishes).
+  /** H18d/H18e: interpolated Kneser-Ney score of order `order` — the
+    * smoothing the production CCNet/KenLM filter uses, one grade
+    * above [[trigramLogProb]]'s add-α interpolation (Chen & Goodman's
+    * interpolated KN). For an n-gram position w₁..wₙ with history
+    * h = w₁..wₙ₋₁, and sₖ = the last k words, hₖ₋₁ = sₖ minus its
+    * last word:
+    *   Pₙ = (c(h wₙ)−D)/c(h·) + D·N₁₊(h·)/c(h·) · Pₙ₋₁(sₙ₋₁)
+    *   Pₖ = (N₁₊(·sₖ)−D)/N₁₊(·hₖ₋₁·) + D·N₁₊(hₖ₋₁·)/N₁₊(·hₖ₋₁·) · Pₖ₋₁(sₖ₋₁)
+    *   P₁ = N₁₊(·s₁)/N₁₊(··)
+    * for k = n−1 down to 2. c(h·) is the n-gram context total,
+    * N₁₊(h·) the distinct continuations after h; N₁₊(·sₖ) the
+    * distinct LEFT contexts of sₖ (the "novel-continuation"
+    * reweighting that makes KN beat plain backoff: "francisco" is
+    * frequent but only ever follows "san"), N₁₊(·hₖ₋₁·) = Σ N₁₊(·sₖ)
+    * over the sₖ extending hₖ₋₁, N₁₊(hₖ₋₁·) their number, and N₁₊(··)
+    * the distinct 2-word suffix types. All max(x−D,0) guards drop
+    * because every lookup key OCCURS (counts ≥ 1 > D = 0.75) — the
+    * corpus is its own model, the H18c discipline — so every join is
+    * inner and lossless, and P > 0 always.
     *
-    * Shape = H18c exactly: ONE doc-keyed trigram explode; every count
-    * table (cf3/ctx3 and the three continuation tables, all derived
-    * from the DISTINCT-trigram-type table, never re-scanning the
-    * corpus) is a partial-agg groupBy to vocab-sized rows; N₁₊(··)
-    * folds in as a broadcast 1-row aggregate; the probability is ONE
-    * fixed-order IEEE formula both engines replay op for op; ln is
-    * the deterministic [[withLnDet]] (zero libm parity); per-position
-    * contributions fix-point to int64 micronats scaled by tf BEFORE
-    * the per-doc sum. Docs with < 3 tokens have no trigram position
-    * and are excluded.
+    * Shape: ONE doc-keyed n-gram explode ([[docGrams]]). Every
+    * continuation level derives from the distinct n-gram TYPE table by
+    * dropping the leftmost word and re-deduping (the standard KN
+    * suffix chain; count(*) per key over unique rows IS N₁₊), so no
+    * table re-scans the corpus; each is a partial-agg groupBy to
+    * vocab-sized rows, and N₁₊(··) folds in as a broadcast 1-row
+    * aggregate. The probability depends only on the n-gram TYPE, so
+    * the chain joins run over the type table, the fixed-order IEEE
+    * formula the oracle mirrors op for op evaluates once per type,
+    * ln is the deterministic [[withLnDet]] (zero libm parity), and the
+    * corpus stream pays ONE join on the n-gram. Emits
+    * `(doc_id, tf, __ln)` per (doc, n-gram) for [[micronatMean]].
+    */
+  private def knLogProb(docs: DataFrame, idCol: String, textCol: String,
+                        order: Int, discount: Double): DataFrame = {
+    require(order >= 3, s"knLogProb order must be at least 3: $order")
+    val d = lit(discount)
+    def words(split: Column, from: Int, to: Int): Column =
+      if (from == to) split.getItem(from)
+      else concat_ws(" ", (from to to).map(split.getItem(_)): _*)
+    // Reuse seams on the type table and every continuation level, only
+    // above order 3. Each feeds several consumers (its totals, the next
+    // level, the chain join); without a seam column pruning
+    // de-canonicalizes each branch, no ReusedExchange fires, and every
+    // level re-scans the corpus: order 5 measured 11 scans / 37
+    // exchanges without them, 1 scan with them. At order 3 the
+    // re-derived branches are a few independent subtrees that run in
+    // parallel inside one job, while a seam serializes
+    // materialize-then-read: measured slower with seams in r14
+    // (text_trigram_lp 1.34×) and r17 (text_kn_lp 1.6 → 3.0 s,
+    // corpus_mix_doremi min 1.99 → 2.27 s with the type table alone).
+    // The corpus-sized doc table is never seamed: re-deriving the
+    // explode beats materializing it at order 5 too (r17).
+    def gate(t: DataFrame): DataFrame = if (order > 3) t.seamed else t
+    val n = order
+    val docTf = docGrams(docs, idCol, textCol, n)
+    val types = gate(docTf.groupBy(col("gram")).agg(sum(col("tf")).as("cf"))
+      .withColumn("__p", split(col("gram"), " "))
+      .select(col("gram"), col("cf"),
+        words(col("__p"), 0, n - 2).as(s"h${n - 1}"),
+        words(col("__p"), 1, n - 1).as(s"s${n - 1}")))
+    // n-gram context totals; type rows are unique, so count(*) per
+    // history IS N₁₊(h·)
+    val ctx = types.groupBy(col(s"h${n - 1}"))
+      .agg(sum(col("cf")).as("ctx"), count(lit(1)).as("n1p_ctx"))
+    // the suffix chain, level k = n−1 down to 2: count(*) per sₖ over
+    // the unique rows of the level above = N₁₊(·sₖ)
+    val ks = n - 1 to 2 by -1
+    val conts = ks.scanLeft(types) { (upper, k) =>
+      gate(upper.groupBy(col(s"s$k")).agg(count(lit(1)).as(s"n1p_s$k"))
+        .withColumn("__q", split(col(s"s$k"), " "))
+        .select(col(s"s$k"), col(s"n1p_s$k"),
+          words(col("__q"), 0, k - 2).as(s"h${k - 1}"),
+          words(col("__q"), 1, k - 1).as(s"s${k - 1}")))
+    }.tail
+    val bottom = conts.last
+    val cont1 = bottom.groupBy(col("s1")).agg(count(lit(1)).as("n1p_s1"))
+    val total = broadcast(bottom.agg(count(lit(1)).as("n1p_all")))
+    val joined = ks.zip(conts).foldLeft(types.join(ctx, s"h${n - 1}")) {
+      case (acc, (k, cont)) =>
+        val mid = cont.groupBy(col(s"h${k - 1}"))
+          .agg(sum(col(s"n1p_s$k")).as(s"mid$k"), count(lit(1)).as(s"dot$k"))
+        acc.join(cont, s"s$k").join(mid, s"h${k - 1}")
+    }.join(cont1, "s1").crossJoin(total)
+    // the fixed-order IEEE formula — the oracle mirrors every op
+    def interp(n1p: String, mid: String, dot: String, lower: String) =
+      (col(n1p).cast("double") - d) / col(mid).cast("double") +
+        d * col(dot).cast("double") / col(mid).cast("double") * col(lower)
+    val probs = (2 until n).foldLeft(joined.withColumn("__p1",
+        col("n1p_s1").cast("double") / col("n1p_all").cast("double"))) {
+      (df, k) => df.withColumn(s"__p$k",
+        interp(s"n1p_s$k", s"mid$k", s"dot$k", s"__p${k - 1}"))
+    }.withColumn("__pkn", interp("cf", "ctx", "n1p_ctx", s"__p${n - 1}"))
+    val typeLn = withLnDet(probs, col("__pkn"), "__ln")
+      .select(col("gram"), col("__ln"))
+    docTf.join(typeLn, "gram")
+  }
+
+  /** H18d: [[knLogProb]] at order 3. Docs with < 3 tokens have no
+    * trigram position and are excluded.
     */
   def knTrigramLogProb(docs: DataFrame, idCol: String, textCol: String,
-                       discount: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    def grams(n: Int) = GraftBridge.column(graft.functions.WordShinglesAll(
-      GraftBridge.expression(tokens(col(textCol))), n))
-    val d = lit(discount)
-    val docTf = docs.select(col(idCol).as("doc_id"), explode(grams(3)).as("tg"))
-      .groupBy(col("doc_id"), col("tg")).agg(count(lit(1)).as("tf"))
-    val cf3 = docTf.groupBy(col("tg")).agg(sum(col("tf")).as("cf3"))
-      .withColumn("__p", split(col("tg"), " "))
-      .select(col("tg"), col("cf3"),
-        concat_ws(" ", col("__p").getItem(0), col("__p").getItem(1)).as("ab"),
-        concat_ws(" ", col("__p").getItem(1), col("__p").getItem(2)).as("bc"),
-        col("__p").getItem(1).as("b"), col("__p").getItem(2).as("c"))
-    // NO reuse seam on the order-3 chain (depth-gated; RE-MEASURED in
-    // r17 three ways — persist/columnar on docTf+cf3 (text_kn_lp
-    // 1.6 → 3.0 s, corpus_mix_doremi 1.9 → 4.4 s), checkpoint on
-    // docTf+cf3 (same magnitude), checkpoint on the type table alone
-    // (flat-to-worse: doremi min 1.99 → 2.27 s) — all lose: the
-    // re-derived branches are independent subtrees that PARALLELIZE
-    // inside one job, while a seam serializes materialize-then-read.
-    // kn5 keeps its TYPE seams — there the 11-scan/37-exchange blowup
-    // dominates.
-    // trigram-context totals + distinct-continuation counts: cf3 rows
-    // are unique trigram TYPES, so count(*) per ab IS N₁₊(ab·)
-    val ctx3 = cf3.groupBy(col("ab"))
-      .agg(sum(col("cf3")).as("cab"), count(lit(1)).as("n1p_ab"))
-    // continuation tables — all from the TYPE table: count(*) per bc
-    // over unique (a,b,c) rows = distinct left contexts N₁₊(·bc)
-    val contBc = cf3.groupBy(col("bc")).agg(count(lit(1)).as("n1p_bc"))
-      .withColumn("__q", split(col("bc"), " "))
-      .select(col("bc"), col("n1p_bc"),
-        col("__q").getItem(0).as("b"), col("__q").getItem(1).as("c"))
-    // (no seam — depth-gated, see cf3 above)
-    val midB = contBc.groupBy(col("b"))
-      .agg(sum(col("n1p_bc")).as("n1p_mid_b"),
-        count(lit(1)).as("n1p_b_dot"))
-    val contC = contBc.groupBy(col("c")).agg(count(lit(1)).as("n1p_c"))
-    val nBc = broadcast(contBc.agg(count(lit(1)).as("nbc")))
-    // Type-level scoring (same move as [[knFivegramLogProb]]): the
-    // probability depends only on the trigram TYPE, so the chain
-    // joins run over the type table and the corpus stream pays ONE
-    // join on tg. Bit-identical values, once per type.
-    val typed = cf3
-      .join(ctx3, "ab")
-      .join(contBc.select(col("bc"), col("n1p_bc")), "bc")
-      .join(midB, "b")
-      .join(contC, "c")
-      .crossJoin(nBc)
-      // fixed-order IEEE formula — the oracle mirrors every op
-      .withColumn("__pc",
-        col("n1p_c").cast("double") / col("nbc").cast("double"))
-      .withColumn("__p2",
-        (col("n1p_bc").cast("double") - d) /
-          col("n1p_mid_b").cast("double") +
-        d * col("n1p_b_dot").cast("double") /
-          col("n1p_mid_b").cast("double") * col("__pc"))
-      .withColumn("__pkn",
-        (col("cf3").cast("double") - d) / col("cab").cast("double") +
-        d * col("n1p_ab").cast("double") / col("cab").cast("double") *
-          col("__p2"))
-    val typeLn = withLnDet(typed, col("__pkn"), "__ln")
-      .select(col("tg"), col("__ln"))
-    docTf.join(typeLn, "tg")
-      .withColumn("__c", round(col("tf").cast("double") * col("__ln") *
-        lit(1000000.0)).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("n_tri"), sum(col("__c")).as("__lp"))
-      // the H18c display rounding: scale-0 round at integer scale
-      .select(col("doc_id"), col("n_tri"),
-        (round(col("__lp").cast("double") /
-          (col("n_tri").cast("double") * lit(100.0))) / lit(10000.0))
-          .as("avg_logp_kn"))
-  }
+                       discount: Double = 0.75): DataFrame =
+    micronatMean(knLogProb(docs, idCol, textCol, 3, discount), "n_tri", "avg_logp_kn")
 
-  /** H18e: interpolated Kneser-Ney FIVE-gram score — the production
-    * CCNet/KenLM filter order ([[knTrigramLogProb]] is the order-3
-    * form; same Chen & Goodman recursion, two more levels). Per
-    * 5-gram position with history h4 = w₁..w₄:
-    *   P₅(c|h4) = (c(h4c)−D)/c(h4·) + D·N₁₊(h4·)/c(h4·) · P₄(c|h3)
-    *   P₄(c|h3) = (N₁₊(·h3c)−D)/N₁₊(·h3·) + D·N₁₊(h3·)/N₁₊(·h3·) · P₃(c|h2)
-    *   P₃(c|h2) = (N₁₊(·h2c)−D)/N₁₊(·h2·) + D·N₁₊(h2·)/N₁₊(·h2·) · P₂(c|b)
-    *   P₂(c|b)  = (N₁₊(·bc)−D)/N₁₊(·b·)  + D·N₁₊(b·)/N₁₊(·b·)  · P₁(c)
-    *   P₁(c)    = N₁₊(·c)/N₁₊(··)
-    * Every continuation table derives from the distinct 5-gram TYPE
-    * table by repeatedly dropping the leftmost word and re-deduping
-    * (c4 → c3 → c2 → c1) — the standard KN suffix chain; no table
-    * ever re-scans the corpus. All lookup keys occur (counts ≥ 1 >
-    * D = 0.75), so every join is inner and lossless and P > 0.
-    *
-    * Shape = H18d exactly: ONE doc-keyed 5-gram explode; six
-    * vocab-sized partial-agg groupBys; N₁₊(··) broadcast; one
-    * fixed-order IEEE formula; deterministic [[withLnDet]]; int64
-    * micronat fixed-point pre-sum. Docs with < 5 tokens have no
-    * 5-gram position and are excluded.
+  /** H18e: [[knLogProb]] at FIVE, the production CCNet/KenLM filter
+    * order. Docs with < 5 tokens have no 5-gram position and are
+    * excluded.
     */
   def knFivegramLogProb(docs: DataFrame, idCol: String, textCol: String,
-                        discount: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    def grams(n: Int) = GraftBridge.column(graft.functions.WordShinglesAll(
-      GraftBridge.expression(tokens(col(textCol))), n))
-    val d = lit(discount)
-    // NO seam on docTf (re-measured r17): the doc-keyed 5-gram table
-    // is corpus-sized; materializing it for its two consumers loses to
-    // re-deriving the explode (same result as order 3's depth gate).
-    val docTf = docs.select(col(idCol).as("doc_id"), explode(grams(5)).as("tg"))
-      .groupBy(col("doc_id"), col("tg")).agg(count(lit(1)).as("tf"))
-    def joinWords(c: Column, from: Int, to: Int): Column =
-      concat_ws(" ", (from to to).map(c.getItem(_)): _*)
-    val cf5 = docTf.groupBy(col("tg")).agg(sum(col("tf")).as("cf5"))
-      .withColumn("__p", split(col("tg"), " "))
-      .select(col("tg"), col("cf5"),
-        joinWords(col("__p"), 0, 3).as("h4"),
-        joinWords(col("__p"), 1, 4).as("s4"))
-      // reuse seam: the type table feeds ctx5 AND the whole suffix
-      // chain — without it column pruning de-canonicalizes each
-      // branch (no ReusedExchange fires) and every continuation table
-      // re-scans the corpus and re-builds this aggregate (measured:
-      // 11 scans / 37 exchanges → 1 scan with the chain seams)
-      .seamed
-    // 5-gram context totals + distinct continuations after h4: cf5
-    // rows are unique 5-gram TYPES, so count(*) per h4 IS N₁₊(h4·)
-    val ctx5 = cf5.groupBy(col("h4"))
-      .agg(sum(col("cf5")).as("ch4"), count(lit(1)).as("n1p_h4"))
-    // the suffix chain: count(*) per s4 over unique 5-gram rows =
-    // distinct left contexts N₁₊(·s4); then drop-left and re-dedup
-    val cont4 = cf5.groupBy(col("s4")).agg(count(lit(1)).as("n1p_s4"))
-      .withColumn("__q", split(col("s4"), " "))
-      .select(col("s4"), col("n1p_s4"),
-        joinWords(col("__q"), 0, 2).as("h3"),
-        joinWords(col("__q"), 1, 3).as("s3"))
-      .seamed // feeds mid4 + cont3 + the join
-    val mid4 = cont4.groupBy(col("h3"))
-      .agg(sum(col("n1p_s4")).as("n1p_mid_h3"),
-        count(lit(1)).as("n1p_h3_dot"))
-    val cont3 = cont4.groupBy(col("s3")).agg(count(lit(1)).as("n1p_s3"))
-      .withColumn("__q", split(col("s3"), " "))
-      .select(col("s3"), col("n1p_s3"),
-        joinWords(col("__q"), 0, 1).as("h2"),
-        joinWords(col("__q"), 1, 2).as("s2"))
-      .seamed // feeds mid3 + cont2 + the join
-    val mid3 = cont3.groupBy(col("h2"))
-      .agg(sum(col("n1p_s3")).as("n1p_mid_h2"),
-        count(lit(1)).as("n1p_h2_dot"))
-    val cont2 = cont3.groupBy(col("s2")).agg(count(lit(1)).as("n1p_s2"))
-      .withColumn("__q", split(col("s2"), " "))
-      .select(col("s2"), col("n1p_s2"),
-        col("__q").getItem(0).as("b"), col("__q").getItem(1).as("c"))
-      .seamed // feeds mid2 + cont1 + nS2 + join
-    val mid2 = cont2.groupBy(col("b"))
-      .agg(sum(col("n1p_s2")).as("n1p_mid_b"),
-        count(lit(1)).as("n1p_b_dot"))
-    val cont1 = cont2.groupBy(col("c")).agg(count(lit(1)).as("n1p_c"))
-    val nS2 = broadcast(cont2.agg(count(lit(1)).as("ns2")))
-    // The probability depends only on the 5-gram TYPE, so the whole
-    // chain joins over the TYPE table and the corpus stream pays ONE
-    // join on tg (before: the same nine joins ran over every
-    // (doc, tg) row — at scale the corpus stream dwarfs the type
-    // table, so it must never be the side walking the chain). Values
-    // are bit-identical: the same expression tree evaluates over the
-    // same per-type inputs, once instead of once per document.
-    val typed = cf5
-      .join(ctx5, "h4")
-      .join(cont4.select(col("s4"), col("n1p_s4"), col("h3"), col("s3")), "s4")
-      .join(mid4, "h3")
-      .join(cont3.select(col("s3"), col("n1p_s3"), col("h2"), col("s2")), "s3")
-      .join(mid3, "h2")
-      .join(cont2.select(col("s2"), col("n1p_s2"), col("b"), col("c")), "s2")
-      .join(mid2, "b")
-      .join(cont1, "c")
-      .crossJoin(nS2)
-      // fixed-order IEEE formula — the oracle mirrors every op
-      .withColumn("__p1",
-        col("n1p_c").cast("double") / col("ns2").cast("double"))
-      .withColumn("__p2",
-        (col("n1p_s2").cast("double") - d) /
-          col("n1p_mid_b").cast("double") +
-        d * col("n1p_b_dot").cast("double") /
-          col("n1p_mid_b").cast("double") * col("__p1"))
-      .withColumn("__p3",
-        (col("n1p_s3").cast("double") - d) /
-          col("n1p_mid_h2").cast("double") +
-        d * col("n1p_h2_dot").cast("double") /
-          col("n1p_mid_h2").cast("double") * col("__p2"))
-      .withColumn("__p4",
-        (col("n1p_s4").cast("double") - d) /
-          col("n1p_mid_h3").cast("double") +
-        d * col("n1p_h3_dot").cast("double") /
-          col("n1p_mid_h3").cast("double") * col("__p3"))
-      .withColumn("__pkn",
-        (col("cf5").cast("double") - d) / col("ch4").cast("double") +
-        d * col("n1p_h4").cast("double") / col("ch4").cast("double") *
-          col("__p4"))
-    val typeLn = withLnDet(typed, col("__pkn"), "__ln")
-      .select(col("tg"), col("__ln"))
-    docTf.join(typeLn, "tg")
-      .withColumn("__c", round(col("tf").cast("double") * col("__ln") *
-        lit(1000000.0)).cast("long"))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("n_5g"), sum(col("__c")).as("__lp"))
-      // the H18c display rounding: scale-0 round at integer scale
-      .select(col("doc_id"), col("n_5g"),
-        (round(col("__lp").cast("double") /
-          (col("n_5g").cast("double") * lit(100.0))) / lit(10000.0))
-          .as("avg_logp_kn5"))
-  }
+                        discount: Double = 0.75): DataFrame =
+    micronatMean(knLogProb(docs, idCol, textCol, 5, discount), "n_5g", "avg_logp_kn5")
 
   // ——— H7e/H22b: unigram-LM (SentencePiece-style) tokenizer ———
 
@@ -984,13 +875,10 @@ object TextAnalysis {
     */
   def pmiPairs(docs: DataFrame, idCol: String, textCol: String,
                minCount: Long = 5, k: Int = 20): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     val toks = tokens(col(textCol))
     val uni = docs.select(explode(toks).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c1"))
-    val bi = docs.select(explode(GraftBridge.column(
-        graft.functions.WordShinglesAll(GraftBridge.expression(toks), 2)))
-        .as("bg"))
+    val bi = docs.select(explode(wordGrams(textCol, 2)).as("bg"))
       .groupBy(col("bg")).agg(count(lit(1)).as("cab"))
       .filter(col("cab") >= minCount)
     val totals = broadcast(uni.groupBy().agg(

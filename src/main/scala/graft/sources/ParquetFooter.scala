@@ -30,19 +30,29 @@ object ParquetFooter {
     * None when nothing exists at `path`; a directory without a data
     * file fails as inference does (`UNABLE_TO_INFER_SCHEMA`).
     */
-  def schema(spark: SparkSession, path: String): Option[StructType] = {
+  def schema(spark: SparkSession, path: String): Option[StructType] =
+    read(spark, path).map(toSpark(spark, _))
+
+  /** The footer [[schema]] converts, unconverted: for a caller that
+    * must look at the file's own parquet types (say, a timestamp's
+    * unit) before choosing the session settings to convert with.
+    */
+  def read(spark: SparkSession, path: String): Option[Footer] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
     else {
       val file = firstDataFile(fs, fs.getFileStatus(p)).getOrElse(
         throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet")))
-      val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(file, fs.getConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      Some(ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      Some(new Footer(file.getPath, ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(file, fs.getConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)))
     }
   }
+
+  /** `footer`'s Spark schema under the session conf as it is now. */
+  def toSpark(spark: SparkSession, footer: Footer): StructType =
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
 
   private def firstDataFile(fs: FileSystem, st: FileStatus): Option[FileStatus] =
     if (!st.isDirectory) Some(st)

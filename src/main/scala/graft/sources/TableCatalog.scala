@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -24,11 +26,13 @@ final class TableCatalog(spark: SparkSession, dir: String) {
   /** A table read with its footer schema ([[ParquetFooter]]), so
     * building it launches no schema-inference job. An absent table
     * reads with an empty schema, which leaves Spark's own path check
-    * to fail it.
+    * to fail it. `prepare` sees the footer before it is converted.
     */
-  private def raw(name: String): DataFrame = {
+  private def raw(name: String, prepare: Footer => Unit = _ => ()): DataFrame = {
     val path = s"$dir/$name.parquet"
-    spark.read.schema(ParquetFooter.schema(spark, path).getOrElse(new StructType))
+    val footer = ParquetFooter.read(spark, path)
+    footer.foreach(prepare)
+    spark.read.schema(footer.map(ParquetFooter.toSpark(spark, _)).getOrElse(new StructType))
       .parquet(path)
   }
 
@@ -46,10 +50,15 @@ final class TableCatalog(spark: SparkSession, dir: String) {
     * TIMESTAMP_NTZ when the file's isAdjustedToUTC is false). Branch
     * on the scanned dtype so either generation yields the same
     * session-TZ TimestampType column the oracles compare against.
+    *
+    * Reading nanos as long takes the session-wide
+    * `spark.sql.legacy.parquet.nanosAsLong`, at planning and at scan
+    * time alike, so it is set only when the footer shows a
+    * TIMESTAMP(NANOS) `ts`; a µs table leaves the session untouched.
     */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = raw("events")
+    val df = raw("events", footer => if (nanosTs(footer))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
     df.schema("ts").dataType match {
       case LongType =>
         // integer `div`, not `/`: nanosecond epochs exceed double's 2^53
@@ -61,6 +70,13 @@ final class TableCatalog(spark: SparkSession, dir: String) {
         df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df // already a session-TZ timestamp
     }
+  }
+  private def nanosTs(footer: Footer): Boolean = {
+    val schema = footer.getParquetMetadata.getFileMetaData.getSchema
+    schema.containsField("ts") && (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+      case _ => false
+    })
   }
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")

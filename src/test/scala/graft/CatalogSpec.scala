@@ -55,6 +55,18 @@ class CatalogSpec extends SparkTestBase {
     assert(jobs == 0, s"$jobs jobs")
   }
 
+  test("catalog: events over µs data leaves the session's nanosAsLong unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    def set = spark.sessionState.conf.getAllConfs.get(key) // None: never set
+    val before = set
+    spark.conf.unset(key)
+    try {
+      val ev = TableCatalog(spark, dir).events
+      assert(ev.schema("ts").dataType == TimestampType)
+      assert(set.isEmpty, set)
+    } finally before.foreach(spark.conf.set(key, _))
+  }
+
   test("registry build is job-free: building q1_pricing launches no Spark job") {
     val (jobs, _) = jobsOutsideSql(SparkEntry.queries("q1_pricing")(spark, dir))
     assert(jobs == 0, s"$jobs jobs")

@@ -722,6 +722,83 @@ class CurationSpec extends SparkTestBase {
       s"got ${out.head.getDouble(2)}, want $expR")
   }
 
+  /** Driver-side replay of interpolated Kneser-Ney at `order`, level
+    * by level as the Chen & Goodman recursion reads, with `math.log`,
+    * the micronat pre-sum and the integer-scale display rounding:
+    * doc_id → (positions, avg log-prob). Also returns, per level k of
+    * the suffix chain (k < order; k = order is the n-gram table,
+    * which has no left contexts), the most left contexts of one
+    * suffix and (k ≥ 2) the most continuations of one history, so a
+    * spec can show its corpus branches everywhere.
+    */
+  private def knReplay(docs: Seq[(Long, String)], order: Int, d: Double = 0.75)
+      : (Map[Long, (Long, Double)], Map[Int, (Long, Long)]) = {
+    def halfUp(x: Double) = BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP)
+    val grams = docs.map { case (id, t) =>
+      id -> t.trim.toLowerCase.split(" +").toSeq.sliding(order)
+        .filter(_.length == order).toSeq
+    }.filter(_._2.nonEmpty)
+    val cf = grams.flatMap(_._2).groupBy(identity).map { case (g, o) => g -> o.size.toLong }
+    // history → (context total, distinct continuations)
+    val ctx = cf.groupBy(_._1.init).map { case (h, m) => h -> ((m.values.sum, m.size.toLong)) }
+    // suffix s → N₁₊(·s); history h → (Σ N₁₊(·s) over s extending h, #such s)
+    var n1p = Map.empty[Seq[String], Long]
+    var mid = Map.empty[Seq[String], (Long, Long)]
+    var branching = Map(order -> ((0L, ctx.values.map(_._2).max)))
+    var upper = cf.keySet.toSeq
+    for (k <- order - 1 to 1 by -1) {
+      val level = upper.groupBy(_.tail).map { case (s, us) => s -> us.size.toLong }
+      val m = level.groupBy(_._1.init).map { case (h, l) => h -> ((l.values.sum, l.size.toLong)) }
+      n1p ++= level
+      if (k >= 2) mid ++= m
+      branching += k -> ((level.values.max, if (k >= 2) m.values.map(_._2).max else 0L))
+      upper = level.keySet.toSeq
+    }
+    val total = n1p.keys.count(_.length == 2).toDouble
+    def p(s: Seq[String]): Double =
+      if (s.length == 1) n1p(s).toDouble / total
+      else {
+        val (m, dot) = mid(s.init)
+        (n1p(s).toDouble - d) / m.toDouble + d * dot.toDouble / m.toDouble * p(s.tail)
+      }
+    def pTop(g: Seq[String]): Double = {
+      val (c, cont) = ctx(g.init)
+      (cf(g).toDouble - d) / c.toDouble + d * cont.toDouble / c.toDouble * p(g.tail)
+    }
+    val scores = grams.map { case (id, gs) =>
+      val tf = gs.groupBy(identity).map { case (g, o) => g -> o.size.toLong }
+      val micro = tf.map { case (g, n) => halfUp(n.toDouble * math.log(pTop(g)) * 1e6).toLong }.sum
+      id -> ((gs.size.toLong, halfUp(micro / (gs.size * 100.0)).toDouble / 10000.0))
+    }.toMap
+    (scores, branching)
+  }
+
+  test("KN trigram and 5-gram: branching contexts match a driver-side replay of the recursion") {
+    // four words, so suffixes at every level have several left
+    // contexts and histories several continuations: a swapped
+    // N₁₊(·h·)/N₁₊(h·) or a mixed-up lower level changes the scores
+    val corpus = Seq(
+      1L -> "a b c a b d a b c d",
+      2L -> "c a b c a b d d a b",
+      3L -> "d a b c d a b c a c b",
+      4L -> "b a b c a d b c a b c",
+      5L -> "a c b d a b c",
+      6L -> "b a c")
+    for ((order, run) <- Seq[(Int, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        3 -> (TextAnalysis.knTrigramLogProb(_, "doc_id", "text")),
+        5 -> (TextAnalysis.knFivegramLogProb(_, "doc_id", "text")))) {
+      val (want, branching) = knReplay(corpus, order)
+      for (k <- 1 to order) {
+        val (left, cont) = branching(k)
+        if (k < order) assert(left >= 2, s"order $order level $k: no suffix with two left contexts")
+        if (k >= 2) assert(cont >= 2, s"order $order level $k: no history with two continuations")
+      }
+      val got = run(docsDf(corpus: _*)).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+      assert(got == want, s"order $order")
+    }
+  }
+
   // ——— negativeSamples ———
 
   test("negative sampling: deterministic, capped at k, never self or same-label") {
