@@ -2,11 +2,12 @@ package graft.functions
 
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 
-import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{col, posexplode, struct}
 import org.apache.spark.sql.types._
 
 /** Bounded top-n aggregate: keeps at most `n` elements per group at
@@ -174,6 +175,37 @@ case class BoundedTopK(
 }
 
 object BoundedTopK {
+
+  /** The one column constructor: the n first elements of `out` in
+    * (`keys` per `dirs`, then `out` ascending) order, as an array. The
+    * flags default to the plain top-n every ranking operator wants;
+    * the `$topN` family passes its own.
+    */
+  def column(keys: Seq[Column], dirs: Seq[Int], out: Column, n: Int,
+             keepLargest: Boolean = false, emitDesc: Boolean = false,
+             skipNull: Boolean = false): Column =
+    GraftBridge.column(BoundedTopK(
+      GraftBridge.expression(struct(keys: _*)),
+      GraftBridge.expression(out), n, dirs,
+      keepLargest, emitDesc, skipNull).toAggregateExpression())
+
+  /** The bounded rank tail: per `by` group, the n best `out` structs
+    * in (`keys` per `dirs`) order, one row each, as
+    * `(by..., rankCol, <out's fields>...)` with rank = position + 1.
+    * Map-side partials ship ≤ n rows per group per partition, so the
+    * rank step costs an n·groups-row exchange instead of the full
+    * scored set through a window sort (the dedup_ngram_topk
+    * contract). Ties inside `keys` fall to `out` ascending, so put the
+    * id in `keys` as the last tiebreak and the result is
+    * deterministic under any partitioning.
+    */
+  def ranked(df: DataFrame, by: Seq[String], keys: Seq[Column],
+             dirs: Seq[Int], out: Column, n: Int,
+             rankCol: String): DataFrame =
+    df.groupBy(by.map(col): _*).agg(column(keys, dirs, out, n).as("top"))
+      .select(by.map(col) :+ posexplode(col("top")): _*)
+      .select(by.map(col) ++ Seq((col("pos") + 1).cast("int").as(rankCol),
+        col("col.*")): _*)
 
   /** Keeps the n smallest elements w.r.t. `keepOrd`: a max-heap whose
     * head is the worst kept element, so an insert is O(log n) and the

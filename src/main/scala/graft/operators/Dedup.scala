@@ -491,7 +491,6 @@ object Dedup {
     */
   def ngramJaccardTopK(docs: DataFrame, idCol: String, textCol: String,
                        n: Int = 2, tau: Double = 0.8, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
     // Reuse seam: the collapsed representatives feed the pair
     // generator (which itself branches several ways) AND both
     // member-count re-attach joins — one collapse pass, not six.
@@ -502,15 +501,9 @@ object Dedup {
     val sym = pairs.select(col("a").as("id"), col("b").as("nbr"), col("jaccard"))
       .unionAll(
         pairs.select(col("b").as("id"), col("a").as("nbr"), col("jaccard")))
-    val best = GraftBridge.column(graft.functions.BoundedTopK(
-      GraftBridge.expression(struct(col("jaccard"), col("nbr"))),
-      GraftBridge.expression(struct(col("nbr"), col("jaccard"))),
-      k, Seq(-1, 1), keepLargest = false, emitDesc = false,
-      skipNullValue = false).toAggregateExpression())
-    sym.groupBy(col("id")).agg(best.as("top"))
-      .select(col("id"), posexplode(col("top")))
-      .select(col("id"), (col("pos") + 1).cast("int").as("rk"),
-        col("col.nbr").as("nbr"), col("col.jaccard").as("jaccard"))
+    graft.functions.BoundedTopK.ranked(sym, Seq("id"),
+        Seq(col("jaccard"), col("nbr")), Seq(-1, 1),
+        struct(col("nbr"), col("jaccard")), k, "rk")
       .join(members.select(col(idCol).as("id"), col("n_members").as("n_id")), "id")
       .join(members.select(col(idCol).as("nbr"), col("n_members").as("n_nbr")), "nbr")
       .select(col("id"), col("rk"), col("nbr"), col("jaccard"),

@@ -4,10 +4,38 @@ import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CosineSimilarity, Int8Dot, Int8Quantize, IntArrayL1, PlaneSignature, RandomProjection, SignBits, VecMaxAbs, VecSqNorm}
+import graft.functions.{BoundedTopK, CosineSimilarity, Int8Dot, Int8Quantize, IntArrayL1, PlaneSignature, RandomProjection, SignBits, VecMaxAbs, VecSqNorm}
 import graft.Seams.SeamOps
 
-/** Similarity search over embedding columns (SURVEY.md §2 group G). */
+/** Similarity search over embedding columns (SURVEY.md §2 group G).
+  *
+  * Every top-k search is a candidate generator followed by one of two
+  * ranking tails, each with one implementation:
+  *
+  *  - the window form, [[rankWithin]] (row_number over the partition,
+  *    rank ≤ k). Its one exact-refinement use is [[exactRerank]]:
+  *    candidate (query, vector) pairs scored by the rounded cosine and
+  *    ranked (cos_r DESC, vec_id). Brute force, LSH, truncated,
+  *    Hamming-rerank, exact-pruned and IVF all end in it, so any of
+  *    them that keeps every candidate equals brute force row for row.
+  *    Hamming, int8, hard negatives, the truncated shortlist, the
+  *    pruning threshold and the IVF probe list rank through
+  *    [[rankWithin]] directly;
+  *  - the bounded form, [[graft.functions.BoundedTopK.ranked]]
+  *    (groupBy → bounded top-k aggregate → posexplode, rank = pos + 1),
+  *    whose partial state is ≤ k rows per group at every stage, so the
+  *    rank exchange ships ≤ k rows per group per partition. The PQ ADC
+  *    searches, PQ rerank, the kNN graphs and the graph walk use it;
+  *    `cellKnnEdges` and the walk's beam take only its column
+  *    constructor ([[graft.functions.BoundedTopK.column]]) and keep
+  *    the unranked `explode`.
+  *
+  * Each family keeps the form it had when its plan was last measured:
+  * the window form lets InferWindowGroupLimit prune before the shuffle
+  * and keeps the plans the oracle-checked queries were timed on;
+  * moving a family to the other form changes its plan and is a
+  * performance decision for per-query counters, not a refactor.
+  */
 object Similarity {
 
   private def withCosine(s: SparkSession): Unit = CosineSimilarity.register(s)
@@ -23,25 +51,57 @@ object Similarity {
     GraftBridge.column(graft.functions.VecSumAgg(
       GraftBridge.expression(c), scale).toAggregateExpression())
 
+  /** The broadcast `(query_id, q_emb)` frame every exact-cosine
+    * search joins its candidates to.
+    */
+  private def queryFrame(queries: DataFrame): DataFrame =
+    broadcast(queries.select(col("vec_id").as("query_id"),
+      col("embedding").as("q_emb")))
+
+  /** The one window rank: `rankCol` = row_number over `partition` in
+    * `order`, keeping rank ≤ k — the filter lets Spark's
+    * InferWindowGroupLimit cut each partition key to k rows before
+    * the window's shuffle.
+    */
+  private def rankWithin(df: DataFrame, partition: Seq[Column],
+                         order: Seq[Column], k: Int,
+                         rankCol: String): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        Window.partitionBy(partition: _*).orderBy(order: _*)))
+      .filter(col(rankCol) <= k)
+
+  /** The one exact-refinement tail of the cosine searches: candidate
+    * `(query_id, vec_id, q_emb, embedding)` rows are scored
+    * `cos_r = round(cosine_sim(q_emb, embedding), 4)`, ranked per query
+    * by (cos_r DESC, vec_id) and cut at k, as
+    * `(query_id, neighbor_id, cos_r, rank)`. Every cosine search is a
+    * candidate generator plus this tail, so a search that keeps every
+    * candidate returns exactly [[bruteForceTopK]]'s rows.
+    */
+  private def exactRerank(cands: DataFrame, k: Int): DataFrame =
+    rankWithin(
+      cands.withColumn("cos_r", expr("round(cosine_sim(q_emb, embedding), 4)")),
+      Seq(col("query_id")), Seq(col("cos_r").desc, col("vec_id")), k, "rank")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("cos_r"), col("rank"))
+
+  /** One reciprocal-rank fusion term, `⌊weight·10⁹/(c + rank)⌋` in
+    * int64 (integer division — no FP reciprocal to disagree on), over
+    * the rank column `rankCol`. Shared by [[hybridRrf]] and the
+    * `$rankFusion` stage.
+    */
+  private[graft] def rrfTerm(weight: Long, c: Int, rankCol: String): Column =
+    expr(s"(${weight}L * 1000000000L) div (${c}L + $rankCol)")
+
   /** G1: brute-force cosine top-k — the exact baseline. The query set
     * is explicitly broadcast, so the big side streams once through a
     * codegen'd loop with no shuffle of the embedding table; ranking is
-    * a window over (query, rounded-cos desc, id) partitions.
+    * [[exactRerank]], a window over (query, rounded-cos desc, id).
     */
   def bruteForceTopK(s: SparkSession, emb: DataFrame, queries: DataFrame,
                      k: Int): DataFrame = {
     withCosine(s)
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    val scored = emb.join(q, col("vec_id") =!= col("query_id"))
-      .withColumn("cos_r", expr("round(cosine_sim(q_emb, embedding), 4)"))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cos_r"), col("rank"))
+    exactRerank(emb.join(queryFrame(queries), col("vec_id") =!= col("query_id")), k)
   }
 
   /** G13b: HARD-negative mining — the contrastive-training complement
@@ -60,13 +120,10 @@ object Similarity {
     withCosine(s)
     val a = broadcast(anchors.select(col("vec_id").as("anchor"),
       col("label").as("a_label"), col("embedding").as("a_emb")))
-    emb.join(a, col("vec_id") =!= col("anchor") &&
+    rankWithin(emb.join(a, col("vec_id") =!= col("anchor") &&
         col("label") =!= col("a_label"))
-      .withColumn("cos_r", expr("round(cosine_sim(a_emb, embedding), 4)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("anchor"))
-          .orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
+      .withColumn("cos_r", expr("round(cosine_sim(a_emb, embedding), 4)")),
+      Seq(col("anchor")), Seq(col("cos_r").desc, col("vec_id")), k, "rank")
       .select(col("anchor"), col("vec_id").as("negative"),
         col("label").as("neg_label"), col("cos_r"),
         col("rank").cast("int").as("rank"))
@@ -94,15 +151,8 @@ object Similarity {
       .withColumn("bucket", planeSignature("embedding", planes))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("bucket")))
-    bucketed.join(q, Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos_r", expr("round(cosine_sim(q_emb, embedding), 4)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cos_r"), col("rank"))
+    exactRerank(bucketed.join(q, Seq("bucket"))
+      .filter(col("vec_id") =!= col("query_id")), k)
   }
 
   /** G18: Matryoshka-style two-stage retrieval — coarse-score every
@@ -123,24 +173,12 @@ object Similarity {
   def truncatedTopK(s: SparkSession, emb: DataFrame, queries: DataFrame,
                     dPrefix: Int, cands: Int, k: Int): DataFrame = {
     withCosine(s)
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    val scored = emb.join(q, col("vec_id") =!= col("query_id"))
+    val scored = emb.join(queryFrame(queries), col("vec_id") =!= col("query_id"))
       .withColumn("cos_c", expr(
         s"round(cosine_sim(slice(q_emb, 1, $dPrefix), " +
           s"slice(embedding, 1, $dPrefix)), 4)"))
-    scored
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_c").desc, col("vec_id"))))
-      .filter(col("crank") <= cands)
-      .withColumn("cos_r", expr("round(cosine_sim(q_emb, embedding), 4)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cos_r"), col("rank"))
+    exactRerank(rankWithin(scored, Seq(col("query_id")),
+      Seq(col("cos_c").desc, col("vec_id")), cands, "crank"), k)
   }
 
   /** G28: 1-bit (sign) quantization + Hamming-distance top-k — the
@@ -172,14 +210,11 @@ object Similarity {
       expr1(SignBits(_, 0, 32))(col("embedding")).as(p + "0"),
       expr1(SignBits(_, 32, 32))(col("embedding")).as(p + "1"))
     val q = broadcast(words(queries, "query_id", "q"))
-    words(emb, "vec_id", "w")
+    rankWithin(words(emb, "vec_id", "w")
       .join(q, col("vec_id") =!= col("query_id"))
       .withColumn("hamming",
-        expr("cast(bit_count(w0 ^ q0) + bit_count(w1 ^ q1) as int)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("hamming"), col("vec_id"))))
-      .filter(col("rank") <= k)
+        expr("cast(bit_count(w0 ^ q0) + bit_count(w1 ^ q1) as int)")),
+      Seq(col("query_id")), Seq(col("hamming"), col("vec_id")), k, "rank")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("hamming"), col("rank"))
   }
@@ -273,17 +308,8 @@ object Similarity {
     withCosine(s)
     val shortlist = hammingTopK(s, emb, queries, kShort)
       .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    emb.join(broadcast(shortlist), col("vec_id") === col("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("cos_r", expr("round(cosine_sim(q_emb, embedding), 4)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cos_r"), col("rank"))
+    exactRerank(emb.join(broadcast(shortlist), col("vec_id") === col("neighbor_id"))
+      .join(queryFrame(queries), Seq("query_id")), k)
   }
 
   /** G5: symmetric int8 quantization of an embedding column — the
@@ -327,14 +353,11 @@ object Similarity {
     // vectors (q_a·q_b ∝ (a·b)/(maxA·maxB)); the exact integer dot
     // stays the kernel, two FP multiplies descale it (fixed order —
     // bit-identical on any engine).
-    corpus.join(q, col("vec_id") =!= col("query_id"))
+    rankWithin(corpus.join(q, col("vec_id") =!= col("query_id"))
       .withColumn("dot_i", dot)
       .withColumn("score",
-        col("dot_i").cast("double") * col("scale_q") * col("scale_c"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
+        col("dot_i").cast("double") * col("scale_q") * col("scale_c")),
+      Seq(col("query_id")), Seq(col("score").desc, col("vec_id")), k, "rank")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("dot_i"), round(col("score"), 4).as("score_r"), col("rank"))
   }
@@ -372,17 +395,8 @@ object Similarity {
                       k: Int): DataFrame = {
     withCosine(s)
     val surv = prunedSurvivors(s, emb, queries, k)
-    val qe = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb")))
-    emb.join(broadcast(surv), Seq("vec_id"))
-      .join(qe, Seq("query_id"))
-      .withColumn("cos_r", expr("round(cosine_sim(q_emb, embedding), 4)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cos_r"), col("rank"))
+    exactRerank(emb.join(broadcast(surv), Seq("vec_id"))
+      .join(queryFrame(queries), Seq("query_id")), k)
   }
 
   /** Passes 1–2 of [[exactPrunedTopK]]: the (query_id, vec_id)
@@ -425,11 +439,8 @@ object Similarity {
           (col("ql1") + col("cl1") + least(col("qd"), col("cd")) / 2.0) *
           1.0001 + 1e-9) / col("den"))
 
-    val thr = pairs
-      .withColumn("lo", col("appr") - col("err"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("lo").desc, col("cid"))))
-      .filter(col("rn") <= k)
+    val thr = rankWithin(pairs.withColumn("lo", col("appr") - col("err")),
+        Seq(col("qid")), Seq(col("lo").desc, col("cid")), k, "rn")
       .groupBy(col("qid")).agg(min(col("lo")).as("thr"))
 
     pairs.join(broadcast(thr), Seq("qid"), "left")
@@ -536,23 +547,14 @@ object Similarity {
     val cents = trainedCentroids(s, emb, nlist, iters)
     val cells = ivfAssign(emb, centDf(s, cents)).select(col("vec_id"),
       col("cid"), col("embedding"))
-    val probes = queries
-      .join(centDf(s, cents), expr("true"))
-      .withColumn("cs", expr("cosine_sim(embedding, cvec)"))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cid"))))
-      .filter(col("pr") <= nprobe)
+    val probes = rankWithin(queries
+        .join(centDf(s, cents), expr("true"))
+        .withColumn("cs", expr("cosine_sim(embedding, cvec)")),
+        Seq(col("vec_id")), Seq(col("cs").desc, col("cid")), nprobe, "pr")
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("cid"))
-    cells.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos_r", expr("round(cosine_sim(q_emb, embedding), 4)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos_r").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cos_r"), col("rank"))
+    exactRerank(cells.join(broadcast(probes), Seq("cid"))
+      .filter(col("vec_id") =!= col("query_id")), k)
   }
 
   /** G25: clustering-quality evaluation of the trained IVF index —
@@ -581,7 +583,6 @@ object Similarity {
     */
   def clusterEval(s: SparkSession, emb: DataFrame, nlist: Int = 8,
                   iters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val intDist2 =
       """aggregate(zip_with(%s, %s, (x, y) ->
         |  CAST(round(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT) -
@@ -989,11 +990,8 @@ object Similarity {
   /** Shared ADC ranking tail of [[pqTopK]]/[[ivfPqTopK]]: the in-row
     * ADC sum (m LUT lookups via the code-position array — int64, no
     * grouping needed since the (query, vec) pair is already one row),
-    * then the per-query top-k via the BOUNDED
-    * [[graft.functions.BoundedTopK]] aggregate — map-side partials
-    * ship ≤ k rows per query per partition, so the rank step costs a
-    * k·queries-row exchange instead of the full scored set through a
-    * window sort (the dedup_ngram_topk contract applied to ADC).
+    * then the per-query top-k via the bounded
+    * [[graft.functions.BoundedTopK.ranked]] tail.
     * (adc ASC, vec_id ASC) ordering — adc_dist ties ARE possible
     * (two corpus vectors that encode to identical PQ codes score
     * identically for every query), so determinism rests on the
@@ -1002,19 +1000,13 @@ object Similarity {
   private def adcRank(scored: DataFrame, m: Int, k: Int): DataFrame = {
     val adc = (0 until m).map(i =>
       element_at(col("lut"), element_at(col("cp"), i + 1) + 1)).reduce(_ + _)
-    val best = GraftBridge.column(graft.functions.BoundedTopK(
-      GraftBridge.expression(struct(col("adc_dist"), col("vec_id"))),
-      GraftBridge.expression(struct(col("vec_id"), col("adc_dist"))),
-      k, Seq(1, 1), keepLargest = false, emitDesc = false,
-      skipNullValue = false).toAggregateExpression())
-    scored
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adc.as("adc_dist"))
-      .groupBy(col("query_id")).agg(best.as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.vec_id").as("neighbor_id"),
-        col("col.adc_dist").as("adc_dist"),
-        (col("pos") + 1).cast("int").as("rank"))
+    BoundedTopK.ranked(scored
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), adc.as("adc_dist")),
+      Seq("query_id"), Seq(col("adc_dist"), col("vec_id")), Seq(1, 1),
+      struct(col("vec_id"), col("adc_dist")), k, "rank")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        col("adc_dist"), col("rank"))
   }
 
   /** G23: IVF∘PQ composed top-k search — Jégou et al.'s IVFADC, the
@@ -1124,17 +1116,11 @@ object Similarity {
         lit(0L), (acc, x) => acc + x))
     // (d2 ASC, neighbor_id ASC) re-rank — d2 ties possible for
     // duplicate vectors, so determinism rests on the id tiebreak
-    val best = GraftBridge.column(graft.functions.BoundedTopK(
-      GraftBridge.expression(struct(col("d2"), col("neighbor_id"))),
-      GraftBridge.expression(
-        struct(col("neighbor_id"), col("adc_dist"), col("d2"))),
-      k, Seq(1, 1), keepLargest = false, emitDesc = false,
-      skipNullValue = false).toAggregateExpression())
-    exact.groupBy(col("query_id")).agg(best.as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.neighbor_id").as("neighbor_id"),
-        col("col.adc_dist").as("adc_dist"), col("col.d2").as("d2"),
-        (col("pos") + 1).cast("int").as("rank"))
+    BoundedTopK.ranked(exact, Seq("query_id"),
+      Seq(col("d2"), col("neighbor_id")), Seq(1, 1),
+      struct(col("neighbor_id"), col("adc_dist"), col("d2")), k, "rank")
+      .select(col("query_id"), col("neighbor_id"), col("adc_dist"),
+        col("d2"), col("rank"))
   }
 
   /** G24: hybrid sparse+dense retrieval via reciprocal-rank fusion —
@@ -1146,9 +1132,11 @@ object Similarity {
     * — ranks need no calibration.
     *
     * Contributions are INTEGER micro-units (⌊10⁹/(c+rank)⌋ via int64
-    * DIV — no FP reciprocals to disagree on), a missing leg
+    * DIV — [[rrfTerm]], the term `$rankFusion` sums too), a missing leg
     * contributes 0 (rank columns COALESCE to 0 = "not retrieved by
-    * this leg"), and the final ordering is (rrf_micro DESC, doc_id) —
+    * this leg"; the legs meet in a full-outer join rather than
+    * `$rankFusion`'s union because the output carries each leg's
+    * rank), and the final ordering is (rrf_micro DESC, doc_id) —
     * hash-exact end to end; the only float anywhere is inside each
     * leg's own already-oracle-checked ranking.
     *
@@ -1170,20 +1158,14 @@ object Similarity {
     val dense = bruteForceTopK(s, emb,
         emb.filter(col("vec_id") === queryVec), kLeg)
       .select(col("neighbor_id").as("doc_id"), col("rank").as("dense_rank"))
-    sparse.join(dense, Seq("doc_id"), "full_outer")
+    val fused = sparse.join(dense, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
         coalesce(col("bm25_rank"), lit(0)).as("bm25_rank"),
         coalesce(col("dense_rank"), lit(0)).as("dense_rank"))
-      .withColumn("rrf_micro",
-        when(col("bm25_rank") > 0,
-          expr(s"CAST(1000000000 DIV ($c + bm25_rank) AS BIGINT)"))
-          .otherwise(lit(0L)) +
-        when(col("dense_rank") > 0,
-          expr(s"CAST(1000000000 DIV ($c + dense_rank) AS BIGINT)"))
-          .otherwise(lit(0L)))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("rrf_micro").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
+    def term(rank: String): Column =
+      when(col(rank) > 0, rrfTerm(1L, c, rank)).otherwise(lit(0L))
+    rankWithin(fused.withColumn("rrf_micro", term("bm25_rank") + term("dense_rank")),
+      Nil, Seq(col("rrf_micro").desc, col("doc_id")), k, "rank")
   }
 
   /** G20: corpus mean-centering diagnostics — retrieval embeddings
@@ -1228,10 +1210,6 @@ object Similarity {
         round(sqrt(dq.cast("double")) / lit(Scale), 4).as("norm_c"))
   }
 
-  /** F6: embedding near-dup pairs, blocked by label (the coarse
-    * quantizer an IVF index would give): pairs only form inside a
-    * label partition — one shuffle on label, never all-pairs.
-    */
   /** F8d: EMBEDDING-space benchmark decontamination — the semantic
     * sibling of the n-gram (F8), band (F8b) and span (F8c)
     * decontaminators: a corpus vector is contaminated when its cosine
@@ -1263,6 +1241,10 @@ object Similarity {
       .agg(count(lit(1)).as("n_hits"), max(col("cos_r")).as("max_cos"))
   }
 
+  /** F6: embedding near-dup pairs, blocked by label (the coarse
+    * quantizer an IVF index would give): pairs only form inside a
+    * label partition — one shuffle on label, never all-pairs.
+    */
   def nearDupPairs(s: SparkSession, emb: DataFrame, tau: Double): DataFrame = {
     withCosine(s)
     val a = emb.select(col("label"), col("vec_id").as("a"), col("embedding").as("ea"))
@@ -1335,16 +1317,11 @@ object Similarity {
     val scored = a.join(b, Seq("label"))
       .filter(col("id") =!= col("nbr"))
       .withColumn("cos_r", expr("round(cosine_sim(ea, eb), 4)"))
-    val best = GraftBridge.column(graft.functions.BoundedTopK(
-      GraftBridge.expression(struct(col("cos_r"), col("nbr"))),
-      GraftBridge.expression(struct(col("nbr"), col("cos_r"), col("n_nbr"))),
-      k, Seq(-1, 1), keepLargest = false, emitDesc = false,
-      skipNullValue = false).toAggregateExpression())
-    scored.groupBy(col("id"), col("n_id")).agg(best.as("top"))
-      .select(col("id").as("vec_id"), col("n_id"), posexplode(col("top")))
-      .select(col("vec_id"), (col("pos") + 1).cast("int").as("rk"),
-        col("col.nbr").as("nbr"), col("col.cos_r").as("cos_r"),
-        col("n_id"), col("col.n_nbr").as("n_nbr"))
+    BoundedTopK.ranked(scored, Seq("id", "n_id"),
+      Seq(col("cos_r"), col("nbr")), Seq(-1, 1),
+      struct(col("nbr"), col("cos_r"), col("n_nbr")), k, "rk")
+      .select(col("id").as("vec_id"), col("rk"), col("nbr"), col("cos_r"),
+        col("n_id"), col("n_nbr"))
   }
 
   /** E23: cell-blocked kNN candidate edges from `a`'s vertices to
@@ -1370,11 +1347,8 @@ object Similarity {
     val scored = av.join(bv, Seq("cell"))
       .filter(col("id") =!= col("nbr"))
       .withColumn("cos_r", expr("round(cosine_sim(__ea, __eb), 4)"))
-    val best = GraftBridge.column(graft.functions.BoundedTopK(
-      GraftBridge.expression(struct(col("cos_r"), col("nbr"))),
-      GraftBridge.expression(struct(col("nbr"), col("cos_r"))),
-      k, Seq(-1, 1), keepLargest = false, emitDesc = false,
-      skipNullValue = false).toAggregateExpression())
+    val best = BoundedTopK.column(Seq(col("cos_r"), col("nbr")), Seq(-1, 1),
+      struct(col("nbr"), col("cos_r")), k)
     scored.groupBy(col("id")).agg(best.as("top"))
       .select(col("id"), explode(col("top")).as("__e"))
       .select(col("id"), col("__e.nbr").as("nbr"), col("__e.cos_r").as("cos_r"))
@@ -1390,15 +1364,8 @@ object Similarity {
     */
   def knnFromEdges(edges: DataFrame, k: Int): DataFrame = {
     require(k > 0, s"knnFromEdges k must be positive: $k")
-    val best = GraftBridge.column(graft.functions.BoundedTopK(
-      GraftBridge.expression(struct(col("cos_r"), col("nbr"))),
-      GraftBridge.expression(struct(col("nbr"), col("cos_r"))),
-      k, Seq(-1, 1), keepLargest = false, emitDesc = false,
-      skipNullValue = false).toAggregateExpression())
-    edges.groupBy(col("id")).agg(best.as("top"))
-      .select(col("id"), posexplode(col("top")))
-      .select(col("id"), (col("pos") + 1).cast("int").as("rk"),
-        col("col.nbr").as("nbr"), col("col.cos_r").as("cos_r"))
+    BoundedTopK.ranked(edges, Seq("id"), Seq(col("cos_r"), col("nbr")),
+      Seq(-1, 1), struct(col("nbr"), col("cos_r")), k, "rk")
   }
 
   /** E23 batch reference: the cell-blocked kNN graph computed in one
@@ -1460,11 +1427,8 @@ object Similarity {
       .withColumn("cos_r", expr("round(cosine_sim(__q, __e), 4)"))
       .select(col("query_id"), col("node"), col("cos_r"))
     def beamOf(visited: DataFrame): DataFrame = {
-      val best = GraftBridge.column(graft.functions.BoundedTopK(
-        GraftBridge.expression(struct(col("cos_r"), col("node"))),
-        GraftBridge.expression(col("node")),
-        beamWidth, Seq(-1, 1), keepLargest = false, emitDesc = false,
-        skipNullValue = false).toAggregateExpression())
+      val best = BoundedTopK.column(Seq(col("cos_r"), col("node")),
+        Seq(-1, 1), col("node"), beamWidth)
       visited.groupBy(col("query_id")).agg(best.as("top"))
         .select(col("query_id"), explode(col("top")).as("node"))
     }
@@ -1478,16 +1442,11 @@ object Similarity {
         .agg(max(col("cos_r")).as("cos_r"))
         .cutLineage(eager = false)
     }
-    val best = GraftBridge.column(graft.functions.BoundedTopK(
-      GraftBridge.expression(struct(col("cos_r"), col("node"))),
-      GraftBridge.expression(struct(col("node"), col("cos_r"))),
-      k, Seq(-1, 1), keepLargest = false, emitDesc = false,
-      skipNullValue = false).toAggregateExpression())
-    visited.filter(col("node") =!= col("query_id"))
-      .groupBy(col("query_id")).agg(best.as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.node").as("neighbor_id"),
-        col("col.cos_r").as("cos_r"), (col("pos") + 1).cast("int").as("rank"))
+    BoundedTopK.ranked(visited.filter(col("node") =!= col("query_id")),
+      Seq("query_id"), Seq(col("cos_r"), col("node")), Seq(-1, 1),
+      struct(col("node"), col("cos_r")), k, "rank")
+      .select(col("query_id"), col("node").as("neighbor_id"), col("cos_r"),
+        col("rank"))
   }
 
   /** G13: deterministic negative sampling for contrastive training:
@@ -1536,31 +1495,6 @@ object Similarity {
         (col("doc_id") === col("cluster")).as("keep"))
   }
 
-  /** G17: nearest-centroid assignment — the cluster-assignment step
-    * of every clustering-based curation pass (cluster-balanced
-    * mixtures, SemDeDup's cluster stage, IVF coarse quantization)
-    * as a standalone oracle-checked operator: per-label centroids
-    * from the corpus, every vector re-assigned to its most-similar
-    * centroid, with the true label kept for a purity read-out.
-    *
-    * Centroids accumulate per-dimension as scaled int64
-    * (`round(v·2²⁰)` — G2b's exact, order-free trick), so the model
-    * is bit-identical on any partitioning; the mean is divided back
-    * out once and SNAPPED TO FLOAT32, which both engines replicate
-    * exactly (round-to-nearest), keeping the cosine inputs
-    * bit-equal. Assignment is the IVF search shape: centroids are a
-    * tiny broadcast (one row per label), the embedding table streams
-    * ONCE through a codegen cosine loop with no shuffle, and the
-    * per-vector argmax is a map-side `max_by` over the struct order
-    * (cos_r DESC, label ASC) — deterministic ties, no window, no
-    * row explosion surviving past the partial aggregate.
-    *
-    * The per-dim accumulation is the vector-summing
-    * [[graft.functions.VecSumAgg]]: one Array[Long] buffer per label
-    * per partition, map-side combined — the corpus never inflates
-    * into per-dimension rows, and the (only) shuffle carries
-    * |labels|·partitions fixed-size buffers.
-    */
   /** G21b: ANN recall@k read-out — the evaluation every production
     * deployment tunes its index knobs (nlist/nprobe, planes, cands,
     * quantization width) against: each approximate strategy's top-k
@@ -1650,6 +1584,31 @@ object Similarity {
             .cast("float")).as("c_emb"))
   }
 
+  /** G17: nearest-centroid assignment — the cluster-assignment step
+    * of every clustering-based curation pass (cluster-balanced
+    * mixtures, SemDeDup's cluster stage, IVF coarse quantization)
+    * as a standalone oracle-checked operator: per-label centroids
+    * from the corpus, every vector re-assigned to its most-similar
+    * centroid, with the true label kept for a purity read-out.
+    *
+    * Centroids accumulate per-dimension as scaled int64
+    * (`round(v·2²⁰)` — G2b's exact, order-free trick), so the model
+    * is bit-identical on any partitioning; the mean is divided back
+    * out once and SNAPPED TO FLOAT32, which both engines replicate
+    * exactly (round-to-nearest), keeping the cosine inputs
+    * bit-equal. Assignment is the IVF search shape: centroids are a
+    * tiny broadcast (one row per label), the embedding table streams
+    * ONCE through a codegen cosine loop with no shuffle, and the
+    * per-vector argmax is a map-side `max_by` over the struct order
+    * (cos_r DESC, label ASC) — deterministic ties, no window, no
+    * row explosion surviving past the partial aggregate.
+    *
+    * The per-dim accumulation is the vector-summing
+    * [[graft.functions.VecSumAgg]]: one Array[Long] buffer per label
+    * per partition, map-side combined — the corpus never inflates
+    * into per-dimension rows, and the (only) shuffle carries
+    * |labels|·partitions fixed-size buffers.
+    */
   def centroidAssign(s: SparkSession, emb: DataFrame): DataFrame = {
     withCosine(s)
     // vector-summed centroid build: one Array[Long] buffer per label,

@@ -6,6 +6,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Seams.SeamOps
+import graft.functions.BoundedTopK
 
 /** MongoDB aggregation-pipeline → DataFrame translator.
   *
@@ -399,34 +400,26 @@ object MongoPipeline {
     * ≤ Σ limits rows. The legs are the distributed
     * work; fusion cost is bounded by construction — the same shape as
     * the standalone `sim_hybrid_rrf`.
+    *
+    * Shared with `$scoreFusion`: [[fusionLegs]] parses the legs and the
+    * weights, [[scoredLeg]] compiles every `$vectorSearch`/`$search`-led
+    * leg. Shared with `sim_hybrid_rrf`: the RRF term
+    * ([[graft.operators.Similarity.rrfTerm]]).
     */
   private def rankFusion(df: DataFrame, spec: JsonNode,
                          tables: String => DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val input = spec.get("input")
-    require(input != null && input.get("pipelines") != null &&
-      input.get("pipelines").isObject,
-      "$rankFusion.input.pipelines is required")
-    val pipes = input.get("pipelines").properties().asScala.toSeq
-    require(pipes.nonEmpty, "$rankFusion needs at least one input pipeline")
-    val weights = Option(spec.get("combination"))
-      .flatMap(c => Option(c.get("weights")))
-    weights.foreach(w => w.properties().asScala.foreach { e =>
-      require(pipes.exists(_.getKey == e.getKey),
-        s"$$rankFusion weight for unknown pipeline: ${e.getKey}")
-      require(e.getValue.isIntegralNumber && e.getValue.asLong() >= 0,
-        s"$$rankFusion.combination.weights.${e.getKey} must be a " +
-          s"non-negative integer (got ${e.getValue})")
-    })
-    def weightOf(name: String): Long =
-      weights.flatMap(w => Option(w.get(name))).map(_.asLong()).getOrElse(1L)
+    val legs = fusionLegs("$rankFusion", spec, "integer",
+      w => w.isIntegralNumber && w.asLong() >= 0)
     val docCols = df.columns.toSeq
-    val legs = pipes.map { e =>
-      val (name, stages) = (e.getKey, e.getValue)
-      require(stages.isArray && stages.size() > 0,
-        s"$$rankFusion pipeline '$name' must be a non-empty stage array")
-      val ops = stages.elements().asScala.toSeq
-        .map(_.properties().asScala.head.getKey)
+    val docOrder = docCols.map(col(_).asc)
+    val ranked = legs.map { leg =>
+      val name = leg.name
+      def rrf(sub: DataFrame, order: Seq[Column]): DataFrame = sub
+        .withColumn("__rf_rank", row_number().over(Window.orderBy(order: _*)))
+        .withColumn(RfScoreCol, graft.operators.Similarity.rrfTerm(
+          leg.weight.map(_.asLong()).getOrElse(1L), 60, "__rf_rank"))
+        .drop("__rf_rank")
       // a $vectorSearch- or $search-led leg IS ranked (by its score) —
       // the true Atlas hybrid; otherwise the leg must carry an
       // explicit $sort
@@ -437,24 +430,19 @@ object MongoPipeline {
       // task, so the bound is a loud contract, not a convention
       // ($vectorSearch legs are bounded by that stage's own required
       // `limit`, checked in vectorSearch()).
-      val (sub, order) = if (ops.head == "$vectorSearch" ||
-          ops.head == "$search") {
-        val scoreCol =
-          if (ops.head == "$vectorSearch") VsScoreCol else SearchScoreCol
-        ops.tail.foreach(op => require(
+      if (leg.scored) {
+        leg.ops.tail.foreach(op => require(
           Seq("$match", "$limit", "$skip").contains(op),
           s"$$rankFusion pipeline '$name': '$op' not allowed after " +
-            s"${ops.head} (ranking comes from the search score)"))
-        require(ops.head == "$vectorSearch" || ops.contains("$limit"),
+            s"${leg.ops.head} (ranking comes from the search score)"))
+        require(leg.ops.head == "$vectorSearch" || leg.ops.contains("$limit"),
           s"$$rankFusion pipeline '$name' must carry a $$limit — a " +
             "$search-led leg emits every matching document and an " +
             "unbounded leg cannot be ranked distributively")
-        val c = compile(df, stages.toString, tables,
-          documentsAllowed = false, keepScores = true)
-        (c, col(scoreCol).desc +: docCols.map(col(_).asc))
+        scoredLeg(df, leg, tables)((c, score) => rrf(c, score.desc +: docOrder))
       } else {
         var sortSpec: Seq[(String, Boolean)] = Nil
-        ops.zip(stages.elements().asScala.toSeq).foreach { case (op, st) =>
+        leg.ops.zip(leg.stages.elements().asScala.toSeq).foreach { case (op, st) =>
           op match {
             case "$match" | "$limit" | "$skip" => ()
             case "$sort" =>
@@ -468,27 +456,79 @@ object MongoPipeline {
         require(sortSpec.nonEmpty,
           s"$$rankFusion pipeline '$name' must contain $$sort — " +
             "ranks need an explicit order")
-        require(ops.contains("$limit"),
+        require(leg.ops.contains("$limit"),
           s"$$rankFusion pipeline '$name' must carry a $$limit — an " +
             "unbounded leg cannot be ranked distributively (the rank " +
             "window covers only the ≤ limit surviving rows)")
-        val c = compile(df, stages.toString, tables, documentsAllowed = false)
-        (c, sortSpec.map { case (f, asc) =>
-          if (asc) col(f).asc else col(f).desc
-        } ++ docCols.map(col(_).asc))
+        rrf(compile(df, leg.stages.toString, tables, documentsAllowed = false),
+          sortSpec.map { case (f, asc) =>
+            if (asc) col(f).asc else col(f).desc
+          } ++ docOrder)
       }
-      sub
-        .withColumn("__rf_rank", row_number().over(Window.orderBy(order: _*)))
-        .withColumn(RfScoreCol,
-          expr(s"(${weightOf(name)}L * 1000000000L) div (60L + __rf_rank)"))
-        .drop("__rf_rank", VsScoreCol, SearchScoreCol, SearchHighlightsCol,
-          SearchMetaCountCol)
     }
-    legs.reduce(_ unionByName _)
+    ranked.reduce(_ unionByName _)
       .groupBy(docCols.map(col): _*)
       .agg(sum(col(RfScoreCol)).as(RfScoreCol))
-      .orderBy(col(RfScoreCol).desc +: docCols.map(col(_).asc): _*)
+      .orderBy(col(RfScoreCol).desc +: docOrder: _*)
   }
+
+  /** One input leg of `$rankFusion`/`$scoreFusion`: its name, stage
+    * array, the stage operators in order, and its
+    * `combination.weights` entry if any.
+    */
+  private case class FusionLeg(name: String, stages: JsonNode,
+                               ops: Seq[String], weight: Option[JsonNode]) {
+    /** Led by a search stage, so the leg's score is that stage's. */
+    def scored: Boolean = ops.head == "$vectorSearch" || ops.head == "$search"
+  }
+
+  /** The one parser of a fusion stage's `input.pipelines` and
+    * `combination.weights`, shared by `$rankFusion` and `$scoreFusion`:
+    * every error names `stage`; a weight must name a leg and pass
+    * `weightOk` (the per-stage validator — an integer for rank fusion,
+    * a number for score fusion; `kind` says which in the message); a
+    * leg must be a non-empty stage array.
+    */
+  private def fusionLegs(stage: String, spec: JsonNode, kind: String,
+                         weightOk: JsonNode => Boolean): Seq[FusionLeg] = {
+    val input = spec.get("input")
+    require(input != null && input.get("pipelines") != null &&
+      input.get("pipelines").isObject,
+      s"$stage.input.pipelines is required")
+    val pipes = input.get("pipelines").properties().asScala.toSeq
+    require(pipes.nonEmpty, s"$stage needs at least one input pipeline")
+    val weights = Option(spec.get("combination"))
+      .flatMap(c => Option(c.get("weights")))
+    weights.foreach(w => w.properties().asScala.foreach { e =>
+      require(pipes.exists(_.getKey == e.getKey),
+        s"$stage weight for unknown pipeline: ${e.getKey}")
+      require(weightOk(e.getValue),
+        s"$stage.combination.weights.${e.getKey} must be a " +
+          s"non-negative $kind (got ${e.getValue})")
+    })
+    pipes.map { e =>
+      val (name, stages) = (e.getKey, e.getValue)
+      require(stages.isArray && stages.size() > 0,
+        s"$stage pipeline '$name' must be a non-empty stage array")
+      FusionLeg(name, stages, stages.elements().asScala.toSeq
+          .map(_.properties().asScala.head.getKey),
+        weights.flatMap(w => Option(w.get(name))))
+    }
+  }
+
+  /** The one compile of a `$vectorSearch`/`$search`-led fusion leg: the
+    * leg keeps its hidden score (`keepScores = true`), `use` turns the
+    * frame and that score column into the leg's ranked or scored form,
+    * and the four hidden columns are dropped after.
+    */
+  private def scoredLeg(df: DataFrame, leg: FusionLeg,
+                        tables: String => DataFrame)
+                       (use: (DataFrame, Column) => DataFrame): DataFrame =
+    use(compile(df, leg.stages.toString, tables, documentsAllowed = false,
+        keepScores = true),
+      col(if (leg.ops.head == "$vectorSearch") VsScoreCol else SearchScoreCol))
+      .drop(VsScoreCol, SearchScoreCol, SearchHighlightsCol,
+        SearchMetaCountCol)
 
   /** Hidden column carrying `$search`'s BM25 relevance until a
     * `{$meta: "searchScore"}` projection reads it.
@@ -1533,52 +1573,34 @@ object MongoPipeline {
     * Scale: legs are bounded searches/selections (the distributed
     * work); normalization is a broadcast 2-value aggregate per leg;
     * fusion is K−1 full-outer joins over ≤ Σ leg sizes rows.
+    *
+    * Legs are parsed by [[fusionLegs]] and search-led legs compiled by
+    * [[scoredLeg]], the same two steps `$rankFusion` runs; only the
+    * weight validator (a number here, an integer there) and what
+    * follows the compile are per stage.
     */
   private def scoreFusion(df: DataFrame, spec: JsonNode,
                           tables: String => DataFrame): DataFrame = {
-    val input = spec.get("input")
-    require(input != null && input.get("pipelines") != null &&
-      input.get("pipelines").isObject,
-      "$scoreFusion.input.pipelines is required")
-    val norm = Option(input.get("normalization")).map(_.asText())
-      .getOrElse("none")
+    val legs = fusionLegs("$scoreFusion", spec, "number",
+      w => w.isNumber && w.asDouble() >= 0)
+    val norm = Option(spec.get("input").get("normalization"))
+      .map(_.asText()).getOrElse("none")
     require(Seq("none", "minMaxScaler", "sigmoid").contains(norm),
       s"unsupported $$scoreFusion normalization: $norm")
-    val pipes = input.get("pipelines").properties().asScala.toSeq
-    require(pipes.nonEmpty, "$scoreFusion needs at least one input pipeline")
-    val weights = Option(spec.get("combination"))
-      .flatMap(c => Option(c.get("weights")))
-    weights.foreach(w => w.properties().asScala.foreach { e =>
-      require(pipes.exists(_.getKey == e.getKey),
-        s"$$scoreFusion weight for unknown pipeline: ${e.getKey}")
-      require(e.getValue.isNumber && e.getValue.asDouble() >= 0,
-        s"$$scoreFusion.combination.weights.${e.getKey} must be a " +
-          s"non-negative number (got ${e.getValue})")
-    })
-    def weightOf(name: String): Double =
-      weights.flatMap(w => Option(w.get(name))).map(_.asDouble()).getOrElse(1.0)
-    require(pipes.map(p => weightOf(p.getKey)).sum > 0,
+    def weightOf(leg: FusionLeg): Double =
+      leg.weight.map(_.asDouble()).getOrElse(1.0)
+    require(legs.map(weightOf).sum > 0,
       "$scoreFusion weights must not all be zero")
     val docCols = df.columns.toSeq
 
-    def legFrame(name: String, stages: JsonNode): DataFrame = {
-      require(stages.isArray && stages.size() > 0,
-        s"$$scoreFusion pipeline '$name' must be a non-empty stage array")
-      val ops = stages.elements().asScala.toSeq
-        .map(_.properties().asScala.head.getKey)
-      if (ops.head == "$vectorSearch" || ops.head == "$search") {
-        val (scoreCol, kind) =
-          if (ops.head == "$vectorSearch") (VsScoreCol, "$vectorSearch")
-          else (SearchScoreCol, "$search")
+    def legFrame(leg: FusionLeg): DataFrame = {
+      val (name, stages, ops) = (leg.name, leg.stages, leg.ops)
+      if (leg.scored) {
         ops.tail.foreach(op => require(
           Seq("$match", "$sort", "$limit", "$skip").contains(op),
           s"$$scoreFusion pipeline '$name': '$op' not allowed after " +
-            s"$kind (selection stages only)"))
-        compile(df, stages.toString, tables, documentsAllowed = false,
-            keepScores = true)
-          .withColumn("__sf_raw", col(scoreCol))
-          .drop(VsScoreCol, SearchScoreCol, SearchHighlightsCol,
-            SearchMetaCountCol)
+            s"${ops.head} (selection stages only)"))
+        scoredLeg(df, leg, tables)((c, score) => c.withColumn("__sf_raw", score))
       } else {
         require(ops.last == "$score",
           s"$$scoreFusion pipeline '$name' must start with $$vectorSearch " +
@@ -1616,18 +1638,17 @@ object MongoPipeline {
           .drop("__sf_e")
     }
 
-    val legs = pipes.zipWithIndex.map { case (e, i) =>
-      normalized(legFrame(e.getKey, e.getValue))
+    val joined = legs.zipWithIndex.map { case (leg, i) =>
+      normalized(legFrame(leg))
         .select(docCols.map(col) :+ col("__sf_n").as(s"__sf_n$i"): _*)
-    }
-    val joined = legs.reduce(_.join(_, docCols, "full_outer"))
-    val wsum = pipes.map(p => weightOf(p.getKey)).sum
-    val fused = pipes.zipWithIndex.map { case (e, i) =>
-      lit(weightOf(e.getKey)) * coalesce(col(s"__sf_n$i"), lit(0.0))
+    }.reduce(_.join(_, docCols, "full_outer"))
+    val wsum = legs.map(weightOf).sum
+    val fused = legs.zipWithIndex.map { case (leg, i) =>
+      lit(weightOf(leg)) * coalesce(col(s"__sf_n$i"), lit(0.0))
     }.reduce(_ + _) / lit(wsum)
     joined
       .withColumn(RfScoreCol, fused)
-      .drop(pipes.indices.map(i => s"__sf_n$i"): _*)
+      .drop(legs.indices.map(i => s"__sf_n$i"): _*)
       .orderBy(col(RfScoreCol).desc +: docCols.map(col(_).asc): _*)
   }
 
@@ -2414,39 +2435,39 @@ object MongoPipeline {
         // bounded-n generalization of $first/$last; BoundedTopK's
         // per-key directions support mixed asc/desc sorts here.
         require(lastSort.nonEmpty, s"$op requires a preceding $$sort stage")
-        boundedTopN(lastSort.map { case (f, _) => col(f) },
+        BoundedTopK.column(lastSort.map { case (f, _) => col(f) },
           lastSort.map { case (_, asc) => if (asc) 1 else -1 },
           expression(a.get("input")), a.get("n").asInt(),
           keepLargest = op == "$lastN", emitDesc = false, skipNull = false)
       case "$minN" =>
-        boundedTopN(Seq(expression(a.get("input"))), Seq(1),
+        BoundedTopK.column(Seq(expression(a.get("input"))), Seq(1),
           expression(a.get("input")), a.get("n").asInt(),
           keepLargest = false, emitDesc = false, skipNull = true)
       case "$maxN" =>
-        boundedTopN(Seq(expression(a.get("input"))), Seq(1),
+        BoundedTopK.column(Seq(expression(a.get("input"))), Seq(1),
           expression(a.get("input")), a.get("n").asInt(),
           keepLargest = true, emitDesc = true, skipNull = true)
       case "$topN" =>
         // {output, sortBy, n}: the first n documents in sortBy order
         // (honoring 1/-1 per key), emitting output
         val specs = sortBySpecs(a)
-        boundedTopN(specs.map(_._1), specs.map(_._2),
+        BoundedTopK.column(specs.map(_._1), specs.map(_._2),
           expression(a.get("output")), a.get("n").asInt(),
           keepLargest = false, emitDesc = false, skipNull = false)
       case "$bottomN" =>
         // the last n documents in sortBy order, still in that order
         val specs = sortBySpecs(a)
-        boundedTopN(specs.map(_._1), specs.map(_._2),
+        BoundedTopK.column(specs.map(_._1), specs.map(_._2),
           expression(a.get("output")), a.get("n").asInt(),
           keepLargest = true, emitDesc = false, skipNull = false)
       case "$top" =>
         val specs = sortBySpecs(a)
-        element_at(boundedTopN(specs.map(_._1), specs.map(_._2),
+        element_at(BoundedTopK.column(specs.map(_._1), specs.map(_._2),
           expression(a.get("output")), 1,
           keepLargest = false, emitDesc = false, skipNull = false), 1)
       case "$bottom" =>
         val specs = sortBySpecs(a)
-        element_at(boundedTopN(specs.map(_._1), specs.map(_._2),
+        element_at(BoundedTopK.column(specs.map(_._1), specs.map(_._2),
           expression(a.get("output")), 1,
           keepLargest = true, emitDesc = false, skipNull = false), 1)
       case other =>
@@ -2458,22 +2479,6 @@ object MongoPipeline {
     a.get("sortBy").properties().asScala.toSeq
       .map(e => (expression(mapper.readTree(s""""$$${e.getKey}"""")),
         e.getValue.asInt()))
-
-  /** $topN family → [[graft.functions.BoundedTopK]]: state is capped
-    * at n elements per group at EVERY stage (partial, shuffle, merge),
-    * unlike collect_list-then-slice whose partial state is the whole
-    * group — the difference between a bounded and an unbounded
-    * aggregation on a skewed 100 TB group.
-    */
-  private def boundedTopN(keys: Seq[Column], dirs: Seq[Int], out: Column,
-                          n: Int, keepLargest: Boolean, emitDesc: Boolean,
-                          skipNull: Boolean): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.functions.BoundedTopK(
-      GraftBridge.expression(struct(keys: _*)),
-      GraftBridge.expression(out), n, dirs,
-      keepLargest, emitDesc, skipNull).toAggregateExpression())
-  }
 
   /** Mongo requires `method: "approximate"` on $median/$percentile
     * (its only implementation is a t-digest); we acknowledge the flag

@@ -2178,6 +2178,34 @@ class ExtendedPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("$rankFusion and $scoreFusion input contract: each error is word for word and names its own stage") {
+    val stages = Seq(
+      ("$rankFusion", "integer", """[{"$sort": {"o_orderkey": 1}}, {"$limit": 5}]"""),
+      ("$scoreFusion", "number", """[{"$score": {"score": 1}}]"""))
+    for ((stage, kind, leg) <- stages) {
+      def err(body: String): String = intercept[IllegalArgumentException] {
+        MongoPipeline(cat.orders, "[{\"" + stage + "\": " + body + "}]")
+      }.getMessage
+      def weighted(weights: String): String =
+        s"""{"input": {"pipelines": {"a": $leg}},
+            "combination": {"weights": $weights}}"""
+      val cases = Seq(
+        "{}" -> s"$stage.input.pipelines is required",
+        """{"input": {"normalization": "none"}}""" ->
+          s"$stage.input.pipelines is required",
+        """{"input": {"pipelines": {}}}""" ->
+          s"$stage needs at least one input pipeline",
+        s"""{"input": {"pipelines": {"a": $leg, "b": []}}}""" ->
+          s"$stage pipeline 'b' must be a non-empty stage array",
+        weighted("""{"a": 1, "nope": 1}""") ->
+          s"$stage weight for unknown pipeline: nope",
+        weighted("""{"a": -1}""") ->
+          s"$stage.combination.weights.a must be a non-negative $kind (got -1)")
+      for ((body, msg) <- cases)
+        assert(err(body) == s"requirement failed: $msg", s"$stage $body")
+    }
+  }
+
   test("$geoNear anywhere but stage 0 fails loudly; missing key/distanceField too") {
     val base = geoPlaces
     intercept[IllegalArgumentException] {

@@ -684,6 +684,40 @@ class SimilaritySpec extends SparkTestBase {
       s"trained-IVF results differ across partitionings: ${a.length} vs ${b.length}")
   }
 
+  test("exact-rerank tail: brute force, ivf probing every cell and hamming rerank over the whole corpus all equal a plain-Scala top-k row for row") {
+    val queries = emb.filter(col("vec_id") < 10)
+    val vecs = emb.select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble))).toMap
+    // the cosine_sim kernel's sequential double fold, then Spark's
+    // round(x, 4) (HALF_UP on the double's decimal string)
+    def cosR(a: Seq[Double], b: Seq[Double]): Double = {
+      val (dot, na, nb) = a.zip(b).foldLeft((0.0, 0.0, 0.0)) {
+        case ((d, x, y), (p, q)) => (d + p * q, x + p * p, y + q * q)
+      }
+      val c = if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+      BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    val expect = (0L until 10L).flatMap { q =>
+      vecs.toSeq.filter(_._1 != q)
+        .map { case (id, v) => (id, cosR(vecs(q), v)) }
+        .sortBy { case (id, c) => (-c, id) }
+        .take(5).zipWithIndex
+        .map { case ((id, c), i) => (q, id, c, i + 1) }
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "cos_r", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .sortBy(t => (t._1, t._4)).toSeq
+    assert(rows(Similarity.bruteForceTopK(spark, emb, queries, k = 5)) == expect)
+    // nprobe = nlist: every cell is probed, so every vector is a candidate
+    for (iters <- Seq(0, 2))
+      assert(rows(Similarity.ivfTopK(spark, emb, queries, k = 5,
+        nlist = 8, nprobe = 8, iters = iters)) == expect, s"ivf iters=$iters")
+    // a shortlist as long as the corpus keeps every vector
+    assert(rows(Similarity.hammingRerankTopK(spark, emb, queries, k = 5,
+      kShort = vecs.size)) == expect)
+  }
+
   test("multimodal decode stub: deterministic features, bytes = text length") {
     val docs = TableCatalog(spark, sfDir).documents.limit(20)
     val feats = Multimodal.decodeFeatures(spark, docs, "doc_id", "text").collect()

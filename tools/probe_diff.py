@@ -1,15 +1,27 @@
 #!/usr/bin/env python3
-"""Compare the job, stage and task counts of two Probe runs query by query.
+"""Compare the job, stage and task counts of Probe runs query by query.
 
-Usage: python3 tools/probe_diff.py <logA> <logB>
+Usage: python3 tools/probe_diff.py <logA> [<logA2> ...] <logB>
 
 Each log is the stdout of `graft.tools.Probe <sfDir> <outDir> <reps>
-<names...|all>` with reps >= 1. A query's counts come from its last
-`PROBE <name> repN: ... jobs=J stages=S tasks=T` line (the counts are read
-after the listener bus drains, so every rep prints the same ones). Prints
-one line per query with the B - A delta of each count (`ONLY in <log>`
-when one side lacks it), then the totals over the queries both logs hold,
-and exits 1 when any query launched more jobs in B than in A.
+<names...|all>` with reps >= 1; the last log is the change (B), every
+log before it a run of the parent (A). A query's counts come from its
+last `PROBE <name> repN: ... jobs=J stages=S tasks=T` line (the counts
+are read after the listener bus drains, so every rep prints the same
+ones).
+
+With one parent log, prints one line per query with the B - A delta of
+each count (`ONLY in <log>` when one side lacks it), then the totals
+over the queries both logs hold, and exits 1 when any query launched
+more jobs in B than in A.
+
+Some queries' counts move between runs of one tree (see the verify
+skill), so a single parent run can make an unchanged query look risen.
+With two or more parent logs, each count prints as the parent range
+`min..max` next to B's value and its distance past that range (0 when
+inside it); a query's jobs rose only when B exceeds the maximum over
+all parent logs. A query missing from any log reads `ONLY in` the logs
+that hold it.
 """
 import re
 import sys
@@ -29,31 +41,50 @@ def load(path):
     return counts
 
 
+def past(lo, hi, y):
+    """B's distance outside the parent range [lo, hi], 0 inside it."""
+    return y - hi if y > hi else y - lo if y < lo else 0
+
+
 def main():
-    if len(sys.argv) != 3:
+    if len(sys.argv) < 3:
         sys.exit(__doc__)
-    a, b = sys.argv[1], sys.argv[2]
-    left, right = load(a), load(b)
-    if not left or not right:
-        sys.exit(f"no PROBE lines in {a if not left else b}")
-    totals = [[0, 0] for _ in KEYS]
+    paths = sys.argv[1:]
+    logs = [load(p) for p in paths]
+    for p, counts in zip(paths, logs):
+        if not counts:
+            sys.exit(f"no PROBE lines in {p}")
+    parents, right = logs[:-1], logs[-1]
+    ranged = len(parents) > 1
+    totals = [[0, 0, 0] for _ in KEYS]
     rose = []
-    for name in sorted(left.keys() | right.keys()):
-        if name not in left or name not in right:
-            print(f"{name}: ONLY in {a if name in left else b}")
+    names = set(right).union(*parents)
+    for name in sorted(names):
+        holders = [p for p, counts in zip(paths, logs) if name in counts]
+        if len(holders) < len(paths):
+            print(f"{name}: ONLY in {', '.join(holders)}")
             continue
         parts = []
         for i, key in enumerate(KEYS):
-            x, y = left[name][i], right[name][i]
-            totals[i][0] += x
-            totals[i][1] += y
-            parts.append(f"{key} {x} -> {y} ({y - x:+d})")
-        if right[name][0] > left[name][0]:
+            xs = [counts[name][i] for counts in parents]
+            lo, hi, y = min(xs), max(xs), right[name][i]
+            totals[i][0] += lo
+            totals[i][1] += hi
+            totals[i][2] += y
+            if ranged:
+                parts.append(f"{key} {lo}..{hi} -> {y} ({past(lo, hi, y):+d})")
+            else:
+                parts.append(f"{key} {hi} -> {y} ({y - hi:+d})")
+        if right[name][0] > max(counts[name][0] for counts in parents):
             rose.append(name)
         print(f"{name}: " + ", ".join(parts))
-    both = len(left.keys() & right.keys())
-    print(f"== totals over {both} queries: " + ", ".join(
-        f"{key} {x} -> {y} ({y - x:+d})" for key, (x, y) in zip(KEYS, totals)))
+    both = sum(1 for n in names if all(n in counts for counts in logs))
+    if ranged:
+        print(f"== totals over {both} queries: " + ", ".join(
+            f"{key} {lo}..{hi} -> {y}" for key, (lo, hi, y) in zip(KEYS, totals)))
+    else:
+        print(f"== totals over {both} queries: " + ", ".join(
+            f"{key} {x} -> {y} ({y - x:+d})" for key, (x, _, y) in zip(KEYS, totals)))
     if rose:
         print(f"== jobs rose for {len(rose)} queries: {', '.join(rose)}")
     sys.exit(1 if rose else 0)
