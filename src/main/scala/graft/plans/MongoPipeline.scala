@@ -419,7 +419,7 @@ object MongoPipeline {
         .withColumn("__rf_rank", row_number().over(Window.orderBy(order: _*)))
         .withColumn(RfScoreCol, graft.operators.Similarity.rrfTerm(
           leg.weight.map(_.asLong()).getOrElse(1L), 60, "__rf_rank"))
-        .drop("__rf_rank")
+        .drop("__rf_rank", LegScoreCol)
       // a $vectorSearch- or $search-led leg IS ranked (by its score) —
       // the true Atlas hybrid; otherwise the leg must carry an
       // explicit $sort
@@ -439,7 +439,7 @@ object MongoPipeline {
           s"$$rankFusion pipeline '$name' must carry a $$limit — a " +
             "$search-led leg emits every matching document and an " +
             "unbounded leg cannot be ranked distributively")
-        scoredLeg(df, leg, tables)((c, score) => rrf(c, score.desc +: docOrder))
+        rrf(scoredLeg(df, leg, tables), col(LegScoreCol).desc +: docOrder)
       } else {
         var sortSpec: Seq[(String, Boolean)] = Nil
         leg.ops.zip(leg.stages.elements().asScala.toSeq).foreach { case (op, st) =>
@@ -517,18 +517,20 @@ object MongoPipeline {
   }
 
   /** The one compile of a `$vectorSearch`/`$search`-led fusion leg: the
-    * leg keeps its hidden score (`keepScores = true`), `use` turns the
-    * frame and that score column into the leg's ranked or scored form,
-    * and the four hidden columns are dropped after.
+    * leg keeps its hidden score (`keepScores = true`), which is copied
+    * into [[LegScoreCol]] before the four hidden columns are dropped.
     */
   private def scoredLeg(df: DataFrame, leg: FusionLeg,
-                        tables: String => DataFrame)
-                       (use: (DataFrame, Column) => DataFrame): DataFrame =
-    use(compile(df, leg.stages.toString, tables, documentsAllowed = false,
-        keepScores = true),
-      col(if (leg.ops.head == "$vectorSearch") VsScoreCol else SearchScoreCol))
+                        tables: String => DataFrame): DataFrame =
+    compile(df, leg.stages.toString, tables, documentsAllowed = false,
+        keepScores = true)
+      .withColumn(LegScoreCol,
+        col(if (leg.ops.head == "$vectorSearch") VsScoreCol else SearchScoreCol))
       .drop(VsScoreCol, SearchScoreCol, SearchHighlightsCol,
         SearchMetaCountCol)
+
+  /** A search-led fusion leg's score, as [[scoredLeg]] emits it. */
+  private val LegScoreCol = "__leg_score"
 
   /** Hidden column carrying `$search`'s BM25 relevance until a
     * `{$meta: "searchScore"}` projection reads it.
@@ -1600,7 +1602,7 @@ object MongoPipeline {
           Seq("$match", "$sort", "$limit", "$skip").contains(op),
           s"$$scoreFusion pipeline '$name': '$op' not allowed after " +
             s"${ops.head} (selection stages only)"))
-        scoredLeg(df, leg, tables)((c, score) => c.withColumn("__sf_raw", score))
+        scoredLeg(df, leg, tables).withColumnRenamed(LegScoreCol, "__sf_raw")
       } else {
         require(ops.last == "$score",
           s"$$scoreFusion pipeline '$name' must start with $$vectorSearch " +

@@ -10,18 +10,15 @@ last `PROBE <name> repN: ... jobs=J stages=S tasks=T` line (the counts
 are read after the listener bus drains, so every rep prints the same
 ones).
 
-With one parent log, prints one line per query with the B - A delta of
-each count (`ONLY in <log>` when one side lacks it), then the totals
-over the queries both logs hold, and exits 1 when any query launched
-more jobs in B than in A.
-
 Some queries' counts move between runs of one tree (see the verify
-skill), so a single parent run can make an unchanged query look risen.
-With two or more parent logs, each count prints as the parent range
-`min..max` next to B's value and its distance past that range (0 when
-inside it); a query's jobs rose only when B exceeds the maximum over
-all parent logs. A query missing from any log reads `ONLY in` the logs
-that hold it.
+skill), so a single parent run can make an unchanged query look risen;
+give two or more parent logs to judge the change against their range.
+Per query, each count prints as the parent range `min..max`, B's value
+and B's distance past that range (0 inside it): `jobs 29..30 -> 31
+(+1)`. A query missing from any log reads `ONLY in` the logs that hold
+it. The totals line sums each log over the queries every log holds and
+prints the parent logs' totals as the same `min..max -> B` range. Exits
+1 when any query's jobs in B exceed the maximum over the parent logs.
 """
 import re
 import sys
@@ -41,9 +38,11 @@ def load(path):
     return counts
 
 
-def past(lo, hi, y):
-    """B's distance outside the parent range [lo, hi], 0 inside it."""
-    return y - hi if y > hi else y - lo if y < lo else 0
+def ranged(key, xs, y):
+    """`key min..max -> y (+d)`, d being y's distance outside [min, max]."""
+    lo, hi = min(xs), max(xs)
+    d = y - hi if y > hi else y - lo if y < lo else 0
+    return f"{key} {lo}..{hi} -> {y} ({d:+d})"
 
 
 def main():
@@ -55,36 +54,25 @@ def main():
         if not counts:
             sys.exit(f"no PROBE lines in {p}")
     parents, right = logs[:-1], logs[-1]
-    ranged = len(parents) > 1
-    totals = [[0, 0, 0] for _ in KEYS]
-    rose = []
-    names = set(right).union(*parents)
-    for name in sorted(names):
+    rose, common = [], []
+    for name in sorted(set(right).union(*parents)):
         holders = [p for p, counts in zip(paths, logs) if name in counts]
         if len(holders) < len(paths):
             print(f"{name}: ONLY in {', '.join(holders)}")
             continue
-        parts = []
-        for i, key in enumerate(KEYS):
-            xs = [counts[name][i] for counts in parents]
-            lo, hi, y = min(xs), max(xs), right[name][i]
-            totals[i][0] += lo
-            totals[i][1] += hi
-            totals[i][2] += y
-            if ranged:
-                parts.append(f"{key} {lo}..{hi} -> {y} ({past(lo, hi, y):+d})")
-            else:
-                parts.append(f"{key} {hi} -> {y} ({y - hi:+d})")
+        common.append(name)
+        print(f"{name}: " + ", ".join(
+            ranged(key, [counts[name][i] for counts in parents], right[name][i])
+            for i, key in enumerate(KEYS)))
         if right[name][0] > max(counts[name][0] for counts in parents):
             rose.append(name)
-        print(f"{name}: " + ", ".join(parts))
-    both = sum(1 for n in names if all(n in counts for counts in logs))
-    if ranged:
-        print(f"== totals over {both} queries: " + ", ".join(
-            f"{key} {lo}..{hi} -> {y}" for key, (lo, hi, y) in zip(KEYS, totals)))
-    else:
-        print(f"== totals over {both} queries: " + ", ".join(
-            f"{key} {x} -> {y} ({y - x:+d})" for key, (x, _, y) in zip(KEYS, totals)))
+
+    def total(counts, i):
+        return sum(counts[n][i] for n in common)
+
+    print(f"== totals over {len(common)} queries: " + ", ".join(
+        ranged(key, [total(counts, i) for counts in parents], total(right, i))
+        for i, key in enumerate(KEYS)))
     if rose:
         print(f"== jobs rose for {len(rose)} queries: {', '.join(rose)}")
     sys.exit(1 if rose else 0)
