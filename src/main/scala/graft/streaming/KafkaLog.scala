@@ -1,6 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,8 +29,11 @@ import org.apache.spark.sql.types._
   * same invariant, different constant), (2) with a per-(topic,
   * partition) `row_number` over the producer's send sequence — exactly
   * a broker's sequential append — and (3) with the file-stream source's
-  * checkpointed file tracking. Everything is deterministic column
-  * algebra, so the whole loop is oracle-testable.
+  * checkpointed file tracking. A broker's per-partition high-water
+  * marks are an offsets record that each [[appendTo]] leaves beside the
+  * data, so an append reads no log file; see [[appendTo]] for when the
+  * record is trusted and the single-appender assumption. Everything is
+  * deterministic column algebra, so the whole loop is oracle-testable.
   *
   * Scale note: the offset window sorts per (topic, partition) — the
   * same per-partition sequencing work a real broker does at append
@@ -42,50 +53,161 @@ object KafkaLog {
 
   /** Broker append: assign each (topic, key, value) message a
     * partition by key hash and a dense per-partition offset ordered by
-    * the producer's send sequence `seqCol`. `base` (from
-    * [[highWater]]) continues each partition's offsets from the
-    * existing log's high-water mark — without it a second append would
-    * restart at 0 and collide with already-delivered offsets.
+    * the producer's send sequence `seqCol`. `base` (the next offset per
+    * (topic, partition) of the existing log, see [[appendTo]]) continues
+    * each partition's offsets from the log's high-water mark — without
+    * it a second append would restart at 0 and collide with
+    * already-delivered offsets. It is a literal map looked up per row,
+    * so no join or broadcast job is planned. `highWater`, when given,
+    * collects the next offset of every (topic, partition) this frame
+    * touches once it is written: a partition's last record is the row
+    * with no `lead` in the offset window, so the existing window
+    * computes it and no shuffle is added.
     */
   def append(messages: DataFrame, numPartitions: Int, seqCol: String,
-             base: Option[DataFrame] = None): DataFrame = {
+             base: Map[(String, Int), Long] = Map.empty,
+             highWater: Option[Observation] = None): DataFrame = {
     val w = Window.partitionBy(col("topic"), col("partition"))
       .orderBy(col(seqCol))
     val rel = messages
       .withColumn("partition", pmod(hash(col("key")), lit(numPartitions)).cast("int"))
       .withColumn("__rel", row_number().over(w).cast("long") - 1)
-    val offs = base match {
-      case Some(hw) => rel
-        .join(broadcast(hw), Seq("topic", "partition"), "left")
-        .withColumn("offset", col("__rel") + coalesce(col("__next"), lit(0L)))
-      case None => rel.withColumn("offset", col("__rel"))
-    }
-    offs.select("key", "value", "offset", "topic", "partition")
+      .withColumn("__last", lead(col(seqCol), 1).over(w).isNull)
+    val offs =
+      if (base.isEmpty) rel.withColumn("offset", col("__rel"))
+      else {
+        val next = base.groupMap(_._1._1) { case ((_, p), o) => p -> o }
+          .map { case (t, ps) => t -> ps.toMap }
+        rel.withColumn("offset", col("__rel") +
+          coalesce(typedLit(next).apply(col("topic"))(col("partition")), lit(0L)))
+      }
+    highWater.fold(offs)(offs.observe(_, collect_list(when(col("__last"),
+      struct(col("topic"), col("partition"), col("offset") + 1))).as("next")))
+      .select("key", "value", "offset", "topic", "partition")
   }
 
   /** Next offset per (topic, partition) of an existing log — the
-    * high-water marks a broker keeps per partition. A few rows per
-    * topic: always broadcastable.
+    * high-water marks a broker keeps per partition — by a full scan of
+    * the log's offset column (two Spark jobs whose input grows with
+    * the log). [[appendTo]] reads its offsets record instead and falls
+    * back to this only when the record does not cover the log's files.
     */
-  def highWater(spark: SparkSession, dir: String): DataFrame =
+  def highWater(spark: SparkSession, dir: String): Map[(String, Int), Long] =
     spark.read.schema(recordSchema).parquet(dir)
       .groupBy("topic", "partition")
-      .agg((max(col("offset")) + 1).as("__next"))
+      .agg(max(col("offset")) + 1)
+      .collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
 
   /** Persist appended records under `dir/topic=<t>/partition=<p>/`. */
   def write(records: DataFrame, dir: String): Unit =
     records.write.mode("append").partitionBy("topic", "partition").parquet(dir)
 
-  /** Produce-to-log: continue offsets from the live log (if any) and
-    * append — the full broker-side send path.
+  /** Name of the offsets record under the log root. The leading `_`
+    * hides it from Spark's file index and the streaming file source.
+    */
+  val OffsetsRecord = "_offsets"
+
+  /** Produce-to-log: continue offsets from the live log and append —
+    * the full broker-side send path.
+    *
+    * The base offsets come from the offsets record that the previous
+    * append left (the Structured Streaming offset log's role, and
+    * route81's saved resume position, route81.go:199-224): the next
+    * offset per (topic, partition) plus the count and digest of the
+    * data files it covers. Before appending, the log tree is listed on
+    * the driver (a listing, not a job):
+    *  - no data files: the base is empty;
+    *  - the record covers exactly the listed files: its offsets are
+    *    the base;
+    *  - otherwise — a crash between the data commit and the record
+    *    write, a log written before records existed, or a writer that
+    *    bypassed `appendTo` — the base is the full-scan [[highWater]].
+    * After the data write commits, the new high-water (the base plus
+    * the observed last offset of every touched partition) is written
+    * to a temp file and renamed over the record. A missing or stale
+    * record only costs the next append a full scan, never an offset.
+    *
+    * Like a Kafka partition leader, which serializes appends to a
+    * partition, this assumes one appender per log at a time.
     */
   def appendTo(spark: SparkSession, dir: String, messages: DataFrame,
                numPartitions: Int, seqCol: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = if (fs.exists(root)) dataFiles(fs, root) else Nil
     val base =
-      if (fs.exists(path)) Some(highWater(spark, dir)) else None
-    write(append(messages, numPartitions, seqCol, base), dir)
+      if (files.isEmpty) Map.empty[(String, Int), Long]
+      else readRecord(fs, root).collect {
+        case (covered, next) if covered == fileDigest(files) => next
+      }.getOrElse(highWater(spark, dir))
+    val observed = Observation("kafkalog.high-water")
+    write(append(messages, numPartitions, seqCol, base, Some(observed)), dir)
+    val next = base ++ observed.get("next").asInstanceOf[scala.collection.Seq[Row]]
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2))
+    writeRecord(fs, root, fileDigest(dataFiles(fs, root)), next)
+  }
+
+  /** Data files of the log relative to its root, sorted; a name
+    * starting with `_` or `.` (the record, `_SUCCESS`, checksums,
+    * `_temporary`) is skipped, as Spark's file index skips it. Walks
+    * with `listStatus`: a recursive `listFiles` builds a
+    * `LocatedFileStatus` per file, which copies the file's owner and
+    * permission, and the local file system reads those with a forked
+    * shell command per file (measured at about 4 ms a file on a 4-vCPU
+    * VM, 184 ms for a 44-file log, against 5 ms for this walk).
+    */
+  private def dataFiles(fs: FileSystem, root: Path): Seq[String] = {
+    def walk(dir: Path, rel: String): Seq[String] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath, s"$rel$name/")
+        else Seq(rel + name)
+      }
+    walk(root, "").sorted
+  }
+
+  /** "<count>:<sha-256 of the sorted names>" — what a record covers. */
+  private def fileDigest(files: Seq[String]): String = {
+    val sha = MessageDigest.getInstance("SHA-256")
+      .digest(files.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    s"${files.size}:" + sha.map(b => f"$b%02x").mkString
+  }
+
+  private val mapper = new ObjectMapper()
+
+  /** The record's (file digest, next offsets), or None when it is
+    * absent or unreadable.
+    */
+  private def readRecord(fs: FileSystem, root: Path)
+      : Option[(String, Map[(String, Int), Long])] =
+    Try {
+      val in = fs.open(new Path(root, OffsetsRecord))
+      val node = try mapper.readTree(in) finally in.close()
+      node.get("files").asText() -> node.get("next").elements().asScala.map(n =>
+        (n.get("topic").asText(), n.get("partition").asInt()) -> n.get("offset").asLong())
+        .toMap
+    }.toOption
+
+  private def writeRecord(fs: FileSystem, root: Path, files: String,
+                          next: Map[(String, Int), Long]): Unit = {
+    val node = mapper.createObjectNode().put("files", files)
+    val arr = node.putArray("next")
+    next.toSeq.sorted.foreach { case ((t, p), o) =>
+      arr.addObject().put("topic", t).put("partition", p).put("offset", o)
+    }
+    val rec = new Path(root, OffsetsRecord)
+    val tmp = new Path(root, OffsetsRecord + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(mapper.writeValueAsBytes(node)) finally out.close()
+    // a file system whose rename does not replace (HDFS) needs the old
+    // record gone first; a crash in between leaves no record, which
+    // the next append repairs by a full scan
+    if (!fs.rename(tmp, rec)) {
+      fs.delete(rec, false)
+      fs.rename(tmp, rec): Unit
+    }
   }
 
   /** Consumer subscription: a streaming scan of the log directory.

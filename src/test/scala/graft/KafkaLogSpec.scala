@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ListBuffer
 
@@ -207,6 +207,79 @@ class KafkaLogSpec extends SparkTestBase {
     assert(fromTarget == direct,
       s"persisted target diverged: ${fromTarget.size} vs ${direct.size} rows")
     oplog.unpersist()
+  }
+
+  /** Messages of one topic with send sequence `from until until`. */
+  private def batch(from: Long, until: Long) = {
+    import spark.implicits._
+    (from until until).map(i => (s"k${i % 13}", s"v$i", i)).toDF("key", "value", "seq")
+      .withColumn("topic", lit("t"))
+  }
+
+  /** Offsets of the whole log are dense per partition with no
+    * collision, and the record holds what a full scan reads.
+    */
+  private def assertDense(logDir: String, rows: Long): Unit = {
+    val got = spark.read.schema(KafkaLog.recordSchema).parquet(logDir)
+      .select("partition", "offset").collect()
+      .map(r => (r.getInt(0), r.getLong(1)))
+    assert(got.length == rows, s"expected $rows records, got ${got.length}")
+    got.groupBy(_._1).foreach { case (p, po) =>
+      assert(po.map(_._2).sorted.toSeq == (0L until po.length.toLong),
+        s"partition $p offsets not dense: ${po.map(_._2).sorted.take(8).mkString(",")}")
+    }
+    val record = new String(Files.readAllBytes(
+      Paths.get(logDir, KafkaLog.OffsetsRecord)), "UTF-8")
+    KafkaLog.highWater(spark, logDir).foreach { case ((t, p), next) =>
+      assert(record.contains(s""""topic":"$t","partition":$p,"offset":$next}"""),
+        s"record misses ($t, $p) -> $next: $record")
+    }
+  }
+
+  test("offsets record: a crash after the data commit (no record) recovers the full-scan high-water") {
+    val logDir = Files.createTempDirectory("graft-kafka-crash").toString
+    KafkaLog.appendTo(spark, logDir, batch(0, 40), numPartitions = 3, seqCol = "seq")
+    // the append's data committed but its record was never written
+    Files.delete(Paths.get(logDir, KafkaLog.OffsetsRecord))
+    KafkaLog.appendTo(spark, logDir, batch(40, 70), numPartitions = 3, seqCol = "seq")
+    assertDense(logDir, 70)
+  }
+
+  test("offsets record: a record covering another file set than the log holds is not trusted") {
+    val logDir = Files.createTempDirectory("graft-kafka-stale").toString
+    val record = Paths.get(logDir, KafkaLog.OffsetsRecord)
+    KafkaLog.appendTo(spark, logDir, batch(0, 40), numPartitions = 3, seqCol = "seq")
+    val first = Files.readAllBytes(record)
+    KafkaLog.appendTo(spark, logDir, batch(40, 70), numPartitions = 3, seqCol = "seq")
+    // roll the record back: it now covers only the first append's files
+    Files.write(record, first)
+    KafkaLog.appendTo(spark, logDir, batch(70, 90), numPartitions = 3, seqCol = "seq")
+    assertDense(logDir, 90)
+    // a writer that bypasses appendTo leaves the record stale too
+    KafkaLog.write(KafkaLog.append(batch(90, 100), 3, "seq",
+      KafkaLog.highWater(spark, logDir)), logDir)
+    KafkaLog.appendTo(spark, logDir, batch(100, 120), numPartitions = 3, seqCol = "seq")
+    assertDense(logDir, 120)
+  }
+
+  test("appendTo of no messages keeps the log's offsets") {
+    val logDir = Files.createTempDirectory("graft-kafka-empty").toString
+    KafkaLog.appendTo(spark, logDir, batch(0, 0), numPartitions = 3, seqCol = "seq")
+    KafkaLog.appendTo(spark, logDir, batch(0, 40), numPartitions = 3, seqCol = "seq")
+    KafkaLog.appendTo(spark, logDir, batch(40, 40), numPartitions = 3, seqCol = "seq")
+    KafkaLog.appendTo(spark, logDir, batch(40, 70), numPartitions = 3, seqCol = "seq")
+    assertDense(logDir, 70)
+  }
+
+  test("appendTo on a non-empty log launches as many jobs as the first append (no high-water scan)") {
+    val logDir = Files.createTempDirectory("graft-kafka-jobs").toString
+    val (first, _) = jobsOutsideSql(
+      KafkaLog.appendTo(spark, logDir, batch(0, 40), numPartitions = 3, seqCol = "seq"))
+    val (second, _) = jobsOutsideSql(
+      KafkaLog.appendTo(spark, logDir, batch(40, 80), numPartitions = 3, seqCol = "seq"))
+    assert(first > 0 && second == first,
+      s"first append ran $first jobs, the second $second")
+    assertDense(logDir, 80)
   }
 }
 

@@ -625,5 +625,10 @@ class PlanSpec extends SparkTestBase {
     // single global range sort
     assert(plan.contains("hashpartitioning"), plan)
     assert(!plan.contains("rangepartitioning"), s"global sort:\n$plan")
+    // a known base (the offsets record's) is a literal lookup per row:
+    // no broadcast of a high-water frame, same partitioned window
+    val based = executed(KafkaLog.append(msgs, 4, "seq", Map(("t", 0) -> 7L, ("t", 3) -> 2L)))
+    assert(!based.contains("BroadcastExchange"), based)
+    assert(based.contains("hashpartitioning") && !based.contains("rangepartitioning"), based)
   }
 }
