@@ -112,8 +112,8 @@ object Cdc {
     * and consumer counters {success, failed, queued}, nested and
     * 4-space-indented exactly as Go emits them, field order pinned
     * by the struct. In the batch-replay model every produced message
-    * is delivered (success = total, the :1280-1298 delivery
-    * callback), per-op counters follow addEventType (:1301-1311; the
+    * is delivered (success = [[stats]]' total, the :1280-1298 delivery
+    * callback), per-op counters are [[stats]]' (addEventType, :1301-1311; the
     * op log has no collection-drop events, so dropped = 0), and
     * failed/queued are 0 — a finished replay has no in-flight or
     * errored state. Consumer success counts applied messages
@@ -121,14 +121,9 @@ object Cdc {
     * route81's /stats parses this verbatim.
     */
   def clientStatsJson(oplog: DataFrame, consumed: DataFrame): DataFrame = {
-    val p = oplog.agg(
-      count(lit(1)).as("success"),
-      count(when(col("op") === "i", 1)).as("inserted"),
-      count(when(col("op") === "u", 1)).as("updated"),
-      count(when(col("op") === "d", 1)).as("removed"))
     val c = consumed.agg(count(lit(1)).as("c_success"))
-    p.crossJoin(c).select(concat(
-      lit("{\n    \"producer\": {\n        \"success\": "), col("success"),
+    stats(oplog).crossJoin(c).select(concat(
+      lit("{\n    \"producer\": {\n        \"success\": "), col("total"),
       lit(",\n        \"failed\": 0,\n        \"inserted\": "), col("inserted"),
       lit(",\n        \"updated\": "), col("updated"),
       lit(",\n        \"removed\": "), col("removed"),

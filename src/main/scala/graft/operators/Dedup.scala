@@ -10,6 +10,10 @@ import graft.Seams.SeamOps
 /** Deduplication family (SURVEY.md §2 group F) — every near-dup path
   * goes through an inverted index / banding step, never an all-pairs
   * join, so the shuffles stay proportional to postings, not n².
+  * Decisions shared with the embedding dedup live once in [[NearDup]]:
+  * F1/F2/F12 fold survivors with `survivorFold`, F10 uses `collapse`,
+  * F10/F3b re-attach group sizes with `withMembers`, F4/F14 pair band
+  * keys with `blockedSelfJoin`, F14 labels with `clusterSurvivors`.
   */
 object Dedup {
 
@@ -17,8 +21,7 @@ object Dedup {
     * survivor per group.
     */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.groupBy(lower(trim(col(textCol))).as("norm"))
-      .agg(min(col(idCol)).as("survivor"), count(lit(1)).as("n_copies"))
+    NearDup.survivorFold(docs, lower(trim(col(textCol))).as("norm"), idCol)
       .select(col("survivor"), col("n_copies"))
 
   /** Canonical content fingerprint: md5 over the sorted distinct
@@ -41,10 +44,7 @@ object Dedup {
     * Same single-shuffle shape as exact dedup.
     */
   def fingerprint(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .groupBy(fingerprintOf(col(textCol)).as("fp"))
-      .agg(min(col(idCol)).as("survivor"), count(lit(1)).as("n_copies"))
-      .select(col("fp"), col("survivor"), col("n_copies"))
+    NearDup.survivorFold(docs, fingerprintOf(col(textCol)).as("fp"), idCol)
 
   /** The standing fingerprint index of an already-deduped corpus —
     * the artifact an incremental pipeline PERSISTS between batches
@@ -78,11 +78,9 @@ object Dedup {
     */
   def incrementalFingerprint(batch: DataFrame, index: DataFrame,
                              idCol: String, textCol: String): DataFrame =
-    batch
+    NearDup.survivorFold(batch
       .withColumn("fp", fingerprintOf(col(textCol)))
-      .join(index, Seq("fp"), "left_anti")
-      .groupBy(col("fp"))
-      .agg(min(col(idCol)).as("survivor"), count(lit(1)).as("n_copies"))
+      .join(index, Seq("fp"), "left_anti"), col("fp"), idCol)
 
   /** Persist the standing index as a BUCKETED table on `fp`, so the
     * per-batch anti join reads the index pre-partitioned: only the
@@ -232,7 +230,7 @@ object Dedup {
     */
   def bandIndex(docs: DataFrame, idCol: String, textCol: String,
                 n: Int = 2, k: Int = 16, bands: Int = 4): DataFrame =
-    bandKeyTable(docs, idCol, textCol, n, k, bands)
+    bandKeys(docs, idCol, textCol, n, k, bands)
       .select(col("band"), col("key")).distinct()
 
   /** Persist the standing BAND index bucketed on (band, key) — the
@@ -245,15 +243,6 @@ object Dedup {
     index.write.mode("overwrite")
       .bucketBy(buckets, "band", "key").sortBy("band", "key")
       .saveAsTable(table)
-
-  /** Per-doc band keys `(id, band, key)` — [[bandIndex]] with the doc
-    * id retained, for callers (the curation daemon) that must also
-    * know WHICH batch docs carry no bands at all (blank/short docs
-    * are invisible to the fuzzy gate and flow through the exact one).
-    */
-  def bandKeys(docs: DataFrame, idCol: String, textCol: String,
-               n: Int = 2, k: Int = 16, bands: Int = 4): DataFrame =
-    bandKeyTable(docs, idCol, textCol, n, k, bands)
 
   /** F14: INCREMENTAL fuzzy dedup — the near-dup complement of F12's
     * exact-fingerprint path (a curation daemon runs both gates:
@@ -284,27 +273,19 @@ object Dedup {
     // Reuse seam: the candidate SELF-join reads one checkpointed copy
     // of kept instead of re-deriving the signature build + veto join
     // per side. The seam deliberately covers ONLY the self-join:
-    // keptIds keeps the full lineage so the bucketed standing-index
+    // the survivor set keeps the full lineage so the bucketed standing-index
     // veto join stays visible in the executed plan (the F14
     // index-never-reshuffles contract is spec-asserted on it), and
     // bk itself stays UNseamed for the same reason — a stats-less
     // LogicalRDD there makes the planner stop exploiting the index's
     // bucketed layout.
-    val bk = bandKeyTable(batch, idCol, textCol, n, k, bands)
+    val bk = bandKeys(batch, idCol, textCol, n, k, bands)
     val vetoed = bk.join(index, Seq("band", "key"), "left_semi")
       .select(col("id")).distinct()
     val kept = bk.join(vetoed, Seq("id"), "left_anti")
-    val keptSeam = kept.seamed
-    val pairs = keptSeam.as("x").join(keptSeam.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b")).distinct()
-    val cc = Pipeline100TB.connectedComponents(pairs)
-    val keptIds = kept.select(col("id")).distinct()
-    keptIds.join(cc, keptIds("id") === cc("doc_id"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-      .groupBy(col("cluster")).agg(count(lit(1)).as("n_members"))
-      .select(col("cluster").as("survivor"), col("n_members"))
+    val cc = Pipeline100TB.connectedComponents(bandPairs(kept.seamed))
+    NearDup.clusterSurvivors(kept.select(col("id")).distinct(), "id", cc)
+      .groupBy(col("survivor")).agg(count(lit(1)).as("n_members"))
   }
 
   /** Duplicate-dense guard (F2∘F3/F6 composition): collapse exact-
@@ -319,49 +300,26 @@ object Dedup {
     *
     * Keeps every original column and adds `n_members` (the collapsed
     * group size, so downstream stages can re-weight or re-expand).
-    *
-    * Shape: `groupBy(fp).agg(min_by(struct(*), id), count)` — NOT a
-    * fingerprint-partitioned window. The hottest duplicate group
-    * (empty pages, boilerplate — the adversarial input this guard
-    * exists for) is by construction the hottest fp key; a window
-    * would route every copy, full document rows included, into ONE
-    * unsplittable task. The aggregate partial-combines map-side
-    * (each map task emits one candidate row per fp it saw), so the
-    * post-shuffle volume is bounded by distinct-contents regardless
-    * of copy factor — skew-immune by construction.
-    *
-    * Contract: the representative ROW is deterministic iff `idCol`
-    * values are unique — rows tied on id within a fingerprint group
-    * break arbitrarily (the usual unique-doc-id case never ties).
+    * Shape: [[NearDup.collapse]], `groupBy(fp).agg(min_by(struct(*),
+    * id), count)` — skew-immune, never a fingerprint window.
     */
-  def collapseFingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val cols = docs.columns.toSeq
-    docs
-      .withColumn("__fp", fingerprintOf(col(textCol)))
-      .groupBy(col("__fp"))
-      .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("__rep"),
-        count(lit(1)).as("n_members"))
-      .select(cols.map(c => col("__rep." + c)) :+ col("n_members"): _*)
-  }
+  def collapseFingerprints(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    NearDup.collapse(docs.withColumn("__fp", fingerprintOf(col(textCol))),
+      idCol, Seq("__fp"), docs.columns.toSeq)
 
   /** F3 over the fingerprint-collapsed corpus: near-dup pairs between
     * REPRESENTATIVES only, each side carrying its collapsed group size
     * — pair volume no longer grows with the exact-duplicate copy
     * factor. A pair (a, b, n_a, n_b) stands for the n_a·n_b underlying
-    * document pairs. The member-count re-attach is two keyed joins on
-    * the (already collapsed) id set, free for the planner to broadcast
-    * when small.
+    * document pairs ([[NearDup.withMembers]]).
     */
   def ngramJaccardCollapsed(docs: DataFrame, idCol: String, textCol: String,
                             n: Int = 2, tau: Double = 0.8): DataFrame = {
     // Reuse seam — same motivation as [[ngramJaccardTopK]]'s.
     val reps = collapseFingerprints(docs, idCol, textCol)
       .seamed
-    val members = reps.select(col(idCol), col("n_members"))
-    ngramJaccard(reps.drop("n_members"), idCol, textCol, n, tau)
-      .join(members.select(col(idCol).as("a"), col("n_members").as("n_a")), "a")
-      .join(members.select(col(idCol).as("b"), col("n_members").as("n_b")), "b")
-      .select(col("a"), col("b"), col("jaccard"), col("n_a"), col("n_b"))
+    NearDup.withMembers(ngramJaccard(reps.drop("n_members"), idCol, textCol, n, tau),
+      reps, idCol, "a" -> "n_a", "b" -> "n_b")
   }
 
   /** (id, shingle) postings with per-doc shingle-set size. */
@@ -388,12 +346,7 @@ object Dedup {
                    n: Int = 2, tau: Double = 0.8): DataFrame = {
     // no cache: the native shingle expressions make recompute cheaper
     // than cache churn across repeated invocations
-    val base = docs
-      .withColumn("toks", tokens(col(textCol)))
-      .withColumn("sh", shingles("toks", n))
-      .select(col(idCol).as("id"), col("sh"), size(col("sh")).as("sz"))
-      .filter(col("sz") > 0)
-    val post = base.select(col("id"), col("sz"), explode(col("sh")).as("shingle"))
+    val post = postings(docs, idCol, textCol, n)
     val df = post.groupBy("shingle").agg(count(lit(1)).as("df"))
     val ranked = post.join(df, "shingle")
       .withColumn("rk", row_number().over(
@@ -496,31 +449,22 @@ object Dedup {
     // member-count re-attach joins — one collapse pass, not six.
     val reps = collapseFingerprints(docs, idCol, textCol)
       .seamed
-    val members = reps.select(col(idCol), col("n_members"))
     val pairs = ngramJaccard(reps.drop("n_members"), idCol, textCol, n, tau)
     val sym = pairs.select(col("a").as("id"), col("b").as("nbr"), col("jaccard"))
       .unionAll(
         pairs.select(col("b").as("id"), col("a").as("nbr"), col("jaccard")))
-    graft.functions.BoundedTopK.ranked(sym, Seq("id"),
+    NearDup.withMembers(graft.functions.BoundedTopK.ranked(sym, Seq("id"),
         Seq(col("jaccard"), col("nbr")), Seq(-1, 1),
-        struct(col("nbr"), col("jaccard")), k, "rk")
-      .join(members.select(col(idCol).as("id"), col("n_members").as("n_id")), "id")
-      .join(members.select(col(idCol).as("nbr"), col("n_members").as("n_nbr")), "nbr")
-      .select(col("id"), col("rk"), col("nbr"), col("jaccard"),
-        col("n_id"), col("n_nbr"))
+        struct(col("nbr"), col("jaccard")), k, "rk"),
+      reps, idCol, "id" -> "n_id", "nbr" -> "n_nbr")
   }
 
-  /** F4: MinHash + banded LSH candidates: k affine permutations of the
-    * 60-bit shingle hash, signatures banded r-per-band; docs sharing
-    * any band key are candidates. One shuffle to build signatures
-    * (k mins via partial agg), one band-key join. Band keys are
-    * near-uniform by construction — no skew hot-spot.
+  /** MinHash LSH band keys `(id, band, key)` per doc, the indexing step
+    * of every band operator; public for the curation daemon, which must
+    * know WHICH docs carry no bands (blank/short docs skip the fuzzy gate).
     */
-  /** MinHash LSH band-key table (id, band, key) — the shared indexing
-    * step behind [[minhashCandidates]] and [[decontaminateFuzzy]].
-    */
-  private def bandKeyTable(docs: DataFrame, idCol: String, textCol: String,
-                           n: Int, k: Int, bands: Int): DataFrame = {
+  def bandKeys(docs: DataFrame, idCol: String, textCol: String,
+               n: Int = 2, k: Int = 16, bands: Int = 4): DataFrame = {
     require(k % bands == 0,
       s"k ($k) must be divisible by bands ($bands) or trailing hashes are dead")
     val r = k / bands
@@ -537,18 +481,23 @@ object Dedup {
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
+  /** F4: MinHash + banded LSH candidates: k affine permutations of the
+    * 60-bit shingle hash, signatures banded r-per-band; docs sharing
+    * any band key are candidates. One shuffle to build signatures
+    * (k mins via partial agg), one band-key join. Band keys are
+    * near-uniform by construction — no skew hot-spot.
+    */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 2, k: Int = 16, bands: Int = 4): DataFrame = {
+                        n: Int = 2, k: Int = 16, bands: Int = 4): DataFrame =
     // Reuse seam: both sides of the band-key self-join — one
     // signature build (postings + 16-min aggregate) instead of two.
-    val bandKeys = bandKeyTable(docs, idCol, textCol, n, k, bands)
-      .seamed
-    bandKeys.as("x").join(bandKeys.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-        col("x.id") < col("y.id"))
+    bandPairs(bandKeys(docs, idCol, textCol, n, k, bands).seamed)
+
+  /** Distinct (a < b) pairs of [[bandKeys]] rows sharing a band key. */
+  private def bandPairs(keys: DataFrame): DataFrame =
+    NearDup.blockedSelfJoin(keys, "id", Seq("band", "key"))
       .select(col("x.id").as("a"), col("y.id").as("b"))
       .distinct()
-  }
 
   /** F13: cross-corpus near-dup candidates — the MinHash band join
     * between TWO corpora of comparable size, where NEITHER side
@@ -564,8 +513,8 @@ object Dedup {
   def crossCorpusCandidates(left: DataFrame, right: DataFrame,
                             idCol: String, textCol: String,
                             n: Int = 2, k: Int = 16, bands: Int = 4): DataFrame = {
-    val bl = bandKeyTable(left, idCol, textCol, n, k, bands)
-    val br = bandKeyTable(right, idCol, textCol, n, k, bands)
+    val bl = bandKeys(left, idCol, textCol, n, k, bands)
+    val br = bandKeys(right, idCol, textCol, n, k, bands)
     bl.as("x").join(br.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
       .select(col("x.id").as("left_id"), col("y.id").as("right_id"))
@@ -585,14 +534,14 @@ object Dedup {
   def decontaminateFuzzy(docs: DataFrame, idCol: String, textCol: String,
                          benchPred: org.apache.spark.sql.Column,
                          n: Int = 2, k: Int = 16, bands: Int = 4): DataFrame = {
-    val bench = bandKeyTable(docs.filter(benchPred), idCol, textCol, n, k, bands)
+    val bench = bandKeys(docs.filter(benchPred), idCol, textCol, n, k, bands)
       .select(col("band"), col("key")).distinct()
     // fail closed, as in [[decontaminate]]: NULL-predicate rows are
     // checked as corpus, never silently skipped. (Each branch
     // tokenizes only its own subset — the filter sits below the
     // shingle projection — so total work is one corpus pass plus the
     // small bench pass, at the cost of scanning the source twice.)
-    bandKeyTable(docs.filter(!coalesce(benchPred, lit(false))),
+    bandKeys(docs.filter(!coalesce(benchPred, lit(false))),
         idCol, textCol, n, k, bands)
       .join(broadcast(bench), Seq("band", "key"))
       .groupBy(col("id"))

@@ -35,6 +35,9 @@ import graft.Seams.SeamOps
   * and keeps the plans the oracle-checked queries were timed on;
   * moving a family to the other form changes its plan and is a
   * performance decision for per-query counters, not a refactor.
+  * The embedding dedup shares [[Dedup]]'s core, [[NearDup]]: F11 and
+  * G22 use `collapse`, F11 `withMembers`, F6/F17 `blockedSelfJoin`
+  * (via [[cosinePairs]]), F17 `clusterSurvivors`, F9/F17 `isSurvivor`.
   */
 object Similarity {
 
@@ -1245,15 +1248,17 @@ object Similarity {
     * quantizer an IVF index would give): pairs only form inside a
     * label partition — one shuffle on label, never all-pairs.
     */
-  def nearDupPairs(s: SparkSession, emb: DataFrame, tau: Double): DataFrame = {
+  def nearDupPairs(s: SparkSession, emb: DataFrame, tau: Double): DataFrame =
+    cosinePairs(s, emb, "vec_id", "embedding", "label", tau)
+
+  /** `(block, a, b, cos_r)` pairs (a < b) of `rows` whose cosine ≥ tau. */
+  private def cosinePairs(s: SparkSession, rows: DataFrame, idCol: String,
+                          embCol: String, block: String, tau: Double): DataFrame = {
     withCosine(s)
-    val a = emb.select(col("label"), col("vec_id").as("a"), col("embedding").as("ea"))
-    val b = emb.select(col("label"), col("vec_id").as("b"), col("embedding").as("eb"))
-    a.join(b, Seq("label"))
-      .filter(col("a") < col("b"))
-      .withColumn("cos_r", expr("round(cosine_sim(ea, eb), 4)"))
-      .filter(col("cos_r") >= tau)
-      .select(col("label"), col("a"), col("b"), col("cos_r"))
+    val cos = expr(s"round(cosine_sim(x.$embCol, y.$embCol), 4)")
+    NearDup.blockedSelfJoin(rows, idCol, Seq(block), cos >= tau)
+      .select(col(s"x.$block").as(block), col(s"x.$idCol").as("a"),
+        col(s"y.$idCol").as("b"), cos.as("cos_r"))
   }
 
   /** F6 over an exact-duplicate-collapsed corpus (the duplicate-dense
@@ -1262,30 +1267,20 @@ object Similarity {
     * first, so cosine pair volume is quadratic only in DISTINCT
     * vectors per label cell, not in the copy factor. Each emitted pair
     * carries both collapsed group sizes (`n_a`, `n_b`) — it stands for
-    * n_a·n_b underlying pairs. The collapse is a partial-aggregated
+    * n_a·n_b underlying pairs. The collapse is [[NearDup.collapse]],
     * `groupBy(label, embedding).agg(min_by(struct(*), id), count)` —
-    * never a (label, vector)-partitioned window, which would route
-    * every copy of the most-duplicated vector (the adversarial case
-    * this guard exists for) into ONE unsplittable task; the aggregate
-    * map-side-combines, bounding post-shuffle volume by distinct
-    * vectors. Then the usual label-blocked pair join. At 100 TB the
+    * never a vector-partitioned window — then the usual label-blocked
+    * pair join. At 100 TB the
     * collapse key would be a 128-bit content hash of the vector
     * rather than the 64-float vector itself (narrower shuffle rows,
     * collision-negligible); here the raw vector keeps the oracle
     * byte-exact.
     */
   def nearDupPairsCollapsed(s: SparkSession, emb: DataFrame, tau: Double): DataFrame = {
-    val cols = emb.columns.toSeq
-    val reps = emb
-      .groupBy(col("label"), col("embedding"))
-      .agg(min_by(struct(cols.map(col): _*), col("vec_id")).as("__rep"),
-        count(lit(1)).as("n_members"))
-      .select(cols.map(c => col("__rep." + c)) :+ col("n_members"): _*)
-    val members = reps.select(col("vec_id"), col("n_members"))
-    nearDupPairs(s, reps.drop("n_members"), tau)
-      .join(members.select(col("vec_id").as("a"), col("n_members").as("n_a")), "a")
-      .join(members.select(col("vec_id").as("b"), col("n_members").as("n_b")), "b")
-      .select(col("label"), col("a"), col("b"), col("cos_r"), col("n_a"), col("n_b"))
+    val reps = NearDup.collapse(emb, "vec_id", Seq("label", "embedding"),
+      emb.columns.toSeq)
+    NearDup.withMembers(nearDupPairs(s, reps.drop("n_members"), tau),
+      reps, "vec_id", "a" -> "n_a", "b" -> "n_b")
   }
 
   /** G22: label-blocked kNN GRAPH over collapsed distinct vectors —
@@ -1307,9 +1302,7 @@ object Similarity {
     */
   def knnGraph(s: SparkSession, emb: DataFrame, k: Int = 3): DataFrame = {
     withCosine(s)
-    val reps = emb
-      .groupBy(col("label"), col("embedding"))
-      .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("n_members"))
+    val reps = NearDup.collapse(emb, "vec_id", Seq("label", "embedding"))
     val a = reps.select(col("label"), col("vec_id").as("id"),
       col("embedding").as("ea"), col("n_members").as("n_id"))
     val b = reps.select(col("label"), col("vec_id").as("nbr"),
@@ -1492,7 +1485,7 @@ object Similarity {
     val pairs = nearDupPairs(s, emb, tau).select(col("a"), col("b"))
     Pipeline100TB.connectedComponentsStar(pairs)
       .select(col("doc_id").as("vec_id"), col("cluster"),
-        (col("doc_id") === col("cluster")).as("keep"))
+        NearDup.isSurvivor(col("doc_id"), col("cluster")).as("keep"))
   }
 
   /** G21b: ANN recall@k read-out — the evaluation every production
@@ -1679,7 +1672,6 @@ object Similarity {
                           index: DataFrame, cents: DataFrame, tau: Double,
                           idCol: String = "vec_id",
                           embCol: String = "embedding"): DataFrame = {
-    withCosine(s)
     // Reuse seams: the batch assignment feeds the veto probe, the
     // kept filter, and the vetoed readout; kept feeds both sides of
     // the pair self-join and the survivor set. Without the seams each
@@ -1692,21 +1684,12 @@ object Similarity {
       .select(col(s"b.$idCol").as(idCol)).distinct()
     val kept = b.join(vet, Seq(idCol), "left_anti")
       .seamed
-    val pairs = kept.as("x")
-      .join(kept.as("y"), col("x.cell") === col("y.cell") &&
-        col(s"x.$idCol") < col(s"y.$idCol"))
-      .filter(expr(s"round(cosine_sim(x.$embCol, y.$embCol), 4)") >= tau)
-      .select(col(s"x.$idCol").as("a"), col(s"y.$idCol").as("b"))
-    // rename the CC id column: it must never collide with idCol
-    // (callers pass "doc_id" from the curation daemon)
-    val cc = Pipeline100TB.connectedComponents(pairs)
-      .select(col("doc_id").as("__cc_id"), col("cluster"))
-    val keptOut = kept.select(col(idCol), col("cell"))
-      .join(cc, col(idCol) === col("__cc_id"), "left")
-      .select(col(idCol), col("cell"),
-        coalesce(col("cluster"), col(idCol)).as("survivor"))
-      .withColumn("status",
-        when(col("survivor") === col(idCol), "keep").otherwise("collapsed"))
+    val cc = Pipeline100TB.connectedComponents(
+      cosinePairs(s, kept, idCol, embCol, "cell", tau))
+    val keptOut = NearDup.clusterSurvivors(kept.select(col(idCol), col("cell")),
+        idCol, cc)
+      .withColumn("status", when(NearDup.isSurvivor(col(idCol), col("survivor")),
+        "keep").otherwise("collapsed"))
     val vetoOut = b.join(vet, Seq(idCol), "left_semi")
       .select(col(idCol), col("cell"),
         lit(null).cast("long").as("survivor"), lit("vetoed").as("status"))

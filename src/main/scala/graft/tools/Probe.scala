@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -14,8 +14,8 @@ import graft.{Bench, LocalSpark, Seams, SparkEntry}
   * sort-merge-join and broadcast-hash-join counts. With `reps > 0` it
   * then warms the query up once on the sf0.001 tables next to `sfDir`
   * and times `reps` runs of `count()`, printing each run's wall time
-  * and the Spark jobs, stages and tasks it launched. Seams are released
-  * after every dump and run, as Bench does.
+  * and the Spark jobs, stages (skipped ones left out) and tasks it ran.
+  * Seams are released after every dump and run, as Bench does.
   *
   * Usage: runMain graft.tools.Probe <sfDir> <outDir> <reps> <name...|all>
   */
@@ -62,17 +62,17 @@ object Probe {
     spark.stop()
   }
 
-  /** Jobs, stages (skipped ones included) and finished tasks since the
-    * last reset.
+  /** Jobs, completed stages (a skipped stage never completes) and
+    * finished tasks since the last reset.
     */
   private final class Counts extends SparkListener {
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
     def reset(): Unit = { jobs = 0; stages = 0; tasks = 0 }
-    override def onJobStart(j: SparkListenerJobStart): Unit = {
-      jobs += 1; stages += j.stageInfos.size
-    }
+    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages += 1
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks += 1
   }
 }
